@@ -80,16 +80,21 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Composite quality score in [0, 1]: penalize too-short docs, extreme
-    punctuation, and zero stopwords. Deterministic integer-ratio math."""
-    q = quality_features(df, text_col)
+def _quality_expr():
+    """The composite score over :func:`quality_features` columns, rounded
+    to 6 places: 0.4 length + 0.3 low-punctuation + 0.3 stopword terms."""
     score = (
         F.least(F.col("n_tokens").cast("double") / F.lit(20.0), F.lit(1.0)) * 0.4
         + (F.lit(1.0) - F.least(F.col("punct_ratio") * 5.0, F.lit(1.0))) * 0.3
         + F.least(F.col("stopword_ratio") * 10.0, F.lit(1.0)) * 0.3
     )
-    return q.withColumn("quality", F.round(score, 6))
+    return F.round(score, 6)
+
+
+def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Composite quality score in [0, 1]: penalize too-short docs, extreme
+    punctuation, and zero stopwords. Deterministic integer-ratio math."""
+    return quality_features(df, text_col).withColumn("quality", _quality_expr())
 
 
 def langid(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -276,14 +281,7 @@ def composite_filter(
         # the composite score from the SAME quality_features pass —
         # callers correlating rules vs score (quality_decile_yield) get
         # both from one corpus scan instead of two
-        score = (
-            F.least(F.col("n_tokens").cast("double") / F.lit(20.0), F.lit(1.0))
-            * 0.4
-            + (F.lit(1.0) - F.least(F.col("punct_ratio") * 5.0, F.lit(1.0)))
-            * 0.3
-            + F.least(F.col("stopword_ratio") * 10.0, F.lit(1.0)) * 0.3
-        )
-        out.append(F.round(score, 6).alias("quality"))
+        out.append(_quality_expr().alias("quality"))
     return j.select(*out)
 
 

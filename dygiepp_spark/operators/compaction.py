@@ -8,9 +8,9 @@ exemplar per cluster, dw-experiments/shared/coref_to_tsv.py:11-33; here
 the "mention pairs" are near-duplicate document pairs).
 
 ``near_dup_groups`` is min-label-id connected components over an
-UNDIRECTED pair list with arbitrary bigint ids — the generic-graph sibling
-of dygiepp_spark.operators.coref.connected_components (which is keyed per
-conversation and int-indexed). Each round does a neighbor-min hop plus a
+UNDIRECTED pair list with arbitrary bigint ids — the one generic
+connected-components operator in the package (coref clusters need none:
+their pointer chains are same-surface runs, found by one window). Each round does a neighbor-min hop plus a
 pointer-doubling hop, so label distance covered doubles per round:
 O(log D) rounds for diameter D. Duplicate clusters in real corpora are
 shallow stars (one viral source, many copies), so this converges in 2-3

@@ -1,5 +1,5 @@
 """Coreference: antecedent candidate generation, cluster formation
-(connected components), and canonicalization (M13-M16, K11).
+(one gaps-and-islands window), and canonicalization (M13-M16, K11).
 
 Reference semantics:
 
@@ -10,18 +10,19 @@ Reference semantics:
   ``a.mention_ix < b.mention_ix AND b.mention_ix - a.mention_ix <= 100``
   within a conversation.
 * Antecedent decode -> clusters: greedy pointer-following
-  (coref.py:367-439). Pointers only ever go backward, so cluster formation
-  is exactly connected components over the antecedent edge set. We run
-  iterative min-id label propagation (small-star style) to a fixpoint —
-  each round is one join + one aggregate, checkpointed to cut lineage.
+  (coref.py:367-439). Under the same-surface rule each mention points at
+  the nearest earlier mention of its surface within the window, so the
+  clusters are the maximal same-surface runs whose gaps fit the window —
+  found by one window pass per (conv_id, surface) block, no iteration.
 * K11 canonicalization (dw-experiments/shared/coref_to_tsv.py:11-33):
   cluster exemplar = the LONGEST member span (argmax span length,
   deterministic tiebreak = first occurrence).
 
 Scale notes: the band join's equi-key is conv_id; per-conversation mention
 counts are bounded by the upstream beam (0.3 spans/word) and chunking, so
-the join fans out at most 100x per row. Label propagation converges in
-O(log(longest path)) rounds; each round shuffles once on the node key.
+the join fans out at most 100x per row. Cluster formation shuffles once on
+conv_id for the mention order and once on (conv_id, surface) for the
+segment window.
 """
 
 from __future__ import annotations
@@ -66,198 +67,32 @@ def antecedent_candidates(
     )
 
 
-def coref_edges_same_surface(
-    mentions: DataFrame, max_antecedents: int = MAX_ANTECEDENTS
-) -> DataFrame:
-    """Deterministic stand-in for the pair scorer: an anaphor corefers with
-    its nearest previous same-surface mention within the antecedent window.
-
-    This mirrors the decode shape (argmax over antecedents, coref.py:312-322:
-    each span picks at most ONE antecedent) — nearest = argmax score when
-    score is monotone in -distance.
-    """
-    cands = antecedent_candidates(mentions, max_antecedents).filter(
-        F.col("anaphor_surface") == F.col("antecedent_surface")
-    )
-    w = Window.partitionBy("conv_id", "anaphor_ix").orderBy(
-        F.col("antecedent_ix").desc()
-    )
-    return (
-        cands.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .select("conv_id", "anaphor_ix", "antecedent_ix")
-    )
-
-
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Min-id label propagation to fixpoint.
-
-    ``edges``: (conv_id, anaphor_ix, antecedent_ix);
-    ``nodes``: (conv_id, mention_ix).
-    Returns (conv_id, mention_ix, cluster_id) where cluster_id is the
-    minimum mention_ix reachable in the undirected closure — matching the
-    reference's greedy pointer-merge (coref.py:367-439), whose cluster is
-    likewise "everything transitively linked".
-
-    Driver-side loop of joins; each iteration localCheckpoints to truncate
-    the lineage (on a cluster: checkpoint to the Iceberg/DFS checkpoint
-    dir). Each round does one neighbor-min hop PLUS one pointer-doubling
-    hop (label(x) <- label(label(x))), so label distance covered doubles
-    per round — O(log D) rounds for path length D, which matters here
-    because same-surface coref chains are long (one per surface per
-    conversation), not shallow stars.
-    """
-    sym = (
-        edges.select(
-            "conv_id", F.col("anaphor_ix").alias("src"), F.col("antecedent_ix").alias("dst")
-        )
-        .unionByName(
-            edges.select(
-                "conv_id",
-                F.col("antecedent_ix").alias("src"),
-                F.col("anaphor_ix").alias("dst"),
-            )
-        )
-        .distinct()
-    )
-    labels = nodes.select(
-        "conv_id", "mention_ix", F.col("mention_ix").alias("cluster_id")
-    )
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(
-                labels.withColumnRenamed("mention_ix", "dst").withColumnRenamed(
-                    "cluster_id", "n_label"
-                ),
-                ["conv_id", "dst"],
-            )
-            .groupBy("conv_id", F.col("src").alias("mention_ix"))
-            .agg(F.min("n_label").alias("n_min"))
-        )
-        # carry the round's starting label (_prev) through both hops so
-        # convergence is a filter on the SAME checkpointed frame — no
-        # extra join job per round
-        hop = (
-            labels.join(neigh, ["conv_id", "mention_ix"], "left")
-            .select(
-                "conv_id",
-                "mention_ix",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("n_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-                F.col("cluster_id").alias("_prev"),
-            )
-        )
-        # pointer doubling: jump to the label of my label
-        parent = hop.select(
-            "conv_id",
-            F.col("mention_ix").alias("cluster_id"),
-            F.col("cluster_id").alias("grand"),
-        )
-        new_labels = (
-            hop.join(parent, ["conv_id", "cluster_id"], "left")
-            .select(
-                "conv_id",
-                "mention_ix",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("grand"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-                "_prev",
-            )
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_labels.filter(F.col("cluster_id") != F.col("_prev"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.drop("_prev")
-        if changed == 0:
-            break
-    return labels
-
-
-def pointer_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components when every node has AT MOST ONE backward edge —
-    the shape the coref decode actually produces (each span argmaxes a
-    single antecedent, decode_antecedents / coref.py:312-322), i.e. a
-    forest of parent pointers into strictly-smaller mention indices.
-
-    Pure pointer doubling: label(x) <- label(label(x)) until fixpoint —
-    the root of each chain is its minimum index, so labels equal
-    :func:`connected_components` output on this edge class, at HALF the
-    per-round cost (one self-join per round, no symmetric edge
-    materialization, no neighbor-min aggregate). O(log D) rounds.
-    """
-    parents = edges.select(
-        "conv_id",
-        F.col("anaphor_ix").alias("mention_ix"),
-        F.col("antecedent_ix").alias("cluster_id"),
-    )
-    labels = (
-        nodes.select("conv_id", "mention_ix")
-        .join(parents, ["conv_id", "mention_ix"], "left")
-        .select(
-            "conv_id",
-            "mention_ix",
-            F.coalesce(F.col("cluster_id"), F.col("mention_ix")).alias("cluster_id"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        parent = labels.select(
-            "conv_id",
-            F.col("mention_ix").alias("cluster_id"),
-            F.col("cluster_id").alias("grand"),
-        )
-        new_labels = (
-            labels.join(parent, ["conv_id", "cluster_id"], "left")
-            .select(
-                "conv_id",
-                "mention_ix",
-                F.coalesce(F.col("grand"), F.col("cluster_id")).alias("cluster_id"),
-                F.col("cluster_id").alias("_prev"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.filter(F.col("cluster_id") != F.col("_prev"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.drop("_prev")
-        if changed == 0:
-            break
-    return labels
-
-
 def coref_clusters(mentions: DataFrame, max_antecedents: int = MAX_ANTECEDENTS) -> DataFrame:
-    """Full stub-coref pass: same-surface antecedent edges -> components.
+    """Full stub-coref pass: mentions + doc-level ``cluster_id``.
 
-    Returns mentions + cluster_id (doc-level). For the same-surface rule the
-    component is provably "all mentions of a surface within a conversation"
-    whenever consecutive same-surface mentions are <= max_antecedents
-    apart — which is what the DuckDB oracle exploits.
-
-    The decode emits ONE antecedent per anaphor (argmax), so the edge set
-    is a pointer forest and the cheaper :func:`pointer_components` applies;
-    :func:`connected_components` remains the operator for arbitrary edge
-    sets (e.g. cross-doc entity merging).
+    Same-surface rule, greedy decode: each mention takes the nearest earlier
+    mention of its surface within ``max_antecedents`` as its one antecedent
+    (coref.py:312-322). Following those pointers, a cluster is a maximal
+    run of one surface whose consecutive gaps are <= ``max_antecedents`` —
+    a gaps-and-islands window over (conv_id, surface): a new segment starts
+    where the gap to the previous same-surface mention exceeds the window,
+    a running sum numbers the segments, and the cluster id is the segment's
+    smallest mention_ix. Same shape as the DuckDB twin
+    (oracles_kg._COREF_CTES).
     """
     ordered = mention_order(mentions)
-    edges = coref_edges_same_surface(mentions, max_antecedents)
-    labels = pointer_components(
-        edges, ordered.select("conv_id", "mention_ix")
+    w = Window.partitionBy("conv_id", "surface").orderBy("mention_ix")
+    gap = F.col("mention_ix") - F.lag("mention_ix").over(w)
+    new_seg = F.when(gap.isNull() | (gap > max_antecedents), 1).otherwise(0)
+    seg = ordered.withColumn("_seg", F.sum(new_seg).over(w))
+    w_seg = Window.partitionBy("conv_id", "surface", "_seg")
+    rest = [c for c in ordered.columns if c not in ("conv_id", "mention_ix")]
+    return seg.select(
+        "conv_id",
+        "mention_ix",
+        *rest,
+        F.min("mention_ix").over(w_seg).alias("cluster_id"),
     )
-    return ordered.join(labels, ["conv_id", "mention_ix"])
 
 
 def coref_clusters_global(mentions: DataFrame) -> DataFrame:
@@ -479,7 +314,7 @@ def mention_recall(pred: DataFrame, gold: DataFrame) -> DataFrame:
             .select("conv_id", "mention_ix")
         )
 
-    g = ns_mentions(gold).localCheckpoint(eager=False)
+    g = ns_mentions(gold)
     p = ns_mentions(pred)
     flagged = g.join(
         p.withColumn("_hit", F.lit(1)), ["conv_id", "mention_ix"], "left"
@@ -487,7 +322,7 @@ def mention_recall(pred: DataFrame, gold: DataFrame) -> DataFrame:
     per_conv = flagged.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_gold"),
         F.sum(F.coalesce(F.col("_hit"), F.lit(0))).cast("bigint").alias("n_recalled"),
-    ).localCheckpoint(eager=False)
+    )
     total = per_conv.agg(
         F.lit("__total__").alias("conv_id"),
         F.sum("n_gold").cast("bigint").alias("n_gold"),

@@ -316,7 +316,7 @@ def near_dups_minhash(chunks: DataFrame, thresh: float = 0.25) -> DataFrame:
     too: the bucket self-join references the signature frame on both
     sides and the verify stage references counts four times; without the
     pin each reference re-runs its aggregation. Interleaved A/B
-    (scripts/ab_r4.py, r4): median 12.70 s -> 10.44 s (-18%) at sf0.1,
+    (BENCH/PLANS.md, round 4): median 12.70 s -> 10.44 s (-18%) at sf0.1,
     output bit-identical. Signature/count rows are k longs per doc —
     pinning them costs far less than one recompute at any scale.
     """

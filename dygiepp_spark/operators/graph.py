@@ -20,7 +20,14 @@ from dygiepp_spark.operators.linking import link_mentions
 
 
 def build_edges(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Triples with both endpoints resolved to canonical entity ids.
+    """Triples with both endpoints resolved to canonical entity ids."""
+    return link_edges(detect_mentions(turns), entity_dict)
+
+
+def link_edges(mentions: DataFrame, entity_dict: DataFrame) -> DataFrame:
+    """:func:`build_edges` over an already-detected mention frame
+    (conv_id, turn_idx, start, end, surface) — the DAG passes its
+    materialized ``mentions`` stage instead of re-tokenizing turns.
 
     Link-BEFORE-pair: the entity dictionary is broadcast-joined onto the
     mention frame first (narrow, no shuffle on the big side), so the pair
@@ -28,7 +35,6 @@ def build_edges(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
     needed — two fewer shuffles than the pair-then-link formulation, and
     a future per-mention neural linker slots into the same position.
     """
-    mentions = detect_mentions(turns)
     linked = link_mentions(mentions, entity_dict).select(
         "conv_id", "turn_idx", "start", "end", "surface", "entity_id"
     )

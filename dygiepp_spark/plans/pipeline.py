@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from dygiepp_spark.plans.store import StageStore, make_store
 
@@ -85,7 +85,9 @@ class Pipeline:
             out = fn(ctx)
             materialized = self.store.write(name, out)
             # per-partition lineage/metrics: one aggregate over the data,
-            # keyed by physical partition id
+            # keyed by physical partition id; the stage's row count is
+            # observed on the same write instead of a separate count()
+            rows = Observation()
             metrics = (
                 materialized.groupBy(
                     F.spark_partition_id().alias("partition_id")
@@ -98,9 +100,10 @@ class Pipeline:
                     F.lit(time.time() - t0).alias("stage_wall_sec"),
                     F.current_timestamp().alias("written_at"),
                 )
+                .observe(rows, F.coalesce(F.sum("rows"), F.lit(0)).alias("n"))
             )
             self.store.write_metrics(name, metrics)
-            n = materialized.count()
+            n = rows.get["n"]
             # manifest commits LAST: a crash before this point leaves the
             # stage un-manifested and the resume re-runs it
             self.store.commit_manifest(
@@ -158,23 +161,22 @@ def build_kg_pipeline(
 
     p = Pipeline(spark, warehouse)
 
+    def _docs():
+        return TT.load_documents(spark, sf_dir).select(
+            F.col("doc_id").cast("bigint").alias("doc_id"), "text"
+        )
+
     @p.stage("doc_filter", enabled=with_curation)
     def _doc_filter(ctx):
         from dygiepp_spark.functions.text import composite_filter
 
-        docs = TT.load_documents(spark, sf_dir).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-        )
-        return composite_filter(docs)
+        return composite_filter(_docs())
 
     @p.stage("doc_dedup", enabled=with_curation)
     def _doc_dedup(ctx):
         from dygiepp_spark.operators.dedup import exact_dedup_groups
 
-        docs = TT.load_documents(spark, sf_dir).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-        )
-        return exact_dedup_groups(docs)
+        return exact_dedup_groups(_docs())
 
     if curation_lm_buckets is not None:
         # fail loudly on a typo: a bucket name that matches nothing would
@@ -201,23 +203,17 @@ def build_kg_pipeline(
         # gets before extraction ever sees it
         from dygiepp_spark.functions.text import lm_score
 
-        docs = TT.load_documents(spark, sf_dir).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-        )
-        return lm_score(docs)
+        return lm_score(_docs())
 
     @p.stage("clean_docs", enabled=with_curation)
     def _clean_docs(ctx):
         from dygiepp_spark.functions.privacy import scrub_col
 
-        docs = TT.load_documents(spark, sf_dir).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-        )
         kept = ctx["doc_filter"].filter(F.col("keep")).select("doc_id")
         keepers = ctx["doc_dedup"].select(
             F.col("canonical_id").alias("doc_id")
         )
-        out = docs.join(kept, "doc_id").join(keepers, "doc_id")
+        out = _docs().join(kept, "doc_id").join(keepers, "doc_id")
         if lm_gate:
             fluent = (
                 ctx["doc_lm"]
@@ -251,7 +247,7 @@ def build_kg_pipeline(
 
     @p.stage("kg_edges")
     def _edges(ctx):
-        return GR.build_edges(ctx["turns"], TT.entity_dict(spark))
+        return GR.link_edges(ctx["mentions"], TT.entity_dict(spark))
 
     @p.stage("kg_edges_agg")
     def _edges_agg(ctx):

@@ -59,7 +59,8 @@ class ParquetStore:
     def write(self, name: str, df: DataFrame) -> DataFrame:
         path = self.location(name)
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        # the schema is known: skip the footer-reading inference job
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def write_metrics(self, name: str, df: DataFrame) -> None:
         df.write.mode("overwrite").parquet(
@@ -70,15 +71,26 @@ class ParquetStore:
         return self.spark.read.parquet(self.location(name))
 
     def manifest(self, name: str) -> dict | None:
-        p = self._manifest_path(name)
-        if not os.path.exists(p):
+        # a missing or unreadable manifest (e.g. truncated by a crash on a
+        # filesystem without atomic rename) means "not done": re-run
+        try:
+            with open(self._manifest_path(name)) as f:
+                return json.load(f)
+        except (FileNotFoundError, json.JSONDecodeError):
             return None
-        with open(p) as f:
-            return json.load(f)
 
     def commit_manifest(self, name: str, payload: dict) -> None:
-        with open(self._manifest_path(name), "w") as f:
-            json.dump(payload, f)
+        # write-then-rename in the same directory: readers see either no
+        # manifest or the whole one, never a partial write
+        path = self._manifest_path(name)
+        tmp = f"{path}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(payload, f)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
 
 class IcebergStore:

@@ -1,4 +1,4 @@
-"""Coref band join, connected components, canonicalization, linking."""
+"""Coref band join, cluster windows, canonicalization, linking."""
 
 from __future__ import annotations
 
@@ -25,21 +25,6 @@ def test_antecedent_band_join_window(spark):
     assert got == {(1, 0), (2, 1)}
 
 
-def test_connected_components_chain_and_islands(spark):
-    nodes = spark.createDataFrame(
-        [("d", i) for i in range(6)], "conv_id string, mention_ix int"
-    )
-    edges = spark.createDataFrame(
-        [("d", 1, 0), ("d", 2, 1), ("d", 4, 3)],
-        "conv_id string, anaphor_ix int, antecedent_ix int",
-    )
-    labels = {
-        r["mention_ix"]: r["cluster_id"]
-        for r in CO.connected_components(edges, nodes).collect()
-    }
-    assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
-
-
 def test_coref_clusters_same_surface(spark):
     m = _mentions(
         spark,
@@ -60,6 +45,30 @@ def test_coref_clusters_same_surface(spark):
     }
     # d: {spark x3}, {table}, e: {spark}
     assert sorted(sizes.values()) == [1, 1, 3]
+
+
+def test_coref_clusters_gap_over_window_splits_run(spark):
+    # "spark" at mention_ix 0, 2 and 5: the 2 -> 5 gap of 3 exceeds a
+    # window of 2, so the run splits into {0, 2} and {5}
+    m = _mentions(
+        spark,
+        [("d", 0, i, i, "spark" if i in (0, 2, 5) else f"w{i}") for i in range(6)],
+    )
+    out = CO.coref_clusters(m, max_antecedents=2)
+    assert out.columns == [
+        "conv_id", "mention_ix", "turn_idx", "start", "end", "surface", "cluster_id"
+    ]
+    got = {
+        r["mention_ix"]: r["cluster_id"]
+        for r in out.filter(F.col("surface") == "spark").collect()
+    }
+    assert got == {0: 0, 2: 0, 5: 5}
+    assert {
+        r["mention_ix"]: r["cluster_id"]
+        for r in CO.coref_clusters(m, max_antecedents=3)
+        .filter(F.col("surface") == "spark")
+        .collect()
+    } == {0: 0, 2: 0, 5: 0}
 
 
 def test_canonicalize_longest_member_wins(spark):
@@ -84,47 +93,13 @@ def test_linking_hits_and_fallback(spark):
     assert linked["unknownthing"]["type"] == "UNKNOWN"
 
 
-def test_pointer_components_equals_generic_cc(spark, sf_dir):
-    # the coref edge set is a pointer forest (one antecedent per anaphor);
-    # the specialized pointer-doubling CC must agree with the generic
-    # neighbor-min CC on it
-    from dygiepp_spark.operators import extraction as EX
-
-    mentions = EX.detect_mentions(
-        TT.turns_from_documents(spark, sf_dir, with_ts=False).filter(
-            F.col("conv_id").cast("int") < 60
-        )
-    )
-    ordered = CO.mention_order(mentions)
-    edges = CO.coref_edges_same_surface(mentions)
-    nodes = ordered.select("conv_id", "mention_ix")
-    a = CO.pointer_components(edges, nodes)
-    b = CO.connected_components(edges, nodes)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_pointer_components_long_chain(spark):
-    # chain 0<-1<-2<-...<-9 plus an island: all chain nodes label 0
-    edges = spark.createDataFrame(
-        [("c", i, i - 1) for i in range(1, 10)],
-        "conv_id string, anaphor_ix int, antecedent_ix int",
-    )
-    nodes = spark.createDataFrame(
-        [("c", i) for i in range(10)] + [("c", 42)],
-        "conv_id string, mention_ix int",
-    )
-    got = {
-        (r["mention_ix"], r["cluster_id"])
-        for r in CO.pointer_components(edges, nodes).collect()
-    }
-    assert got == {(i, 0) for i in range(10)} | {(42, 42)}
-
-
 def test_coref_fixture_cluster_replay(spark):
-    """M13-M16 against the reference's own SciERC fixture: replay the gold
-    clusters as antecedent chains (each member points to the previous one —
-    the reference's coref label construction, dygie.py:58-67) and verify
-    our component labeling reproduces the cluster PARTITION exactly."""
+    """M13-M16 against the reference's own SciERC fixture: give each gold
+    cluster its own surface, so the same-surface decode links every member
+    to the previous one (the reference's coref label construction,
+    dygie.py:58-67), and verify coref_clusters reproduces the cluster
+    PARTITION exactly. The antecedent window covers every span, so no gap
+    splits a cluster."""
     import json
 
     fixture = "/root/reference/dygie/tests/fixtures/scierc_article.json"
@@ -132,32 +107,17 @@ def test_coref_fixture_cluster_replay(spark):
     clusters = [
         [tuple(span) for span in cl] for cl in doc["clusters"] if len(cl) >= 1
     ]
-    all_spans = sorted({s for cl in clusters for s in cl})
-    ix = {s: i for i, s in enumerate(all_spans)}  # textual order = mention_ix
-
-    edge_rows = []
-    for cl in clusters:
-        members = sorted(cl)
-        for prev, cur in zip(members, members[1:]):
-            edge_rows.append(("d", ix[cur], ix[prev]))
-    edges = spark.createDataFrame(
-        edge_rows, "conv_id string, anaphor_ix int, antecedent_ix int"
+    surface = {s: f"c{ci}" for ci, cl in enumerate(clusters) for s in cl}
+    rows = [("d", 0, s[0], s[1], surface[s]) for s in sorted(surface)]
+    labels = CO.coref_clusters(
+        _mentions(spark, rows), max_antecedents=len(rows)
     )
-    nodes = spark.createDataFrame(
-        [("d", i) for i in range(len(all_spans))],
-        "conv_id string, mention_ix int",
-    )
-    for cc in (CO.pointer_components, CO.connected_components):
-        labels = cc(edges, nodes)
-        got = {}
-        for r in labels.collect():
-            got.setdefault(r["cluster_id"], set()).add(r["mention_ix"])
-        got_partition = {frozenset(v) for v in got.values()}
-        expected = {frozenset(ix[s] for s in cl) for cl in clusters}
-        # singletons in `got` are spans not in any multi-span cluster
-        got_multi = {p for p in got_partition if len(p) > 1}
-        exp_multi = {p for p in expected if len(p) > 1}
-        assert got_multi == exp_multi, cc.__name__
+    got = {}
+    for r in labels.collect():
+        got.setdefault(r["cluster_id"], set()).add((r["start"], r["end"]))
+    got_multi = {frozenset(v) for v in got.values() if len(v) > 1}
+    exp_multi = {frozenset(cl) for cl in clusters if len(set(cl)) > 1}
+    assert got_multi == exp_multi
 
 
 def test_coref_fixture_canonicalization_longest_member(spark):

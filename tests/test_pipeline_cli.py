@@ -86,6 +86,42 @@ def test_manifest_commits_after_data(spark, tmp_path):
     assert store.read("s1").count() == 5
 
 
+def test_truncated_manifest_reruns_stage(spark, tmp_path):
+    """A manifest cut short by a crash reads as "not done", so the next
+    run recomputes the stage instead of failing on the JSON."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    def build():
+        p = Pipeline(spark, str(tmp_path))
+        p.stage("s1")(lambda ctx: spark.range(5).toDF("id"))
+        return p
+
+    first = build()
+    first.run()
+    assert not first.results[0].resumed
+    path = os.path.join(str(tmp_path), "s1", "manifest.json")
+    with open(path) as f:
+        body = f.read()
+    with open(path, "w") as f:
+        f.write(body[: len(body) // 2])
+
+    second = build()
+    second.run()
+    assert not second.results[0].resumed
+    assert second.results[0].rows == 5
+    assert ParquetStore(spark, str(tmp_path)).manifest("s1")["rows"] == 5
+
+
+def test_failed_manifest_commit_leaves_no_manifest(spark, tmp_path):
+    store = ParquetStore(spark, str(tmp_path))
+    store.write("s1", spark.range(5).toDF("id"))
+    # json.dump writes "{"stage": "s1", " before it reaches the bad value
+    with pytest.raises(TypeError):
+        store.commit_manifest("s1", {"stage": "s1", "rows": object()})
+    assert store.manifest("s1") is None
+    assert os.listdir(os.path.join(str(tmp_path), "s1")) == ["data"]
+
+
 def test_cli_curated_pipeline_filters_then_extracts(spark, sf_dir, tmp_path, capsys):
     """--with-curation prepends filter/dedup/scrub stages; extraction then
     consumes the curated doc set (fewer turns than the raw derivation),
