@@ -593,6 +593,10 @@ def q_split_disjointness(spark, sf_dir):
     return DA.split_disjointness(_turns(spark, sf_dir))
 
 
+#: per-query scratch dirs for file round-trips and streaming drains
+_SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp")
+
+
 def _consume_and_remove(df: DataFrame, base: str) -> DataFrame:
     """Materialize ``df`` (eager localCheckpoint) so the scratch dir under
     .tmp can be deleted immediately instead of accumulating across runs —
@@ -609,7 +613,7 @@ def q_tsv_roundtrip(spark, sf_dir):
     eval_metric.py:79-84): triples written as TSV and read back must hash
     identically to the triples oracle — doubles survive because the CSV
     writer emits shortest-round-trip representations."""
-    base = f"/root/repo/.tmp/tsv_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(_SCRATCH, f"tsv_{uuid.uuid4().hex[:8]}")
     JS.write_triples_tsv(EX.emit_triples(_turns(spark, sf_dir)), base)
     return _consume_and_remove(JS.read_triples_tsv(spark, base), base)
 
@@ -624,7 +628,7 @@ def q_csv_ingest(spark, sf_dir):
     every 37th abstract blanked) is written, scanned back with header
     addressing, empty abstracts skipped, and tokenized into doc rows —
     the oracle derives the same rows straight from the documents view."""
-    base = f"/root/repo/.tmp/csv_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(_SCRATCH, f"csv_{uuid.uuid4().hex[:8]}")
     JS.write_metadata_csv(_docs(spark, sf_dir), base)
     return _consume_and_remove(JS.ingest_metadata_csv(spark, base), base)
 
@@ -635,7 +639,7 @@ def q_json_ingest(spark, sf_dir):
     are scanned back with the abstract/metadata-fallback/skip rules and
     tokenized into doc rows; the oracle derives the same rows from the
     documents view."""
-    base = f"/root/repo/.tmp/artjson_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(_SCRATCH, f"artjson_{uuid.uuid4().hex[:8]}")
     JS.write_article_json(_docs(spark, sf_dir), base)
     return _consume_and_remove(JS.ingest_article_json(spark, base), base)
 
@@ -951,13 +955,29 @@ def q_tfidf_topk(spark, sf_dir):
 # streaming (availableNow drain == batch result for stateless stages)
 # --------------------------------------------------------------------------
 
-def q_streaming_mentions(spark, sf_dir):
-    base = f"/root/repo/.tmp/stream_{uuid.uuid4().hex[:8]}"
+def _through_stream(
+    spark: SparkSession,
+    feed: DataFrame,
+    drain: Callable[[str, str, str], None],
+    read: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Run one streaming query over a scratch drop directory: write
+    ``feed`` there as parquet (its partitioning fixes which rows share a
+    micro-batch), ``drain(in_dir, out_dir, checkpoint_dir)``, then shape
+    the sink with ``read`` and materialize it so the scratch dir can go."""
+    base = os.path.join(_SCRATCH, f"stream_{uuid.uuid4().hex[:8]}")
     in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    _turns(spark, sf_dir).write.mode("overwrite").parquet(in_dir)
-    ST.run_mentions_stream(spark, in_dir, out_dir, ckpt)
-    return _consume_and_remove(spark.read.parquet(out_dir), base)
+    feed.write.mode("overwrite").parquet(in_dir)
+    drain(in_dir, out_dir, ckpt)
+    return _consume_and_remove(read(spark.read.parquet(out_dir)), base)
+
+
+def q_streaming_mentions(spark, sf_dir):
+    return _through_stream(
+        spark, _turns(spark, sf_dir),
+        lambda i, o, c: ST.run_mentions_stream(spark, i, o, c),
+        lambda out: out,
+    )
 
 
 def q_streaming_triples(spark, sf_dir):
@@ -967,18 +987,14 @@ def q_streaming_triples(spark, sf_dir):
     so no conversation straddles a batch and the union of per-batch
     triple sets equals the batch pipeline's output — the oracle is the
     batch triples SQL."""
-    base = f"/root/repo/.tmp/stream_tri_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    _turns(spark, sf_dir).repartition(8, "conv_id").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    ST.run_triples_stream(spark, in_dir, out_dir, ckpt, max_files_per_trigger=2)
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select(
+    return _through_stream(
+        spark, _turns(spark, sf_dir).repartition(8, "conv_id"),
+        lambda i, o, c: ST.run_triples_stream(
+            spark, i, o, c, max_files_per_trigger=2
+        ),
+        lambda out: out.select(
             "conv_id", "sent_text", "arg0", "arg1", "label", "conf"
         ),
-        base,
     )
 
 
@@ -988,16 +1004,12 @@ def q_streaming_quality(spark, sf_dir):
     filter is per-document and one stream row carries one whole doc, so
     the drained union equals the batch operator exactly — checked against
     the same SQL oracle as `quality_filter`."""
-    base = f"/root/repo/.tmp/stream_q_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    _doc_text(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(in_dir)
-    ST.run_quality_stream(spark, in_dir, out_dir, ckpt, max_files_per_trigger=2)
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select(
-            "doc_id", "n_tokens", "reason_bits", "keep"
+    return _through_stream(
+        spark, _doc_text(spark, sf_dir).repartition(4),
+        lambda i, o, c: ST.run_quality_stream(
+            spark, i, o, c, max_files_per_trigger=2
         ),
-        base,
+        lambda out: out.select("doc_id", "n_tokens", "reason_bits", "keep"),
     )
 
 
@@ -1007,14 +1019,13 @@ def q_streaming_assembly(spark, sf_dir):
     drained a few files per micro-batch, so most straddle batch
     boundaries; the state store must reassemble them exactly — the oracle
     is the BATCH doc-assembly SQL."""
-    base = f"/root/repo/.tmp/stream_asm_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
     turns = TT.turns_from_documents(spark, sf_dir, with_ts=True)
-    ST.with_turn_totals(turns).repartition(8).write.mode("overwrite").parquet(in_dir)
-    ST.run_assembly_stream(spark, in_dir, out_dir, ckpt, max_files_per_trigger=2)
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select("conv_id", "n_turns", "doc_text"), base
+    return _through_stream(
+        spark, ST.with_turn_totals(turns).repartition(8),
+        lambda i, o, c: ST.run_assembly_stream(
+            spark, i, o, c, max_files_per_trigger=2
+        ),
+        lambda out: out.select("conv_id", "n_turns", "doc_text"),
     )
 
 
@@ -1023,17 +1034,15 @@ def q_streaming_dedup(spark, sf_dir):
     over input files and drained one file per micro-batch, so groups
     straddle batch boundaries; the state store must converge to the batch
     aggregation — the oracle is the batch dedup_exact SQL."""
-    base = f"/root/repo/.tmp/stream_dedup_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "text"
     )
-    ST.with_hash_totals(docs).repartition(8).write.mode("overwrite").parquet(in_dir)
-    ST.run_dedup_stream(spark, in_dir, out_dir, ckpt, max_files_per_trigger=2)
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select("text_hash", "canonical_id", "n_dups"),
-        base,
+    return _through_stream(
+        spark, ST.with_hash_totals(docs).repartition(8),
+        lambda i, o, c: ST.run_dedup_stream(
+            spark, i, o, c, max_files_per_trigger=2
+        ),
+        lambda out: out.select("text_hash", "canonical_id", "n_dups"),
     )
 
 
@@ -1041,17 +1050,12 @@ def q_streaming_windowed(spark, sf_dir):
     """Event-time windowed mention counts with a watermark: the streaming
     drain (plus one horizon sentinel that closes the trailing windows)
     must equal the batch rollup — the oracle is the batch SQL."""
-    base = f"/root/repo/.tmp/stream_win_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    TT.turns_from_documents(spark, sf_dir, with_ts=True).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
     # 4s windows: the derived corpus spans only ~8s of event time (1s per
     # turn), so production-scale 60s windows would collapse to one bucket
-    ST.run_windowed_stream(spark, in_dir, out_dir, ckpt, window_sec=4)
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select("window_start", "surface", "n"), base
+    return _through_stream(
+        spark, TT.turns_from_documents(spark, sf_dir, with_ts=True),
+        lambda i, o, c: ST.run_windowed_stream(spark, i, o, c, window_sec=4),
+        lambda out: out.select("window_start", "surface", "n"),
     )
 
 
@@ -1149,7 +1153,7 @@ def q_partitioned_sink(spark, sf_dir):
     directory (PartitionFilters in the plan, pinned by
     test_partitioned_sink_prunes). Oracle = the same single-predicate
     filter over the edges SQL."""
-    base = f"/root/repo/.tmp/part_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(_SCRATCH, f"part_{uuid.uuid4().hex[:8]}")
     edges = GR.build_edges(_turns(spark, sf_dir), TT.entity_dict(spark))
     edges.write.mode("overwrite").partitionBy("pred").parquet(base)
     back = (
@@ -1181,9 +1185,6 @@ def q_streaming_sessions(spark, sf_dir):
     is the same SQL as the batch `sessions` query."""
     from pyspark.sql import Window
 
-    base = f"/root/repo/.tmp/stream_sess_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
     with_ts = (
         _turns(spark, sf_dir)
         .withColumn("ts_sec", F.expr("turn_idx * 2 + (turn_idx div 4) * 60"))
@@ -1193,15 +1194,15 @@ def q_streaming_sessions(spark, sf_dir):
         )
         .select("conv_id", "turn_idx", F.col("ts_sec").cast("bigint"), "n_turns")
     )
-    with_ts.repartition(8).write.mode("overwrite").parquet(in_dir)
-    ST.run_session_stream(spark, in_dir, out_dir, ckpt, gap_sec=30,
-                          max_files_per_trigger=2)
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select(
+    return _through_stream(
+        spark, with_ts.repartition(8),
+        lambda i, o, c: ST.run_session_stream(
+            spark, i, o, c, gap_sec=30, max_files_per_trigger=2
+        ),
+        lambda out: out.select(
             "conv_id", "session_ix", "n_turns", "first_turn", "last_turn",
             "duration_sec",
         ),
-        base,
     )
 
 
@@ -1225,9 +1226,6 @@ def q_streaming_asof(spark, sf_dir):
     the static events dimension via foreachBatch. Per-row semantics make
     the drained union equal the batch operator under any batching, so the
     oracle is the same SQL as `asof_events`."""
-    base = f"/root/repo/.tmp/stream_asof_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
     left = _turns(spark, sf_dir).select(
         "conv_id",
         "turn_idx",
@@ -1238,7 +1236,6 @@ def q_streaming_asof(spark, sf_dir):
             + F.col("turn_idx").cast("bigint") * 30
         ).alias("ts_sec"),
     )
-    left.repartition(8, "conv_id").write.mode("overwrite").parquet(in_dir)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         (F.col("user_id") % oracles_data.ASOF_KEY_MOD).alias("ukey"),
         (
@@ -1251,21 +1248,21 @@ def q_streaming_asof(spark, sf_dir):
         "event_type",
         "value",
     )
-    ST.run_asof_stream(
-        spark,
-        in_dir,
-        "conv_id string, turn_idx int, ukey bigint, ts_sec bigint",
-        ev,
-        out_dir,
-        ckpt,
-        ["event_id", "event_type", "value"],
-        max_files_per_trigger=2,
-    )
-    return _consume_and_remove(
-        spark.read.parquet(out_dir).select(
+    return _through_stream(
+        spark, left.repartition(8, "conv_id"),
+        lambda i, o, c: ST.run_asof_stream(
+            spark,
+            i,
+            "conv_id string, turn_idx int, ukey bigint, ts_sec bigint",
+            ev,
+            o,
+            c,
+            ["event_id", "event_type", "value"],
+            max_files_per_trigger=2,
+        ),
+        lambda out: out.select(
             "conv_id", "turn_idx", "event_id", "event_type", "value"
         ),
-        base,
     )
 
 
@@ -1288,7 +1285,7 @@ def q_orc_roundtrip(spark, sf_dir):
     """Columnar ORC sink + scan round-trip: triples written to ORC and
     read back must hash identically to the triples oracle (bit-exact
     doubles by construction — no text serialization involved)."""
-    base = f"/root/repo/.tmp/orc_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(_SCRATCH, f"orc_{uuid.uuid4().hex[:8]}")
     JS.write_triples_orc(EX.emit_triples(_turns(spark, sf_dir)), base)
     return _consume_and_remove(JS.read_triples_orc(spark, base), base)
 
@@ -1441,18 +1438,14 @@ def q_streaming_length_quantiles(spark, sf_dir):
     """Streaming EXACT quantiles: per-batch (n_tok, cnt) partials in
     the idempotent sink, folded + quantile-read on the read side —
     same lower-rank semantics and SQL oracle as `length_quantiles`."""
-    base = f"/root/repo/.tmp/stream_lq_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    _doc_text(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(
-        in_dir
-    )
-    ST.run_length_counts_stream(
-        spark, in_dir, out_dir, ckpt, max_files_per_trigger=2
-    )
-    partials = spark.read.parquet(out_dir).select("n_tok", "cnt")
-    return _consume_and_remove(
-        ST.quantiles_from_length_partials(partials), base
+    return _through_stream(
+        spark, _doc_text(spark, sf_dir).repartition(4),
+        lambda i, o, c: ST.run_length_counts_stream(
+            spark, i, o, c, max_files_per_trigger=2
+        ),
+        lambda out: ST.quantiles_from_length_partials(
+            out.select("n_tok", "cnt")
+        ),
     )
 
 
@@ -1552,7 +1545,7 @@ def q_dedup_rate_by_source(spark, sf_dir):
 def q_ntriples_roundtrip(spark, sf_dir):
     """N-Triples KG export + scan round-trip: the re-parsed (s, p, o)
     set must hash identically to the distinct edge set."""
-    base = f"/root/repo/.tmp/nt_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(_SCRATCH, f"nt_{uuid.uuid4().hex[:8]}")
     edges = GR.build_edges(_turns(spark, sf_dir), TT.entity_dict(spark))
     JS.write_edges_ntriples(edges, base)
     return _consume_and_remove(JS.read_edges_ntriples(spark, base), base)
@@ -1692,20 +1685,17 @@ def q_streaming_kg_agg(spark, sf_dir):
     conv-hashed files, 2 per micro-batch), so partials merge exactly and
     the fold equals batch aggregate_edges — same SQL oracle as
     `kg_edges_agg`."""
-    base = f"/root/repo/.tmp/stream_kg_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    _turns(spark, sf_dir).repartition(8, "conv_id").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    ST.run_kg_agg_stream(
-        spark, in_dir, out_dir, ckpt, TT.entity_dict(spark),
-        max_files_per_trigger=2,
+    return _through_stream(
+        spark, _turns(spark, sf_dir).repartition(8, "conv_id"),
+        lambda i, o, c: ST.run_kg_agg_stream(
+            spark, i, o, c, TT.entity_dict(spark), max_files_per_trigger=2
+        ),
+        lambda out: ST.merge_kg_partials(
+            out.select(
+                "subj_id", "pred", "obj_id", "support", "max_conf", "n_convs"
+            )
+        ),
     )
-    partials = spark.read.parquet(out_dir).select(
-        "subj_id", "pred", "obj_id", "support", "max_conf", "n_convs"
-    )
-    return _consume_and_remove(ST.merge_kg_partials(partials), base)
 
 
 def q_streaming_tool_usage(spark, sf_dir):
@@ -1713,19 +1703,15 @@ def q_streaming_tool_usage(spark, sf_dir):
     conv-count, turn-sum) rollups per tool in the idempotent partial-
     sink contract, folded on read — same SQL oracle as `tool_usage`
     (the conv-partitioned feed makes the fold equal the batch op)."""
-    base = f"/root/repo/.tmp/stream_tools_{uuid.uuid4().hex[:8]}"
-    in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
-    _turns(spark, sf_dir).repartition(8, "conv_id").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    ST.run_tool_usage_stream(
-        spark, in_dir, out_dir, ckpt, max_files_per_trigger=2
+    return _through_stream(
+        spark, _turns(spark, sf_dir).repartition(8, "conv_id"),
+        lambda i, o, c: ST.run_tool_usage_stream(
+            spark, i, o, c, max_files_per_trigger=2
+        ),
+        lambda out: ST.merge_tool_usage_partials(
+            out.select("tool", "n_calls", "n_convs", "sum_turn")
+        ),
     )
-    partials = spark.read.parquet(out_dir).select(
-        "tool", "n_calls", "n_convs", "sum_turn"
-    )
-    return _consume_and_remove(ST.merge_tool_usage_partials(partials), base)
 
 
 def q_lpa_communities(spark, sf_dir):

@@ -321,35 +321,31 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     """
     if rounds < 1:
         raise ValueError(f"kcore needs rounds >= 1, got {rounds}")
-    und = (
-        edges.select(
-            F.least("subj_id", "obj_id").alias("lo"),
-            F.greatest("subj_id", "obj_id").alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    sym = und.unionByName(
-        und.select(F.col("hi").alias("lo"), F.col("lo").alias("hi"))
-    )
+    sym = _sym_edges(edges)
     alive = sym.select(F.col("lo").alias("node_id")).distinct()
-    deg = None
     for _ in range(rounds):
-        # each round references `alive` twice (both semi-joins); without
-        # lineage truncation the logical plan DOUBLES per round — 2^rounds
-        # copies of the base subtree (the same fix as near_dup_groups'
-        # per-round checkpoint; surfaced by the hypothesis peel test)
-        alive = alive.localCheckpoint(eager=False)
-        live_edges = sym.join(
-            alive.withColumnRenamed("node_id", "lo"), "lo", "left_semi"
-        ).join(alive.withColumnRenamed("node_id", "hi"), "hi", "left_semi")
-        deg = live_edges.groupBy(F.col("lo").alias("node_id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        alive = deg.filter(F.col("deg") >= k).select("node_id")
-    # survivors with their last-round degree (alive is exactly the
-    # deg >= k filter of that frame)
+        survivors = _peel(sym, alive, k)
+        alive = survivors.select("node_id")
+    # survivors with their last-round degree
+    return survivors
+
+
+def _peel(sym: DataFrame, alive: DataFrame, k: int) -> DataFrame:
+    """One peel round: the degree of every ``alive`` node within the
+    alive subgraph, kept where it is >= k — (node_id, deg). Shared by
+    the bounded-round parity twin and the fixpoint production form so
+    the recurrence can never diverge between them."""
+    # each round references `alive` twice (both semi-joins); without
+    # lineage truncation the logical plan DOUBLES per round — 2^rounds
+    # copies of the base subtree (the same fix as near_dup_groups'
+    # per-round checkpoint; surfaced by the hypothesis peel test)
+    alive = alive.localCheckpoint(eager=False)
+    live_edges = sym.join(
+        alive.withColumnRenamed("node_id", "lo"), "lo", "left_semi"
+    ).join(alive.withColumnRenamed("node_id", "hi"), "hi", "left_semi")
+    deg = live_edges.groupBy(F.col("lo").alias("node_id")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
     return deg.filter(F.col("deg") >= k)
 
 
@@ -362,9 +358,9 @@ def kcore_fixpoint(
     degrees — the alive set that produced them no longer changes.
 
     Convergence is detected by counting the alive set each round (one
-    tiny action on an (id)-only frame); each round's frames are
-    lineage-truncated with localCheckpoint exactly like :func:`kcore`,
-    so the plan stays flat no matter the peel depth. ``max_rounds`` is a
+    tiny action on an (id)-only frame); each round is the same
+    lineage-truncated :func:`_peel` as :func:`kcore`, so the plan stays
+    flat no matter the peel depth. ``max_rounds`` is a
     fail-loud runaway bound (a graph peels at most |V| rounds; real KGs
     converge in tens): exceeding it raises instead of silently returning
     a non-core.
@@ -373,14 +369,7 @@ def kcore_fixpoint(
     alive = sym.select(F.col("lo").alias("node_id")).distinct()
     n_alive = alive.count()
     for _ in range(max_rounds):
-        alive = alive.localCheckpoint(eager=False)
-        live_edges = sym.join(
-            alive.withColumnRenamed("node_id", "lo"), "lo", "left_semi"
-        ).join(alive.withColumnRenamed("node_id", "hi"), "hi", "left_semi")
-        deg = live_edges.groupBy(F.col("lo").alias("node_id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        survivors = deg.filter(F.col("deg") >= k)
+        survivors = _peel(sym, alive, k)
         alive = survivors.select("node_id")
         n_next = alive.count()
         if n_next == n_alive:
@@ -469,7 +458,8 @@ def pagerank_weighted(agg_edges: DataFrame, iterations: int = 3) -> DataFrame:
 def _sym_edges(edges: DataFrame) -> DataFrame:
     """Distinct undirected edge list symmetrized to (lo, hi) in both
     directions, self-loops dropped, lineage-truncated — the shared input
-    frame of the label-propagation family (LPA, components)."""
+    frame of k-core peeling and the label-propagation family (LPA,
+    components)."""
     und = (
         edges.select(
             F.least("subj_id", "obj_id").alias("lo"),

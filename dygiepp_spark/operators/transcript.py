@@ -298,28 +298,22 @@ def conv_funnel(turns: DataFrame) -> DataFrame:
     same layering as tool_usage / tool_transitions / tool_chains), so
     real tool calls are never silently overwritten.
 
-    Scale: four distinct-conv counts, each one map-side-combinable agg
-    over a frame the pipeline already computes; the yields are exact
-    integer divisions. The four counts are independent jobs on purpose
-    (shared-scan fusion would force one monolithic plan; at 100 TB each
-    stage frame is already materialized by the pipeline and the counts
-    read those).
+    Scale: four one-row distinct-conv aggregates, cross-joined into the
+    report row; the yields are exact integer divisions. The frame is
+    lazy — building it starts no Spark job, so it composes into a caller's
+    plan (or a pipeline stage) like every other report operator.
     """
     from dygiepp_spark.operators.extraction import detect_mentions, emit_triples
 
-    n_convs = turns.select("conv_id").distinct().count()
-    n_tooled = (
-        turns.filter(F.col("tool").isNotNull())
-        .select("conv_id")
-        .distinct()
-        .count()
-    )
-    n_mentioned = detect_mentions(turns).select("conv_id").distinct().count()
-    n_tripled = emit_triples(turns).select("conv_id").distinct().count()
-    spark = turns.sparkSession
-    row = spark.createDataFrame(
-        [(n_convs, n_tooled, n_mentioned, n_tripled)],
-        "n_convs bigint, n_tooled bigint, n_mentioned bigint, n_tripled bigint",
+    def n_distinct(df: DataFrame, name: str) -> DataFrame:
+        return df.agg(F.count_distinct("conv_id").alias(name))
+
+    tooled = turns.filter(F.col("tool").isNotNull())
+    row = (
+        n_distinct(turns, "n_convs")
+        .crossJoin(n_distinct(tooled, "n_tooled"))
+        .crossJoin(n_distinct(detect_mentions(turns), "n_mentioned"))
+        .crossJoin(n_distinct(emit_triples(turns), "n_tripled"))
     )
     safe = F.greatest(F.col("n_convs"), F.lit(1)).cast("double")
     return row.select(

@@ -10,8 +10,11 @@ per-partition lineage and metrics rows. Pattern (SURVEY.md §7 stage 7):
 * alongside it a ``_metrics`` table: one row per output partition
   (stage, partition_id, rows, bytes-est, wall, written_at)
 * a ``_SUCCESS``-gated manifest — a re-run skips stages whose manifest is
-  present, giving crash-resume at stage granularity (the reference's
-  instance-cache analog, dygie/data/dataset_readers/dygie.py:194-203).
+  present, up to the first stage that must run; that stage and every
+  stage after it re-run, so a resume never serves a stage computed from
+  an older upstream. This gives crash-resume at stage granularity (the
+  reference's instance-cache analog,
+  dygie/data/dataset_readers/dygie.py:194-203).
 
 The metrics row collection uses ``spark_partition_id()`` + a groupBy —
 no driver-side iteration over partitions.
@@ -67,9 +70,12 @@ class Pipeline:
 
     def run(self, inputs: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         ctx: dict[str, DataFrame] = dict(inputs or {})
+        # once a stage re-runs, every later stage's manifest may describe
+        # an older upstream, so the rest of the DAG re-runs too
+        rerun = False
         for name, fn in self.stages:
             t0 = time.time()
-            manifest = self.store.manifest(name)
+            manifest = None if rerun else self.store.manifest(name)
             if manifest is not None:
                 ctx[name] = self.store.read(name)
                 self.results.append(
@@ -82,6 +88,7 @@ class Pipeline:
                     )
                 )
                 continue
+            rerun = True
             out = fn(ctx)
             materialized = self.store.write(name, out)
             # per-partition lineage/metrics: one aggregate over the data,

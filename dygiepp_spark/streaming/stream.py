@@ -9,7 +9,7 @@ naturally a stream of turns; the extraction stages split cleanly into:
   ``foreachBatch``, which hands each micro-batch to the full batch
   pipeline (the standard pattern for reusing complex batch logic);
   exactly-once = checkpointed batch ids + an IDEMPOTENT sink (the batch_id
-  partition is dynamically overwritten on replay, see run_triples_stream).
+  partition is dynamically overwritten on replay, see :func:`_write_batch`).
 * **cross-batch stateful stages** (doc assembly when a conversation's
   turns straddle micro-batches): ``applyInPandasWithState`` keyed on
   conv_id — the state store buffers partial conversations and emits each
@@ -23,7 +23,7 @@ the same input).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -46,38 +46,87 @@ TURNS_STREAM_SCHEMA = T.StructType(
 )
 
 
-def stream_turns(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
+def _source(
+    spark: SparkSession, schema: T.StructType | str, input_dir: str,
+    max_files_per_trigger: int,
 ) -> DataFrame:
-    """File-source stream of turn rows (parquet drop directory)."""
+    """Parquet file-source stream over a drop directory — the replayable
+    half of exactly-once: the checkpoint records which files each batch
+    read, so a retried batch reads the same rows."""
     return (
-        spark.readStream.schema(TURNS_STREAM_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
 
 
-def stream_mentions(turns_stream: DataFrame) -> DataFrame:
-    """Stateless streaming mention detection — narrow ops only, so it runs
-    without a state store or watermark in append mode."""
-    return EX.detect_mentions(turns_stream)
-
-
-def run_mentions_stream(
-    spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain the input directory through the stateless mention stream into
-    a parquet sink (availableNow -> terminates when caught up)."""
-    q = (
-        stream_mentions(stream_turns(spark, input_dir))
-        .writeStream.format("parquet")
+def _drain_append(stream: DataFrame, out_dir: str, checkpoint_dir: str) -> None:
+    """Drain ``stream`` into an append-mode parquet sink; availableNow
+    returns once the source is caught up. Spark's file sink is itself
+    exactly-once (its commit log names each batch's files)."""
+    (
+        stream.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
+
+
+def _write_batch(df: DataFrame, batch_id: int, out_dir: str) -> None:
+    """The idempotent foreachBatch sink: ``df`` lands in the
+    ``batch_id=<batch_id>`` partition of ``out_dir``.
+
+    Exactly-once on replay: a micro-batch retried after a
+    write-succeeded/checkpoint-failed crash re-runs with the SAME
+    batch_id over the same source files, and dynamic partition overwrite
+    replaces exactly that batch's partition — duplicates cannot survive
+    (the blind ``mode('append')`` alternative is only at-least-once), and
+    other batches' partitions are never touched.
+    """
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(out_dir)
+    )
+
+
+def _drain_batches(
+    stream: DataFrame, per_batch: Callable[[DataFrame], DataFrame],
+    out_dir: str, checkpoint_dir: str,
+) -> None:
+    """Drain ``stream`` through foreachBatch: each micro-batch runs the
+    batch operator ``per_batch`` and lands in :func:`_write_batch`."""
+    (
+        stream.writeStream.foreachBatch(
+            lambda df, batch_id: _write_batch(per_batch(df), batch_id, out_dir)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def stream_turns(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
+) -> DataFrame:
+    """File-source stream of turn rows (parquet drop directory)."""
+    return _source(spark, TURNS_STREAM_SCHEMA, input_dir, max_files_per_trigger)
+
+
+def run_mentions_stream(
+    spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str
+) -> None:
+    """Drain the input directory through stateless mention detection
+    (narrow ops only: no state store or watermark) into a parquet sink."""
+    _drain_append(
+        EX.detect_mentions(stream_turns(spark, input_dir)), out_dir, checkpoint_dir
+    )
 
 
 def run_triples_stream(
@@ -85,14 +134,8 @@ def run_triples_stream(
     max_files_per_trigger: int = 8,
 ) -> None:
     """Micro-batch triple extraction via foreachBatch: each batch runs the
-    FULL batch pipeline (beams + pair join + dedup) into a batch_id-
-    partitioned sink.
-
-    Exactly-once on replay: a retried micro-batch re-runs ``_emit`` with
-    the SAME batch_id, and dynamic partition overwrite replaces exactly
-    that batch's partition — duplicates cannot survive a
-    write-succeeded/checkpoint-failed crash window (the blind
-    ``mode('append')`` alternative is only at-least-once).
+    FULL batch pipeline (beams + pair join + dedup) into the idempotent
+    batch_id-partitioned sink (:func:`_write_batch`).
 
     Per-batch dedup scope: triples are deduped within a micro-batch (the
     reference's per-document dict semantics — a conversation's turns
@@ -100,25 +143,10 @@ def run_triples_stream(
     conversations straddle batches, is the downstream aggregate_edges
     rollup or the stateful assembly path.
     """
-
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            EX.emit_triples(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_batches(
+        stream_turns(spark, input_dir, max_files_per_trigger),
+        EX.emit_triples, out_dir, checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 # --------------------------------------------------------------------------
@@ -187,26 +215,13 @@ def run_windowed_stream(
     os.makedirs(sentinel_dir, exist_ok=True)
 
     def drain():
-        def src(d):
-            return (
-                spark.readStream.schema(TURNS_TS_SCHEMA)
-                .option("maxFilesPerTrigger", 4)
-                .parquet(d)
-            )
-
-        q = (
-            windowed_mention_counts(
-                src(input_dir).unionByName(src(sentinel_dir)),
-                window_sec, watermark_sec,
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        turns = _source(spark, TURNS_TS_SCHEMA, input_dir, 4).unionByName(
+            _source(spark, TURNS_TS_SCHEMA, sentinel_dir, 4)
         )
-        q.awaitTermination()
+        _drain_append(
+            windowed_mention_counts(turns, window_sec, watermark_sec),
+            out_dir, checkpoint_dir,
+        )
 
     drain()
     sentinel = spark.createDataFrame(
@@ -299,21 +314,8 @@ def run_assembly_stream(
     stateful assembly into a parquet sink. ``max_files_per_trigger=1``
     forces one input file per micro-batch, so multi-file conversations
     genuinely cross batch boundaries (the condition under test)."""
-    src = (
-        spark.readStream.schema(TURNS_TOTALS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        assemble_conversations_stateful(src)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = _source(spark, TURNS_TOTALS_SCHEMA, input_dir, max_files_per_trigger)
+    _drain_append(assemble_conversations_stateful(src), out_dir, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -405,21 +407,8 @@ def run_dedup_stream(
 ) -> None:
     """Drain a (text_hash, doc_id, n_total) parquet drop directory through
     the stateful dedup into a parquet sink."""
-    stream = (
-        spark.readStream.schema(DOCS_HASH_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        dedup_stream_stateful(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = _source(spark, DOCS_HASH_SCHEMA, input_dir, max_files_per_trigger)
+    _drain_append(dedup_stream_stateful(src), out_dir, checkpoint_dir)
 
 
 # --------------------------------------------------------------------------
@@ -446,32 +435,14 @@ def run_quality_stream(
     mode, is keyed on doc_id, and one stream row carries one whole doc),
     so the union of per-batch outputs equals the batch operator's output
     exactly — the `quality_filter` SQL oracle checks the drained stream
-    verbatim. Exactly-once on replay for the same reason as
-    :func:`run_triples_stream`: a retried micro-batch overwrites its own
-    batch_id partition.
+    verbatim.
     """
     from dygiepp_spark.functions.text import composite_filter
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            composite_filter(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_batches(
+        _source(spark, DOCS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        composite_filter, out_dir, checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 # --------------------------------------------------------------------------
@@ -508,26 +479,13 @@ def run_asof_stream(
     """
     from dygiepp_spark.operators.temporal import asof_join
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            asof_join(batch_df, events, list(on), left_ts, right_ts, payload_cols)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_batches(
+        _source(spark, input_schema, input_dir, max_files_per_trigger),
+        lambda df: asof_join(
+            df, events, list(on), left_ts, right_ts, payload_cols
+        ),
+        out_dir, checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 # --------------------------------------------------------------------------
@@ -621,21 +579,8 @@ def run_session_stream(
     spark: SparkSession, input_dir: str, out_dir: str, checkpoint_dir: str,
     gap_sec: int = 30, max_files_per_trigger: int = 2,
 ) -> None:
-    src = (
-        spark.readStream.schema(SESS_IN_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        sessionize_stateful(src, gap_sec=gap_sec)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    src = _source(spark, SESS_IN_SCHEMA, input_dir, max_files_per_trigger)
+    _drain_append(sessionize_stateful(src, gap_sec=gap_sec), out_dir, checkpoint_dir)
 
 
 def run_kg_agg_stream(
@@ -654,30 +599,15 @@ def run_kg_agg_stream(
     The partials are exactly mergeable when no conversation straddles a
     micro-batch (the feed is conv-partitioned, as in run_triples_stream):
     support and n_convs then ADD across batches and max_conf MAXes —
-    sum/sum/max is the whole compaction. Exactly-once on replay via the
-    same dynamic-partition-overwrite contract as the other foreachBatch
-    sinks.
+    sum/sum/max is the whole compaction.
     """
     from dygiepp_spark.operators import graph as GR
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            GR.aggregate_edges(GR.build_edges(batch_df, entity_dict))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_batches(
+        stream_turns(spark, input_dir, max_files_per_trigger),
+        lambda df: GR.aggregate_edges(GR.build_edges(df, entity_dict)),
+        out_dir, checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def merge_kg_partials(partials: DataFrame) -> DataFrame:
@@ -698,8 +628,8 @@ def run_tool_usage_stream(
 ) -> None:
     """Streaming agent-analytics rollup: each micro-batch lands PER-BATCH
     PARTIAL tool-usage aggregates (n_calls / n_convs / turn-index sum per
-    tool) in the same idempotent batch_id-partitioned sink contract as
-    run_kg_agg_stream; ``merge_tool_usage_partials`` is the read-side
+    tool) in the idempotent batch_id-partitioned sink
+    (:func:`_write_batch`); ``merge_tool_usage_partials`` is the read-side
     fold. Partials merge exactly when no conversation straddles a
     micro-batch (conv-partitioned feed): counts and sums ADD. The mean
     is NOT carried in the partials — only the (sum, count) pair, the
@@ -708,32 +638,18 @@ def run_tool_usage_stream(
     """
     from dygiepp_spark.operators import transcript as TR
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        calls = TR.with_synthetic_tools(batch_df).filter(
-            F.col("tool").isNotNull()
-        )
-        (
-            calls.groupBy("tool")
-            .agg(
-                F.count(F.lit(1)).alias("n_calls"),
-                F.count_distinct("conv_id").alias("n_convs"),
-                F.sum(F.col("turn_idx").cast("bigint")).alias("sum_turn"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
+    def partial(df: DataFrame) -> DataFrame:
+        calls = TR.with_synthetic_tools(df).filter(F.col("tool").isNotNull())
+        return calls.groupBy("tool").agg(
+            F.count(F.lit(1)).alias("n_calls"),
+            F.count_distinct("conv_id").alias("n_convs"),
+            F.sum(F.col("turn_idx").cast("bigint")).alias("sum_turn"),
         )
 
-    q = (
-        stream_turns(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_batches(
+        stream_turns(spark, input_dir, max_files_per_trigger),
+        partial, out_dir, checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def merge_tool_usage_partials(partials: DataFrame) -> DataFrame:
@@ -762,8 +678,8 @@ def run_length_counts_stream(
 ) -> None:
     """Streaming EXACT quantile state: each micro-batch lands per-batch
     (n_tok, cnt) PARTIAL counts — the integer-domain sufficient
-    statistic behind functions.text.length_quantiles — in the shared
-    idempotent batch_id-partitioned sink contract. Counts over a small
+    statistic behind functions.text.length_quantiles — in the idempotent
+    batch_id-partitioned sink (:func:`_write_batch`). Counts over a small
     value domain are the textbook mergeable summary: the fold is one
     SUM per length, after which the EXACT quantile read costs a window
     over distinct lengths only. This is how a 100 TB pipeline keeps a
@@ -772,30 +688,13 @@ def run_length_counts_stream(
     """
     from dygiepp_spark.functions.text import tokens_col
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(
-                F.size(tokens_col(F.col("text"))).alias("n_tok")
-            )
-            .groupBy("n_tok")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain_batches(
+        _source(spark, DOCS_STREAM_SCHEMA, input_dir, max_files_per_trigger),
+        lambda df: df.groupBy(
+            F.size(tokens_col(F.col("text"))).alias("n_tok")
+        ).agg(F.count(F.lit(1)).alias("cnt")),
+        out_dir, checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def quantiles_from_length_partials(

@@ -24,7 +24,8 @@ Local smoke (exactly what tests/test_pipeline_cli.py runs in-process):
 When launched under spark-submit, pass ``--master ''`` (empty) so the
 session inherits the submitted master/conf instead of overriding it.
 A re-run with the same warehouse resumes: stages with a committed
-manifest are skipped (exercise with --resume-demo).
+manifest are skipped up to the first stage that must run, which re-runs
+together with every stage after it.
 """
 
 from __future__ import annotations

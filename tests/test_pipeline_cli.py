@@ -151,6 +151,30 @@ def test_cli_curated_pipeline_filters_then_extracts(spark, sf_dir, tmp_path, cap
     assert all(s["resumed"] for s in second["pipeline"])
 
 
+def test_rerun_stage_cascades_to_later_stages(spark, sf_dir, tmp_path, capsys):
+    """Adding --with-curation to a finished run's warehouse computes the
+    curation stages fresh; every stage after them must then re-run too,
+    never resume on the uncurated run's outputs."""
+    import scripts.run_pipeline as rp
+
+    def run(wh, *extra):
+        args = [
+            "--sf-dir", sf_dir, "--warehouse", str(tmp_path / wh),
+            "--master", "local[4]", "--no-coref", "--no-eval", *extra,
+        ]
+        assert rp.main(args) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        return out["pipeline"]
+
+    run("wh")
+    curated = run("wh", "--with-curation")
+    fresh = run("fresh", "--with-curation")
+    assert not any(s["resumed"] for s in curated)
+    assert [(s["stage"], s["rows"]) for s in curated] == [
+        (s["stage"], s["rows"]) for s in fresh
+    ]
+
+
 def test_turns_from_docs_df_matches_parquet_derivation(spark, sf_dir):
     """The curated-DAG turn derivation over an in-flight docs frame must
     be row-identical to turns_from_documents over the same (full) set."""

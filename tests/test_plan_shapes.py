@@ -322,3 +322,24 @@ def test_bucketed_join_needs_no_exchange(spark, stored_turns):
     assert count_shuffles(plan) == 0, plan
     spark.sql("DROP TABLE IF EXISTS t_left")
     spark.sql("DROP TABLE IF EXISTS t_right")
+
+
+def test_conv_funnel_is_lazy(spark, stored_turns):
+    """Building the funnel report starts no Spark job: its four
+    distinct-conv counts are aggregates inside the returned plan, not
+    driver-side actions — so it composes into a caller's plan."""
+    from dygiepp_spark.operators import transcript as TR
+
+    sc = spark.sparkContext
+    group = "conv_funnel_lazy"
+    sc.setJobGroup(group, group)
+    try:
+        funnel = TR.conv_funnel(TR.with_synthetic_tools(stored_turns))
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert funnel.columns == [
+        "n_convs", "n_tooled", "n_mentioned", "n_tripled",
+        "mention_yield", "triple_yield",
+    ]
+    assert funnel.count() == 1

@@ -1,6 +1,7 @@
 """Streaming wrapper tests: the foreachBatch triple stream equals the
 batch pipeline when a conversation's turns arrive within one micro-batch,
-and checkpointing makes re-drains idempotent (no reprocessing)."""
+checkpointing makes re-drains idempotent (no reprocessing), and a
+replayed batch overwrites only its own sink partition."""
 
 from __future__ import annotations
 
@@ -38,6 +39,24 @@ def test_triples_stream_checkpoint_idempotent(spark, sf_dir, tmp_path):
     # second drain with the same checkpoint: no new files, no duplicates
     ST.run_triples_stream(spark, in_dir, out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == n1
+
+
+def test_write_batch_replay_overwrites_only_its_partition(spark, tmp_path):
+    """The foreachBatch sink contract: re-writing a batch_id (a replayed
+    micro-batch) replaces that batch's rows, and a new batch_id adds a
+    partition beside it."""
+    out_dir = str(tmp_path / "out")
+
+    def sink():
+        return sorted(
+            (r["batch_id"], r["x"]) for r in spark.read.parquet(out_dir).collect()
+        )
+
+    ST._write_batch(spark.createDataFrame([(1,), (2,)], "x int"), 0, out_dir)
+    ST._write_batch(spark.createDataFrame([(3,)], "x int"), 0, out_dir)
+    assert sink() == [(0, 3)]
+    ST._write_batch(spark.createDataFrame([(4,)], "x int"), 1, out_dir)
+    assert sink() == [(0, 3), (1, 4)]
 
 
 # --------------------------------------------------------------------------
