@@ -19,8 +19,9 @@ import sys
 import uuid
 from collections.abc import Callable
 
-if "/root/repo" not in sys.path:
-    sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -160,9 +161,9 @@ def q_coref_canonical(spark, sf_dir):
 
 
 def _cluster_frames(spark, sf_dir):
-    # pin the shared mention frame: pred AND gold clusterings consume it
-    # (plus the CC loop re-reads it per round) — without the checkpoint the
-    # token explode re-runs once per consumer
+    # pin the shared mention frame: pred AND gold clusterings consume it —
+    # without the checkpoint the token explode re-runs once per consumer
+    # (under AQE the pin runs its shuffle stages when it is called)
     mentions = EX.detect_mentions(_turns(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -594,7 +595,7 @@ def q_split_disjointness(spark, sf_dir):
 
 
 #: per-query scratch dirs for file round-trips and streaming drains
-_SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp")
+_SCRATCH = os.path.join(_ROOT, ".tmp")
 
 
 def _consume_and_remove(df: DataFrame, base: str) -> DataFrame:

@@ -520,7 +520,8 @@ def lm_score(df: DataFrame, text_col: str = "text",
     # ONE corpus explosion: freq rolls up from the (doc, term) tf frame
     # (vocabulary x docs rows, map-side combinable) instead of a second
     # pass over corpus tokens — the shape that matters at 100 TB, where
-    # re-exploding the corpus costs a full scan
+    # re-exploding the corpus costs a full scan. Under AQE the tf pin runs
+    # its shuffle stage when it is called
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     tf = tf.localCheckpoint(eager=False)
     freq = tf.groupBy("term").agg(F.sum("tf").alias("freq"))
@@ -857,7 +858,8 @@ def dsir_weights(df: DataFrame, target_filter: Column | None = None,
     )
     # ONE corpus explosion: is_tgt is constant per doc, so grouping it
     # into the tf key is free, and the bucket-dim counts roll up from tf
-    # instead of a second corpus pass (same single-scan shape as lm_score)
+    # instead of a second corpus pass (same single-scan shape as lm_score;
+    # under AQE the tf3 pin runs its shuffle stage when it is called)
     tf3 = tok.groupBy("doc_id", "is_tgt", "bucket").agg(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)

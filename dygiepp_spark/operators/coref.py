@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from dygiepp_spark.operators.kg_eval import prf_columns
+
 MAX_ANTECEDENTS = 100
 
 
@@ -114,7 +116,8 @@ def muc_score(pred: DataFrame, gold: DataFrame) -> DataFrame:
     set. Recall = sum(|g| - partitions(g)) / sum(|g| - 1) over gold
     clusters, where partitions(g) = number of distinct pred clusters g's
     mentions fall into; precision is symmetric. All sums are integer sums
-    (exact, order-free); P/R/F1 are single IEEE divisions. One row out.
+    (exact, order-free); P/R/F1 are single IEEE divisions. One lazy row
+    out: the two sums are one-row aggregates, cross-joined.
     """
     j = pred.select(
         "conv_id", "mention_ix", F.col("cluster_id").alias("pc")
@@ -122,30 +125,24 @@ def muc_score(pred: DataFrame, gold: DataFrame) -> DataFrame:
         gold.select("conv_id", "mention_ix", F.col("cluster_id").alias("gc")),
         ["conv_id", "mention_ix"],
     )
-    per_gold = j.groupBy("conv_id", "gc").agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct("pc").alias("p")
-    )
-    rec = per_gold.agg(
-        F.sum(F.col("n") - F.col("p")).alias("num"),
-        F.sum(F.col("n") - 1).alias("den"),
-    ).collect()[0]
-    per_pred = j.groupBy("conv_id", "pc").agg(
-        F.count(F.lit(1)).alias("n"), F.count_distinct("gc").alias("p")
-    )
-    prec = per_pred.agg(
-        F.sum(F.col("n") - F.col("p")).alias("num"),
-        F.sum(F.col("n") - 1).alias("den"),
-    ).collect()[0]
-    spark = pred.sparkSession
-    row = spark.createDataFrame(
-        [(prec["num"], prec["den"], rec["num"], rec["den"])],
-        "prec_num bigint, prec_den bigint, rec_num bigint, rec_den bigint",
-    )
-    p = F.col("prec_num").cast("double") / F.greatest(F.col("prec_den"), F.lit(1)).cast("double")
-    r = F.col("rec_num").cast("double") / F.greatest(F.col("rec_den"), F.lit(1)).cast("double")
-    f1 = F.when(p + r > 0, 2.0 * p * r / (p + r)).otherwise(F.lit(0.0))
+
+    def link_sums(own: str, other: str, prefix: str) -> DataFrame:
+        # per cluster on the `own` side: size n and the number p of
+        # `other`-side clusters its mentions fall into
+        per = j.groupBy("conv_id", own).agg(
+            F.count(F.lit(1)).alias("n"), F.count_distinct(other).alias("p")
+        )
+        return per.agg(
+            F.sum(F.col("n") - F.col("p")).alias(f"{prefix}_num"),
+            F.sum(F.col("n") - 1).alias(f"{prefix}_den"),
+        )
+
+    row = link_sums("pc", "gc", "prec").crossJoin(link_sums("gc", "pc", "rec"))
     return row.select(
-        "*", p.alias("precision"), r.alias("recall"), f1.alias("f1")
+        "*",
+        *prf_columns(
+            F.col("prec_num"), F.col("prec_den"), F.col("rec_num"), F.col("rec_den")
+        ),
     )
 
 

@@ -137,7 +137,8 @@ def bloom_decontam(
         .distinct()
     )
     # cg feeds probe + per_doc, probe feeds hit_pos + n_pos — pin both
-    # so the corpus gram explode and its md5s run once
+    # so the corpus gram explode and its md5s run once (under AQE the
+    # pin runs its upstream shuffle stages when it is called)
     cg = doc_ngrams(corpus, n, id_col, text_col).withColumn(
         "_h", hash60(F.col("gram"))
     ).localCheckpoint(eager=False)

@@ -310,7 +310,8 @@ def near_dups_minhash(chunks: DataFrame, thresh: float = 0.25) -> DataFrame:
     counts, per-id sizes); without materialization each reference re-runs
     tokenize+shingle from the source — 30+ scans in the physical plan. A
     localCheckpoint pins it to ONE pass (production: an Iceberg stage
-    checkpoint via plans.pipeline).
+    checkpoint via plans.pipeline). Under AQE each ``eager=False`` pin
+    runs its upstream shuffle stages when it is called.
 
     The signature aggregate and the per-id count aggregate are pinned
     too: the bucket self-join references the signature frame on both

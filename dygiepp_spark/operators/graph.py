@@ -189,7 +189,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
             F.when(lt, F.col("hi")).otherwise(F.col("lo")).alias("dst"),
             F.when(lt, F.col("dhi")).otherwise(F.col("dlo")).alias("ddst"),
         )
-    ).localCheckpoint(eager=False)
+    )
     a = oriented.alias("a")
     b = oriented.alias("b")
     # wedge (u; v, w) with v before w in the same (deg, id) order
@@ -321,7 +321,7 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
     """
     if rounds < 1:
         raise ValueError(f"kcore needs rounds >= 1, got {rounds}")
-    sym = _sym_edges(edges)
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
     alive = sym.select(F.col("lo").alias("node_id")).distinct()
     for _ in range(rounds):
         survivors = _peel(sym, alive, k)
@@ -338,7 +338,8 @@ def _peel(sym: DataFrame, alive: DataFrame, k: int) -> DataFrame:
     # each round references `alive` twice (both semi-joins); without
     # lineage truncation the logical plan DOUBLES per round — 2^rounds
     # copies of the base subtree (the same fix as near_dup_groups'
-    # per-round checkpoint; surfaced by the hypothesis peel test)
+    # per-round checkpoint; surfaced by the hypothesis peel test). Under
+    # AQE the pin runs the previous round's shuffle stages when it is called
     alive = alive.localCheckpoint(eager=False)
     live_edges = sym.join(
         alive.withColumnRenamed("node_id", "lo"), "lo", "left_semi"
@@ -365,7 +366,7 @@ def kcore_fixpoint(
     converge in tens): exceeding it raises instead of silently returning
     a non-core.
     """
-    sym = _sym_edges(edges)
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
     alive = sym.select(F.col("lo").alias("node_id")).distinct()
     n_alive = alive.count()
     for _ in range(max_rounds):
@@ -457,9 +458,11 @@ def pagerank_weighted(agg_edges: DataFrame, iterations: int = 3) -> DataFrame:
 
 def _sym_edges(edges: DataFrame) -> DataFrame:
     """Distinct undirected edge list symmetrized to (lo, hi) in both
-    directions, self-loops dropped, lineage-truncated — the shared input
-    frame of k-core peeling and the label-propagation family (LPA,
-    components)."""
+    directions, self-loops dropped — the shared input frame of k-core
+    peeling, the label-propagation family (LPA, components) and the
+    degree reports. A lazy plan: the driver loops that re-read it every
+    round pin it themselves — under AQE even a lazy pin runs the
+    distinct's shuffle when it is called, so only they pay for it."""
     und = (
         edges.select(
             F.least("subj_id", "obj_id").alias("lo"),
@@ -467,7 +470,6 @@ def _sym_edges(edges: DataFrame) -> DataFrame:
         )
         .filter(F.col("lo") != F.col("hi"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     return und.unionByName(
         und.select(F.col("hi").alias("lo"), F.col("lo").alias("hi"))
@@ -529,9 +531,10 @@ def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
     map-side partial aggregation (a celebrity node's million identical
     neighbor labels collapse before the shuffle), then a per-dst
     row_number cut. The label frame is localCheckpoint'd per round —
-    the linear-plan lesson the k-core property test taught.
+    the linear-plan lesson the k-core property test taught; under AQE the
+    pin runs the previous round's shuffle stages when it is called.
     """
-    sym = _sym_edges(edges)
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
     labels = _self_labels(sym)
     for _ in range(rounds):
         labels = _lpa_round(sym, labels.localCheckpoint(eager=False))
@@ -552,9 +555,10 @@ def kg_components(edges: DataFrame, rounds: int = 6) -> DataFrame:
 
     Per round: ONE join (edges x labels on src) + a min agg keyed by
     node — map-side combinable, so a celebrity node's neighbor labels
-    collapse before the shuffle. localCheckpoint per round (linear plan).
+    collapse before the shuffle. localCheckpoint per round (linear plan;
+    under AQE the pin runs the previous round's shuffles when called).
     """
-    sym = _sym_edges(edges)
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
     labels = _self_labels(sym)
     for _ in range(rounds):
         labels = labels.localCheckpoint(eager=False)
@@ -583,7 +587,7 @@ def lpa_fixpoint(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     absorbs by returning the current frame. :func:`lpa_communities` is
     the bounded-round parity twin; this is what --with-analytics runs.
     """
-    sym = _sym_edges(edges)
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
     labels = _self_labels(sym)
     for _ in range(max_rounds):
         labels = labels.localCheckpoint(eager=False)
@@ -728,11 +732,12 @@ def random_walks(
     list plus a map-side-combinable ``min_by`` agg, so a celebrity
     node's fan-out collapses map-side — O(length) shuffles total, the
     same loop shape as pagerank. Frontier is localCheckpoint-truncated
-    per step (the iterative-plan-growth lesson).
+    per step (the iterative-plan-growth lesson; under AQE the pin runs
+    that step's shuffles when it is called).
     """
     if length < 0 or walks_per_node < 1:
         raise ValueError("length must be >= 0, walks_per_node >= 1")
-    sym = _sym_edges(edges)
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
     start = (
         sym.select(F.col("lo").alias("node_id"))
         .distinct()
@@ -910,14 +915,7 @@ def entity_pmi(
         raise ValueError("min_count >= 1 and max_conv_entities >= 2 required")
     mentions = detect_mentions(turns)
     linked = link_mentions(mentions, entity_dict)
-    # presence feeds THREE consumers (singles, the cap filter, and both
-    # sides of the pair join) — pin it so the mention->link->distinct
-    # chain runs once, same discipline as the minhash signature pin
-    presence = (
-        linked.select("conv_id", "entity_id")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    presence = linked.select("conv_id", "entity_id").distinct()
     singles = presence.groupBy("entity_id").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -971,7 +969,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
     Degenerate regular graphs (every degree equal) have a zero
     denominator — r is NULL there, by construction, in both engines.
     """
-    sym = _sym_edges(edges)  # pinned: und feeds deg twice + the end join
+    sym = _sym_edges(edges)
     und = sym.filter(F.col("lo") < F.col("hi"))
     deg = sym.groupBy(F.col("lo").alias("v")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -1016,7 +1014,6 @@ def predicate_reciprocity(edges: DataFrame) -> DataFrame:
         edges.select("subj_id", "pred", "obj_id")
         .filter(F.col("subj_id") != F.col("obj_id"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     rev = e.select(
         F.col("obj_id").alias("subj_id"),
@@ -1060,15 +1057,11 @@ def kg_novelty(edges: DataFrame) -> DataFrame:
     combinable; the ownership join keys on the full triple (no
     fan-out).
     """
-    # the edge chain feeds occ + trip, and trip feeds touched + owner —
-    # pin both (the entity_pmi/assortativity multi-consumer discipline)
-    base = edges.select(
-        "subj_id", "pred", "obj_id", "conv_id"
-    ).localCheckpoint(eager=False)
+    base = edges.select("subj_id", "pred", "obj_id", "conv_id")
     occ = base.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )
-    trip = base.distinct().localCheckpoint(eager=False)
+    trip = base.distinct()
     touched = trip.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_triples")
     )

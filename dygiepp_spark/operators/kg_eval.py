@@ -325,8 +325,34 @@ def gold_triples_ctx(
 # K3 / K4 / G1
 # --------------------------------------------------------------------------
 
-def _safe_f1(p: Column, r: Column) -> Column:
-    return F.when(p + r > 0, 2.0 * p * r / (p + r)).otherwise(F.lit(0.0))
+def _ratio(num: Column, den: Column) -> Column:
+    # f1.py:6-10 safe division: 0 when the denominator is 0
+    return F.when(den == 0, F.lit(0.0)).otherwise(
+        num.cast("double") / den.cast("double")
+    )
+
+
+def prf_columns(
+    p_num: Column, p_den: Column, r_num: Column, r_den: Column, prefix: str = ""
+) -> list[Column]:
+    """``{prefix}precision`` = p_num / p_den, ``{prefix}recall`` = r_num /
+    r_den and ``{prefix}f1``, their harmonic mean (0 when both are 0) —
+    f1.py:6-17. The one P/R/F1 fold of every one-row report operator: the
+    counts are exact BIGINT aggregates, so each ratio is one IEEE division
+    of exact integers, identical in any engine."""
+    p, r = _ratio(p_num, p_den), _ratio(r_num, r_den)
+    f1 = F.when(p + r > 0, 2.0 * p * r / (p + r)).otherwise(F.lit(0.0))
+    return [
+        p.alias(f"{prefix}precision"),
+        r.alias(f"{prefix}recall"),
+        f1.alias(f"{prefix}f1"),
+    ]
+
+
+def _count(df: DataFrame, name: str) -> DataFrame:
+    """The row count of ``df`` as a one-row aggregate: a lazy scalar that
+    cross-joins into a report row instead of a driver-side ``count()``."""
+    return df.agg(F.count(F.lit(1)).alias(name))
 
 
 def ie_eval(
@@ -343,7 +369,8 @@ def ie_eval(
     ``pred``: (conv_id, arg0, arg1, label, conf); ``gold``: same minus conf.
     Returns ONE row (n_pred, n_gold, tp, tp_recall, precision, recall, f1).
     P = TP / n_pred_kept (the reference's TP/(TP+FP) with FP = topK - TP);
-    R = TP_recall / n_gold.
+    R = TP_recall / n_gold. The row is a lazy plan: the counts are one-row
+    aggregates cross-joined together, so building it starts no Spark job.
     """
     if topk is not None:
         # reference cut is HEAD-k (predrels[:topK], eval_utils.py:783-785),
@@ -363,14 +390,8 @@ def ie_eval(
         pred = survivors.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") <= topk
         ).drop("_rn")
-    # four scalar actions follow (tp, tp_recall, n_pred, n_gold) — pin the
-    # upstream extraction once instead of re-running it per action
-    pred = pred.select("conv_id", "arg0", "arg1", "label").localCheckpoint(
-        eager=False
-    )
-    gold = gold.select("conv_id", "arg0", "arg1", "label").localCheckpoint(
-        eager=False
-    )
+    pred = pred.select("conv_id", "arg0", "arg1", "label")
+    gold = gold.select("conv_id", "arg0", "arg1", "label")
     if aliases is not None:
         # K2 coref/alias expansion (eval_utils.py:265-287
         # ``read_coref_matches`` + the alias loops in relation_matching):
@@ -423,58 +444,45 @@ def ie_eval(
     ]
     matches = p.join(g, on=cond)
 
-    # ONE job over the (possibly expensive, fuzzy-predicate) match join
-    # for both distinct counts — two separate .count() actions would run
-    # the join twice
-    tp_row = matches.agg(
+    # one aggregate over the (possibly expensive, fuzzy-predicate) match
+    # join for both distinct counts
+    tp = matches.agg(
         F.count_distinct("p.conv_id", "p.arg0", "p.arg1").alias("tp"),
         F.count_distinct("g.conv_id", "g.arg0", "g.arg1").alias("tp_recall"),
-    ).collect()[0]
-    tp, tp_recall = tp_row["tp"], tp_row["tp_recall"]
-    n_pred = pred.select("conv_id", "arg0", "arg1").distinct().count()
-    n_gold = g.distinct().count()
-
-    spark = pred.sparkSession
-    row = spark.createDataFrame(
-        [(n_pred, n_gold, tp, tp_recall)],
-        "n_pred bigint, n_gold bigint, tp bigint, tp_recall bigint",
     )
-    prec = F.col("tp").cast("double") / F.greatest(F.col("n_pred"), F.lit(1)).cast("double")
-    rec = F.col("tp_recall").cast("double") / F.greatest(F.col("n_gold"), F.lit(1)).cast("double")
+    n_pred = _count(pred.select("conv_id", "arg0", "arg1").distinct(), "n_pred")
+    row = n_pred.crossJoin(_count(gold.distinct(), "n_gold")).crossJoin(tp)
     return row.select(
         "*",
-        prec.alias("precision"),
-        rec.alias("recall"),
-        _safe_f1(prec, rec).alias("f1"),
+        *prf_columns(
+            F.col("tp"), F.col("n_pred"), F.col("tp_recall"), F.col("n_gold")
+        ),
+    )
+
+
+def _spans(df: DataFrame) -> DataFrame:
+    """The distinct (conv_id, span) argument set of a triple frame —
+    arg0 and arg1 pooled, pairing ignored (K4)."""
+    return (
+        df.select("conv_id", F.col("arg0").alias("span"))
+        .unionByName(df.select("conv_id", F.col("arg1").alias("span")))
+        .distinct()
     )
 
 
 def ie_span_eval(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """K4 (eval_utils.py:620-682): argument-span-level P/R/F1 ignoring
-    pairing — explode arg0/arg1 to (conv, text) sets on both sides."""
-
-    def spans_of(df: DataFrame) -> DataFrame:
-        return (
-            df.select("conv_id", F.col("arg0").alias("span"))
-            .unionByName(df.select("conv_id", F.col("arg1").alias("span")))
-            .distinct()
-        )
-
-    ps = spans_of(pred).localCheckpoint(eager=False)
-    gs = spans_of(gold).localCheckpoint(eager=False)
-    tp = ps.join(gs, ["conv_id", "span"]).count()
-    n_p, n_g = ps.count(), gs.count()
-    spark = pred.sparkSession
-    row = spark.createDataFrame(
-        [(n_p, n_g, tp)], "n_pred_spans bigint, n_gold_spans bigint, tp bigint"
+    pairing — explode arg0/arg1 to (conv, text) sets on both sides. One
+    lazy output row."""
+    ps, gs = _spans(pred), _spans(gold)
+    row = (
+        _count(ps, "n_pred_spans")
+        .crossJoin(_count(gs, "n_gold_spans"))
+        .crossJoin(_count(ps.join(gs, ["conv_id", "span"]), "tp"))
     )
-    prec = F.col("tp").cast("double") / F.greatest(F.col("n_pred_spans"), F.lit(1)).cast("double")
-    rec = F.col("tp").cast("double") / F.greatest(F.col("n_gold_spans"), F.lit(1)).cast("double")
+    tp = F.col("tp")
     return row.select(
-        "*",
-        prec.alias("precision"),
-        rec.alias("recall"),
-        _safe_f1(prec, rec).alias("f1"),
+        "*", *prf_columns(tp, F.col("n_pred_spans"), tp, F.col("n_gold_spans"))
     )
 
 
@@ -496,7 +504,8 @@ def eval_grid(
     ``labels=[1,1]``, eval_utils.py:798-800, i.e. drops label equality) —
     and all four P@K cells are read off ONE ranked join (rank <= k
     conditional counts). Pred/gold are pinned with localCheckpoint so the
-    upstream extraction runs once, not once per cell.
+    upstream extraction runs once, not once per cell; under AQE each
+    ``eager=False`` pin runs its upstream shuffle stages when it is called.
 
     Output rows: (kind='rel', metric, collapse, topk=NULL, full counts +
     P/R/F1), (kind='span', metric, collapse=NULL, ...), and (kind=
@@ -558,15 +567,8 @@ def eval_grid(
             )
 
     # span level (K4 under each metric): arg multiset -> distinct spans
-    def spans_of(df: DataFrame) -> DataFrame:
-        return (
-            df.select("conv_id", F.col("arg0").alias("span"))
-            .unionByName(df.select("conv_id", F.col("arg1").alias("span")))
-            .distinct()
-        )
-
-    ps = spans_of(pred).localCheckpoint(eager=False)
-    gs = spans_of(gold).localCheckpoint(eager=False)
+    ps = _spans(pred).localCheckpoint(eager=False)
+    gs = _spans(gold).localCheckpoint(eager=False)
     n_ps, n_gs = ps.count(), gs.count()
     for metric in metrics:
         m = _METRICS[metric]
@@ -638,30 +640,31 @@ def eval_grid(
     )
 
 
+def _key_prf(pred: DataFrame, gold: DataFrame, key: list[str]) -> DataFrame:
+    """Micro P/R/F1 over the distinct ``key`` tuples of both sides: TP by
+    one equi-join, FP/FN by the set sizes (f1.py:6-17). One lazy row
+    (tp, fp, fn, precision, recall, f1)."""
+    p = pred.select(*key).distinct()
+    g = gold.select(*key).distinct()
+    row = (
+        _count(p.join(g, key), "tp")
+        .crossJoin(_count(p, "n_pred"))
+        .crossJoin(_count(g, "n_gold"))
+    )
+    tp, n_p, n_g = F.col("tp"), F.col("n_pred"), F.col("n_gold")
+    return row.select(
+        "tp",
+        (n_p - tp).alias("fp"),
+        (n_g - tp).alias("fn"),
+        *prf_columns(tp, n_p, tp, n_g),
+    )
+
+
 def micro_prf(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """G1 (dygie/training/ner_metrics.py:22-64 + f1.py:6-17): micro P/R/F1
     with exact (arg0, arg1, label) matching, computed distributed — per-conv
     TP via join, global sums, safe division. One output row."""
-    p = pred.select("conv_id", "arg0", "arg1", "label").distinct().localCheckpoint(
-        eager=False
-    )
-    g = gold.select("conv_id", "arg0", "arg1", "label").distinct().localCheckpoint(
-        eager=False
-    )
-    tp = p.join(g, ["conv_id", "arg0", "arg1", "label"]).count()
-    n_p, n_g = p.count(), g.count()
-    spark = pred.sparkSession
-    row = spark.createDataFrame(
-        [(tp, n_p - tp, n_g - tp)], "tp bigint, fp bigint, fn bigint"
-    )
-    prec = F.col("tp").cast("double") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1)).cast("double")
-    rec = F.col("tp").cast("double") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1)).cast("double")
-    return row.select(
-        "*",
-        prec.alias("precision"),
-        rec.alias("recall"),
-        _safe_f1(prec, rec).alias("f1"),
-    )
+    return _key_prf(pred, gold, ["conv_id", "arg0", "arg1", "label"])
 
 
 def micro_prf_by_namespace(
@@ -746,23 +749,7 @@ def ie_eval_event(pred_bin: DataFrame, gold_bin: DataFrame) -> DataFrame:
     match requires arg0, arg1 and the trigger's event type to agree (the
     reference accepts label-or-trigger-text; our event types ARE derived
     from trigger text, so one equality covers both). One output row."""
-    key = ["conv_id", "arg0", "event_type", "arg1"]
-    p = pred_bin.select(*key).distinct().localCheckpoint(eager=False)
-    g = gold_bin.select(*key).distinct().localCheckpoint(eager=False)
-    tp = p.join(g, key).count()
-    n_p, n_g = p.count(), g.count()
-    spark = pred_bin.sparkSession
-    row = spark.createDataFrame(
-        [(tp, n_p - tp, n_g - tp)], "tp bigint, fp bigint, fn bigint"
-    )
-    prec = F.col("tp").cast("double") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1)).cast("double")
-    rec = F.col("tp").cast("double") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1)).cast("double")
-    return row.select(
-        "*",
-        prec.alias("precision"),
-        rec.alias("recall"),
-        _safe_f1(prec, rec).alias("f1"),
-    )
+    return _key_prf(pred_bin, gold_bin, ["conv_id", "arg0", "event_type", "arg1"])
 
 
 def event_f1_4way(pred_events: DataFrame, gold_events: DataFrame) -> DataFrame:
@@ -797,38 +784,26 @@ def event_f1_4way(pred_events: DataFrame, gold_events: DataFrame) -> DataFrame:
     arg_class < arg_id) — the implementation keys all four axes exactly as
     the reference does.
 
-    One row out. Plan: two broadcast-size distinct frames per side, two
-    equi-joins (conv_id, turn_idx keys) + scalar counts — every join key is
-    high-cardinality and uniform; scales with the corpus like ie_eval.
+    One lazy row out. Plan: two broadcast-size distinct frames per side,
+    two equi-joins (conv_id, turn_idx keys) + one-row count aggregates,
+    cross-joined — every join key is high-cardinality and uniform; scales
+    with the corpus like ie_eval.
     """
     trig_key = ["conv_id", "turn_idx", "trigger_ix"]
-    p_trig = (
-        pred_events.select(*trig_key, "event_type")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    g_trig = (
-        gold_events.select(*trig_key, "event_type")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    p_trig = pred_events.select(*trig_key, "event_type").distinct()
+    g_trig = gold_events.select(*trig_key, "event_type").distinct()
     # gold trigger dict keyed on offset -> at most one label per offset, so
     # the join below cannot fan out
     g = g_trig.select(*trig_key, F.col("event_type").alias("_g_label"))
-    trig_row = (
-        p_trig.join(g, trig_key, "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_pred_trig"),
-            F.sum(
-                F.when(F.col("_g_label").isNotNull(), 1).otherwise(0)
-            ).cast("bigint").alias("tp_trig_id"),
-            F.sum(
-                F.when(F.col("_g_label") == F.col("event_type"), 1).otherwise(0)
-            ).cast("bigint").alias("tp_trig_class"),
-        )
-        .collect()[0]
+    trig_row = p_trig.join(g, trig_key, "left").agg(
+        F.count(F.lit(1)).alias("n_pred_trig"),
+        F.sum(
+            F.when(F.col("_g_label").isNotNull(), 1).otherwise(0)
+        ).cast("bigint").alias("tp_trig_id"),
+        F.sum(
+            F.when(F.col("_g_label") == F.col("event_type"), 1).otherwise(0)
+        ).cast("bigint").alias("tp_trig_class"),
     )
-    n_gold_trig = g_trig.count()
 
     # formatted argument lists: one entry per (trigger, arg) pair row,
     # collapsed to (arg_SPAN, trigger_label, role) with multiplicity kept —
@@ -837,58 +812,38 @@ def event_f1_4way(pred_events: DataFrame, gold_events: DataFrame) -> DataFrame:
     # (start, end) span), so both endpoints participate in identity
     arg_cols = ["conv_id", "turn_idx", "arg_start", "arg_end",
                 "event_type", "role"]
-    p_arg = pred_events.select(*arg_cols).localCheckpoint(eager=False)
-    g_arg = gold_events.select(*arg_cols).localCheckpoint(eager=False)
+    p_arg = pred_events.select(*arg_cols)
+    g_arg = gold_events.select(*arg_cols)
     # any-match: pre-collapse gold to its distinct id-keys with the role
     # set, so one left join scores both axes without fan-out
     id_key = ["conv_id", "turn_idx", "arg_start", "arg_end", "event_type"]
     g_keys = g_arg.groupBy(*id_key).agg(
         F.collect_set("role").alias("_g_roles")
     )
-    arg_row = (
-        p_arg.join(g_keys, id_key, "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_pred_arg"),
-            F.sum(
-                F.when(F.col("_g_roles").isNotNull(), 1).otherwise(0)
-            ).cast("bigint").alias("tp_arg_id"),
-            F.sum(
-                F.when(
-                    F.array_contains(
-                        F.coalesce(
-                            F.col("_g_roles"), F.array().cast("array<string>")
-                        ),
-                        F.col("role"),
-                    ),
-                    1,
-                ).otherwise(0)
-            ).cast("bigint").alias("tp_arg_class"),
-        )
-        .collect()[0]
+    arg_row = p_arg.join(g_keys, id_key, "left").agg(
+        F.count(F.lit(1)).alias("n_pred_arg"),
+        F.sum(
+            F.when(F.col("_g_roles").isNotNull(), 1).otherwise(0)
+        ).cast("bigint").alias("tp_arg_id"),
+        F.sum(
+            F.when(
+                F.array_contains(
+                    F.coalesce(F.col("_g_roles"), F.array().cast("array<string>")),
+                    F.col("role"),
+                ),
+                1,
+            ).otherwise(0)
+        ).cast("bigint").alias("tp_arg_class"),
     )
-    n_gold_arg = g_arg.count()
-
-    spark = pred_events.sparkSession
-    row = spark.createDataFrame(
-        [
-            (
-                trig_row["n_pred_trig"], n_gold_trig,
-                trig_row["tp_trig_id"], trig_row["tp_trig_class"],
-                arg_row["n_pred_arg"], n_gold_arg,
-                arg_row["tp_arg_id"], arg_row["tp_arg_class"],
-            )
-        ],
-        "n_pred_trig bigint, n_gold_trig bigint, tp_trig_id bigint, "
-        "tp_trig_class bigint, n_pred_arg bigint, n_gold_arg bigint, "
-        "tp_arg_id bigint, tp_arg_class bigint",
-    )
-
-    def safe_div(num: Column, denom: Column) -> Column:
-        # f1.py:6-10 — 0 when the denominator is 0
-        return F.when(denom > 0, num.cast("double") / denom.cast("double")).otherwise(
-            F.lit(0.0)
+    row = (
+        trig_row.crossJoin(_count(g_trig, "n_gold_trig"))
+        .crossJoin(arg_row)
+        .crossJoin(_count(g_arg, "n_gold_arg"))
+        .select(
+            "n_pred_trig", "n_gold_trig", "tp_trig_id", "tp_trig_class",
+            "n_pred_arg", "n_gold_arg", "tp_arg_id", "tp_arg_class",
         )
-
+    )
     out_cols = ["*"]
     for axis, tp_c, np_c, ng_c in [
         ("trig_id", "tp_trig_id", "n_pred_trig", "n_gold_trig"),
@@ -896,13 +851,8 @@ def event_f1_4way(pred_events: DataFrame, gold_events: DataFrame) -> DataFrame:
         ("arg_id", "tp_arg_id", "n_pred_arg", "n_gold_arg"),
         ("arg_class", "tp_arg_class", "n_pred_arg", "n_gold_arg"),
     ]:
-        p = safe_div(F.col(tp_c), F.col(np_c))
-        r = safe_div(F.col(tp_c), F.col(ng_c))
-        out_cols += [
-            p.alias(f"{axis}_precision"),
-            r.alias(f"{axis}_recall"),
-            safe_div(F.lit(2.0) * p * r, p + r).alias(f"{axis}_f1"),
-        ]
+        tp = F.col(tp_c)
+        out_cols += prf_columns(tp, F.col(np_c), tp, F.col(ng_c), f"{axis}_")
     return row.select(*out_cols)
 
 
@@ -1028,7 +978,8 @@ def transitive_closure(
     the order-free version and agrees when there is a single path).
 
     Each round = one self-equi-join on (conv_id, join surface) + one
-    aggregate; localCheckpoint between rounds cuts lineage like the CC loop.
+    aggregate; localCheckpoint between rounds cuts lineage (under AQE each
+    pin runs that round's shuffle stages when it is called).
     """
     closure = gold.select("conv_id", "arg0", "arg1", "conf")
     for _ in range(rounds):
@@ -1110,6 +1061,7 @@ def ie_errors(
     if not collapse:
         cond.append(F.col("p.label") == F.col("g.label"))
     # reused by the found-count agg AND the matched-pred anti-join — pin it
+    # (under AQE the pin runs the match join when it is called)
     matches = (
         p.alias("p")
         .join(g.alias("g"), on=cond)

@@ -235,7 +235,9 @@ def embedding_near_dups(
     qz = quantized(emb)
     if plant_twins:
         qz = with_planted_twins(qz)
-    qz = qz.localCheckpoint(eager=False)  # feeds buckets AND verify
+    # feeds buckets AND verify; under AQE the pin runs its upstream
+    # shuffle stages when it is called
+    qz = qz.localCheckpoint(eager=False)
     cands = lsh_candidates(srp_buckets(qz))
     a = qz.select(
         F.col("vec_id").alias("id_a"), F.col("q").alias("qa"), F.col("nq").alias("na")
@@ -310,9 +312,11 @@ def semantic_dedup(
     qz = quantized(emb)
     if plant_twins:
         qz = with_planted_twins(qz)
+    # assigned feeds BOTH sides of the pair join; under AQE each pin runs
+    # its upstream shuffle stages when it is called
     assigned = _assign_qz(
         qz.localCheckpoint(eager=False), n_centroids
-    ).localCheckpoint(eager=False)  # feeds BOTH sides of the pair join
+    ).localCheckpoint(eager=False)
     a = assigned.select(
         "cell",
         F.col("vec_id").alias("id_a"),
@@ -363,7 +367,8 @@ def ivf_topk(
     """
     # cells feeds both the (broadcast) query side and the probe side —
     # materialize so assignment runs once (production: the IVF index IS a
-    # stored table partitioned by cell)
+    # stored table partitioned by cell); under AQE the pin runs the
+    # assignment's shuffle stages when it is called
     cells = assign_cells(emb, n_centroids).localCheckpoint(eager=False)
     queries = cells.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -563,7 +568,9 @@ def ivf_recall(
     cell search returned: ``(query_id, n_hit, recall)``. THE number the
     documented IVF speed/recall tradeoff is judged by, measured instead
     of asserted; a low-recall query sits near a cell boundary (raise
-    nprobe or re-train centroids).
+    nprobe or re-train centroids). The denominator is the query's number
+    of true neighbors — ``k``, or fewer on a corpus of at most ``k`` other
+    vectors — so a query that finds all of them scores 1.0.
 
     Scale: both sides are the existing broadcast-query scans; the
     overlap is a semi-join on (query_id, neighbor_id) over two
@@ -578,7 +585,7 @@ def ivf_recall(
     )
     hits = bf.join(iv, ["query_id", "neighbor_id"], "left_semi")
     per = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit"))
-    base = bf.select("query_id").distinct()
+    base = bf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_true"))
     return (
         base.join(per, "query_id", "left")
         .select(
@@ -586,11 +593,12 @@ def ivf_recall(
             F.coalesce(F.col("n_hit"), F.lit(0).cast("bigint")).alias(
                 "n_hit"
             ),
+            "n_true",
         )
         .select(
             "query_id", "n_hit",
-            (F.col("n_hit").cast("double") / F.lit(float(k))).alias(
-                "recall"
-            ),
+            (
+                F.col("n_hit").cast("double") / F.col("n_true").cast("double")
+            ).alias("recall"),
         )
     )

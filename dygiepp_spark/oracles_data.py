@@ -1986,7 +1986,8 @@ def ivf_recall_oracle(
     k: int = TOP_K, n_queries: int = N_QUERIES, n_centroids: int = N_CENTROIDS
 ) -> str:
     """Twin of similarity.ivf_recall: the two ANN oracles nested as
-    CTEs, per-query overlap count, exact recall."""
+    CTEs, per-query overlap count, exact recall over the query's true
+    neighbor count."""
     return f"""WITH bf AS (
 {ann_brute_force_oracle(k, n_queries)}
 ),
@@ -2003,10 +2004,11 @@ hits AS (
     )
     GROUP BY 1
 ),
-base AS (SELECT DISTINCT query_id FROM bf)
+base AS (SELECT query_id, count(*) AS n_true FROM bf GROUP BY 1)
 SELECT base.query_id,
        COALESCE(h.n_hit, 0) AS n_hit,
-       CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / {float(k)} AS recall
+       CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / CAST(base.n_true AS DOUBLE)
+           AS recall
 FROM base LEFT JOIN hits h ON base.query_id = h.query_id"""
 
 

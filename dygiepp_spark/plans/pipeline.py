@@ -8,7 +8,7 @@ per-partition lineage and metrics rows. Pattern (SURVEY.md §7 stage 7):
   sandbox, an Iceberg table ``<catalog>.<db>.<stage>`` on a cluster —
   selected by ``SPARK_GRAFT_TABLE_FORMAT`` without touching stage code
 * alongside it a ``_metrics`` table: one row per output partition
-  (stage, partition_id, rows, bytes-est, wall, written_at)
+  (stage, partition_id, rows, stage_wall_sec, written_at)
 * a ``_SUCCESS``-gated manifest — a re-run skips stages whose manifest is
   present, up to the first stage that must run; that stage and every
   stage after it re-run, so a resume never serves a stage computed from
@@ -22,6 +22,7 @@ no driver-side iteration over partitions.
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass, field
 from typing import Callable
@@ -71,12 +72,15 @@ class Pipeline:
     def run(self, inputs: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         ctx: dict[str, DataFrame] = dict(inputs or {})
         # once a stage re-runs, every later stage's manifest may describe
-        # an older upstream, so the rest of the DAG re-runs too
+        # an older upstream, so the rest of the DAG re-runs too. Every
+        # stage still probes its manifest first: the store's first call for
+        # a stage opens that stage (e.g. its job group), before its
+        # function builds anything.
         rerun = False
         for name, fn in self.stages:
             t0 = time.time()
-            manifest = None if rerun else self.store.manifest(name)
-            if manifest is not None:
+            manifest = self.store.manifest(name)
+            if manifest is not None and not rerun:
                 ctx[name] = self.store.read(name)
                 self.results.append(
                     StageResult(
@@ -168,7 +172,10 @@ def build_kg_pipeline(
 
     p = Pipeline(spark, warehouse)
 
+    @functools.cache
     def _docs():
+        # built on first use and shared by the curation stages: one read
+        # (and one schema-inference job) per run, none on a full resume
         return TT.load_documents(spark, sf_dir).select(
             F.col("doc_id").cast("bigint").alias("doc_id"), "text"
         )

@@ -115,7 +115,15 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def turns_from_documents(
     spark: SparkSession, sf_dir: str, with_ts: bool = True
 ) -> DataFrame:
-    """Derive the transcript table from ``documents.parquet``.
+    """Derive the transcript table from ``documents.parquet`` — see
+    :func:`turns_from_docs_df`."""
+    return turns_from_docs_df(load_documents(spark, sf_dir), with_ts)
+
+
+def turns_from_docs_df(docs: DataFrame, with_ts: bool = True) -> DataFrame:
+    """Derive the transcript table from a documents frame (doc_id, text):
+    the raw table (:func:`turns_from_documents`) or, in the curated
+    production DAG, the filtered/deduped/scrubbed document set.
 
     conv_id = doc_id; tokens are split on single spaces, empty tokens dropped
     (reference: Dataset.from_jsonl skips docs with "" tokens,
@@ -126,55 +134,6 @@ def turns_from_documents(
     (conv_id, turn_idx) with map-side partial aggregation; at 100 TB the
     scan parallelism carries it and no skew is possible (turn groups are
     uniformly sized by construction).
-    """
-    docs = load_documents(spark, sf_dir)
-    tok = (
-        docs.select(
-            F.col("doc_id").cast("string").alias("conv_id"),
-            F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token"),
-        )
-        .filter(F.col("token") != "")
-    )
-    turn = tok.groupBy(
-        "conv_id", (F.col("pos") / TURN_TOKENS).cast("int").alias("turn_idx")
-    ).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "token"))),
-                lambda s: s["token"],
-            ),
-            " ",
-        ).alias("text")
-    )
-    out = turn.select(
-        "conv_id",
-        "turn_idx",
-        F.when(F.col("turn_idx") % 2 == 0, F.lit("user"))
-        .otherwise(F.lit("assistant"))
-        .alias("role"),
-        "text",
-        F.lit(None).cast("string").alias("tool"),
-    )
-    if with_ts:
-        out = out.withColumn(
-            "ts",
-            F.expr(
-                "timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,turn_idx)"
-            ),
-        )
-    return out
-
-
-def turns_from_docs_df(docs: DataFrame, with_ts: bool = True) -> DataFrame:
-    """:func:`turns_from_documents` over an in-flight documents frame
-    (doc_id, text) instead of the parquet path — used by the curated
-    production DAG, where the turn derivation must consume the
-    filtered/deduped/scrubbed document set rather than the raw table.
-
-    Same derivation as turns_from_documents (kept as a separate function
-    rather than refactoring the original: the original anchors the
-    oracle-verified `turns` query this round — see the registry window
-    note in __spark_entry__.queries()).
     """
     tok = (
         docs.select(

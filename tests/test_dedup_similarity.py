@@ -124,6 +124,28 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     assert recall >= 0.2, f"IVF recall collapsed: {recall}"
 
 
+def test_ivf_recall_divides_by_true_neighbor_count(spark):
+    """On a corpus with fewer than k + 1 vectors every query has fewer
+    than k true neighbors; recall divides by that count, so one cell
+    holding the whole corpus (IVF = brute force) scores 1.0."""
+    vecs = [[1.0, 0.0], [0.8, 0.6], [0.0, 1.0], [-0.6, 0.8]]
+    emb = spark.createDataFrame(
+        [(i, v, "x") for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<float>, label string",
+    )
+    rows = SIM.ivf_recall(emb, k=5, n_queries=4, n_centroids=1).collect()
+    n_true = {
+        r["query_id"]: r["n"]
+        for r in SIM.brute_force_topk(emb, k=5, n_queries=4)
+        .groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert sorted(r["query_id"] for r in rows) == [0, 1, 2, 3]
+    for r in rows:
+        assert n_true[r["query_id"]] == 3
+        assert r["recall"] == r["n_hit"] / n_true[r["query_id"]]
+        assert r["recall"] == 1.0
+
+
 def test_ngram_jaccard_hot_block_reroutes_subquadratic(spark):
     # pathological equal-size corpus: every doc has the same shingle count,
     # so ALL land in one block; with max_block exceeded the all-pairs path

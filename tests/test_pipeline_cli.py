@@ -112,6 +112,51 @@ def test_truncated_manifest_reruns_stage(spark, tmp_path):
     assert ParquetStore(spark, str(tmp_path)).manifest("s1")["rows"] == 5
 
 
+def test_stage_opens_in_store_before_its_function_runs(spark, tmp_path):
+    """Every stage that runs calls the store (its manifest probe) before
+    its function builds anything, also when an earlier re-run cascades to
+    it: a store that attributes work per stage (e.g. by Spark job group,
+    opened on the stage's first call) then sees all of the stage's jobs."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    log: list[tuple[str, str]] = []
+
+    class Recording:
+        def __init__(self, inner):
+            self.inner = inner
+
+        def __getattr__(self, op):
+            def call(name, *args):
+                log.append((op, name))
+                return getattr(self.inner, op)(name, *args)
+
+            return call
+
+    def run() -> list[bool]:
+        log.clear()
+        store = Recording(ParquetStore(spark, str(tmp_path)))
+        p = Pipeline(spark, str(tmp_path), store=store)
+        for name in ("s1", "s2", "s3"):
+            p.stage(name)(
+                lambda ctx, name=name: log.append(("fn", name))
+                or spark.range(3).toDF("id")
+            )
+        p.run()
+        return [r.resumed for r in p.results]
+
+    def opened_before_fn(name: str) -> bool:
+        ops = [op for op, n in log if n == name]
+        return ops[0] != "fn"
+
+    assert run() == [False, False, False]
+    assert all(opened_before_fn(s) for s in ("s1", "s2", "s3"))
+    os.remove(os.path.join(str(tmp_path), "s2", "manifest.json"))
+    # s2 re-runs, and the cascade re-runs s3 over the new s2
+    assert run() == [True, False, False]
+    assert ("fn", "s1") not in log
+    assert opened_before_fn("s2") and opened_before_fn("s3")
+
+
 def test_failed_manifest_commit_leaves_no_manifest(spark, tmp_path):
     store = ParquetStore(spark, str(tmp_path))
     store.write("s1", spark.range(5).toDF("id"))

@@ -343,3 +343,72 @@ def test_conv_funnel_is_lazy(spark, stored_turns):
         "mention_yield", "triple_yield",
     ]
     assert funnel.count() == 1
+
+
+@pytest.fixture(scope="module")
+def report_inputs(spark, stored_turns):
+    """Inputs of the one-row eval reports and the graph reports, built
+    outside any job group."""
+    from dygiepp_spark.operators import coref as CO
+    from dygiepp_spark.operators import graph as GR
+    from dygiepp_spark.operators import kg_eval as KE
+
+    mentions = EX.detect_mentions(stored_turns)
+    entities = TT.entity_dict(spark)
+    return {
+        "turns": stored_turns,
+        "entities": entities,
+        "pred": EX.emit_triples(stored_turns),
+        "gold": KE.gold_triples(stored_turns),
+        "pred_ev": EX.extract_events(stored_turns, max_dist=4),
+        "gold_ev": EX.extract_events(stored_turns, max_dist=2),
+        "pred_cl": CO.coref_clusters(mentions).select(
+            "conv_id", "mention_ix", "cluster_id"
+        ),
+        "gold_cl": CO.coref_clusters_global(mentions).select(
+            "conv_id", "mention_ix", "cluster_id"
+        ),
+        "edges": GR.link_edges(mentions, entities),
+    }
+
+
+def _lazy_reports():
+    from dygiepp_spark.operators import coref as CO
+    from dygiepp_spark.operators import graph as GR
+    from dygiepp_spark.operators import kg_eval as KE
+
+    binary = EX.events_binary_decode
+    return {
+        "ie_eval": lambda i: KE.ie_eval(i["pred"], i["gold"], "exact"),
+        "ie_span_eval": lambda i: KE.ie_span_eval(i["pred"], i["gold"]),
+        "micro_prf": lambda i: KE.micro_prf(i["pred"], i["gold"]),
+        "ie_eval_event": lambda i: KE.ie_eval_event(
+            binary(i["pred_ev"]), binary(i["gold_ev"])
+        ),
+        "event_f1_4way": lambda i: KE.event_f1_4way(i["pred_ev"], i["gold_ev"]),
+        "muc_score": lambda i: CO.muc_score(i["pred_cl"], i["gold_cl"]),
+        "triangle_counts": lambda i: GR.triangle_counts(i["edges"]),
+        "predicate_reciprocity": lambda i: GR.predicate_reciprocity(i["edges"]),
+        "kg_novelty": lambda i: GR.kg_novelty(i["edges"]),
+        "entity_pmi": lambda i: GR.entity_pmi(i["turns"], i["entities"]),
+        "degree_hist": lambda i: GR.degree_hist(i["edges"]),
+        "assortativity": lambda i: GR.assortativity(i["edges"]),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_lazy_reports()))
+def test_report_operator_is_lazy(spark, report_inputs, name):
+    """Building a report operator starts no Spark job: its counts are
+    aggregates inside the returned plan (no driver-side count/collect),
+    and it pins nothing — under AQE even ``localCheckpoint(eager=False)``
+    runs the upstream shuffle stages when it is called. So a pipeline
+    stage's work all runs inside the stage's store write."""
+    sc = spark.sparkContext
+    group = f"{name}_lazy"
+    sc.setJobGroup(group, group)
+    try:
+        out = _lazy_reports()[name](report_inputs)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out.columns
