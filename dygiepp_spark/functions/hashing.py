@@ -20,10 +20,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 
-def md5_hex(col: Column) -> Column:
-    return F.md5(col)
-
-
 def hash60(col: Column) -> Column:
     """60-bit integer hash of a string column (portable, non-negative)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
@@ -90,7 +86,3 @@ def hash_family_from_sql(hexpr: str, i: int) -> str:
 def hash60_sql(expr: str) -> str:
     """DuckDB twin of hash60()."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def md5_sql(expr: str) -> str:
-    return f"md5({expr})"

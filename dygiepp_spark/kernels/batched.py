@@ -19,8 +19,8 @@ row-set equality between the two paths.
 Only :class:`~dygiepp_spark.kernels.scorer.RuleScorer` (exactly — not
 subclasses, whose overridden heads the batched twin would silently
 ignore) takes this path; Replay/Coref scorers keep the per-sentence
-kernel. A TransformerScorer would batch the same way (its forward pass
-wants the (B, n) token matrix this module assembles).
+kernel. :class:`~dygiepp_spark.kernels.transformer.NumpyTransformerScorer`
+batches its forward pass over the same (B, n) same-length groups.
 """
 
 from __future__ import annotations

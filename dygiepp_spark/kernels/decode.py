@@ -26,7 +26,6 @@ Spark. Each mirrors a reference kernel bit-for-bit:
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -83,16 +82,6 @@ def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     m = np.max(x, axis=axis, keepdims=True)
     e = np.exp(x - m)
     return e / np.sum(e, axis=axis, keepdims=True)
-
-
-@dataclass
-class SentenceDecode:
-    """Decoded rows for one sentence, long format."""
-
-    mentions: list = field(default_factory=list)   # (s, e, label, raw, soft)
-    relations: list = field(default_factory=list)  # (s1,e1,s2,e2,label,raw,soft)
-    triggers: list = field(default_factory=list)   # (ix, label, raw, soft)
-    arguments: list = field(default_factory=list)  # (trig_ix, s, e, role, raw, soft)
 
 
 def decode_ner(spans: np.ndarray, ner_logits: np.ndarray, labels: list[str]) -> list:

@@ -13,10 +13,10 @@ injected function with three implementations:
   (or gold) JSONL so the Spark decode path can be compared
   triple-for-triple against the reference's emitted set — the honest
   boundary for the P/R>=0.95 gate (SURVEY.md §7 "What's hard").
-* :class:`TransformerScorer` — the production slot: batched transformer
-  inference. The model libs aren't in this container, so ``__init__``
-  raises NotImplementedError; the Arrow plumbing around it (batch shapes,
-  broadcast of weights via SparkFiles) is what the kernel provides.
+* :class:`~dygiepp_spark.kernels.transformer.NumpyTransformerScorer` —
+  the transformer slot: a full forward pass in numpy with deterministic
+  synthetic weights; a trained deployment loads its weights from
+  SparkFiles and keeps the same Arrow plumbing.
 
 Score conventions (match the reference):
 * classification logits have the NULL CLASS PREPENDED at index 0 with
@@ -72,7 +72,7 @@ def span_representation(
     * a one-hot width-bucket feature (the ``span_width_embedding`` slot).
 
     Runs inside the Arrow kernel on numpy arrays — this is the
-    representation a :class:`TransformerScorer` feeds its FFNN heads; the
+    representation a transformer scorer feeds its FFNN heads; the
     rule/replay scorers bypass it because their logits are planted.
     Output: (S, 3*d + num_width_buckets) float64.
     """
@@ -385,22 +385,3 @@ class ReplayScorer(Scorer):
                     )
         return self._logits((n_tokens, arg_spans.shape[0]), self.role_labels, hits)
 
-
-class TransformerScorer(Scorer):
-    """Production slot: batched transformer inference inside the kernel.
-
-    Would load weights from SparkFiles (shipped via spark-submit
-    --py-files / --files) and run Arrow-batched forward passes. The
-    container has no torch/transformers, so this is a clearly-marked stub;
-    the kernel plumbing it slots into is real and tested with the other
-    scorers.
-    """
-
-    def __init__(self, model_path: str):
-        raise NotImplementedError(
-            "transformer backend requires torch+transformers at runtime; "
-            "inject RuleScorer or ReplayScorer in this environment — or "
-            "kernels.transformer.NumpyTransformerScorer, which runs the "
-            "full forward pass (attention + FFN + factored-bilinear "
-            "heads) in numpy with deterministic synthetic weights"
-        )

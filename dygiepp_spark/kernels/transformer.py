@@ -2,11 +2,9 @@
 
 The reference's scoring backbone is a pretrained transformer + FFNN heads
 (dygie/models/dygie.py:196-271: BERT embeddings -> span extractor ->
-per-task heads). torch/transformers are not in this container, so
-:class:`dygiepp_spark.kernels.scorer.TransformerScorer` stays an env-gated
-loader stub — but the INFERENCE MATH itself needs no framework. This
-module implements the full forward pass in numpy with deterministic,
-seed-derived weights:
+per-task heads). torch/transformers are not a dependency here, and the
+INFERENCE MATH itself needs no framework: this module implements the
+full forward pass in numpy with deterministic, seed-derived weights:
 
 * hash-derived token embeddings + sinusoidal position encodings,
 * one pre-LN self-attention block (single head) with residuals,

@@ -210,41 +210,6 @@ _METRICS = {
 }
 
 
-def relation_match_cond(
-    metric: str = "exact",
-    collapse: bool = False,
-    consider_reverse: bool = False,
-    reverse_labels: list[str] | None = None,
-) -> list[Column]:
-    """K2: join predicate pred x gold — arg0, arg1 (and label unless
-    collapsed) must match under the chosen span metric.
-
-    ``consider_reverse`` (eval_utils.py:283-335 ``consider_reverse``): a
-    pair also matches with its arguments SWAPPED (pred.arg0 vs gold.arg1
-    and vice versa). ``reverse_labels`` restricts the reverse branch to
-    predictions carrying one of the given labels — the reference's
-    ``reverse_on_effect`` hardcodes {'effect', 'EFFECT'}
-    (eval_utils.py:325-326); here the label set is a parameter since the
-    corpus vocabulary differs. Label equality applies to both branches,
-    exactly as the reference checks ``labels[0]==labels[1]`` inside each.
-    """
-    m = _METRICS[metric]
-    fwd = m(F.col("p.arg0"), F.col("g.arg0")) & m(F.col("p.arg1"), F.col("g.arg1"))
-    if consider_reverse:
-        rev = m(F.col("p.arg0"), F.col("g.arg1")) & m(
-            F.col("p.arg1"), F.col("g.arg0")
-        )
-        if reverse_labels is not None:
-            rev = rev & F.col("p.label").isin(*reverse_labels)
-        arg_match = fwd | rev
-    else:
-        arg_match = fwd
-    cond = [F.col("p.conv_id") == F.col("g.conv_id"), arg_match]
-    if not collapse:
-        cond.append(F.col("p.label") == F.col("g.label"))
-    return cond
-
-
 # --------------------------------------------------------------------------
 # gold derivation (deterministic rule-gold for the synthetic corpus)
 # --------------------------------------------------------------------------

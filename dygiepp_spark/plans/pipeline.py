@@ -7,28 +7,33 @@ per-partition lineage and metrics rows. Pattern (SURVEY.md §7 stage 7):
   (``plans/store.py``): parquet under ``<warehouse>/<stage>/data`` in the
   sandbox, an Iceberg table ``<catalog>.<db>.<stage>`` on a cluster —
   selected by ``SPARK_GRAFT_TABLE_FORMAT`` without touching stage code
-* alongside it a ``_metrics`` table: one row per output partition
+* alongside it a ``_metrics`` table: one row per written partition
   (stage, partition_id, rows, stage_wall_sec, written_at)
-* a ``_SUCCESS``-gated manifest — a re-run skips stages whose manifest is
-  present, up to the first stage that must run; that stage and every
-  stage after it re-run, so a resume never serves a stage computed from
-  an older upstream. This gives crash-resume at stage granularity (the
-  reference's instance-cache analog,
+* a manifest, committed last, that carries a fresh ``id`` and, as
+  ``upstream``, the ``id`` of the stage before it (``None`` for the first
+  stage). A re-run resumes a stage only when its manifest has an ``id``
+  and its ``upstream`` is the id the stage before it has in this run. A
+  stage that re-runs gets a new id, so every stage after it re-runs too,
+  also after a crash part-way through that cascade: a resume never serves
+  a stage computed from an older upstream. This gives crash-resume at
+  stage granularity (the reference's instance-cache analog,
   dygie/data/dataset_readers/dygie.py:194-203).
 
-The metrics row collection uses ``spark_partition_id()`` + a groupBy —
-no driver-side iteration over partitions.
+The stage's write is its only Spark job: the store takes the metrics rows
+and the stage's row count from the metadata of the files it just wrote
+(parquet footers, Iceberg's file list), not from a re-scan of the data.
 """
 
 from __future__ import annotations
 
 import functools
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from dygiepp_spark.plans.store import StageStore, make_store
 
@@ -71,17 +76,16 @@ class Pipeline:
 
     def run(self, inputs: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         ctx: dict[str, DataFrame] = dict(inputs or {})
-        # once a stage re-runs, every later stage's manifest may describe
-        # an older upstream, so the rest of the DAG re-runs too. Every
-        # stage still probes its manifest first: the store's first call for
+        # every stage probes its manifest first: the store's first call for
         # a stage opens that stage (e.g. its job group), before its
-        # function builds anything.
-        rerun = False
+        # function builds anything
+        upstream = None
         for name, fn in self.stages:
             t0 = time.time()
             manifest = self.store.manifest(name)
-            if manifest is not None and not rerun:
+            if manifest and manifest.get("id") and manifest.get("upstream") == upstream:
                 ctx[name] = self.store.read(name)
+                upstream = manifest["id"]
                 self.results.append(
                     StageResult(
                         name,
@@ -92,35 +96,19 @@ class Pipeline:
                     )
                 )
                 continue
-            rerun = True
-            out = fn(ctx)
-            materialized = self.store.write(name, out)
-            # per-partition lineage/metrics: one aggregate over the data,
-            # keyed by physical partition id; the stage's row count is
-            # observed on the same write instead of a separate count()
-            rows = Observation()
-            metrics = (
-                materialized.groupBy(
-                    F.spark_partition_id().alias("partition_id")
-                )
-                .agg(F.count(F.lit(1)).alias("rows"))
-                .select(
-                    F.lit(name).alias("stage"),
-                    "partition_id",
-                    "rows",
-                    F.lit(time.time() - t0).alias("stage_wall_sec"),
-                    F.current_timestamp().alias("written_at"),
-                )
-                .observe(rows, F.coalesce(F.sum("rows"), F.lit(0)).alias("n"))
-            )
-            self.store.write_metrics(name, metrics)
-            n = rows.get["n"]
-            # manifest commits LAST: a crash before this point leaves the
-            # stage un-manifested and the resume re-runs it
-            self.store.commit_manifest(
-                name, {"stage": name, "rows": n, "wall_sec": time.time() - t0}
-            )
-            ctx[name] = materialized
+            ctx[name] = self.store.write(name, fn(ctx))
+            n = self.store.write_metrics(name, time.time() - t0)
+            # manifest commits LAST: a crash before this point leaves no
+            # manifest naming this upstream, so the resume re-runs the stage
+            manifest = {
+                "stage": name,
+                "rows": n,
+                "wall_sec": time.time() - t0,
+                "id": uuid.uuid4().hex,
+                "upstream": upstream,
+            }
+            self.store.commit_manifest(name, manifest)
+            upstream = manifest["id"]
             self.results.append(
                 StageResult(
                     name,

@@ -3,22 +3,31 @@
 The pipeline's checkpoint contract (write stage output + per-partition
 metrics, re-read for the next stage, manifest-gated resume) is format-
 agnostic; only the physical writer/reader changes. This module isolates
-that choice so `plans.pipeline.Pipeline` never mentions a format:
+that choice so `plans.pipeline.Pipeline` never mentions a format.
+
+The stage's write is its only Spark job: ``write_metrics`` takes the
+per-partition row counts from the metadata of the files ``write`` just
+produced, not from a re-scan of their rows, and returns the stage's row
+count for the manifest. Every store writes the same ``_metrics`` rows
+(``METRICS_SCHEMA``).
 
 * ``ParquetStore`` — the sandbox/default backend: ``<warehouse>/<stage>/
   data`` + ``.../_metrics`` parquet directories, manifest JSON on the
-  local/DBFS-style filesystem. This is the backend every test and the
-  driver harness exercises.
+  local/DBFS-style filesystem. The metrics come from the ``part-<pid>-…``
+  files' parquet footers, grouped by the write task's partition id and
+  written with pyarrow on the Spark driver. This is the backend every
+  test exercises.
 * ``IcebergStore`` — the production backend the north rule names: stage
   outputs become tables ``<catalog>.<namespace>.<stage>`` via the V2
   ``writeTo(...).createOrReplace()`` API, metrics land in
-  ``<stage>__metrics``, and the resume manifest is a one-row
-  ``<stage>__manifest`` table (clusters don't share a local FS with the
-  driver). Requires the Iceberg runtime jar + a configured catalog
-  (``spark.sql.catalog.<name>`` …), which this sandbox does not ship —
-  the class is import-safe and unit-tested for its SQL/identifier
-  construction, and fails with an actionable error if used without a
-  catalog.
+  ``<stage>__metrics`` (one row per data file, from the ``.files``
+  metadata table's ``record_count``), and the resume manifest is a
+  one-row ``<stage>__manifest`` table (clusters don't share a local FS
+  with the driver). Requires the Iceberg runtime jar + a configured
+  catalog (``spark.sql.catalog.<name>`` …), which this project does not
+  ship — the class is import-safe and unit-tested for its catalog check,
+  and fails with an actionable error if used without a catalog; its
+  write/metrics/manifest paths are untested.
 
 Select with ``SPARK_GRAFT_TABLE_FORMAT=iceberg`` +
 ``SPARK_GRAFT_CATALOG=<catalog>.<namespace>`` (see
@@ -27,16 +36,29 @@ Select with ``SPARK_GRAFT_TABLE_FORMAT=iceberg`` +
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import shutil
+from collections import Counter
 from typing import Protocol
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+#: one row per written partition (parquet) or data file (Iceberg)
+METRICS_SCHEMA = (
+    "stage string, partition_id int, rows bigint, "
+    "stage_wall_sec double, written_at timestamp"
+)
 
 
 class StageStore(Protocol):
     def write(self, name: str, df: DataFrame) -> DataFrame: ...
-    def write_metrics(self, name: str, df: DataFrame) -> None: ...
+    def write_metrics(self, name: str, wall_sec: float) -> int: ...
     def read(self, name: str) -> DataFrame: ...
     def location(self, name: str) -> str: ...
     def manifest(self, name: str) -> dict | None: ...
@@ -62,10 +84,32 @@ class ParquetStore:
         # the schema is known: skip the footer-reading inference job
         return self.spark.read.schema(df.schema).parquet(path)
 
-    def write_metrics(self, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.warehouse, name, "_metrics")
+    def write_metrics(self, name: str, wall_sec: float) -> int:
+        # rows per write task from the footers of the files ``write`` just
+        # produced (``part-<pid>-<uuid>-c<n>...``); no Spark job
+        data = self.location(name)
+        rows: Counter[int] = Counter()
+        for f in os.listdir(data):
+            if f.startswith("part-"):
+                pid = int(f.split("-")[1])
+                rows[pid] += pq.read_metadata(os.path.join(data, f)).num_rows
+        pids = sorted(rows)
+        table = pa.table(
+            [
+                [name] * len(pids),
+                pids,
+                [rows[p] for p in pids],
+                [wall_sec] * len(pids),
+                [datetime.datetime.now(datetime.timezone.utc)] * len(pids),
+            ],
+            # timestamp -> UTC-adjusted micros, read back as ``timestamp``
+            schema=to_arrow_schema(StructType.fromDDL(METRICS_SCHEMA)),
         )
+        out = os.path.join(self.warehouse, name, "_metrics")
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        pq.write_table(table, os.path.join(out, "part-00000.parquet"))
+        return sum(rows.values())
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.location(name))
@@ -128,8 +172,21 @@ class IcebergStore:
         df.writeTo(self.location(name)).createOrReplace()
         return self.read(name)
 
-    def write_metrics(self, name: str, df: DataFrame) -> None:
-        df.writeTo(self.location(f"{name}__metrics")).createOrReplace()
+    def write_metrics(self, name: str, wall_sec: float) -> int:
+        # one row per data file of the snapshot ``write`` just committed,
+        # numbered in file_path order (unverified: needs the runtime)
+        files = (
+            self.spark.read.table(f"{self.location(name)}.files")
+            .orderBy("file_path")
+            .collect()
+        )
+        now = datetime.datetime.now(datetime.timezone.utc)
+        counts = [r.record_count for r in files]
+        self.spark.createDataFrame(
+            [(name, i, n, wall_sec, now) for i, n in enumerate(counts)],
+            METRICS_SCHEMA,
+        ).writeTo(self.location(f"{name}__metrics")).createOrReplace()
+        return sum(counts)
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.table(self.location(name))

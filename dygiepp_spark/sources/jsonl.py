@@ -58,14 +58,6 @@ def doc_to_turn_rows(doc: dict) -> list[tuple]:
     return rows
 
 
-def _find_sentence(starts: list[int], lens: list[int], tok_ix: int) -> int:
-    """Sentence containing a doc-level token index (document.py:22-33)."""
-    for i, (st, ln) in enumerate(zip(starts, lens)):
-        if st <= tok_ix < st + ln:
-            return i
-    raise ValueError(f"token index {tok_ix} outside document")
-
-
 def doc_predictions(doc: dict, use_predicted: bool = False) -> dict:
     """Build the ReplayScorer input: {(doc_key, sent_ix): {...}} with
     SENTENCE-RELATIVE offsets.

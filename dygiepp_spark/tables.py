@@ -100,10 +100,6 @@ RELATION_MAX_DIST = 6
 EVENT_ARG_MAX_DIST = 4
 
 
-def _sql_list(vals: list[str]) -> str:
-    return ", ".join(f"'{v}'" for v in vals)
-
-
 # ---------------------------------------------------------------------------
 # turns <- documents derivation (Spark side)
 # ---------------------------------------------------------------------------

@@ -23,9 +23,10 @@ Local smoke (exactly what tests/test_pipeline_cli.py runs in-process):
 
 When launched under spark-submit, pass ``--master ''`` (empty) so the
 session inherits the submitted master/conf instead of overriding it.
-A re-run with the same warehouse resumes: stages with a committed
-manifest are skipped up to the first stage that must run, which re-runs
-together with every stage after it.
+A re-run with the same warehouse resumes: a stage is skipped when its
+committed manifest names the manifest of the stage before it as its
+upstream; the first stage that must run re-runs together with every
+stage after it.
 """
 
 from __future__ import annotations

@@ -39,7 +39,9 @@ import sys
 import time
 from datetime import datetime, timezone
 
-sys.path.insert(0, "/root/repo")
+# run from (and import) the checkout this script lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_CONVS = int(os.environ.get("SCALE_CONVS", "60000"))
 MAX_TURNS = int(os.environ.get("SCALE_MAX_TURNS", "2000"))
@@ -52,7 +54,7 @@ N_SLICES = 4
 #: not the engine.)
 CORES_PER_WORKER = int(os.environ.get("SCALE_CORES_PER_WORKER", "1"))
 REPS = int(os.environ.get("SCALE_REPS", "3"))
-BASE = "/root/repo/.tmp/scaling"
+BASE = os.path.join(ROOT, ".tmp", "scaling")
 
 #: dedicated cores per worker slot, like a real executor's core binding —
 #: without pinning, the host scheduler migrates the 4 JVMs across all 32
@@ -129,7 +131,7 @@ def _spawn(slice_dirs: list[str], slot: list[int] | None = None) -> subprocess.P
         stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         env=env,
     )
 
@@ -188,7 +190,7 @@ def main() -> None:
         print(tag, json.dumps(r))
     print(f"T_N={t_n}s  T_4N={t_4n}s  efficiency={eff:.3f}")
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     walls_4n = ", ".join(str(r["wall_sec"]) for r in results)
     md = f"""# BENCH / BASELINE — throughput + scaling evidence
@@ -245,7 +247,7 @@ hardware. The numbers above ARE the baseline for this engine; the
 driver's per-round `BENCH_r{{N}}.json` (bench.py at sf0.1) tracks
 regressions against them.
 """
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)
     print(f"wrote BENCH/BASELINE.md (efficiency {eff:.3f}, elapsed {time.time() - t0:.0f}s)")
 

@@ -35,10 +35,26 @@ def test_cli_runs_and_resumes(spark, sf_dir, tmp_path, capsys):
     ]
     assert all(not s["resumed"] for s in first["pipeline"])
     assert all(s["rows"] > 0 for s in first["pipeline"])
-    # metrics table: one row per output partition, written per stage
-    m = spark.read.parquet(os.path.join(wh, "turns", "_metrics"))
-    assert m.columns == ["stage", "partition_id", "rows", "stage_wall_sec", "written_at"]
-    assert m.count() >= 1
+    # metrics table: one row per written partition (the part-<pid>-...
+    # files of the stage's data), summing to the manifest's row count
+    for s in first["pipeline"]:
+        stage = s["stage"]
+        m = spark.read.parquet(os.path.join(wh, stage, "_metrics"))
+        assert m.schema.simpleString() == (
+            "struct<stage:string,partition_id:int,rows:bigint,"
+            "stage_wall_sec:double,written_at:timestamp>"
+        )
+        written = {
+            int(f.split("-")[1])
+            for f in os.listdir(os.path.join(wh, stage, "data"))
+            if f.startswith("part-")
+        }
+        pids = [r["partition_id"] for r in m.collect()]
+        assert sorted(pids) == sorted(written)
+        assert m.agg(F.sum("rows")).first()[0] == s["rows"]
+        assert m.filter(F.col("stage") != stage).count() == 0
+        with open(os.path.join(wh, stage, "manifest.json")) as f:
+            assert json.load(f)["rows"] == s["rows"]
 
     assert rp.main(args) == 0
     second = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -155,6 +171,59 @@ def test_stage_opens_in_store_before_its_function_runs(spark, tmp_path):
     assert run() == [True, False, False]
     assert ("fn", "s1") not in log
     assert opened_before_fn("s2") and opened_before_fn("s3")
+
+
+def test_stage_bookkeeping_starts_no_spark_job(spark, tmp_path):
+    """The stage's write is its only Spark job: the metrics rows and the
+    manifest's row count come from the written files' footers."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    group = f"bookkeeping-{tmp_path.name}"
+
+    class Grouped(ParquetStore):
+        def _in_group(self, op, name, arg):
+            sc.setJobGroup(group, group)
+            try:
+                return getattr(super(), op)(name, arg)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        def write_metrics(self, name, wall_sec):
+            return self._in_group("write_metrics", name, wall_sec)
+
+        def commit_manifest(self, name, payload):
+            return self._in_group("commit_manifest", name, payload)
+
+    p = Pipeline(spark, str(tmp_path), store=Grouped(spark, str(tmp_path)))
+    p.stage("s1")(lambda ctx: spark.range(0, 20, 1, 3).toDF("id"))
+    p.stage("s2")(lambda ctx: ctx["s1"].filter("id % 2 = 0").repartition(4))
+    p.run()
+    assert [(r.rows, r.resumed) for r in p.results] == [(20, False), (10, False)]
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_resume_never_serves_a_stage_built_from_an_older_upstream(spark, tmp_path):
+    """s1 re-runs after its manifest is lost and s2 then crashes: the next
+    run resumes the new s1 but must re-run s2, whose manifest still names
+    the old s1 as its upstream."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    def run(n: int, s2=lambda ctx: ctx["s1"]):
+        p = Pipeline(spark, str(tmp_path))
+        p.stage("s1")(lambda ctx: spark.range(n).toDF("id"))
+        p.stage("s2")(s2)
+        p.run()
+        return [(r.name, r.rows, r.resumed) for r in p.results]
+
+    def crash(ctx):
+        raise RuntimeError("s2 failed")
+
+    assert run(5) == [("s1", 5, False), ("s2", 5, False)]
+    os.remove(os.path.join(str(tmp_path), "s1", "manifest.json"))
+    with pytest.raises(RuntimeError, match="s2 failed"):
+        run(7, s2=crash)
+    assert run(7) == [("s1", 7, True), ("s2", 7, False)]
 
 
 def test_failed_manifest_commit_leaves_no_manifest(spark, tmp_path):
