@@ -31,6 +31,23 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda t: t != "")
 
 
+def token_ngrams(toks: Column, n: int) -> Column:
+    """Space-joined length-``n`` n-grams of a token array, in order.
+
+    The array is paired with itself shifted by one position ``n - 1``
+    times (``zip_with`` of two slices), so each lambda sees only its two
+    elements: O(tokens * n) per row. Pass a column that holds the
+    tokens, not the tokenizing expression, so the text is split once.
+    """
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    grams = F.slice(toks, 1, m)
+    for k in range(1, n):
+        grams = F.zip_with(
+            grams, F.slice(toks, k + 1, m), lambda a, b: F.concat_ws(" ", a, b)
+        )
+    return grams
+
+
 def word_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace token count."""
     return df.withColumn("n_tokens", F.size(tokens_col(F.col(text_col))))
@@ -172,20 +189,15 @@ def repetition_features(
     row-local higher-order lambdas (interpreted, O(n^2) per doc).
     Documents with < 2 tokens get top_2gram_frac 0 / top_2gram null.
     """
-    toks = tokens_col(F.col(text_col))
-    base = df.select(
+    tokenized = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_toks"))
+    toks = F.col("_toks")
+    base = tokenized.select(
         F.col(id_col),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
     )
-    grams = df.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda t, i: F.concat(t, F.lit(" "), F.element_at(toks, i + 2)),
-            )
-        ).alias("gram"),
+    grams = tokenized.select(
+        F.col(id_col), F.explode(token_ngrams(toks, 2)).alias("gram")
     )
     gram_counts = grams.groupBy(id_col, "gram").agg(
         F.count(F.lit(1)).alias("n")

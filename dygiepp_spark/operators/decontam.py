@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import broadcast
 
-from dygiepp_spark.functions.text import tokens_col
+from dygiepp_spark.functions.text import token_ngrams, tokens_col
 
 NGRAM_N = 3
 
@@ -37,15 +37,10 @@ NGRAM_N = 3
 def doc_ngrams(df: DataFrame, n: int = NGRAM_N, id_col: str = "doc_id",
                text_col: str = "text") -> DataFrame:
     """(id, gram) with per-document distinct length-n token n-grams."""
-    toks = tokens_col(F.col(text_col))
-    grams = F.transform(
-        F.slice(toks, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0))),
-        lambda t, i: F.concat_ws(
-            " ", F.slice(toks, i + 1, n)
-        ),
-    )
-    return df.select(
-        F.col(id_col), F.explode(F.array_distinct(grams)).alias("gram")
+    tokenized = df.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_toks"))
+    return tokenized.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(token_ngrams(F.col("_toks"), n))).alias("gram"),
     )
 
 

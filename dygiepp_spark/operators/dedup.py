@@ -35,7 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from dygiepp_spark.functions.hashing import hash60, hash_family_from
-from dygiepp_spark.functions.text import tokens_col
+from dygiepp_spark.functions.text import token_ngrams, tokens_col
 
 #: LSH structure: N_BANDS bands x ROWS_PER_BAND minhash rows.
 N_BANDS = 16
@@ -138,19 +138,16 @@ def shingles(
 ) -> DataFrame:
     """Distinct token-2-gram shingles, exploded long format (id, shingle).
 
-    Narrow: split + transform + array_distinct + explode — no shuffle.
+    Narrow: split + zip_with + array_distinct + explode — no shuffle.
     """
-    toks = _tokens(F.col(text_col))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-    )
+    toks = F.col("toks")
     return (
-        chunks.filter(F.size(toks) >= 2)
-        .select(
+        chunks.select(
             F.col(id_col).cast("bigint").alias("id"),
-            F.explode(F.array_distinct(grams)).alias("shingle"),
+            _tokens(F.col(text_col)).alias("toks"),
         )
+        .filter(F.size(toks) >= 2)
+        .select("id", F.explode(F.array_distinct(token_ngrams(toks, 2))).alias("shingle"))
     )
 
 

@@ -10,14 +10,32 @@ per-partition lineage and metrics rows. Pattern (SURVEY.md §7 stage 7):
 * alongside it a ``_metrics`` table: one row per written partition
   (stage, partition_id, rows, stage_wall_sec, written_at)
 * a manifest, committed last, that carries a fresh ``id`` and, as
-  ``upstream``, the ``id`` of the stage before it (``None`` for the first
-  stage). A re-run resumes a stage only when its manifest has an ``id``
-  and its ``upstream`` is the id the stage before it has in this run. A
-  stage that re-runs gets a new id, so every stage after it re-runs too,
-  also after a crash part-way through that cascade: a resume never serves
-  a stage computed from an older upstream. This gives crash-resume at
-  stage granularity (the reference's instance-cache analog,
-  dygie/data/dataset_readers/dygie.py:194-203).
+  ``upstream``, the ``{need: id}`` map of the stages it read.
+
+Declared inputs. ``stage(name, needs=...)`` names the stages the
+function reads; ``needs=None`` means every earlier enabled stage (a
+sequential chain). A need must be an earlier enabled stage, so the
+declaration order is a topological order. The function's ``ctx`` holds
+the run's ``inputs`` plus the outputs of its needs only, so an
+undeclared read fails with ``KeyError`` instead of racing.
+
+Concurrency. ``run()`` starts each stage in its own thread as soon as
+all of its needs are committed in this run (resumed or written), so
+independent stages overlap. The whole stage runs in that thread:
+manifest probe, function, write, metrics, manifest commit. PySpark pins
+each Python thread to its own JVM thread, so a store that opens a job
+group on the stage's first call sees every job of that stage. When a
+stage raises, no new stage starts; the running ones finish and commit,
+then ``run()`` re-raises. ``results`` keep the declared order.
+
+Lineage follows the declared inputs. A re-run resumes a stage only when
+its manifest has an ``id`` and its ``upstream`` equals its needs' ids in
+this run. A stage that re-runs gets a new id, so exactly its transitive
+dependents re-run too, also after a crash part-way through that cascade:
+a resume never serves a stage computed from an older upstream. A
+manifest from before declared inputs (``upstream`` a single id) re-runs.
+This gives crash-resume at stage granularity (the reference's
+instance-cache analog, dygie/data/dataset_readers/dygie.py:194-203).
 
 The stage's write is its only Spark job: the store takes the metrics rows
 and the stage's row count from the metadata of the files it just wrote
@@ -26,7 +44,7 @@ and the stage's row count from the metadata of the files it just wrote
 
 from __future__ import annotations
 
-import functools
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -34,6 +52,7 @@ from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import InheritableThread
 
 from dygiepp_spark.plans.store import StageStore, make_store
 
@@ -49,11 +68,12 @@ class StageResult:
 
 @dataclass
 class Pipeline:
-    """Sequential stage DAG; each stage is (name, fn: dict[str,DataFrame] -> DataFrame).
+    """Stage DAG; each stage is (name, fn: dict[str,DataFrame] -> DataFrame).
 
-    Stages see the outputs of all prior stages by name. ``loss_weights``-style
-    gating (reference dygie.py:227-254: modules with weight 0 are skipped)
-    maps to the ``enabled`` flag per stage.
+    A stage sees the outputs of the stages it ``needs`` by name (all
+    earlier stages by default). ``loss_weights``-style gating (reference
+    dygie.py:227-254: modules with weight 0 are skipped) maps to the
+    ``enabled`` flag per stage.
     """
 
     spark: SparkSession
@@ -61,64 +81,111 @@ class Pipeline:
     stages: list[tuple[str, Callable]] = field(default_factory=list)
     results: list[StageResult] = field(default_factory=list)
     store: StageStore | None = None  # default: make_store(spark, warehouse)
+    #: stage name -> the stages it reads, as declared with ``stage()``
+    needs: dict[str, tuple[str, ...]] = field(default_factory=dict, init=False)
 
     def __post_init__(self):
         if self.store is None:
             self.store = make_store(self.spark, self.warehouse)
 
-    def stage(self, name: str, enabled: bool = True):
+    def stage(self, name: str, enabled: bool = True, needs=None):
         def deco(fn):
             if enabled:
+                earlier = [n for n, _ in self.stages]
+                deps = tuple(earlier if needs is None else needs)
+                bad = [n for n in deps if n not in earlier]
+                if bad:
+                    raise ValueError(
+                        f"stage {name!r} needs {bad}, which are not earlier "
+                        "enabled stages"
+                    )
                 self.stages.append((name, fn))
+                self.needs[name] = deps
             return fn
 
         return deco
 
     def run(self, inputs: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
-        ctx: dict[str, DataFrame] = dict(inputs or {})
-        # every stage probes its manifest first: the store's first call for
+        inputs = dict(inputs or {})
+        ctx: dict[str, DataFrame] = dict(inputs)
+        ids: dict[str, str] = {}
+        done: dict[str, StageResult] = {}
+        errors: list[BaseException] = []
+        waiting = dict(self.stages)
+        running = 0
+        cond = threading.Condition()
+
+        def work(name, fn, own_ctx, upstream):
+            nonlocal running
+            try:
+                df, sid, result = self._run_stage(name, fn, own_ctx, upstream)
+            except BaseException as e:  # re-raised by run() below
+                with cond:
+                    errors.append(e)
+            else:
+                with cond:
+                    ctx[name], ids[name], done[name] = df, sid, result
+            finally:
+                with cond:
+                    running -= 1
+                    cond.notify()
+
+        try:
+            with cond:
+                while True:
+                    ready = [] if errors else [
+                        n for n in waiting if all(d in ids for d in self.needs[n])
+                    ]
+                    for name in ready:
+                        fn, deps = waiting.pop(name), self.needs[name]
+                        # the caller's Spark local properties (job group,
+                        # scheduler pool) apply to the stage's jobs too
+                        InheritableThread(
+                            work,
+                            name=f"stage-{name}",
+                            args=(
+                                name,
+                                fn,
+                                {**inputs, **{d: ctx[d] for d in deps}},
+                                {d: ids[d] for d in deps},
+                            ),
+                        ).start()
+                        running += 1
+                    if not running:
+                        break
+                    cond.wait()
+        finally:
+            self.results.extend(done[n] for n, _ in self.stages if n in done)
+        if errors:
+            raise errors[0]
+        return ctx
+
+    def _run_stage(self, name, fn, ctx, upstream) -> tuple[DataFrame, str, StageResult]:
+        # the stage probes its manifest first: the store's first call for
         # a stage opens that stage (e.g. its job group), before its
         # function builds anything
-        upstream = None
-        for name, fn in self.stages:
-            t0 = time.time()
-            manifest = self.store.manifest(name)
-            if manifest and manifest.get("id") and manifest.get("upstream") == upstream:
-                ctx[name] = self.store.read(name)
-                upstream = manifest["id"]
-                self.results.append(
-                    StageResult(
-                        name,
-                        self.store.location(name),
-                        manifest["rows"],
-                        time.time() - t0,
-                        resumed=True,
-                    )
-                )
-                continue
-            ctx[name] = self.store.write(name, fn(ctx))
-            n = self.store.write_metrics(name, time.time() - t0)
-            # manifest commits LAST: a crash before this point leaves no
-            # manifest naming this upstream, so the resume re-runs the stage
-            manifest = {
-                "stage": name,
-                "rows": n,
-                "wall_sec": time.time() - t0,
-                "id": uuid.uuid4().hex,
-                "upstream": upstream,
-            }
-            self.store.commit_manifest(name, manifest)
-            upstream = manifest["id"]
-            self.results.append(
-                StageResult(
-                    name,
-                    self.store.location(name),
-                    n,
-                    time.time() - t0,
-                    resumed=False,
-                )
+        t0 = time.time()
+        manifest = self.store.manifest(name)
+        if manifest and manifest.get("id") and manifest.get("upstream") == upstream:
+            df = self.store.read(name)
+            result = StageResult(
+                name, self.store.location(name), manifest["rows"], time.time() - t0, resumed=True
             )
-        return ctx
+            return df, manifest["id"], result
+        df = self.store.write(name, fn(ctx))
+        n = self.store.write_metrics(name, time.time() - t0)
+        # manifest commits LAST: a crash before this point leaves no
+        # manifest naming these upstreams, so the resume re-runs the stage
+        manifest = {
+            "stage": name,
+            "rows": n,
+            "wall_sec": time.time() - t0,
+            "id": uuid.uuid4().hex,
+            "upstream": upstream,
+        }
+        self.store.commit_manifest(name, manifest)
+        result = StageResult(name, self.store.location(name), n, time.time() - t0, resumed=False)
+        return df, manifest["id"], result
 
 
 def build_kg_pipeline(
@@ -159,22 +226,29 @@ def build_kg_pipeline(
     from dygiepp_spark.operators import kg_eval as KE
 
     p = Pipeline(spark, warehouse)
+    docs: list[DataFrame] = []
+    docs_lock = threading.Lock()
 
-    @functools.cache
     def _docs():
         # built on first use and shared by the curation stages: one read
-        # (and one schema-inference job) per run, none on a full resume
-        return TT.load_documents(spark, sf_dir).select(
-            F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-        )
+        # (and one schema-inference job) per run, none on a full resume.
+        # The lock keeps it one read when the stages start together
+        with docs_lock:
+            if not docs:
+                docs.append(
+                    TT.load_documents(spark, sf_dir).select(
+                        F.col("doc_id").cast("bigint").alias("doc_id"), "text"
+                    )
+                )
+            return docs[0]
 
-    @p.stage("doc_filter", enabled=with_curation)
+    @p.stage("doc_filter", enabled=with_curation, needs=())
     def _doc_filter(ctx):
         from dygiepp_spark.functions.text import composite_filter
 
         return composite_filter(_docs())
 
-    @p.stage("doc_dedup", enabled=with_curation)
+    @p.stage("doc_dedup", enabled=with_curation, needs=())
     def _doc_dedup(ctx):
         from dygiepp_spark.operators.dedup import exact_dedup_groups
 
@@ -198,7 +272,7 @@ def build_kg_pipeline(
             )
     lm_gate = bool(with_curation and curation_lm_buckets)
 
-    @p.stage("doc_lm", enabled=lm_gate)
+    @p.stage("doc_lm", enabled=lm_gate, needs=())
     def _doc_lm(ctx):
         # CCNet-style perplexity gate: keep only the requested tertiles
         # (e.g. head,middle) — the standard fluency cut a raw web corpus
@@ -207,7 +281,11 @@ def build_kg_pipeline(
 
         return lm_score(_docs())
 
-    @p.stage("clean_docs", enabled=with_curation)
+    @p.stage(
+        "clean_docs",
+        enabled=with_curation,
+        needs=("doc_filter", "doc_dedup") + (("doc_lm",) if lm_gate else ()),
+    )
     def _clean_docs(ctx):
         from dygiepp_spark.functions.privacy import scrub_col
 
@@ -225,49 +303,49 @@ def build_kg_pipeline(
             out = out.join(fluent, "doc_id")
         return out.select("doc_id", scrub_col(F.col("text")).alias("text"))
 
-    @p.stage("turns")
+    @p.stage("turns", needs=("clean_docs",) if with_curation else ())
     def _turns(ctx):
         if with_curation:
             return TT.turns_from_docs_df(ctx["clean_docs"], with_ts=False)
         return TT.turns_from_documents(spark, sf_dir, with_ts=False)
 
-    @p.stage("mentions")
+    @p.stage("mentions", needs=("turns",))
     def _mentions(ctx):
         return EX.detect_mentions(ctx["turns"])
 
-    @p.stage("triples")
+    @p.stage("triples", needs=("turns",))
     def _triples(ctx):
         return EX.emit_triples(ctx["turns"])
 
-    @p.stage("coref_clusters", enabled=with_coref)
+    @p.stage("coref_clusters", enabled=with_coref, needs=("mentions",))
     def _clusters(ctx):
         return CO.coref_clusters(ctx["mentions"])
 
-    @p.stage("canonical_entities", enabled=with_coref)
+    @p.stage("canonical_entities", enabled=with_coref, needs=("coref_clusters",))
     def _canonical(ctx):
         return CO.canonicalize_clusters(ctx["coref_clusters"])
 
-    @p.stage("kg_edges")
+    @p.stage("kg_edges", needs=("mentions",))
     def _edges(ctx):
         return GR.link_edges(ctx["mentions"], TT.entity_dict(spark))
 
-    @p.stage("kg_edges_agg")
+    @p.stage("kg_edges_agg", needs=("kg_edges",))
     def _edges_agg(ctx):
         return GR.aggregate_edges(ctx["kg_edges"])
 
-    @p.stage("eval_exact", enabled=with_eval)
+    @p.stage("eval_exact", enabled=with_eval, needs=("triples", "turns"))
     def _eval(ctx):
         return KE.ie_eval(ctx["triples"], KE.gold_triples(ctx["turns"]), "exact")
 
-    @p.stage("kg_pagerank", enabled=with_analytics)
+    @p.stage("kg_pagerank", enabled=with_analytics, needs=("kg_edges",))
     def _pagerank(ctx):
         return GR.pagerank(ctx["kg_edges"], iterations=3)
 
-    @p.stage("kg_triangles", enabled=with_analytics)
+    @p.stage("kg_triangles", enabled=with_analytics, needs=("kg_edges",))
     def _triangles(ctx):
         return GR.triangle_counts(ctx["kg_edges"])
 
-    @p.stage("kg_negatives", enabled=with_analytics)
+    @p.stage("kg_negatives", enabled=with_analytics, needs=("kg_edges",))
     def _negatives(ctx):
         return GR.negative_samples(
             ctx["kg_edges"],
@@ -276,19 +354,19 @@ def build_kg_pipeline(
             dense_id=F.expr("cast(substring(entity_id, 2) as bigint)"),
         )
 
-    @p.stage("kg_kcore", enabled=with_analytics)
+    @p.stage("kg_kcore", enabled=with_analytics, needs=("kg_edges",))
     def _kcore(ctx):
         # production runs the TRUE core (peel to fixpoint), not the
         # bounded-round parity twin
         return GR.kcore_fixpoint(ctx["kg_edges"], k=2)
 
-    @p.stage("kg_communities", enabled=with_analytics)
+    @p.stage("kg_communities", enabled=with_analytics, needs=("kg_edges",))
     def _communities(ctx):
         # same fixpoint-vs-parity-twin split as k-core: production LPA
         # propagates until labels stop changing
         return GR.lpa_fixpoint(ctx["kg_edges"])
 
-    @p.stage("kg_health", enabled=with_analytics)
+    @p.stage("kg_health", enabled=with_analytics, needs=("kg_edges",))
     def _health(ctx):
         # the one-stop graph-shape report the run summary carries:
         # degree histogram + assortativity + per-predicate reciprocity,

@@ -304,6 +304,20 @@ def synth_turns(
     )
 
 
+def _values(rows: list[tuple[str, ...]], cols: str) -> str:
+    """``(VALUES ...) AS t(cols)`` over string rows: the same relation in
+    Spark SQL (a JVM-local relation: its scans start no Python worker,
+    unlike ``createDataFrame(list)``'s pickled RDD) and in DuckDB."""
+    vals = ", ".join("(" + ", ".join(f"'{v}'" for v in r) + ")" for r in rows)
+    return f"(VALUES {vals}) AS t({cols})"
+
+
+_ENTITY_DICT = _values(
+    [(w, f"E{i:03d}", w.upper(), "CONCEPT") for i, w in enumerate(ENTITY_VOCAB)],
+    "surface, entity_id, canonical_text, type",
+)
+
+
 def entity_dict(spark: SparkSession) -> DataFrame:
     """The canonical-entity dictionary (broadcast side of entity linking).
 
@@ -311,16 +325,22 @@ def entity_dict(spark: SparkSession) -> DataFrame:
     fork's label/trigger maps (eval_utils.py:55-145). At production scale
     this would be an Iceberg dim table; it stays broadcast-joined either way.
     """
-    rows = [
-        (w, f"E{i:03d}", w.upper(), "CONCEPT") for i, w in enumerate(ENTITY_VOCAB)
-    ]
-    return spark.createDataFrame(
-        rows, "surface string, entity_id string, canonical_text string, type string"
-    )
+    return spark.sql(f"SELECT * FROM {_ENTITY_DICT}")
 
 
 def _devowel(w: str) -> str:
     return "".join(c for c in w if c not in "aeiou") or w
+
+
+def _alias_rows() -> list[tuple[str, str]]:
+    rows = set()
+    for w in ENTITY_VOCAB:
+        variants = {w, _devowel(w)}
+        rows.update((a, b) for a in variants for b in variants)
+    return sorted(rows)
+
+
+_ALIASES = _values(_alias_rows(), "name, variant")
 
 
 def alias_pairs(spark: SparkSession) -> DataFrame:
@@ -331,37 +351,11 @@ def alias_pairs(spark: SparkSession) -> DataFrame:
     reads these alias groups from the coref model's TSV; here the table is
     derived so both engines reconstruct it identically. Tiny — always
     broadcast."""
-    rows = []
-    for w in ENTITY_VOCAB:
-        v = _devowel(w)
-        variants = {w, v}
-        for a in variants:
-            for b in variants:
-                rows.append((a, b))
-    return spark.createDataFrame(sorted(set(rows)), "name string, variant string")
+    return spark.sql(f"SELECT * FROM {_ALIASES}")
 
 
 #: DuckDB twin of alias_pairs()
-def _alias_sql() -> str:
-    rows = set()
-    for w in ENTITY_VOCAB:
-        v = _devowel(w)
-        for a in {w, v}:
-            for b in {w, v}:
-                rows.add((a, b))
-    vals = ", ".join(f"('{a}', '{b}')" for a, b in sorted(rows))
-    return f"al AS (SELECT * FROM (VALUES {vals}) AS t(name, variant))"
-
-
-ALIAS_SQL = _alias_sql()
-
+ALIAS_SQL = f"al AS (SELECT * FROM {_ALIASES})"
 
 #: DuckDB twin of entity_dict()
-ENTITY_DICT_SQL = (
-    "entity_dict AS (SELECT * FROM (VALUES "
-    + ", ".join(
-        f"('{w}', 'E{i:03d}', '{w.upper()}', 'CONCEPT')"
-        for i, w in enumerate(ENTITY_VOCAB)
-    )
-    + ") AS t(surface, entity_id, canonical_text, type))"
-)
+ENTITY_DICT_SQL = f"entity_dict AS (SELECT * FROM {_ENTITY_DICT})"

@@ -24,9 +24,11 @@ Local smoke (exactly what tests/test_pipeline_cli.py runs in-process):
 When launched under spark-submit, pass ``--master ''`` (empty) so the
 session inherits the submitted master/conf instead of overriding it.
 A re-run with the same warehouse resumes: a stage is skipped when its
-committed manifest names the manifest of the stage before it as its
-upstream; the first stage that must run re-runs together with every
-stage after it.
+committed manifest names, as its upstream, the manifests of the stages it
+reads in this run; a stage that must run re-runs together with every
+stage that reads it, directly or through other stages, and its
+independent siblings resume. Stages whose inputs are committed run
+concurrently.
 """
 
 from __future__ import annotations

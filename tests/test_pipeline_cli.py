@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
 import zipfile
 
 import pytest
@@ -224,6 +226,152 @@ def test_resume_never_serves_a_stage_built_from_an_older_upstream(spark, tmp_pat
     with pytest.raises(RuntimeError, match="s2 failed"):
         run(7, s2=crash)
     assert run(7) == [("s1", 7, True), ("s2", 7, False)]
+
+
+def test_independent_stages_run_concurrently(spark, tmp_path):
+    """Two stages that need nothing both wait on one barrier: the run
+    completes only if they are in flight at the same time."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    barrier = threading.Barrier(2, timeout=60)
+
+    def meet(ctx):
+        barrier.wait()
+        return spark.range(3).toDF("id")
+
+    p = Pipeline(spark, str(tmp_path))
+    p.stage("a", needs=())(meet)
+    p.stage("b", needs=())(meet)
+    p.stage("ab", needs=("a", "b"))(lambda ctx: ctx["a"].union(ctx["b"]))
+    p.run()
+    assert [(r.name, r.rows) for r in p.results] == [("a", 3), ("b", 3), ("ab", 6)]
+
+
+def test_many_concurrent_stages_lose_no_result(spark, tmp_path):
+    """More ready stages than cores, with a short thread switch interval:
+    every stage commits once and the fan-in stage sees all of them."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    names = [f"s{i}" for i in range(12)]
+    p = Pipeline(spark, str(tmp_path))
+    for i, name in enumerate(names):
+        p.stage(name, needs=())(lambda ctx, i=i: spark.range(i, i + 1).toDF("id"))
+
+    def fan_in(ctx):
+        out = ctx[names[0]]
+        for name in names[1:]:
+            out = out.union(ctx[name])
+        return out
+
+    p.stage("all", needs=tuple(names))(fan_in)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ctx = p.run()
+    finally:
+        sys.setswitchinterval(interval)
+    assert [(r.name, r.rows) for r in p.results] == [(n, 1) for n in names] + [("all", 12)]
+    assert sorted(r["id"] for r in ctx["all"].collect()) == list(range(12))
+
+
+def test_rerun_reruns_only_the_stage_and_its_dependents(spark, tmp_path):
+    """Lineage follows the declared inputs: after b's manifest is lost,
+    b and the stage reading it re-run; its sibling c and the root resume.
+    The manifest's upstream maps each need to the id it was built from."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    ran: list[str] = []
+
+    def run():
+        ran.clear()
+        p = Pipeline(spark, str(tmp_path))
+
+        def stage(name, needs):
+            def fn(ctx):
+                ran.append(name)
+                return spark.range(2).toDF("id")
+
+            p.stage(name, needs=needs)(fn)
+
+        stage("root", ())
+        stage("b", ("root",))
+        stage("c", ("root",))
+        stage("b2", ("b",))
+        p.run()
+        return {r.name: r.resumed for r in p.results}
+
+    assert run() == {"root": False, "b": False, "c": False, "b2": False}
+    store = ParquetStore(spark, str(tmp_path))
+    assert store.manifest("root")["upstream"] == {}
+    assert store.manifest("b2")["upstream"] == {"b": store.manifest("b")["id"]}
+    os.remove(os.path.join(str(tmp_path), "b", "manifest.json"))
+    assert run() == {"root": True, "b": False, "c": True, "b2": False}
+    assert sorted(ran) == ["b", "b2"]
+    assert store.manifest("b2")["upstream"] == {"b": store.manifest("b")["id"]}
+
+
+def test_stage_reads_only_its_declared_inputs(spark, tmp_path):
+    """A stage's ctx holds the run's inputs and its needs' outputs only,
+    and a need must name an earlier enabled stage."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    p = Pipeline(spark, str(tmp_path))
+    p.stage("a", needs=())(lambda ctx: spark.range(2).toDF("id"))
+    p.stage("b", needs=())(lambda ctx: ctx["a"])
+    with pytest.raises(KeyError, match="a"):
+        p.run()
+
+    p = Pipeline(spark, str(tmp_path / "inputs"))
+    p.stage("a", needs=())(lambda ctx: ctx["seed"])
+    p.run({"seed": spark.range(4).toDF("id")})
+    assert p.results[0].rows == 4
+
+    p = Pipeline(spark, str(tmp_path / "decl"))
+    p.stage("a", needs=())(lambda ctx: ctx)
+    p.stage("off", enabled=False)(lambda ctx: ctx)
+    for needs in (("nope",), ("later",), ("off",)):
+        with pytest.raises(ValueError, match="needs"):
+            p.stage("x", needs=needs)(lambda ctx: ctx)
+    p.stage("later", needs=("a",))(lambda ctx: ctx)
+
+
+def test_failed_stage_lets_running_siblings_commit(spark, tmp_path):
+    """One stage raises while its sibling runs: run() re-raises after the
+    sibling commits, the failed stage commits no manifest, no stage
+    starts after the failure, and the next run resumes the sibling."""
+    from dygiepp_spark.plans.pipeline import Pipeline
+
+    raised = threading.Event()
+
+    def sibling(ctx):
+        assert raised.wait(60)
+        return spark.range(4).toDF("id")
+
+    def boom(ctx):
+        raised.set()
+        raise RuntimeError("boom")
+
+    def build(fail):
+        p = Pipeline(spark, str(tmp_path))
+        p.stage("sibling", needs=())(sibling)
+        p.stage("flaky", needs=())(boom if fail else (lambda ctx: spark.range(1).toDF("id")))
+        p.stage("after", needs=("sibling",))(lambda ctx: ctx["sibling"])
+        return p
+
+    def results(p):
+        return [(r.name, r.rows, r.resumed) for r in p.results]
+
+    p = build(fail=True)
+    with pytest.raises(RuntimeError, match="boom"):
+        p.run()
+    assert results(p) == [("sibling", 4, False)]
+    store = ParquetStore(spark, str(tmp_path))
+    assert store.manifest("sibling")["rows"] == 4
+    assert store.manifest("flaky") is None
+    assert store.manifest("after") is None
+    p = build(fail=False)
+    p.run()
+    assert results(p) == [("sibling", 4, True), ("flaky", 1, False), ("after", 4, False)]
 
 
 def test_failed_manifest_commit_leaves_no_manifest(spark, tmp_path):

@@ -26,6 +26,18 @@ def plan_of(df) -> str:
     )
 
 
+def lambda_bodies(plan: str) -> list[str]:
+    """The argument list of every ``lambdafunction(...)`` in ``plan``."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end() : i - 1])
+    return out
+
+
 def count_shuffles(plan: str) -> int:
     # count shuffle Exchange nodes in the formatted detail section;
     # BroadcastExchange is free of the all-to-all cost this counts
@@ -78,6 +90,15 @@ def test_entity_linking_broadcasts_the_dictionary(spark, stored_turns):
     )
     plan = plan_of(linked)
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_dictionaries_are_jvm_local_relations(spark):
+    """The dictionaries are literal relations in the JVM: scanning them
+    starts no Python worker, unlike a ``createDataFrame(list)`` RDD."""
+    for df in (TT.entity_dict(spark), TT.alias_pairs(spark)):
+        plan = plan_of(df)
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
@@ -141,6 +162,9 @@ def test_repetition_two_keyed_aggs(spark, stored_docs):
     plan = plan_of(repetition_features(stored_docs.select("doc_id", "text")))
     assert count_shuffles(plan) <= 3, plan
     assert "collect_list" not in plan.lower(), plan
+    # each 2-gram lambda sees only its own tokens: a lambda that refers to
+    # the tokenizing expression re-splits the document per element
+    assert not any("split(" in body for body in lambda_bodies(plan)), plan
 
 
 def test_decontam_benchmark_broadcast(spark, stored_docs):
