@@ -90,6 +90,7 @@ def test_entity_linking_broadcasts_the_dictionary(spark, stored_turns):
     )
     plan = plan_of(linked)
     assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 def test_dictionaries_are_jvm_local_relations(spark):
@@ -99,7 +100,6 @@ def test_dictionaries_are_jvm_local_relations(spark):
         plan = plan_of(df)
         assert "ExistingRDD" not in plan, plan
         assert "LocalTableScan" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_ann_brute_force_broadcasts_queries(spark, sf_dir):
