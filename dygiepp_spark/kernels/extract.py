@@ -237,10 +237,14 @@ def extract(
 
 def kernel_triples(extracted: DataFrame, turns: DataFrame) -> DataFrame:
     """predict.py triple emission from kernel output (same dedup semantics
-    as operators.extraction.emit_triples: last (s1, s2) pair wins)."""
+    as operators.extraction.emit_triples: last (s1, s2) pair wins).
+
+    Spans index the non-empty tokens the kernel decoded, so the surfaces
+    are sliced from that same filtered split, not the raw one."""
     rels = extracted.filter(F.col("row_type") == "relation")
+    words = F.array_remove(F.split(F.col("text"), " "), "")
     toks = turns.select("conv_id", "turn_idx", F.col("text").alias("sent_text"),
-                        F.split(F.col("text"), " ").alias("_toks"))
+                        words.alias("_toks"))
     span_text = lambda s, e: F.array_join(  # noqa: E731
         F.slice(F.col("_toks"), s + 1, e - s + 1), " "
     )

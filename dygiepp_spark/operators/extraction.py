@@ -20,29 +20,30 @@ Reference semantics re-expressed:
   (doc/data.md:59-72); binary decode ``decode.py:10-43`` (ARG0 x ARG1
   cross product per trigger).
 
-Scale notes: mention detection is a narrow filter over the token explode;
-the pair join is a self-join *within* (conv_id, turn_idx) with a band
+Scale notes: mention detection is a narrow filter over the token explode.
+Triples and gold triples take their pairs from one row-local generator
+(``_pair_rows``); only ``relation_pairs`` (linked KG edges) and the event
+decode self-join mentions, *within* (conv_id, turn_idx) with a band
 predicate (distance cap), so the shuffle key is (conv_id, turn_idx) — high
 cardinality and uniform (turns are bounded at TURN_TOKENS tokens), no skew.
 AQE handles residual imbalance.
 
-Plan-shape invariants (checked via .explain during tuning):
+Plan-shape invariants (tests/test_plan_shapes.py):
 
-* the source is scanned ONCE per side — ``n_tokens`` and ``text`` are
-  carried through the (narrow) token explode instead of being re-derived
-  and joined back, so the positional beams are pure ranking windows with
-  zero joins, and ``sent_text`` needs no extra join at emission;
-* the only shuffles in emit_triples are: turns derivation (1), the beam
-  window + pair self-join sharing one (conv_id, turn_idx) partitioning,
-  and the final triple-dedup aggregation.
+* ``_pair_rows`` — tokenize, vocab filter, positional beam and band pairs
+  — is array expressions over each turn row: it scans the source once and
+  shuffles nothing. ``emit_triples``' one shuffle is its triple-dedup
+  aggregation; ``kg_eval.gold_triples``/``gold_triples_ctx``'s one shuffle
+  is their first-occurrence aggregation. None of them has a window.
+* ``extract_events``' token explode carries ``n_tokens``, so its beam is a
+  ranking window with no join back to the turns.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
-from dygiepp_spark.operators.doc_assembly import with_token_counts
 from dygiepp_spark.tables import (
     ENTITY_VOCAB,
     EVENT_ARG_MAX_DIST,
@@ -53,12 +54,8 @@ from dygiepp_spark.tables import (
 
 
 def _token_frame(turns: DataFrame) -> DataFrame:
-    """Token explode that CARRIES the per-turn context (``text``,
-    ``n_tokens``) on every token row instead of re-deriving and joining it
-    back later — one narrow stage, one scan of the source. The duplication
-    is transient (columnar, never wider than the turn itself) and buys
-    join-free beams plus join-free sent_text emission downstream.
-    """
+    """Token explode that carries the turn's ``n_tokens`` on every token
+    row, so a beam over it is a ranking window with no join back."""
     base = turns.withColumn(
         "n_tokens",
         F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")),
@@ -67,7 +64,6 @@ def _token_frame(turns: DataFrame) -> DataFrame:
         base.select(
             "conv_id",
             "turn_idx",
-            "text",
             "n_tokens",
             F.posexplode(F.split(F.col("text"), " ")).alias("tok_ix", "token"),
         )
@@ -80,95 +76,41 @@ def _token_frame(turns: DataFrame) -> DataFrame:
     )
 
 
-def detect_mentions(turns: DataFrame, with_context: bool = False) -> DataFrame:
+def detect_mentions(turns: DataFrame) -> DataFrame:
     """Rule-based single-token entity mentions.
 
     Output: (conv_id, turn_idx, start, end, surface) — sentence-relative
     inclusive offsets like the reference's per-sentence ner lists
-    (doc/data.md:29-37). ``with_context=True`` additionally carries
-    (text, n_tokens) for join-free downstream beams.
+    (doc/data.md:29-37).
     """
     toks = _token_frame(turns)
-    extra = ["text", "n_tokens"] if with_context else []
     return toks.filter(F.col("token").isin(*ENTITY_VOCAB)).select(
         "conv_id",
         "turn_idx",
         F.col("tok_ix").alias("start"),
         F.col("tok_ix").alias("end"),
         F.col("token").alias("surface"),
-        *extra,
     )
 
 
-def detect_triggers(turns: DataFrame, with_context: bool = False) -> DataFrame:
+def detect_triggers(turns: DataFrame) -> DataFrame:
     """Rule-based single-token event triggers (doc/data.md:59)."""
     toks = _token_frame(turns)
-    extra = ["text", "n_tokens"] if with_context else []
     return toks.filter(F.col("token").isin(*TRIGGER_VOCAB)).select(
         "conv_id",
         "turn_idx",
         F.col("tok_ix").alias("trigger_ix"),
         F.concat(F.lit("op_"), F.col("token")).alias("event_type"),
-        *extra,
     )
 
 
-def _beam_filter(
-    items: DataFrame,
-    spans_per_word: float,
-    cap: int | None,
-    mode: str,
-    pos_col: str,
-) -> DataFrame:
-    """Join-free M4 beam over a frame that already carries ``n_tokens``:
-    one ranking window on (conv_id, turn_idx), nothing else."""
-    rounder = F.ceil if mode == "ceil" else F.floor
-    k = F.greatest(rounder(F.lit(spans_per_word) * F.col("n_tokens")), F.lit(1))
-    if cap is not None:
-        k = F.least(k, F.lit(cap))
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(pos_col)
-    return (
-        items.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def positional_beam(
-    items: DataFrame,
-    turns: DataFrame,
-    spans_per_word: float,
-    cap: int | None = None,
-    mode: str = "ceil",
-    pos_col: str = "start",
-) -> DataFrame:
-    """M4 beam for uniformly-scored candidates: keep the first
-    k = round(spans_per_word * sentence_len) items per turn in textual
-    order (the Pruner's tie rule — equal scores resolve to lower indices,
-    then survivors re-sort ascending; entity_beam_pruner.py:104-192).
-
-    Relations use ceil (relation.py:117); events use floor-with-min-1 and
-    a hard cap (events.py:133-152).
-
-    General form for items that do NOT carry ``n_tokens`` — joins the turn
-    lengths in. The pipeline's own call sites use the join-free
-    ``with_context=True`` + :func:`_beam_filter` path instead.
-    """
-    if "n_tokens" in items.columns:
-        return _beam_filter(items, spans_per_word, cap, mode, pos_col).drop(
-            *[c for c in ("text", "n_tokens") if c in items.columns]
-        )
-    counts = with_token_counts(turns).select("conv_id", "turn_idx", "n_tokens")
-    rounder = F.ceil if mode == "ceil" else F.floor
-    k = F.greatest(rounder(F.lit(spans_per_word) * F.col("n_tokens")), F.lit(1))
-    if cap is not None:
-        k = F.least(k, F.lit(cap))
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(pos_col)
-    return (
-        items.join(counts, ["conv_id", "turn_idx"])
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "n_tokens")
+def _rule_label(arg0: Column, arg1: Column) -> Column:
+    """label = RELATION_LABELS[(len(arg0) + 2*len(arg1)) % 3]."""
+    label_arr = F.array(*[F.lit(x) for x in RELATION_LABELS])
+    return F.element_at(
+        label_arr,
+        ((F.length(arg0) + 2 * F.length(arg1)) % len(RELATION_LABELS)).cast("int")
+        + 1,
     )
 
 
@@ -180,14 +122,11 @@ def relation_pairs(mentions: DataFrame, max_dist: int = RELATION_MAX_DIST) -> Da
     label = RELATION_LABELS[(len(arg0) + 2*len(arg1)) % 3],
     conf  = 1 / (1 + distance).
     """
-    carry_text = "text" in mentions.columns
     a = mentions.alias("a")
-    b = mentions.drop(*[c for c in ("text", "n_tokens") if c in mentions.columns]).alias("b")
-    n_labels = len(RELATION_LABELS)
-    label_arr = F.array(*[F.lit(x) for x in RELATION_LABELS])
-    sent = [F.col("a.text").alias("sent_text")] if carry_text else []
+    b = mentions.alias("b")
+    ids = []
     if "entity_id" in mentions.columns:
-        sent += [
+        ids = [
             F.col("a.entity_id").alias("subj_id"),
             F.col("b.entity_id").alias("obj_id"),
         ]
@@ -209,57 +148,37 @@ def relation_pairs(mentions: DataFrame, max_dist: int = RELATION_MAX_DIST) -> Da
         F.col("a.surface").alias("arg0"),
         F.col("b.surface").alias("arg1"),
         (F.col("b.start") - F.col("a.start")).alias("dist"),
-        *sent,
+        *ids,
     )
     return pairs.select(
         "*",
-        F.element_at(
-            label_arr,
-            (
-                (F.length(F.col("arg0")) + 2 * F.length(F.col("arg1"))) % n_labels
-            ).cast("int")
-            + 1,
-        ).alias("label"),
+        _rule_label(F.col("arg0"), F.col("arg1")).alias("label"),
         (F.lit(1.0) / (F.lit(1.0) + F.col("dist"))).alias("conf"),
     )
 
 
-def emit_triples(turns: DataFrame, max_dist: int = RELATION_MAX_DIST) -> DataFrame:
-    """The flagship query: predict.py triple emission.
+def _pair_rows(turns: DataFrame, max_dist: int) -> DataFrame:
+    """Every relation pair of every turn, one row each: (conv_id, turn_idx,
+    sent_text, s1, s2, arg0, arg1, label, conf) — the pair rule that
+    :func:`emit_triples` and the gold builders of ``kg_eval`` share.
 
-    (conv_id, sent_text, arg0, arg1, label) deduped with last-write-wins in
-    (s1, s2) iteration order — the dict-overwrite semantics of
-    ``get_doc_key_info`` (predict.py:22-34) — carrying the softmax score.
-    ``max_by(conf, s1 * 1000 + s2)`` reproduces "last wins" because pairs
-    are generated in ascending (i, j) order and turns are < 1000 tokens.
+    Mentions are the entity-vocab tokens; they pass the reference's
+    relation beam (the first k = ceil(0.5 * sentence_len) in textual
+    order, template.libsonnet:99), and a pair is an ordered mention pair
+    with ``0 < s2 - s1 <= max_dist``; label as :func:`relation_pairs`,
+    conf = 1 / (1 + distance).
 
-    Mentions pass the reference's relation beam first
-    (k = ceil(0.5 * sentence_len), template.libsonnet:99) so this emits
-    exactly what the Arrow kernel emits with the RuleScorer.
-
-    Plan shape — the 100 TB-critical property: every per-turn step
-    (tokenize, mention detect, positional beam, band pair generation) is
-    ROW-LOCAL, so it runs as array expressions inside one narrow stage;
-    the ONLY shuffle is the final triple-dedup aggregation (map-side
-    partial agg). The windowed formulation (beam_prune_spans) exists for
-    scored beams, but a positional beam shuffling every mention row —
-    with sent_text attached — through a ranking window would make shuffle
-    IO the scaling bottleneck (measured: 0.39 efficiency at 4x cores vs
-    this formulation).
+    Every step is an array expression over the turn row, so the generator
+    shuffles nothing. A positional beam as a ranking window shuffles every
+    mention row instead (measured: 0.39 scaling efficiency at 4x cores
+    against this form, BENCH/PLANS.md round 3).
     """
-    # token convention identical to _token_frame: positions come from the
-    # RAW split (posexplode-before-filter) with empties dropped afterwards,
-    # so this fused path and the relational detect_mentions path agree on
-    # ANY input text (repeated spaces included), not just the single-space
-    # derived corpus. The '/.'/'/?' -> '.'/'?' word normalization is
-    # deliberately ABSENT here: it can never change vocab membership
-    # (normalization rewrites exactly '/.' and '/?', and neither '.' nor
-    # '?' is in ENTITY_VOCAB), so in a path that only FILTERS on the vocab
-    # it is dead weight — an extra per-token array transform measured at
-    # ~20% of this query's wall (interleaved A/B at sf0.1, BENCH/PLANS.md
-    # round 3; output identity vs the normalizing form machine-checked
-    # with two-way exceptAll). _token_frame keeps the normalization
-    # because its consumers OUTPUT token surfaces.
+    # Positions come from the RAW split with empties dropped afterwards —
+    # _token_frame's convention, so this path and detect_mentions agree on
+    # any text, repeated spaces included. The '/.'/'/?' word normalization
+    # is left out: it rewrites only those two tokens, neither of which can
+    # become an ENTITY_VOCAB word, and it cost ~20% of emit_triples' wall
+    # (interleaved A/B at sf0.1, BENCH/PLANS.md round 3).
     raw = F.split(F.col("text"), " ")
     toks = F.filter(
         F.transform(raw, lambda t, i: F.struct(i.alias("pos"), t.alias("tok"))),
@@ -287,35 +206,47 @@ def emit_triples(turns: DataFrame, max_dist: int = RELATION_MAX_DIST) -> DataFra
             ),
         )
     )
-    label_arr = F.array(*[F.lit(x) for x in RELATION_LABELS])
-    exploded = turns.select(
-        "conv_id", F.col("text").alias("sent_text"), F.explode(pairs_arr).alias("p")
+    return turns.select(
+        "conv_id",
+        "turn_idx",
+        F.col("text").alias("sent_text"),
+        F.explode(pairs_arr).alias("p"),
     ).select(
         "conv_id",
+        "turn_idx",
         "sent_text",
         F.col("p.s1").alias("s1"),
         F.col("p.s2").alias("s2"),
         F.col("p.arg0").alias("arg0"),
         F.col("p.arg1").alias("arg1"),
-        F.element_at(
-            label_arr,
-            (
-                (F.length(F.col("p.arg0")) + 2 * F.length(F.col("p.arg1")))
-                % len(RELATION_LABELS)
-            ).cast("int")
-            + 1,
-        ).alias("label"),
+        _rule_label(F.col("p.arg0"), F.col("p.arg1")).alias("label"),
         (
             F.lit(1.0) / (F.lit(1.0) + (F.col("p.s2") - F.col("p.s1")))
         ).alias("conf"),
     )
+
+
+def emit_triples(turns: DataFrame, max_dist: int = RELATION_MAX_DIST) -> DataFrame:
+    """The flagship query: predict.py triple emission.
+
+    (conv_id, sent_text, arg0, arg1, label) deduped with last-write-wins in
+    (s1, s2) iteration order — the dict-overwrite semantics of
+    ``get_doc_key_info`` (predict.py:22-34) — carrying the softmax score.
+    ``max_by(conf, s1 * 1000 + s2)`` reproduces "last wins" because pairs
+    are generated in ascending (i, j) order and turns are < 1000 tokens.
+
+    The pairs come from :func:`_pair_rows`, which emits exactly what the
+    Arrow kernel emits with the RuleScorer. The ONLY shuffle is this
+    triple-dedup aggregation (map-side partial agg).
+    """
     # Dedup key: hash the sentence text instead of grouping on the raw
     # string — a ~70-char string in a hash-agg key costs ~4x the whole
     # aggregation (measured); the 64-bit surrogate keeps key compare cheap
     # and sent_text rides along via max() (all values in a group are equal
     # up to a 2^-64 collision).
     return (
-        exploded.groupBy(
+        _pair_rows(turns, max_dist)
+        .groupBy(
             "conv_id",
             F.xxhash64("sent_text").alias("_sh"),
             "arg0",

@@ -35,11 +35,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from dygiepp_spark.operators.extraction import (
-    detect_mentions,
-    positional_beam,
-    relation_pairs,
-)
+from dygiepp_spark.operators.extraction import _pair_rows
 
 # --------------------------------------------------------------------------
 # K1 span-match predicates
@@ -214,26 +210,26 @@ _METRICS = {
 # gold derivation (deterministic rule-gold for the synthetic corpus)
 # --------------------------------------------------------------------------
 
+def _first_pairs(pairs: DataFrame) -> DataFrame:
+    """The first pair per (conv_id, arg0, arg1) in (turn_idx, s1, s2)
+    order, as one ``min_by`` aggregation."""
+    first = F.min_by(
+        F.struct("label", "conf"), F.struct("turn_idx", "s1", "s2")
+    )
+    return pairs.groupBy("conv_id", "arg0", "arg1").agg(first.alias("r")).select(
+        "conv_id", "arg0", "arg1", "r.label", "r.conf"
+    )
+
+
 def gold_triples(turns: DataFrame, max_dist: int = 3) -> DataFrame:
     """Deterministic 'gold' triples: the tight-distance subset of the rule
-    extractor, deduped per (conv, arg0, arg1) keeping the first occurrence's
-    label — mirroring ``goldrels.drop_duplicates(subset=["id","arg0","arg1"])``
-    (eval_utils.py:755-756) which keeps the first row in document order.
+    extractor's pairs (``extraction._pair_rows``), keeping per
+    (conv, arg0, arg1) the label and conf of the first pair in document
+    order — ``min_by(struct(label, conf), struct(turn_idx, s1, s2))``, the
+    ``goldrels.drop_duplicates(subset=["id","arg0","arg1"])`` of
+    eval_utils.py:755-756.
     """
-    from dygiepp_spark.operators.extraction import _beam_filter
-
-    mentions = _beam_filter(
-        detect_mentions(turns, with_context=True), 0.5, None, "ceil", "start"
-    ).drop("text", "n_tokens")
-    pairs = relation_pairs(mentions, max_dist)
-    w = Window.partitionBy("conv_id", "arg0", "arg1").orderBy(
-        "turn_idx", "s1", "s2"
-    )
-    return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("conv_id", "arg0", "arg1", "label", "conf")
-    )
+    return _first_pairs(_pair_rows(turns, max_dist))
 
 
 def gold_triples_ctx(
@@ -249,41 +245,29 @@ def gold_triples_ctx(
     many-to-one matching structure those metrics exist for. Context is
     sliced from the raw whitespace split of the sentence (the same
     position convention as the token frame), clipped at sentence edges.
-    Dedup: first occurrence per (conv, arg0, arg1) in document order, like
-    :func:`gold_triples` / eval_utils.py:755-756.
+    Dedup on the widened surfaces: the first pair per (conv, arg0, arg1)
+    in document order, ``min_by`` as in :func:`gold_triples`.
     """
-    from dygiepp_spark.operators.extraction import _beam_filter
-
-    mentions = _beam_filter(
-        detect_mentions(turns, with_context=True), 0.5, None, "ceil", "start"
-    ).drop("n_tokens")
-    pairs = relation_pairs(mentions, max_dist)
     arr = F.split(F.col("sent_text"), " ")
     n = F.size(arr)
 
-    def ctx(s: Column, e: Column) -> Column:
+    def ctx(s: Column) -> Column:
+        # mentions are single tokens, so the span is [s, s]
         start1 = F.greatest(s - window + 1, F.lit(1))  # 1-based max(0, s-w)
-        end1 = F.least(n, e + window + 1)              # 1-based min(n-1, e+w)
+        end1 = F.least(n, s + window + 1)              # 1-based min(n-1, s+w)
         return F.array_join(F.slice(arr, start1, end1 - start1 + 1), " ")
 
-    widened = pairs.select(
+    widened = _pair_rows(turns, max_dist).select(
         "conv_id",
         "turn_idx",
         "s1",
         "s2",
-        ctx(F.col("s1"), F.col("e1")).alias("arg0"),
-        ctx(F.col("s2"), F.col("e2")).alias("arg1"),
+        ctx(F.col("s1")).alias("arg0"),
+        ctx(F.col("s2")).alias("arg1"),
         "label",
         "conf",
     )
-    w = Window.partitionBy("conv_id", "arg0", "arg1").orderBy(
-        "turn_idx", "s1", "s2"
-    )
-    return (
-        widened.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("conv_id", "arg0", "arg1", "label", "conf")
-    )
+    return _first_pairs(widened)
 
 
 # --------------------------------------------------------------------------

@@ -125,6 +125,24 @@ def test_kernel_matches_relational_events(spark, small_turns):
     assert kern == rel
 
 
+def test_kernel_triples_surfaces_on_irregular_spacing(spark):
+    """Kernel spans index the non-empty tokens, so on turns with a
+    repeated or leading space every argument is still an entity word."""
+    texts = [
+        "the spark  reads a table row",
+        " spark table window",
+        "row   column  a  vector ",
+    ]
+    turns = spark.createDataFrame(
+        [("c0", i, "user", t, None) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    )
+    got = K.kernel_triples(K.extract(turns, RuleScorer()), turns).collect()
+    assert got
+    for r in got:
+        assert r["arg0"] in TT.ENTITY_VOCAB and r["arg1"] in TT.ENTITY_VOCAB, r
+
+
 # ------------------------------------------------------- fixture replay gate
 
 def _replay_triples(spark, fixture_path, use_predicted=False):

@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 
 from dygiepp_spark import tables as TT
 from dygiepp_spark.operators import extraction as EX
+from dygiepp_spark.operators import kg_eval as KE
 from dygiepp_spark.operators import linking as LK
 from dygiepp_spark.operators import similarity as SIM
 
@@ -55,12 +56,19 @@ def stored_turns(spark, sf_dir, tmp_path_factory):
     return spark.read.parquet(p)
 
 
-def test_emit_triples_single_shuffle(spark, stored_turns):
+@pytest.mark.parametrize(
+    "build",
+    [EX.emit_triples, KE.gold_triples, KE.gold_triples_ctx],
+    ids=["emit_triples", "gold_triples", "gold_triples_ctx"],
+)
+def test_emit_triples_single_shuffle(spark, stored_turns, build):
     """The flagship path's load-bearing property: tokenize, mention
     detect, beam, and pair generation are ROW-LOCAL array expressions —
-    the ONLY shuffle is the final triple-dedup aggregation."""
-    plan = plan_of(EX.emit_triples(stored_turns))
+    the ONLY shuffle is the final dedup aggregation (last-wins triples,
+    first-occurrence gold), and there is no window."""
+    plan = plan_of(build(stored_turns))
     assert count_shuffles(plan) == 1, plan
+    assert "Window" not in plan, plan
 
 
 def test_emit_triples_column_pruning(spark, stored_turns):
@@ -375,7 +383,6 @@ def report_inputs(spark, stored_turns):
     outside any job group."""
     from dygiepp_spark.operators import coref as CO
     from dygiepp_spark.operators import graph as GR
-    from dygiepp_spark.operators import kg_eval as KE
 
     mentions = EX.detect_mentions(stored_turns)
     entities = TT.entity_dict(spark)
@@ -399,7 +406,6 @@ def report_inputs(spark, stored_turns):
 def _lazy_reports():
     from dygiepp_spark.operators import coref as CO
     from dygiepp_spark.operators import graph as GR
-    from dygiepp_spark.operators import kg_eval as KE
 
     binary = EX.events_binary_decode
     return {

@@ -16,6 +16,7 @@ from hypothesis import strategies as st
 
 from dygiepp_spark import tables as TT
 from dygiepp_spark.operators import extraction as EX
+from dygiepp_spark.operators import kg_eval as KE
 
 VOCAB = TT.VOCAB
 ENTS = set(TT.ENTITY_VOCAB)
@@ -47,6 +48,27 @@ def python_model_triples(convs: dict[str, list[list[str]]]) -> dict:
     return out
 
 
+def python_model_gold(convs: dict[str, list[list[str]]], max_dist: int = 3) -> dict:
+    """Gold semantics in plain Python: the same beam and band as
+    :func:`python_model_triples`, keeping (label, conf) of the first pair
+    in (turn_idx, s1, s2) order per (conv_id, arg0, arg1) —
+    ``goldrels.drop_duplicates(["id","arg0","arg1"])``, eval_utils.py:755-756."""
+    out: dict = {}
+    for conv_id, turns in convs.items():
+        for tokens in turns:
+            toks = [t for t in tokens if t != ""]
+            n = len(toks)
+            ments = [(i, t) for i, t in enumerate(toks) if t in ENTS]
+            beamed = ments[: max(1, math.ceil(0.5 * n))]
+            for ai, (pa, ta) in enumerate(beamed):
+                for pb, tb in beamed[ai + 1 :]:
+                    d = pb - pa
+                    if 0 < d <= max_dist:
+                        lab = LABELS[(len(ta) + 2 * len(tb)) % len(LABELS)]
+                        out.setdefault((conv_id, ta, tb), (lab, 1.0 / (1.0 + d)))
+    return out
+
+
 tokens_strategy = st.lists(
     st.sampled_from(VOCAB), min_size=1, max_size=25
 )
@@ -63,6 +85,17 @@ def sess(spark):
     return spark
 
 
+def _turns_frame(sess, corpus):
+    rows = [
+        (cid, ix, "user", " ".join(toks), None)
+        for cid, turns in corpus.items()
+        for ix, toks in enumerate(turns)
+    ]
+    return sess.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string"
+    )
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -70,20 +103,28 @@ def sess(spark):
 )
 @given(corpus=corpus_strategy)
 def test_emit_triples_matches_python_model(sess, corpus):
-    rows = [
-        (cid, ix, "user", " ".join(toks), None)
-        for cid, turns in corpus.items()
-        for ix, toks in enumerate(turns)
-    ]
-    turns = sess.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string"
-    )
+    turns = _turns_frame(sess, corpus)
     got = {
         (r["conv_id"], r["sent_text"], r["arg0"], r["arg1"], r["label"]): r["conf"]
         for r in EX.emit_triples(turns).collect()
     }
     want = python_model_triples(corpus)
     assert got == want
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(corpus=corpus_strategy)
+def test_gold_triples_matches_python_model(sess, corpus):
+    turns = _turns_frame(sess, corpus)
+    got = {
+        (r["conv_id"], r["arg0"], r["arg1"]): (r["label"], r["conf"])
+        for r in KE.gold_triples(turns).collect()
+    }
+    assert got == python_model_gold(corpus)
 
 
 # --------------------------------------------------------------------------
