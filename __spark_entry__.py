@@ -8,8 +8,8 @@ derived deterministically from the ``documents`` view in BOTH engines (see
 dygiepp_spark.tables.TURNS_SQL), so the full pipeline — doc assembly,
 tokenization, mention/trigger detection, pair generation, triple emission,
 linking, coref/canonicalization, KG materialization, eval — is oracle-
-checked end to end. Dedup / similarity / text-analysis / multimodal queries
-run over the ``documents`` and ``embeddings`` tables directly.
+checked end to end. Dedup / text-analysis / multimodal queries run over
+the ``documents`` table directly.
 """
 
 from __future__ import annotations
@@ -40,7 +40,6 @@ from dygiepp_spark.operators import kg_eval as KE
 from dygiepp_spark.operators import linking as LK
 from dygiepp_spark.operators import multimodal as MM
 from dygiepp_spark.operators import pruning as PR
-from dygiepp_spark.operators import similarity as SIM
 from dygiepp_spark.operators import spans as SP
 from dygiepp_spark.sources import jsonl as JS
 from dygiepp_spark.streaming import stream as ST
@@ -52,10 +51,6 @@ def _turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TT.load_documents(spark, sf_dir)
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -666,33 +661,6 @@ def q_ngram_jaccard(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# similarity search (embeddings table)
-# --------------------------------------------------------------------------
-
-def q_ann_brute_force(spark, sf_dir):
-    return SIM.brute_force_topk(_emb(spark, sf_dir))
-
-
-def q_ann_ivf(spark, sf_dir):
-    return SIM.ivf_topk(_emb(spark, sf_dir))
-
-
-def q_near_dups_embedding(spark, sf_dir):
-    """Embedding-cosine near-dup: SRP-LSH banding + hot-bucket cap +
-    exact quantized-cosine verify. The synthetic table has no natural
-    near-dups (max pairwise cos ~0.51), so deterministic perturbed twins
-    are derived in-query — identically in both engines."""
-    return SIM.embedding_near_dups(_emb(spark, sf_dir))
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (arXiv:2303.09540): cluster-bounded semantic duplicate
-    pairs over the embedding column — assign to coarse centroids, exact
-    within-cell cosine >= eps, drop the member closer to its centroid."""
-    return SIM.semantic_dedup(_emb(spark, sf_dir))
-
-
-# --------------------------------------------------------------------------
 # text analysis (documents table)
 # --------------------------------------------------------------------------
 
@@ -704,18 +672,6 @@ def _doc_text(spark, sf_dir):
 
 def q_pii_scrub(spark, sf_dir):
     return PII.scrub_pii(PII.with_synthetic_pii(_doc_text(spark, sf_dir)))
-
-
-def q_kmeans(spark, sf_dir):
-    """Lloyd's k-means training (similarity.kmeans_train), emitted in LONG
-    format (cell, size, dim, cv) — the harness canonicalizes frames with a
-    pandas sort over every column, which cannot order an array cell, so
-    the centroid vector is posexploded to one row per dimension."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = SIM.kmeans_train(emb, k=SIM.N_CENTROIDS, iters=2)
-    return cents.select(
-        "cell", "size", F.posexplode("cq").alias("dim", "cv")
-    )
 
 
 def q_conv_stats(spark, sf_dir):
@@ -1409,12 +1365,6 @@ def q_filter_rate_by_source(spark, sf_dir):
     return TX.filter_rate_by_source(docs)
 
 
-def q_ivf_recall(spark, sf_dir):
-    """Measured IVF recall vs exact brute force per query — the ANN
-    speed/recall tradeoff, measured instead of asserted."""
-    return SIM.ivf_recall(_emb(spark, sf_dir))
-
-
 def q_coverage_curve(spark, sf_dir):
     """Zipf coverage at k in {1,5,10,20} from one pinned vocabulary
     scan — the subword-vocab sizing table."""
@@ -1517,22 +1467,11 @@ def q_gap_hist(spark, sf_dir):
     return TR.gap_hist(with_ts)
 
 
-def q_ivf_cell_balance(spark, sf_dir):
-    """IVF partition-balance report — the ANN hot-shard alarm."""
-    return SIM.ivf_cell_balance(_emb(spark, sf_dir))
-
-
 def q_cluster_size_hist(spark, sf_dir):
     """Coref chain-length distribution — the anaphora-density report."""
     return CO.cluster_size_hist(
         CO.coref_clusters(EX.detect_mentions(_turns(spark, sf_dir)))
     )
-
-
-def q_embedding_stats(spark, sf_dir):
-    """Vector-hygiene pre-flight: dims spread, zero vectors, quantized
-    norm range over the embeddings table."""
-    return SIM.embedding_stats(_emb(spark, sf_dir))
 
 
 def q_dedup_rate_by_source(spark, sf_dir):
@@ -1727,7 +1666,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     verifies the FIRST 50 entries. The round-5 window (the rotation plan
     VERDICT r4 #1 prescribed): (a) the 16 queries added at the round-4
     tail, which have local parity evidence but no driver row yet —
-    front-loaded so they finally earn one; (b) the 19 queries NEW this
+    front-loaded so they finally earn one; (b) the 18 queries NEW this
     round (incl. the late-round lm_score / bpe_pairs / source_mix /
     lpa_communities / intra_dedup / pack_sequences / dsir_weights /
     kg_components / streaming_kg_agg / pmi_pairs / degree_hist /
@@ -1742,10 +1681,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (c) the 3 queries whose chains changed this round (eval_grid
     gained the 'partial' metric column, grid_best_cell consumes it, and
     method_accept_rate's oracle was refactored onto the shared preds CTE
-    chain); (d) the 25 OLDEST green rows — queries whose last driver row
-    is CORRECTNESS_r03, taken in their r3 tail order. The tail holds the
-    remaining 22 r3-row queries (incl. the rows-only
-    triples_transformer) followed by the 48 queries with fresh r4 rows —
+    chain); (d) the 22 OLDEST green rows — queries whose last driver row
+    is CORRECTNESS_r03, taken in their r3 tail order, of which the first
+    four displaced rows (frame_samples, pii_scrub, repetition,
+    stratified_sample) close the window. The tail holds the remaining 22 r3-row queries (incl. the rows-only
+    triples_transformer) followed by the 47 queries with fresh r4 rows —
     rotated out intentionally, not dropped; every tail entry stayed
     green in this round's full scripts/parity.py run at sf0.001 (see
     BENCH/PLANS.md for the run note). If a late-round perf change
@@ -1777,7 +1717,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "accept_rate_filtered": q_accept_rate_filtered,
         "human_eval_sheet": q_human_eval_sheet,
         "human_eval_scores": q_human_eval_scores,
-        "semantic_dedup": q_semantic_dedup,
         "lm_score": q_lm_score,
         "bpe_pairs": q_bpe_pairs,
         "source_mix": q_source_mix,
@@ -1798,24 +1737,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (d) oldest green rows (last driver row = CORRECTNESS_r03),
         # r3 tail order
         "ngram_jaccard": q_ngram_jaccard,
-        "near_dups_embedding": q_near_dups_embedding,
         "streaming_assembly": q_streaming_assembly,
         "streaming_windowed": q_streaming_windowed,
         "streaming_mentions": q_streaming_mentions,
         "streaming_triples": q_streaming_triples,
-        "ann_brute_force": q_ann_brute_force,
-        "ann_ivf": q_ann_ivf,
         "token_counts": q_token_counts,
         "langid": q_langid,
         "quality": q_quality,
         "image_meta": q_image_meta,
-        # ---- tail: beyond the 50-query harness window ----
         # displaced from (d) by the thirteen late-round-5 queries above —
-        # their r3 rows stand, chains unchanged, full-parity green
+        # their r3 rows stand, chains unchanged, full-parity green; the
+        # first four close the window
         "frame_samples": q_frame_samples,
         "pii_scrub": q_pii_scrub,
         "repetition": q_repetition,
         "stratified_sample": q_stratified_sample,
+        # ---- tail: beyond the 50-query harness window ----
         "decontam": q_decontam,
         "conv_stats": q_conv_stats,
         "sessions": q_sessions,
@@ -1898,7 +1835,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "agreement_report": q_agreement_report,
         "vocab_build": q_vocab_build,
         "ie_eval_event_golden": q_ie_eval_event_golden,
-        "kmeans": q_kmeans,
         "url_filter": q_url_filter,
         # (e) post-window round-5 additions (tail — parity-gated at both
         # SFs; rotate into the window next cycle)
@@ -1924,9 +1860,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_coverage": q_ngram_coverage,
         "ntriples_roundtrip": q_ntriples_roundtrip,
         "dedup_rate_by_source": q_dedup_rate_by_source,
-        "embedding_stats": q_embedding_stats,
         "cluster_size_hist": q_cluster_size_hist,
-        "ivf_cell_balance": q_ivf_cell_balance,
         "gap_hist": q_gap_hist,
         "minhash_error_hist": q_minhash_error_hist,
         "pack_efficiency": q_pack_efficiency,
@@ -1940,7 +1874,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "edge_confidence_profile": q_edge_confidence_profile,
         "provenance_integrity": q_provenance_integrity,
         "coverage_curve": q_coverage_curve,
-        "ivf_recall": q_ivf_recall,
         "filter_rate_by_source": q_filter_rate_by_source,
     }
 
@@ -2019,17 +1952,12 @@ def oracle_sql() -> dict[str, str]:
         "near_dups_minhash": oracles_data.near_dups_minhash_oracle(),
         "near_dups_simhash": oracles_data.near_dups_simhash_oracle(),
         "ngram_jaccard": oracles_data.ngram_jaccard_oracle(),
-        "ann_brute_force": oracles_data.ann_brute_force_oracle(),
-        "ann_ivf": oracles_data.ann_ivf_oracle(),
-        "near_dups_embedding": oracles_data.embedding_near_dups_oracle(),
-        "semantic_dedup": oracles_data.semantic_dedup_oracle(),
         "pii_scrub": oracles_data.pii_scrub_oracle(),
         "repetition": oracles_data.repetition_oracle(),
         "stratified_sample": oracles_data.stratified_sample_oracle(),
         "decontam": oracles_data.decontam_oracle(),
         "conv_stats": oracles.conv_stats_oracle(),
         "sessions": oracles.session_stats_oracle(gap_sec=30),
-        "kmeans": oracles_data.kmeans_oracle(k=SIM.N_CENTROIDS, iters=2),
         "token_counts": oracles_data.token_counts_oracle(),
         "langid": oracles_data.langid_oracle(),
         "quality": oracles_data.quality_oracle(),
@@ -2122,9 +2050,7 @@ def oracle_sql() -> dict[str, str]:
         "ngram_coverage": oracles_data.ngram_coverage_oracle(k=10),
         "ntriples_roundtrip": oracles_kg.ntriples_roundtrip_oracle(),
         "dedup_rate_by_source": oracles_data.dedup_rate_by_source_oracle(),
-        "embedding_stats": oracles_data.embedding_stats_oracle(),
         "cluster_size_hist": oracles_kg.cluster_size_hist_oracle(),
-        "ivf_cell_balance": oracles_data.ivf_cell_balance_oracle(),
         "gap_hist": oracles.gap_hist_oracle(),
         "minhash_error_hist": oracles_data.minhash_error_hist_oracle(),
         "pack_efficiency": oracles_data.pack_efficiency_oracle(budget=2048),
@@ -2140,6 +2066,5 @@ def oracle_sql() -> dict[str, str]:
         "edge_confidence_profile": oracles_kg.edge_confidence_profile_oracle(),
         "provenance_integrity": oracles_kg.provenance_integrity_oracle(),
         "coverage_curve": oracles_data.coverage_curve_oracle(ks=(1, 5, 10, 20)),
-        "ivf_recall": oracles_data.ivf_recall_oracle(),
         "filter_rate_by_source": oracles_data.filter_rate_by_source_oracle(),
     }

@@ -136,7 +136,6 @@ BENCH_QUERIES = {
     "coref_canonical",
     # training-data-pipeline layer
     "near_dups_minhash",
-    "ann_brute_force",
     "token_counts",
     "image_meta",
     # corpus-curation layer (added r4 per VERDICT r3 #7 so its cost
@@ -148,9 +147,6 @@ BENCH_QUERIES = {
     "pagerank",
     "triangles",
     "asof_events",
-    # semantic-dedup layer (added r5; the r4 20-query set above is
-    # carried forward UNCHANGED so round-over-round sums stay comparable)
-    "semantic_dedup",
     # late-r5 curation/graph wave (new lines, not in any prior sum)
     "lm_score",
     "intra_dedup",

@@ -1,6 +1,6 @@
 """Corpus compaction: near-dup PAIRS -> duplicate GROUPS -> keeper rows.
 
-Pair emission (dedup.py / similarity.py) is only half of a production
+Pair emission (dedup.py) is only half of a production
 dedup pass: 100 TB pipelines must collapse the pair graph into duplicate
 clusters and keep exactly one representative per cluster (the reference's
 analogous move is coref canonicalization — clusters from pairwise links,

@@ -2,7 +2,7 @@
 
 Every SQL string here reproduces the matching DataFrame operator's output
 bit-for-bit on the pre-registered views (region nation customer supplier
-part orders lineitem events documents embeddings). Portability rules used
+part orders lineitem events documents). Portability rules used
 throughout:
 
 * floats: only IEEE-identical expressions (double division of identical

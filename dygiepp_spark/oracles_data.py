@@ -1,11 +1,11 @@
 """DuckDB oracle twins for the training-data-pipeline queries
-(dedup / similarity / text analysis / multimodal).
+(dedup / text analysis / multimodal).
 
 Portability contract (see dygiepp_spark.functions.hashing):
 
 * all hashing is md5-based (``hash60``: first 15 hex chars as BIGINT);
 * all ranking scores are exact integer arithmetic or single IEEE
-  operations over exact integers (quantized embeddings);
+  operations over exact integers;
 * jaccard/ratios are one double division of two exact integers;
 * every window carries a total-order tiebreak.
 """
@@ -22,7 +22,6 @@ from dygiepp_spark.operators.dedup import (
     SIMHASH_BITS,
 )
 from dygiepp_spark.operators.multimodal import FRAME_STRIDE
-from dygiepp_spark.operators.similarity import N_CENTROIDS, N_QUERIES, TOP_K
 
 # --------------------------------------------------------------------------
 # chunks + shingles (twins of dedup.doc_chunks / dedup.shingles)
@@ -199,243 +198,6 @@ SELECT id_a, id_b, jaccard FROM (
     FROM blocks a JOIN blocks b ON a.block = b.block AND a.id < b.id
 )
 WHERE jaccard >= {thresh}"""
-
-
-# --------------------------------------------------------------------------
-# similarity search
-# --------------------------------------------------------------------------
-
-_QZ_SQL = """
-qz AS (
-    SELECT CAST(vec_id AS BIGINT) AS vec_id,
-           list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000.0, 0) AS BIGINT)) AS q
-    FROM embeddings
-),
-qn AS (
-    SELECT vec_id, q,
-           CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS nq
-    FROM qz
-),
-qe AS (
-    SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i FROM qn
-)
-"""
-
-
-def embedding_near_dups_oracle(
-    thresh: float = 0.99,
-    n_planes: int = 24,
-    rows_per_band: int = 8,
-    max_bucket: int = 1000,
-    twin_offset: int = 100_000,
-) -> str:
-    """Twin of similarity.embedding_near_dups: planted twins + SRP-LSH
-    banding (portable md5-parity hyperplanes) + hot-bucket cap + exact
-    quantized-cosine verify."""
-    return f"""WITH {_QZ_SQL.strip()},
-qt AS (
-    SELECT vec_id, q, nq FROM qn
-    UNION ALL
-    SELECT vec_id + {twin_offset},
-           list_prepend(q[1] + 5, q[2:]) AS q,
-           CAST(list_sum(list_transform(list_prepend(q[1] + 5, q[2:]),
-                x -> x * x)) AS BIGINT) AS nq
-    FROM qn
-),
-qe2 AS (SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i FROM qt),
-w AS (
-    SELECT p, i,
-           CASE WHEN (('0x' || substr(md5(p || ':' || (i - 1)), 1, 15))::BIGINT) % 2 = 0
-                THEN 1 ELSE -1 END AS wt
-    FROM generate_series(0, {n_planes - 1}) AS gp(p),
-         generate_series(1, 64) AS gi(i)
-),
-bits AS (
-    SELECT e.vec_id, w.p,
-           CASE WHEN sum(e.v * w.wt) >= 0 THEN 1 ELSE 0 END AS bit
-    FROM qe2 e JOIN w ON w.i = e.i
-    GROUP BY e.vec_id, w.p
-),
-buckets AS (
-    SELECT vec_id AS id, CAST(p // {rows_per_band} AS INT) AS band,
-           CAST(CAST(sum(bit * (1 << (p % {rows_per_band}))) AS BIGINT) AS VARCHAR) AS bucket
-    FROM bits GROUP BY vec_id, p // {rows_per_band}
-),
-sizes AS (SELECT band, bucket, count(*) AS n FROM buckets GROUP BY 1, 2),
-ok AS (
-    SELECT b.* FROM buckets b
-    JOIN sizes s ON s.band = b.band AND s.bucket = b.bucket AND s.n <= {max_bucket}
-),
-cand AS (
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b
-    FROM ok a JOIN ok b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-),
-dots AS (
-    SELECT c.id_a, c.id_b, CAST(sum(ea.v * eb.v) AS BIGINT) AS dot
-    FROM cand c
-    JOIN qe2 ea ON ea.vec_id = c.id_a
-    JOIN qe2 eb ON eb.vec_id = c.id_b AND eb.i = ea.i
-    GROUP BY 1, 2
-)
-SELECT id_a, id_b, cos FROM (
-    SELECT d.id_a, d.id_b,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(na.nq * nb.nq AS DOUBLE)) AS cos
-    FROM dots d
-    JOIN qt na ON na.vec_id = d.id_a
-    JOIN qt nb ON nb.vec_id = d.id_b
-) WHERE cos >= {thresh}"""
-
-
-def semantic_dedup_oracle(
-    eps: float = 0.97,
-    n_centroids: int | None = None,
-    twin_offset: int = 100_000,
-) -> str:
-    """Twin of similarity.semantic_dedup: planted twins, first-k centroid
-    assignment (ties to lower centroid id), within-cell exact-cosine
-    pairs, drop = the member closer to its centroid (tie: higher id).
-    ``n_centroids=None`` mirrors the data-adaptive default — k =
-    greatest(4, n // 100) as a scalar subquery over the same table."""
-    if n_centroids is None:
-        k = "(SELECT greatest(4, count(*) // 100) FROM embeddings)"
-    else:
-        k = str(n_centroids)
-    return f"""WITH {_QZ_SQL.strip()},
-qt AS (
-    SELECT vec_id, q, nq FROM qn
-    UNION ALL
-    SELECT vec_id + {twin_offset},
-           list_prepend(q[1] + 5, q[2:]) AS q,
-           CAST(list_sum(list_transform(list_prepend(q[1] + 5, q[2:]),
-                x -> x * x)) AS BIGINT) AS nq
-    FROM qn
-),
-qe2 AS (SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i FROM qt),
-ce AS (
-    SELECT vec_id AS cent_id, unnest(q) AS cv, generate_subscripts(q, 1) AS i
-    FROM qt WHERE vec_id < {k}
-),
-cnq AS (SELECT vec_id AS cent_id, nq AS cn FROM qt WHERE vec_id < {k}),
-cdots AS (
-    SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-    FROM qe2 e JOIN ce c ON e.i = c.i
-    GROUP BY 1, 2
-),
-cscore AS (
-    SELECT d.vec_id, d.cent_id,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(n.nq * c.cn AS DOUBLE)) AS ccos
-    FROM cdots d
-    JOIN qt n ON n.vec_id = d.vec_id
-    JOIN cnq c ON c.cent_id = d.cent_id
-),
-cells AS (
-    SELECT vec_id, cell, ccos FROM (
-        SELECT vec_id, cent_id AS cell, ccos,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, cent_id) AS rn
-        FROM cscore
-    ) WHERE rn = 1
-),
-pairs AS (
-    SELECT ca.cell, ca.vec_id AS id_a, cb.vec_id AS id_b,
-           ca.ccos AS ca_c, cb.ccos AS cb_c
-    FROM cells ca JOIN cells cb
-      ON ca.cell = cb.cell AND ca.vec_id < cb.vec_id
-),
-dots AS (
-    SELECT p.cell, p.id_a, p.id_b, p.ca_c, p.cb_c,
-           CAST(sum(ea.v * eb.v) AS BIGINT) AS dot
-    FROM pairs p
-    JOIN qe2 ea ON ea.vec_id = p.id_a
-    JOIN qe2 eb ON eb.vec_id = p.id_b AND eb.i = ea.i
-    GROUP BY 1, 2, 3, 4, 5
-)
-SELECT cell, id_a, id_b, cos,
-       CASE WHEN ca_c > cb_c THEN id_a
-            WHEN cb_c > ca_c THEN id_b
-            ELSE greatest(id_a, id_b) END AS drop_id
-FROM (
-    SELECT d.*,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(na.nq * nb.nq AS DOUBLE)) AS cos
-    FROM dots d
-    JOIN qt na ON na.vec_id = d.id_a
-    JOIN qt nb ON nb.vec_id = d.id_b
-) WHERE cos >= {eps}"""
-
-
-def ann_brute_force_oracle(k: int = TOP_K, n_queries: int = N_QUERIES) -> str:
-    return f"""WITH {_QZ_SQL.strip()},
-dots AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(sum(a.v * b.v) AS BIGINT) AS dot
-    FROM qe a JOIN qe b ON a.i = b.i AND b.vec_id <> a.vec_id
-    WHERE a.vec_id < {n_queries}
-    GROUP BY 1, 2
-),
-scored AS (
-    SELECT d.query_id, d.neighbor_id,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(na.nq * nb.nq AS DOUBLE)) AS cos
-    FROM dots d
-    JOIN qn na ON na.vec_id = d.query_id
-    JOIN qn nb ON nb.vec_id = d.neighbor_id
-)
-SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk, cos FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rnk
-    FROM scored
-) WHERE rnk <= {k}"""
-
-
-def ann_ivf_oracle(
-    k: int = TOP_K, n_queries: int = N_QUERIES, n_centroids: int = N_CENTROIDS
-) -> str:
-    return f"""WITH {_QZ_SQL.strip()},
-ce AS (
-    SELECT vec_id AS cent_id, unnest(q) AS cv, generate_subscripts(q, 1) AS i
-    FROM qn WHERE vec_id < {n_centroids}
-),
-cdots AS (
-    SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-    FROM qe e JOIN ce c ON e.i = c.i
-    GROUP BY 1, 2
-),
-cscore AS (
-    SELECT d.vec_id, d.cent_id,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(n.nq * cn.nq AS DOUBLE)) AS ccos
-    FROM cdots d
-    JOIN qn n ON n.vec_id = d.vec_id
-    JOIN qn cn ON cn.vec_id = d.cent_id
-),
-cells AS (
-    SELECT vec_id, cent_id AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY ccos DESC, cent_id) AS rn
-        FROM cscore
-    ) WHERE rn = 1
-),
-dots AS (
-    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-           CAST(sum(a.v * b.v) AS BIGINT) AS dot
-    FROM qe a
-    JOIN cells ca ON ca.vec_id = a.vec_id
-    JOIN qe b ON a.i = b.i AND b.vec_id <> a.vec_id
-    JOIN cells cb ON cb.vec_id = b.vec_id AND cb.cell = ca.cell
-    WHERE a.vec_id < {n_queries}
-    GROUP BY 1, 2
-),
-scored AS (
-    SELECT d.query_id, d.neighbor_id,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(na.nq * nb.nq AS DOUBLE)) AS cos
-    FROM dots d
-    JOIN qn na ON na.vec_id = d.query_id
-    JOIN qn nb ON nb.vec_id = d.neighbor_id
-)
-SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk, cos FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rnk
-    FROM scored
-) WHERE rnk <= {k}"""
 
 
 # --------------------------------------------------------------------------
@@ -713,76 +475,6 @@ SELECT c.doc_id,
 FROM corpus c
 LEFT JOIN perdoc p USING (doc_id)
 LEFT JOIN hits h USING (doc_id)"""
-
-
-def kmeans_oracle(k: int = N_CENTROIDS, iters: int = 2) -> str:
-    """Twin of similarity.kmeans_train — Lloyd's rounds unrolled (like the
-    transitive-closure oracle): assignment = argmax quantized cosine with
-    ties to the lower centroid id, update = per-(cell, dim) rounded mean."""
-    ctes = [
-        f"""c0 AS (
-    SELECT vec_id AS cent_id, unnest(q) AS cv, generate_subscripts(q, 1) AS i
-    FROM qn WHERE vec_id < {k}
-)"""
-    ]
-    for t in range(iters):
-        ctes.append(f"""c{t}n AS (
-    SELECT cent_id, CAST(sum(cv * cv) AS BIGINT) AS cn FROM c{t} GROUP BY 1
-),
-a{t}d AS (
-    SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-    FROM qe e JOIN c{t} c ON e.i = c.i GROUP BY 1, 2
-),
-a{t} AS (
-    SELECT vec_id, cent_id AS cell FROM (
-        SELECT d.vec_id, d.cent_id,
-               row_number() OVER (
-                   PARTITION BY d.vec_id
-                   ORDER BY CAST(d.dot AS DOUBLE)
-                            / sqrt(CAST(n.nq * cn.cn AS DOUBLE)) DESC,
-                            d.cent_id) AS rn
-        FROM a{t}d d
-        JOIN qn n ON n.vec_id = d.vec_id
-        JOIN c{t}n cn ON cn.cent_id = d.cent_id
-    ) WHERE rn = 1
-),
-c{t + 1} AS (
-    SELECT a.cell AS cent_id, e.i,
-           CAST(round(CAST(sum(e.v) AS DOUBLE) / count(*), 0) AS BIGINT) AS cv
-    FROM qe e JOIN a{t} a ON a.vec_id = e.vec_id
-    GROUP BY 1, 2
-)""")
-    T = iters
-    ctes.append(f"""c{T}n AS (
-    SELECT cent_id, CAST(sum(cv * cv) AS BIGINT) AS cn FROM c{T} GROUP BY 1
-),
-fd AS (
-    SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-    FROM qe e JOIN c{T} c ON e.i = c.i GROUP BY 1, 2
-),
-fa AS (
-    SELECT vec_id, cent_id AS cell FROM (
-        SELECT d.vec_id, d.cent_id,
-               row_number() OVER (
-                   PARTITION BY d.vec_id
-                   ORDER BY CAST(d.dot AS DOUBLE)
-                            / sqrt(CAST(n.nq * cn.cn AS DOUBLE)) DESC,
-                            d.cent_id) AS rn
-        FROM fd d
-        JOIN qn n ON n.vec_id = d.vec_id
-        JOIN c{T}n cn ON cn.cent_id = d.cent_id
-    ) WHERE rn = 1
-),
-sizes AS (SELECT cell, count(*) AS size FROM fa GROUP BY 1)""")
-    body = ",\n".join(ctes)
-    # long format (cell, size, dim, cv): one row per centroid dimension —
-    # the harness's pandas canonicalization can't sort array cells. dim is
-    # 0-based to match Spark's posexplode pos.
-    return f"""WITH {_QZ_SQL.strip()},
-{body}
-SELECT c.cent_id AS cell, s.size,
-       CAST(c.i - 1 AS INT) AS dim, c.cv
-FROM c{T} c JOIN sizes s ON s.cell = c.cent_id"""
 
 
 # --------------------------------------------------------------------------
@@ -1790,57 +1482,6 @@ SELECT a.source,
 FROM allsrc a LEFT JOIN per p ON a.source = p.source"""
 
 
-def embedding_stats_oracle() -> str:
-    """Twin of similarity.embedding_stats over the shared milli-unit
-    quantization chain."""
-    return f"""WITH {_QZ_SQL.strip()}
-SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-       CAST(min(len(q)) AS BIGINT) AS min_dims,
-       CAST(max(len(q)) AS BIGINT) AS max_dims,
-       CAST(sum(CASE WHEN nq = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-       CAST(min(nq) AS BIGINT) AS min_nq,
-       CAST(max(nq) AS BIGINT) AS max_nq,
-       CAST(sum(nq) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_nq
-FROM qn"""
-
-
-def ivf_cell_balance_oracle(n_centroids: int = N_CENTROIDS) -> str:
-    """Twin of similarity.ivf_cell_balance over the shared cell
-    assignment CTEs."""
-    return f"""WITH {_QZ_SQL.strip()},
-ce AS (
-    SELECT vec_id AS cent_id, unnest(q) AS cv, generate_subscripts(q, 1) AS i
-    FROM qn WHERE vec_id < {n_centroids}
-),
-cdots AS (
-    SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-    FROM qe e JOIN ce c ON e.i = c.i
-    GROUP BY 1, 2
-),
-cscore AS (
-    SELECT d.vec_id, d.cent_id,
-           CAST(d.dot AS DOUBLE) / sqrt(CAST(n.nq * cn.nq AS DOUBLE)) AS ccos
-    FROM cdots d
-    JOIN qn n ON n.vec_id = d.vec_id
-    JOIN qn cn ON cn.vec_id = d.cent_id
-),
-cells AS (
-    SELECT vec_id, cent_id AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY ccos DESC, cent_id) AS rn
-        FROM cscore
-    ) WHERE rn = 1
-),
-per AS (
-    SELECT cell, CAST(count(*) AS BIGINT) AS n_vectors
-    FROM cells GROUP BY 1
-),
-total AS (SELECT sum(n_vectors) AS _t FROM per)
-SELECT cell, n_vectors,
-       CAST(n_vectors AS DOUBLE) / CAST(_t AS DOUBLE) AS share
-FROM per, total"""
-
-
 def minhash_error_hist_oracle(
     thresh: float = 0.25, max_bucket: int = 1000
 ) -> str:
@@ -1980,36 +1621,6 @@ def coverage_curve_oracle(ks: tuple[int, ...] = (1, 5, 10, 20)) -> str:
         for k in ks
     )
     return arms
-
-
-def ivf_recall_oracle(
-    k: int = TOP_K, n_queries: int = N_QUERIES, n_centroids: int = N_CENTROIDS
-) -> str:
-    """Twin of similarity.ivf_recall: the two ANN oracles nested as
-    CTEs, per-query overlap count, exact recall over the query's true
-    neighbor count."""
-    return f"""WITH bf AS (
-{ann_brute_force_oracle(k, n_queries)}
-),
-iv AS (
-{ann_ivf_oracle(k, n_queries, n_centroids)}
-),
-hits AS (
-    SELECT b.query_id, CAST(count(*) AS BIGINT) AS n_hit
-    FROM bf b
-    WHERE EXISTS (
-        SELECT 1 FROM iv
-        WHERE iv.query_id = b.query_id
-          AND iv.neighbor_id = b.neighbor_id
-    )
-    GROUP BY 1
-),
-base AS (SELECT query_id, count(*) AS n_true FROM bf GROUP BY 1)
-SELECT base.query_id,
-       COALESCE(h.n_hit, 0) AS n_hit,
-       CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / CAST(base.n_true AS DOUBLE)
-           AS recall
-FROM base LEFT JOIN hits h ON base.query_id = h.query_id"""
 
 
 def filter_rate_by_source_oracle() -> str:

@@ -1,6 +1,6 @@
-"""Semantic (not just oracle-parity) tests for the dedup and similarity
-operators: planted near-dups are recovered, LSH candidates superset the
-verified pairs, simhash banding recall guarantee holds, ANN recall is sane.
+"""Semantic (not just oracle-parity) tests for the dedup operators:
+planted near-dups are recovered, LSH candidates superset the verified
+pairs, and the simhash banding recall guarantee holds.
 """
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from dygiepp_spark.operators import dedup as DD
-from dygiepp_spark.operators import similarity as SIM
 from dygiepp_spark import tables as TT
 
 
@@ -86,66 +85,6 @@ def test_simhash_banding_recall_guarantee(chunks):
     assert missing == 0
 
 
-def test_ann_brute_force_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = {
-        (r["query_id"], r["rnk"]): r["neighbor_id"]
-        for r in SIM.brute_force_topk(emb, k=3, n_queries=4).collect()
-    }
-    pdf = emb.toPandas().sort_values("vec_id")
-    mat = np.round(np.stack(pdf["embedding"].values).astype(np.float64) * 1000.0)
-    ids = pdf["vec_id"].values
-    norms = (mat * mat).sum(axis=1)
-    for qi in range(4):
-        dots = mat @ mat[qi]
-        cos = dots / np.sqrt(norms * norms[qi])
-        order = sorted(
-            [(c, i) for c, i in zip(cos, ids) if i != qi],
-            key=lambda t: (-t[0], t[1]),
-        )
-        for rnk in range(1, 4):
-            assert got[(qi, rnk)] == order[rnk - 1][1]
-
-
-def test_ivf_recall_vs_brute_force(spark, sf_dir):
-    """nprobe=1 IVF over 4 cells should still recover a decent fraction of
-    true top-5 neighbors (they are often in the query's own cell)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    bf = set(
-        (r["query_id"], r["neighbor_id"])
-        for r in SIM.brute_force_topk(emb).collect()
-    )
-    ivf = set(
-        (r["query_id"], r["neighbor_id"]) for r in SIM.ivf_topk(emb).collect()
-    )
-    recall = len(bf & ivf) / len(bf)
-    assert recall >= 0.2, f"IVF recall collapsed: {recall}"
-
-
-def test_ivf_recall_divides_by_true_neighbor_count(spark):
-    """On a corpus with fewer than k + 1 vectors every query has fewer
-    than k true neighbors; recall divides by that count, so one cell
-    holding the whole corpus (IVF = brute force) scores 1.0."""
-    vecs = [[1.0, 0.0], [0.8, 0.6], [0.0, 1.0], [-0.6, 0.8]]
-    emb = spark.createDataFrame(
-        [(i, v, "x") for i, v in enumerate(vecs)],
-        "vec_id bigint, embedding array<float>, label string",
-    )
-    rows = SIM.ivf_recall(emb, k=5, n_queries=4, n_centroids=1).collect()
-    n_true = {
-        r["query_id"]: r["n"]
-        for r in SIM.brute_force_topk(emb, k=5, n_queries=4)
-        .groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert sorted(r["query_id"] for r in rows) == [0, 1, 2, 3]
-    for r in rows:
-        assert n_true[r["query_id"]] == 3
-        assert r["recall"] == r["n_hit"] / n_true[r["query_id"]]
-        assert r["recall"] == 1.0
-
-
 def test_ngram_jaccard_hot_block_reroutes_subquadratic(spark):
     # pathological equal-size corpus: every doc has the same shingle count,
     # so ALL land in one block; with max_block exceeded the all-pairs path
@@ -186,58 +125,3 @@ def test_ngram_jaccard_unchanged_when_no_hot_block(spark, chunks):
     ra = {(r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in a.collect()}
     rb = {(r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in b.collect()}
     assert ra == rb
-
-
-def test_embedding_near_dups_finds_planted_twins(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ids = [int(r["vec_id"]) for r in emb.select("vec_id").collect()]
-    pairs = SIM.embedding_near_dups(emb).collect()
-    # every planted twin pair (v, v+100000) recovered through the SRP
-    # bands, nothing else passes the 0.99 verify
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert got == {(i, i + 100_000) for i in ids}
-    assert all(r["cos"] >= 0.99 for r in pairs)
-
-
-def test_srp_buckets_band_shape(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(10)
-    qz = SIM.quantized(emb)
-    b = SIM.srp_buckets(qz)
-    rows = b.collect()
-    assert len(rows) == 10 * (SIM.SRP_PLANES // SIM.SRP_ROWS_PER_BAND)
-    assert all(0 <= int(r["bucket"]) < (1 << SIM.SRP_ROWS_PER_BAND) for r in rows)
-
-
-def test_kmeans_converges_on_separated_clusters(spark):
-    """Two tight, well-separated direction clusters: after 2 Lloyd rounds
-    with k=2 every vector must sit in the cell of its own cluster and the
-    centroids must point along the cluster directions."""
-    import pyspark.sql.functions as F
-    from dygiepp_spark.operators.similarity import kmeans_train
-
-    rows = []
-    for i in range(20):
-        base = [1.0, 0.0, 0.0, 0.0] if i % 2 == 0 else [0.0, 1.0, 0.0, 0.0]
-        vec = [v + (0.001 * (i % 5)) * w for v, w in zip(base, [0, 0, 1, 1])]
-        rows.append((i, vec))
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = {r.cell: r for r in kmeans_train(emb, k=2, iters=2).collect()}
-    assert set(out) == {0, 1}
-    assert out[0].size == 10 and out[1].size == 10
-    # cell 0 seeded from vec 0 (x-direction), cell 1 from vec 1 (y-direction)
-    assert out[0].cq[0] > 900 and out[0].cq[1] == 0
-    assert out[1].cq[1] > 900 and out[1].cq[0] == 0
-
-
-def test_kmeans_empty_cell_drops(spark):
-    """If a seed centroid captures nothing, it disappears from the output
-    (inner-join update semantics, mirrored exactly by the oracle)."""
-    from dygiepp_spark.operators.similarity import kmeans_train
-
-    # vecs 0 and 1 are identical -> all mass lands in cell 0 (lower id
-    # wins ties), cell 1 goes empty after round 1
-    rows = [(i, [1.0, 0.0]) for i in range(6)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = kmeans_train(emb, k=2, iters=2).collect()
-    assert len(out) == 1
-    assert out[0].cell == 0 and out[0].size == 6

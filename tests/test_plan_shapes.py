@@ -18,7 +18,6 @@ from dygiepp_spark import tables as TT
 from dygiepp_spark.operators import extraction as EX
 from dygiepp_spark.operators import kg_eval as KE
 from dygiepp_spark.operators import linking as LK
-from dygiepp_spark.operators import similarity as SIM
 
 
 def plan_of(df) -> str:
@@ -108,15 +107,6 @@ def test_dictionaries_are_jvm_local_relations(spark):
         plan = plan_of(df)
         assert "ExistingRDD" not in plan, plan
         assert "LocalTableScan" in plan, plan
-
-
-def test_ann_brute_force_broadcasts_queries(spark, sf_dir):
-    """Exact ANN = broadcast the query set over ONE corpus scan; the only
-    shuffle ranks per-query candidates (tiny key space)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    plan = plan_of(SIM.brute_force_topk(emb))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_relation_pairs_conv_local_join(spark, stored_turns):

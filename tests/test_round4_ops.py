@@ -297,7 +297,7 @@ def test_registry_invariants():
         "domain_stats", "orc_roundtrip", "partitioned_sink",
         "streaming_asof", "streaming_sessions",
         "ie_eval_partial", "ie_eval_firsttok", "accept_rate_filtered",
-        "human_eval_sheet", "human_eval_scores", "semantic_dedup",
+        "human_eval_sheet", "human_eval_scores",
         "lm_score", "bpe_pairs", "source_mix", "lpa_communities",
         "intra_dedup", "pack_sequences", "dsir_weights", "kg_components",
         "streaming_kg_agg", "pmi_pairs", "degree_hist",

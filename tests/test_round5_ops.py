@@ -151,31 +151,6 @@ def test_pagerank_weighted_bounded_product(spark):
     assert out["v"] == out["w"] > 150_000
 
 
-# ---------------------------------------------------------- semantic dedup
-
-
-def test_semantic_dedup_drops_the_centroid_closer_twin(spark, sf_dir):
-    from dygiepp_spark.operators.similarity import semantic_dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = semantic_dedup(emb).collect()
-    assert out, "planted twins must surface as semantic duplicates"
-    for r in out:
-        # every pair is a planted twin (original, original + 100000) and
-        # the drop is one of the two members
-        assert r["id_b"] == r["id_a"] + 100_000
-        assert r["drop_id"] in (r["id_a"], r["id_b"])
-        assert r["cos"] >= 0.97
-
-
-def test_semantic_dedup_no_twins_no_pairs(spark, sf_dir):
-    from dygiepp_spark.operators.similarity import semantic_dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # the synthetic corpus has no natural near-dups at eps=0.97
-    assert semantic_dedup(emb, plant_twins=False).count() == 0
-
-
 # ------------------------------------------------------------ domain stats
 
 
@@ -963,22 +938,6 @@ def test_dedup_rate_by_source_counts_align_with_compaction(spark, sf_dir):
         assert 0.0 <= r["drop_rate"] <= 1.0
 
 
-def test_embedding_stats_flags_zero_and_dim_mismatch(spark):
-    from dygiepp_spark.operators.similarity import embedding_stats
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0], "a"), (2, [0.0, 0.0], "b"), (3, [0.5, 0.5, 0.5], "c")],
-        "vec_id long, embedding array<float>, label string",
-    )
-    r = embedding_stats(emb).collect()[0]
-    assert (r["n_vectors"], r["min_dims"], r["max_dims"], r["n_zero"]) == (
-        3, 2, 3, 1,
-    )
-    # milli-quantized norms: [1e6, 0, 3*250000]
-    assert (r["min_nq"], r["max_nq"]) == (0, 1_000_000)
-    assert r["mean_nq"] == (1_000_000 + 0 + 750_000) / 3
-
-
 def test_cluster_size_hist_counts(spark):
     from dygiepp_spark.operators.coref import cluster_size_hist
 
@@ -992,16 +951,6 @@ def test_cluster_size_hist_counts(spark):
     out = {r["size"]: (r["n_clusters"], r["n_mentions"])
            for r in cluster_size_hist(clusters).collect()}
     assert out == {3: (1, 3), 1: (1, 1), 2: (1, 2)}
-
-
-def test_ivf_cell_balance_shares_sum_to_one(spark, sf_dir):
-    from dygiepp_spark.operators.similarity import ivf_cell_balance
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = ivf_cell_balance(emb).collect()
-    assert sum(r["n_vectors"] for r in out) == emb.count()
-    assert abs(sum(r["share"] for r in out) - 1.0) < 1e-9
-    assert {r["cell"] for r in out} <= {0, 1, 2, 3}
 
 
 def test_gap_hist_bins_and_zero_gap(spark):
@@ -1211,19 +1160,6 @@ def test_coverage_curve_monotone_and_matches_single_k(spark, sf_dir):
     single = ngram_coverage(docs, k=5).collect()[0]
     assert curve[5] == (single["n_top_types"], single["covered"],
                         single["total"], single["coverage"])
-
-
-def test_ivf_recall_bounds_and_query_coverage(spark, sf_dir):
-    from dygiepp_spark.operators.similarity import N_QUERIES, ivf_recall
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = ivf_recall(emb).collect()
-    assert len(rows) == N_QUERIES  # every query reports, even at 0 hits
-    for r in rows:
-        assert 0.0 <= r["recall"] <= 1.0
-        assert r["recall"] == r["n_hit"] / 5
-    # nprobe=1 on 4 cells should still find a meaningful share overall
-    assert sum(r["n_hit"] for r in rows) > 0
 
 
 def test_filter_rate_by_source_conserves_verdicts(spark, sf_dir):
