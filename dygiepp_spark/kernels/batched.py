@@ -73,10 +73,11 @@ def decode_batch_rule(
     turn_idxs: list,
     tokens_list: list[list[str]],
     max_span_width: int,
-    out: list,
+    out,
 ) -> None:
-    """Decode B same-length sentences in one shot; append long-format rows
-    to ``out`` (same tuple layout as extract._decode_sentence)."""
+    """Decode B same-length sentences in one shot; append one column chunk
+    per row type to the ``extract.RowSink`` ``out`` (the chunks
+    extract._decode_sentence appends, for B sentences at once)."""
     # beam hyper-parameters live next to the per-sentence kernel; the
     # lazy import avoids the extract <-> batched module cycle
     from dygiepp_spark.kernels.extract import (
@@ -99,20 +100,17 @@ def decode_batch_rule(
     width1 = starts == ends                                # (S,)
     m = width1[None, :] & ent[:, starts]                   # (B, S) mention mask
 
+    cid = np.asarray(conv_ids, dtype=object)               # (B,)
+    tix = np.asarray(turn_idxs, dtype=np.int64)
+
     # --- NER (argmax over [null, CONCEPT]); label CONCEPT iff mention
-    ner_soft = _winner_softmax(2, 1)
     bb, ss = np.nonzero(m)
-    for b, s_ix in zip(bb, ss):
-        out.append(
-            (conv_ids[b], turn_idxs[b], "mention",
-             int(starts[s_ix]), int(ends[s_ix]), -1, -1,
-             "CONCEPT", POS, ner_soft)
-        )
+    out.add(cid[bb], tix[bb], "mention", starts[ss], ends[ss], -1, -1,
+            "CONCEPT", POS, _winner_softmax(2, 1))
 
     # --- relation beam over prune scores (B, S)
     prune = np.where(m, POS, NEG)
     kept_ix = _batched_topk(prune, RELATION_SPANS_PER_WORD, n)   # (B, k)
-    k = kept_ix.shape[1]
     kept_start = starts[kept_ix]                           # (B, k)
     kept_end = ends[kept_ix]
     km = np.take_along_axis(m, kept_ix, axis=1)            # (B, k)
@@ -126,25 +124,20 @@ def decode_batch_rule(
         + 2 * lens[np.arange(B)[:, None], kept_start][:, None, :]
     ) % L                                                  # (B, k, k)
     rb, ri, rj = np.nonzero(valid)
-    rel_soft = [_winner_softmax(L + 1, 1 + li) for li in range(L)]
-    for b, i, j in zip(rb, ri, rj):
-        li = lab[b, i, j]
-        out.append(
-            (conv_ids[b], turn_idxs[b], "relation",
-             int(kept_start[b, i]), int(kept_end[b, i]),
-             int(kept_start[b, j]), int(kept_end[b, j]),
-             scorer.relation_labels[li], POS, rel_soft[li])
-        )
+    li = lab[rb, ri, rj]
+    rel_soft = np.asarray([_winner_softmax(L + 1, 1 + i) for i in range(L)])
+    out.add(cid[rb], tix[rb], "relation",
+            kept_start[rb, ri], kept_end[rb, ri],
+            kept_start[rb, rj], kept_end[rb, rj],
+            np.asarray(scorer.relation_labels, dtype=object)[li], POS, rel_soft[li])
 
     # --- triggers (argmax over [null | op_*])
     Lt = len(scorer.trigger_labels)
-    t_soft = [_winner_softmax(Lt + 1, 1 + li) for li in range(Lt)]
+    t_soft = np.asarray([_winner_softmax(Lt + 1, 1 + i) for i in range(Lt)])
     tb, tt = np.nonzero(trig)
-    out.extend(
-        (conv_ids[b], turn_idxs[b], "trigger", int(t), int(t), -1, -1,
-         scorer.trigger_labels[tlab[b, t]], POS, t_soft[tlab[b, t]])
-        for b, t in zip(tb, tt)
-    )
+    tl = tlab[tb, tt]
+    out.add(cid[tb], tix[tb], "trigger", tt, tt, -1, -1,
+            np.asarray(scorer.trigger_labels, dtype=object)[tl], POS, t_soft[tl])
 
     # --- event argument decode, trigger-gated
     trig_prune = np.where(trig, POS, 0.0)                  # max over logits
@@ -166,15 +159,13 @@ def decode_batch_rule(
         <= EVENT_ARG_MAX_DIST
     )                                                      # (B, n, ka)
     valid_arg = elig[:, :, None] & near & am[:, None, :]   # (B, n, ka)
-    role_soft = [_winner_softmax(3, 1), _winner_softmax(3, 2)]
+    role_soft = np.asarray([_winner_softmax(3, 1), _winner_softmax(3, 2)])
     ab, at, aa = np.nonzero(valid_arg)
-    for b, t, a in zip(ab, at, aa):
-        ri_ = 1 if a_start[b, a] >= t else 0
-        out.append(
-            (conv_ids[b], turn_idxs[b], "argument", int(t), int(t),
-             int(a_start[b, a]), int(a_end[b, a]),
-             scorer.role_labels[ri_], POS, role_soft[ri_])
-        )
+    # role 1 ('arg1') iff the arg starts at or after the trigger
+    role = (a_start[ab, aa] >= at).astype(np.int64)
+    out.add(cid[ab], tix[ab], "argument", at, at,
+            a_start[ab, aa], a_end[ab, aa],
+            np.asarray(scorer.role_labels, dtype=object)[role], POS, role_soft[role])
 
 
 _WS_CACHE: dict[tuple[int, int], float] = {}

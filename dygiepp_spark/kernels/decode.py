@@ -1,7 +1,10 @@
 """Pure-numpy decode kernels — the reference's tensor decode re-expressed.
 
 These functions run INSIDE Arrow batches (applyInPandas); they never touch
-Spark. Each mirrors a reference kernel bit-for-bit:
+Spark. The three ``decode_*`` emitters return column arrays — one array
+per output field, gathered by fancy indexing — never per-row tuples, so
+the kernel builds its pandas frame without touching rows in Python.
+Each mirrors a reference kernel bit-for-bit:
 
 * :func:`enumerate_spans` — AllenNLP ``enumerate_spans`` order (start asc,
   end asc), width cap 8 (dygie.py:120-125, template.libsonnet:34).
@@ -84,49 +87,41 @@ def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     return e / np.sum(e, axis=axis, keepdims=True)
 
 
-def decode_ner(spans: np.ndarray, ner_logits: np.ndarray, labels: list[str]) -> list:
-    """Argmax incl. null column at index 0; emit non-null predictions."""
-    if spans.shape[0] == 0:
-        return []
+def decode_ner(spans: np.ndarray, ner_logits: np.ndarray, labels: list[str]) -> tuple:
+    """Argmax incl. null column at index 0; emit non-null predictions.
+
+    Returns columns ``(start, end, label, raw, softmax)``, one entry per
+    emitted span, in span order."""
     pred = np.argmax(ner_logits, axis=-1)
     raw = np.max(ner_logits, axis=-1)
     soft = np.max(softmax(ner_logits, axis=-1), axis=-1)
-    out = []
-    for i in np.nonzero(pred > 0)[0]:
-        out.append(
-            (int(spans[i, 0]), int(spans[i, 1]), labels[pred[i] - 1],
-             float(raw[i]), float(soft[i]))
-        )
-    return out
+    ix = np.nonzero(pred > 0)[0]
+    return (spans[ix, 0], spans[ix, 1], np.asarray(labels, dtype=object)[pred[ix] - 1],
+            raw[ix], soft[ix])
 
 
 def decode_relations(
     kept_spans: np.ndarray, rel_logits: np.ndarray, labels: list[str], keep: int
-) -> list:
+) -> tuple:
     """relation.py:147-177. ``rel_logits``: (k, k, L+1), null at 0.
 
     ``keep`` = num_spans_to_keep for the sentence; rows/cols past it are
     masked out (keep_mask — only relevant when the beam was padded; we
     don't pad, so keep == k in practice).
+
+    Returns columns ``(s1, e1, s2, e2, label, raw, softmax)`` in the
+    nested (i, j) loop order: ``np.nonzero`` walks row-major.
     """
-    k = kept_spans.shape[0]
-    if k == 0:
-        return []
     pred = np.argmax(rel_logits, axis=-1) - 1          # null -> -1
     raw = np.max(rel_logits, axis=-1)
     soft = np.max(softmax(rel_logits, axis=-1), axis=-1)
-    kk = min(k, keep)
-    # vectorized emission: nonzero walks row-major, identical to the
-    # nested i/j loop order
+    kk = min(kept_spans.shape[0], keep)
     ii, jj = np.nonzero(pred[:kk, :kk] >= 0)
-    return [
-        (
-            int(kept_spans[i, 0]), int(kept_spans[i, 1]),
-            int(kept_spans[j, 0]), int(kept_spans[j, 1]),
-            labels[pred[i, j]], float(raw[i, j]), float(soft[i, j]),
-        )
-        for i, j in zip(ii, jj)
-    ]
+    return (
+        kept_spans[ii, 0], kept_spans[ii, 1],
+        kept_spans[jj, 0], kept_spans[jj, 1],
+        np.asarray(labels, dtype=object)[pred[ii, jj]], raw[ii, jj], soft[ii, jj],
+    )
 
 
 def decode_events(
@@ -136,7 +131,7 @@ def decode_events(
     arg_logits: np.ndarray | None,
     role_labels: list[str],
     trig_beam: np.ndarray | None = None,
-) -> tuple[list, list]:
+) -> tuple[tuple, tuple]:
     """events.py:236-279.
 
     Trigger *prediction* is argmax over ALL tokens (``_decode_trigger``);
@@ -146,42 +141,40 @@ def decode_events(
     predicted as a real trigger"). ``arg_logits``:
     (n_tokens, n_arg_spans, R+1); ``trig_beam``: token indices eligible
     for argument attachment (default: all tokens).
+
+    Returns two column tuples: triggers ``(token, label, raw, softmax)``
+    in token order, and arguments ``(token, arg_start, arg_end, role,
+    raw, softmax)`` in (trigger, arg span) order.
     """
     n_tok = trigger_logits.shape[0]
     t_pred = np.argmax(trigger_logits, axis=-1)
     t_raw = np.max(trigger_logits, axis=-1)
     t_soft = np.max(softmax(trigger_logits, axis=-1), axis=-1)
-    triggers = [
-        (int(ix), trigger_labels[t_pred[ix] - 1], float(t_raw[ix]), float(t_soft[ix]))
-        for ix in np.nonzero(t_pred > 0)[0]
-    ]
-    arguments: list = []
-    if arg_logits is not None and arg_spans.shape[0] > 0:
-        a_pred = np.argmax(arg_logits, axis=-1) - 1
-        a_raw = np.max(arg_logits, axis=-1)
-        a_soft = np.max(softmax(arg_logits, axis=-1), axis=-1)
-        trig_mask = np.zeros(n_tok, dtype=bool)
-        if triggers:
-            trig_mask[[t[0] for t in triggers]] = True
-        beam = (
-            np.arange(n_tok, dtype=np.int64)
-            if trig_beam is None
-            else np.asarray(trig_beam, dtype=np.int64)
-        )
-        elig = beam[trig_mask[beam]]
-        if elig.size:
-            # vectorized over (eligible trigger, arg span); elig ascending,
-            # nonzero row-major -> identical to the nested loop order
-            rows, cols = np.nonzero(a_pred[elig] >= 0)
-            arguments = [
-                (
-                    int(elig[r]),
-                    int(arg_spans[a, 0]), int(arg_spans[a, 1]),
-                    role_labels[a_pred[elig[r], a]],
-                    float(a_raw[elig[r], a]), float(a_soft[elig[r], a]),
-                )
-                for r, a in zip(rows, cols)
-            ]
+    t_ix = np.nonzero(t_pred > 0)[0]
+    triggers = (t_ix, np.asarray(trigger_labels, dtype=object)[t_pred[t_ix] - 1],
+                t_raw[t_ix], t_soft[t_ix])
+    if arg_logits is None:
+        arg_logits = np.zeros((n_tok, 0, len(role_labels) + 1))
+    a_pred = np.argmax(arg_logits, axis=-1) - 1
+    a_raw = np.max(arg_logits, axis=-1)
+    a_soft = np.max(softmax(arg_logits, axis=-1), axis=-1)
+    trig_mask = np.zeros(n_tok, dtype=bool)
+    trig_mask[t_ix] = True
+    beam = (
+        np.arange(n_tok, dtype=np.int64)
+        if trig_beam is None
+        else np.asarray(trig_beam, dtype=np.int64)
+    )
+    # (eligible trigger, arg span) pairs; elig ascending and nonzero
+    # row-major -> the nested loop order
+    elig = beam[trig_mask[beam]]
+    rows, cols = np.nonzero(a_pred[elig] >= 0)
+    tok = elig[rows]
+    arguments = (
+        tok, arg_spans[cols, 0], arg_spans[cols, 1],
+        np.asarray(role_labels, dtype=object)[a_pred[tok, cols]],
+        a_raw[tok, cols], a_soft[tok, cols],
+    )
     return triggers, arguments
 
 

@@ -20,11 +20,13 @@ persist/checkpoint so the kernel runs once.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from dygiepp_spark.kernels import decode as D
+from dygiepp_spark.kernels.batched import decode_batch_rule
 from dygiepp_spark.kernels.scorer import RuleScorer, Scorer
 from dygiepp_spark.operators.doc_assembly import assign_chunks
 
@@ -43,22 +45,62 @@ ARG_SPANS_PER_WORD = 0.8
 ARG_CAP = 30
 
 
+#: EXTRACT_SCHEMA columns and the numpy dtype each is built in
+_OUT_COLS = [
+    ("conv_id", object), ("turn_idx", np.int64), ("row_type", object),
+    ("s1", np.int64), ("e1", np.int64), ("s2", np.int64), ("e2", np.int64),
+    ("label", object), ("raw_score", np.float64), ("softmax_score", np.float64),
+]
+
+
+class RowSink:
+    """Decoded rows as column chunks, in EXTRACT_SCHEMA order.
+
+    Each :meth:`add` appends one chunk: an array per column, or a scalar
+    that stands for the whole chunk (a sentence's conv_id, a row type, the
+    -1 of an absent span). :meth:`frame` concatenates every column once."""
+
+    def __init__(self):
+        self._chunks: list[tuple] = []
+
+    def add(self, conv_id, turn_idx, row_type, s1, e1, s2, e2, label, raw, soft):
+        if len(s1):
+            self._chunks.append(
+                (conv_id, turn_idx, row_type, s1, e1, s2, e2, label, raw, soft)
+            )
+
+    def frame(self) -> pd.DataFrame:
+        sizes = [len(c[3]) for c in self._chunks]
+        cols = {}
+        for j, (name, dtype) in enumerate(_OUT_COLS):
+            vals = [c[j] for c in self._chunks]
+            if not any(isinstance(v, np.ndarray) for v in vals):
+                cols[name] = np.repeat(np.asarray(vals, dtype), sizes)
+            else:
+                cols[name] = np.concatenate([
+                    v if isinstance(v, np.ndarray) else np.full(k, v, dtype)
+                    for v, k in zip(vals, sizes)
+                ])
+        return pd.DataFrame(cols)
+
+
 def _decode_sentence(scorer: Scorer, conv_id: str, turn_idx: int, tokens: list[str],
-                     max_span_width: int, out: list, coref_prop: int = 0,
+                     max_span_width: int, out: RowSink, coref_prop: int = 0,
                      ctx_seed: dict | None = None) -> None:
     n = len(tokens)
     if n == 0:
         return
-    ctx = {"conv_id": conv_id, "turn_idx": turn_idx, "tokens": tokens}
+    spans = D.enumerate_spans(n, max_span_width)
+    ctx = {"conv_id": conv_id, "turn_idx": turn_idx, "tokens": tokens,
+           "spans": spans}
     if ctx_seed:
         ctx.update(ctx_seed)
-    spans = D.enumerate_spans(n, max_span_width)
 
     # --- NER over all enumerated spans (ner.py:92-120)
-    for (s, e, lab, raw, soft) in D.decode_ner(
+    s, e, lab, raw, soft = D.decode_ner(
         spans, scorer.ner_logits(ctx, spans), scorer.ner_labels
-    ):
-        out.append((conv_id, turn_idx, "mention", s, e, -1, -1, lab, raw, soft))
+    )
+    out.add(conv_id, turn_idx, "mention", s, e, -1, -1, lab, raw, soft)
 
     # --- M17 coref propagation (dygie.py:227-235): for coref_prop > 0
     #     rounds, refresh span scores as a gated mix with their antecedent
@@ -78,11 +120,9 @@ def _decode_sentence(scorer: Scorer, conv_id: str, turn_idx: int, tokens: list[s
     # --- relation beam + pair decode (relation.py:112-177)
     kept_ix = D.topk_prune(prune, RELATION_SPANS_PER_WORD, n)
     kept = spans[kept_ix]
-    rels = D.decode_relations(
+    out.add(conv_id, turn_idx, "relation", *D.decode_relations(
         kept, scorer.rel_logits(ctx, kept), scorer.relation_labels, keep=len(kept_ix)
-    )
-    for (s1, e1, s2, e2, lab, raw, soft) in rels:
-        out.append((conv_id, turn_idx, "relation", s1, e1, s2, e2, lab, raw, soft))
+    ))
 
     # --- events: trigger decode over all tokens; argument pairs restricted
     #     to (beamed triggers, beamed arg spans) — floor-mode beams with the
@@ -106,16 +146,66 @@ def _decode_sentence(scorer: Scorer, conv_id: str, turn_idx: int, tokens: list[s
         scorer.role_labels,
         trig_beam=trig_beam,
     )
-    for (ix, lab, raw, soft) in triggers:
-        out.append((conv_id, turn_idx, "trigger", ix, ix, -1, -1, lab, raw, soft))
-    for (tix, s, e, role, raw, soft) in arguments:
-        out.append((conv_id, turn_idx, "argument", tix, tix, s, e, role, raw, soft))
+    ix, lab, raw, soft = triggers
+    out.add(conv_id, turn_idx, "trigger", ix, ix, -1, -1, lab, raw, soft)
+    tix, s, e, role, raw, soft = arguments
+    out.add(conv_id, turn_idx, "argument", tix, tix, s, e, role, raw, soft)
 
 
-_OUT_COLS = [
-    "conv_id", "turn_idx", "row_type", "s1", "e1", "s2", "e2",
-    "label", "raw_score", "softmax_score",
-]
+def _tokens(text: str) -> list[str]:
+    """The non-empty tokens of a turn; spans index this list."""
+    return [t for t in text.split(" ") if t != ""]
+
+
+def _length_groups(pdf: pd.DataFrame) -> dict:
+    """Turns grouped by non-empty token count: {n: (conv_ids, turn_idxs,
+    token lists)}, each list in frame order."""
+    groups: dict[int, tuple[list, list, list]] = {}
+    for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
+        tokens = _tokens(text)
+        g = groups.setdefault(len(tokens), ([], [], []))
+        g[0].append(conv_id)
+        g[1].append(int(turn_idx))
+        g[2].append(tokens)
+    return groups
+
+
+def decode_rows(
+    pdf: pd.DataFrame,
+    scorer: Scorer,
+    max_span_width: int = D.MAX_SPAN_WIDTH,
+    coref_prop: int = 0,
+    batched: bool = True,
+) -> pd.DataFrame:
+    """Decode one pandas frame of turns (``conv_id``, ``turn_idx``,
+    ``text``) into EXTRACT_SCHEMA rows — the body of both Arrow kernels in
+    :func:`extract`, callable without a Spark session.
+
+    Every scorer emits through one :class:`RowSink`, so the frame is built
+    once from column chunks. ``batched`` selects the cross-sentence forms
+    described in :func:`extract`; the rows are the same either way."""
+    rows = RowSink()
+    if batched and type(scorer) is RuleScorer and coref_prop == 0:
+        for _, (cids, tixs, toks) in sorted(_length_groups(pdf).items()):
+            decode_batch_rule(scorer, cids, tixs, toks, max_span_width, rows)
+    elif batched and hasattr(scorer, "forward_batch"):
+        for n, (cids, tixs, toks) in sorted(_length_groups(pdf).items()):
+            if n == 0:
+                continue
+            vecs = scorer.forward_batch(toks)               # (B, n, d)
+            for b in range(len(cids)):
+                _decode_sentence(
+                    scorer, cids[b], tixs[b], toks[b], max_span_width, rows,
+                    coref_prop=coref_prop, ctx_seed={"_tok_vecs": vecs[b]},
+                )
+    else:
+        for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
+            tokens = _tokens(text)
+            _decode_sentence(
+                scorer, conv_id, int(turn_idx), tokens, max_span_width, rows,
+                coref_prop=coref_prop,
+            )
+    return rows.frame()
 
 
 def extract(
@@ -159,68 +249,19 @@ def extract(
     overhead. Subclasses (CorefRuleScorer) and Replay scorers take the
     per-sentence path. A scorer exposing ``forward_batch`` (the numpy
     transformer, kernels/transformer.py) gets its FORWARD batched over
-    same-length groups as (B, n, d) tensors, with per-sentence decode
-    over the cached slices.
+    same-length groups as (B, n, d) tensors; each sentence then decodes
+    its slice of the batch (span grid represented once, beams served by
+    row gather). Every path appends column chunks to one
+    :class:`RowSink` and the kernel builds one pandas frame per Arrow
+    batch (:func:`decode_rows`).
     """
     chunked = assign_chunks(turns, max_tokens_per_chunk)
-    use_batched = batched and type(scorer) is RuleScorer and coref_prop == 0
-    # a transformer-class scorer batches its FORWARD over same-length
-    # sentence groups as (B, n, d) tensors (kernels/transformer.py);
-    # decode stays per-sentence, reading its cached slice
-    use_fwd_batch = batched and hasattr(scorer, "forward_batch")
-
-    def _length_groups(pdf: pd.DataFrame) -> dict:
-        groups: dict[int, tuple[list, list, list]] = {}
-        for conv_id, turn_idx, text in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-        ):
-            tokens = [t for t in text.split(" ") if t != ""]
-            g = groups.setdefault(len(tokens), ([], [], []))
-            g[0].append(conv_id)
-            g[1].append(int(turn_idx))
-            g[2].append(tokens)
-        return groups
-
-    def decode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list = []
-        if use_batched:
-            from dygiepp_spark.kernels.batched import decode_batch_rule
-
-            groups = _length_groups(pdf)
-            for n in sorted(groups):
-                cids, tixs, toks = groups[n]
-                decode_batch_rule(
-                    scorer, cids, tixs, toks, max_span_width, rows
-                )
-            return pd.DataFrame(rows, columns=_OUT_COLS)
-        if use_fwd_batch:
-            groups = _length_groups(pdf)
-            for n in sorted(groups):
-                cids, tixs, toks = groups[n]
-                if n == 0:
-                    continue
-                vecs = scorer.forward_batch(toks)           # (B, n, d)
-                for b in range(len(cids)):
-                    _decode_sentence(
-                        scorer, cids[b], tixs[b], toks[b], max_span_width,
-                        rows, coref_prop=coref_prop,
-                        ctx_seed={"_tok_vecs": vecs[b]},
-                    )
-            return pd.DataFrame(rows, columns=_OUT_COLS)
-        for conv_id, turn_idx, text in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-        ):
-            tokens = [t for t in text.split(" ") if t != ""]
-            _decode_sentence(
-                scorer, conv_id, int(turn_idx), tokens, max_span_width, rows,
-                coref_prop=coref_prop,
-            )
-        return pd.DataFrame(rows, columns=_OUT_COLS)
+    args = (scorer, max_span_width, coref_prop, batched)
 
     if doc_grouped:
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return decode_rows(pdf.sort_values("turn_idx"))
+            return decode_rows(pdf.sort_values("turn_idx"), *args)
 
         return chunked.groupBy("chunk_key").applyInPandas(kernel, EXTRACT_SCHEMA)
 
@@ -230,7 +271,7 @@ def extract(
 
     def kernel_stream(batches):
         for pdf in batches:
-            yield decode_rows(pdf)
+            yield decode_rows(pdf, *args)
 
     return stream.mapInPandas(kernel_stream, EXTRACT_SCHEMA)
 

@@ -75,21 +75,45 @@ def span_representation(
     representation a transformer scorer feeds its FFNN heads; the
     rule/replay scorers bypass it because their logits are planted.
     Output: (S, 3*d + num_width_buckets) float64.
+
+    Vectorized per span width: the interior sum adds the token vectors
+    in textual order and then divides by the width — the operation order
+    of ``token_vecs[s:e+1].mean(axis=0)``, so every double is identical
+    to the per-span form (tests/test_kernel.py keeps that form as its
+    reference).
     """
     S = spans.shape[0]
     d = token_vecs.shape[1] if token_vecs.ndim == 2 else 0
     out = np.zeros((S, 3 * d + num_width_buckets), dtype=np.float64)
-    for s_ix in range(S):
-        s, e = int(spans[s_ix, 0]), int(spans[s_ix, 1])
-        out[s_ix, :d] = token_vecs[s]
-        out[s_ix, d: 2 * d] = token_vecs[e]
-        out[s_ix, 2 * d: 3 * d] = token_vecs[s: e + 1].mean(axis=0)
-        out[s_ix, 3 * d + bucket_width(e - s + 1, num_total=num_width_buckets)] = 1.0
+    if S == 0:
+        return out
+    starts, ends = spans[:, 0], spans[:, 1]
+    widths = ends - starts + 1
+    out[:, :d] = token_vecs[starts]
+    out[:, d: 2 * d] = token_vecs[ends]
+    for w in np.unique(widths).tolist():
+        rows = np.nonzero(widths == w)[0]
+        s = starts[rows]
+        acc = token_vecs[s]
+        for off in range(1, w):
+            acc += token_vecs[s + off]
+        out[rows, 2 * d: 3 * d] = acc / w
+    buckets = np.asarray(
+        [bucket_width(w, num_total=num_width_buckets)
+         for w in range(int(widths.max()) + 1)],
+        dtype=np.int64,
+    )
+    out[np.arange(S), 3 * d + buckets[widths]] = 1.0
     return out
 
 
 class Scorer:
-    """Interface. ``spans`` is an (S, 2) int array; logits are numpy."""
+    """Interface. ``spans`` is an (S, 2) int array; logits are numpy.
+
+    ``ctx`` is the per-sentence dict the kernel builds: ``conv_id``,
+    ``turn_idx``, ``tokens`` and ``spans`` — the sentence's
+    ``enumerate_spans`` grid. Every span array a head receives is that
+    grid or a subset of its rows (a beam)."""
 
     ner_labels: list[str]
     relation_labels: list[str]

@@ -25,9 +25,12 @@ loading from SparkFiles and keeps EVERYTHING else.
 Batching: the expensive part of the forward — (n, d) @ (d, d) matmuls —
 runs rectangularly over same-length sentence groups as (B, n, d) tensors
 (``forward_batch``), the batch layout ``kernels.batched`` established for
-the rule path; decode stays per-sentence, consuming the cached per-
-sentence slice out of the batch result. One Arrow batch therefore costs
-a handful of large matmuls instead of thousands of small ones.
+the rule path. Each sentence then decodes its slice of the batch result:
+the span representation of its whole ``enumerate_spans`` grid is built
+once (vectorized, no per-span Python), the prune / NER heads read it
+whole and the relation / argument beams gather their rows. One Arrow
+batch therefore costs a handful of large matmuls instead of thousands of
+small ones.
 """
 
 from __future__ import annotations
@@ -151,11 +154,20 @@ class NumpyTransformerScorer(Scorer):
         return v
 
     def _span_reps(self, ctx, spans: np.ndarray) -> np.ndarray:
-        key = ("_span_reps", spans.tobytes())
-        reps = ctx.get(key)
-        if reps is None:
-            ctx[key] = reps = span_representation(self._vecs(ctx), spans)
-        return reps
+        """Representations of ``spans``, rows of the sentence's span grid
+        ``ctx["spans"]``: the grid is represented once per sentence and
+        the relation / argument beams are served by row gather."""
+        grid = ctx["spans"]
+        g = ctx.get("_grid_reps")
+        if g is None:
+            n = len(ctx["tokens"])
+            row = np.full((n, n), -1, dtype=np.int64)
+            row[grid[:, 0], grid[:, 1]] = np.arange(grid.shape[0])
+            ctx["_grid_reps"] = g = (row, span_representation(self._vecs(ctx), grid))
+        row, reps = g
+        if spans is grid:
+            return reps
+        return reps[row[spans[:, 0], spans[:, 1]]]
 
     # ---------------------------------------------------------------- heads
 

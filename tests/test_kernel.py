@@ -44,8 +44,8 @@ def test_decode_relations_null_shift():
     logits = np.zeros((2, 2, 3))       # null col 0
     logits[0, 1, 1] = 5.0              # label index 0 after shift
     logits[1, 0, 2] = 3.0              # label index 1
-    out = D.decode_relations(spans, logits, ["A", "B"], keep=2)
-    keys = {(r[0], r[2], r[4]) for r in out}
+    s1, _, s2, _, label, _, _ = D.decode_relations(spans, logits, ["A", "B"], keep=2)
+    keys = set(zip(s1.tolist(), s2.tolist(), label.tolist()))
     assert keys == {(0, 2, "A"), (2, 0, "B")}
 
 
@@ -57,8 +57,8 @@ def test_decode_events_trigger_gated():
     arg_logits[1, 0, 1] = 4.0           # arg for the real trigger
     arg_logits[2, 1, 1] = 4.0           # arg for a NON-trigger token -> dropped
     triggers, arguments = D.decode_events(trig, ["EVT"], arg_spans, arg_logits, ["R"])
-    assert [t[0] for t in triggers] == [1]
-    assert [(a[0], a[1]) for a in arguments] == [(1, 0)]
+    assert triggers[0].tolist() == [1]
+    assert list(zip(arguments[0].tolist(), arguments[1].tolist())) == [(1, 0)]
 
 
 def test_decode_antecedents_dummy_zero():
@@ -374,3 +374,23 @@ def test_span_representation_shape_and_features():
     assert [bucket_width(w) for w in (4, 5, 6, 7)] == [5, 5, 5, 5]
     assert bucket_width(8) == int(np.floor(np.log2(8))) + 3
     assert bucket_width(10 ** 6) == 9
+
+    # the vectorized form is bit-identical to the per-span form over every
+    # span (all widths) of random vectors, so a change in summation order
+    # cannot pass unseen
+    def per_span(token_vecs, spans, num_width_buckets=10):
+        d = token_vecs.shape[1]
+        out = np.zeros((spans.shape[0], 3 * d + num_width_buckets))
+        for s_ix in range(spans.shape[0]):
+            s, e = int(spans[s_ix, 0]), int(spans[s_ix, 1])
+            out[s_ix, :d] = token_vecs[s]
+            out[s_ix, d: 2 * d] = token_vecs[e]
+            out[s_ix, 2 * d: 3 * d] = token_vecs[s: e + 1].mean(axis=0)
+            out[s_ix, 3 * d + bucket_width(e - s + 1, num_total=num_width_buckets)] = 1.0
+        return out
+
+    rng = np.random.default_rng(0)
+    for n in range(1, 41):
+        vecs = rng.normal(size=(n, 8))
+        spans = np.array([(s, e) for s in range(n) for e in range(s, n)])
+        assert np.array_equal(span_representation(vecs, spans), per_span(vecs, spans)), n

@@ -28,8 +28,8 @@ def test_forward_batch_slices_match_single_sentence():
     sc = NumpyTransformerScorer()
     other = list(reversed(TOKS))
     batch = sc.forward_batch([TOKS, other])
-    assert np.allclose(batch[0], sc.forward_batch([TOKS])[0])
-    assert np.allclose(batch[1], sc.forward_batch([other])[0])
+    assert np.array_equal(batch[0], sc.forward_batch([TOKS])[0])
+    assert np.array_equal(batch[1], sc.forward_batch([other])[0])
 
 
 def test_contextual_not_bag_of_words():
@@ -49,12 +49,44 @@ def test_decode_emits_all_row_types_on_a_corpus_sample():
     vocab = ("the a scan reads value rows from table fast spark merge "
              "key hash sort window part batch line").split()
     sc = NumpyTransformerScorer()
-    rows: list = []
+    rows = KX.RowSink()
     for i in range(40):
         toks = random.choices(vocab, k=random.randint(5, 30))
         KX._decode_sentence(sc, f"c{i}", 0, toks, 8, rows)
-    types = {r[2] for r in rows}
+    types = set(rows.frame()["row_type"])
     assert types == {"mention", "relation", "trigger", "argument"}
+
+
+def test_decode_forward_batched_equals_per_sentence_lengths_1_to_40():
+    """Without Spark: random-vocab sentences of every length 1..40, several
+    per length, decode to the same row multiset — raw doubles included —
+    through the forward-batched form and the per-sentence form."""
+    from collections import Counter
+
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    vocab = np.array(("the a scan reads value rows from table fast spark "
+                      "merge key hash sort window part batch line").split())
+    turns = [
+        (f"c{n}", k, " ".join(rng.choice(vocab, size=n)))
+        for n in range(1, 41)
+        for k in range(3)
+    ]
+    pdf = pd.DataFrame(turns, columns=["conv_id", "turn_idx", "text"])
+    sc = NumpyTransformerScorer()
+    batched = KX.decode_rows(pdf, sc, batched=True)
+    single = KX.decode_rows(pdf, sc, batched=False)
+    assert list(batched.columns) == list(single.columns)
+    assert len(batched) > 0 and set(batched["row_type"]) == {
+        "mention", "relation", "trigger", "argument"
+    }
+    assert batched["turn_idx"].max() == 2 and batched["s1"].max() > 30
+
+    def rows(df):
+        return Counter(df.itertuples(index=False, name=None))
+
+    assert rows(batched) == rows(single)
 
 
 def test_spark_kernel_batched_equals_per_sentence(spark, sf_dir):
