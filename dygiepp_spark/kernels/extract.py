@@ -29,6 +29,7 @@ from dygiepp_spark.kernels import decode as D
 from dygiepp_spark.kernels.batched import decode_batch_rule
 from dygiepp_spark.kernels.scorer import RuleScorer, Scorer
 from dygiepp_spark.operators.doc_assembly import assign_chunks
+from dygiepp_spark.operators.extraction import turn_tokens
 
 EXTRACT_SCHEMA = (
     "conv_id string, turn_idx int, row_type string, "
@@ -281,11 +282,10 @@ def kernel_triples(extracted: DataFrame, turns: DataFrame) -> DataFrame:
     as operators.extraction.emit_triples: last (s1, s2) pair wins).
 
     Spans index the non-empty tokens the kernel decoded, so the surfaces
-    are sliced from that same filtered split, not the raw one."""
+    are sliced from that same list (``extraction.turn_tokens``)."""
     rels = extracted.filter(F.col("row_type") == "relation")
-    words = F.array_remove(F.split(F.col("text"), " "), "")
     toks = turns.select("conv_id", "turn_idx", F.col("text").alias("sent_text"),
-                        words.alias("_toks"))
+                        turn_tokens(F.col("text")).alias("_toks"))
     span_text = lambda s, e: F.array_join(  # noqa: E731
         F.slice(F.col("_toks"), s + 1, e - s + 1), " "
     )

@@ -53,26 +53,27 @@ from dygiepp_spark.tables import (
 )
 
 
+def turn_tokens(text: Column) -> Column:
+    """The non-empty tokens of a turn's text split on single spaces — the
+    one token rule of every extractor: mention, pair and span positions
+    index this array, as the Arrow kernel's do (``kernels/extract.py``)."""
+    return F.array_remove(F.split(text, " "), "")
+
+
 def _token_frame(turns: DataFrame) -> DataFrame:
     """Token explode that carries the turn's ``n_tokens`` on every token
-    row, so a beam over it is a ranking window with no join back."""
-    base = turns.withColumn(
-        "n_tokens",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != "")),
-    )
-    return (
-        base.select(
-            "conv_id",
-            "turn_idx",
-            "n_tokens",
-            F.posexplode(F.split(F.col("text"), " ")).alias("tok_ix", "token"),
-        )
-        .filter(F.col("token") != "")
-        .withColumn(
-            "token",
-            F.when(F.col("token").isin("/.", "/?"), F.expr("substring(token, 2)"))
-            .otherwise(F.col("token")),
-        )
+    row, so a beam over it is a ranking window with no join back;
+    ``tok_ix`` indexes :func:`turn_tokens`."""
+    toks = turn_tokens(F.col("text"))
+    return turns.select(
+        "conv_id",
+        "turn_idx",
+        F.size(toks).alias("n_tokens"),
+        F.posexplode(toks).alias("tok_ix", "token"),
+    ).withColumn(
+        "token",
+        F.when(F.col("token").isin("/.", "/?"), F.expr("substring(token, 2)"))
+        .otherwise(F.col("token")),
     )
 
 
@@ -173,19 +174,18 @@ def _pair_rows(turns: DataFrame, max_dist: int) -> DataFrame:
     mention row instead (measured: 0.39 scaling efficiency at 4x cores
     against this form, BENCH/PLANS.md round 3).
     """
-    # Positions come from the RAW split with empties dropped afterwards —
-    # _token_frame's convention, so this path and detect_mentions agree on
-    # any text, repeated spaces included. The '/.'/'/?' word normalization
-    # is left out: it rewrites only those two tokens, neither of which can
-    # become an ENTITY_VOCAB word, and it cost ~20% of emit_triples' wall
-    # (interleaved A/B at sf0.1, BENCH/PLANS.md round 3).
-    raw = F.split(F.col("text"), " ")
-    toks = F.filter(
-        F.transform(raw, lambda t, i: F.struct(i.alias("pos"), t.alias("tok"))),
-        lambda s: s["tok"] != "",
+    # Positions index turn_tokens, as _token_frame's and the kernel's do,
+    # so all three agree on any text, repeated spaces included. The
+    # '/.'/'/?' word normalization is left out: it rewrites only those two
+    # tokens, neither of which can become an ENTITY_VOCAB word, and it cost
+    # ~20% of emit_triples' wall (interleaved A/B at sf0.1, BENCH/PLANS.md
+    # round 3).
+    words = turn_tokens(F.col("text"))
+    n = F.size(words)
+    ments = F.filter(
+        F.transform(words, lambda t, i: F.struct(i.alias("pos"), t.alias("tok"))),
+        lambda s: s["tok"].isin(*ENTITY_VOCAB),
     )
-    n = F.size(toks)
-    ments = F.filter(toks, lambda s: s["tok"].isin(*ENTITY_VOCAB))
     k = F.greatest(F.ceil(F.lit(0.5) * n), F.lit(1)).cast("int")
     beamed = F.slice(ments, 1, k)
     pairs_arr = F.flatten(

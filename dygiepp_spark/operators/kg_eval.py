@@ -23,9 +23,10 @@ Re-expressed from /root/reference/eval_utils.py as pure DataFrame ops:
 * G1 micro P/R/F1 — TP/FP/FN sums then safe-div F1
   (dygie/training/f1.py:6-17).
 
-Scale notes: every join here is an equi-join on conv_id (plus arg
-predicates evaluated post-probe); gold/pred sides are triple tables (tiny
-relative to the corpus). The global top-k sort in K3 is the only global
+Scale notes: equality P/R/F1 (K3 ``exact``, K4, K5, G1) is one fold of
+both sides, tagged by side: one exchange on the match key plus a one-row
+final, no join. Fuzzy metrics, aliases and reverse matching add a conv_id
+equi-join for tp. The global top-k sort in K3 is the only global
 exchange — a rank over one window, and only when topK is requested.
 """
 
@@ -35,7 +36,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from dygiepp_spark.operators.extraction import _pair_rows
+from dygiepp_spark.operators.extraction import _pair_rows, turn_tokens
 
 # --------------------------------------------------------------------------
 # K1 span-match predicates
@@ -243,12 +244,12 @@ def gold_triples_ctx(
     which would make every fuzzy span metric (substring/jaccard/rouge/
     head) collapse to exact-match. Widening the gold surfaces restores the
     many-to-one matching structure those metrics exist for. Context is
-    sliced from the raw whitespace split of the sentence (the same
-    position convention as the token frame), clipped at sentence edges.
+    sliced from the sentence's ``turn_tokens`` (the list the pair
+    positions index), clipped at sentence edges.
     Dedup on the widened surfaces: the first pair per (conv, arg0, arg1)
     in document order, ``min_by`` as in :func:`gold_triples`.
     """
-    arr = F.split(F.col("sent_text"), " ")
+    arr = turn_tokens(F.col("sent_text"))
     n = F.size(arr)
 
     def ctx(s: Column) -> Column:
@@ -304,6 +305,57 @@ def _count(df: DataFrame, name: str) -> DataFrame:
     return df.agg(F.count(F.lit(1)).alias(name))
 
 
+def _prf(tp: int, n_pred: int, tp_recall: int, n_gold: int) -> tuple:
+    """f1.py:6-17 on collected counts: (precision, recall, f1)."""
+    prec = tp / max(n_pred, 1)
+    rec = tp_recall / max(n_gold, 1)
+    f1 = 2.0 * prec * rec / (prec + rec) if prec + rec > 0 else 0.0
+    return prec, rec, f1
+
+
+def _tagged(pred: DataFrame, gold: DataFrame, cols: list) -> DataFrame:
+    """``cols`` of both sides in one frame, ``_side`` 1 (pred) or 2 (gold)."""
+    return pred.select(*cols, F.lit(1).alias("_side")).unionByName(
+        gold.select(*cols, F.lit(2).alias("_side"))
+    )
+
+
+def _exact_counts(pred: DataFrame, gold: DataFrame) -> DataFrame:
+    """One row (n_pred, n_gold, tp, tp_recall) of K3 ``exact`` matching:
+    both sides grouped on (conv_id, lower(trim(arg0)), lower(trim(arg1))),
+    then one global sum. The counts are over ORIGINAL keys, each in one
+    group: tp counts the pred pairs with a label among their group's gold
+    labels, tp_recall the reverse. A NULL key column matches nothing."""
+    side, entry = F.col("_side"), F.struct("arg0", "arg1", "label")
+    groups = _tagged(pred, gold, ["conv_id", "arg0", "arg1", "label"]).groupBy(
+        "conv_id",
+        F.lower(F.trim("arg0")).alias("_k0"),
+        F.lower(F.trim("arg1")).alias("_k1"),
+    ).agg(
+        F.collect_set(F.when(side == 1, entry)).alias("_p"),
+        F.collect_set(F.when(side == 2, entry)).alias("_g"),
+    )
+    keyed = F.col("conv_id").isNotNull() & F.col("_k0").isNotNull() & F.col("_k1").isNotNull()
+
+    def pairs(entries: Column, other: Column | None = None) -> Column:
+        # distinct (arg0, arg1) of the entries, summed over the groups;
+        # with ``other``, only the entries whose label it carries
+        if other is not None:
+            entries = F.filter(entries, lambda e: F.exists(
+                other, lambda o: keyed & (o["label"] == e["label"])
+            ))
+        args = F.transform(entries, lambda e: F.struct(e["arg0"], e["arg1"]))
+        return F.coalesce(F.sum(F.size(F.array_distinct(args))), F.lit(0))
+
+    p, g = F.col("_p"), F.col("_g")
+    return groups.agg(
+        pairs(p).alias("n_pred"),
+        F.coalesce(F.sum(F.size(g)), F.lit(0)).alias("n_gold"),
+        pairs(p, g).alias("tp"),
+        pairs(g, p).alias("tp_recall"),
+    )
+
+
 def ie_eval(
     pred: DataFrame,
     gold: DataFrame,
@@ -318,8 +370,9 @@ def ie_eval(
     ``pred``: (conv_id, arg0, arg1, label, conf); ``gold``: same minus conf.
     Returns ONE row (n_pred, n_gold, tp, tp_recall, precision, recall, f1).
     P = TP / n_pred_kept (the reference's TP/(TP+FP) with FP = topK - TP);
-    R = TP_recall / n_gold. The row is a lazy plan: the counts are one-row
-    aggregates cross-joined together, so building it starts no Spark job.
+    R = TP_recall / n_gold. The row is a lazy plan: one fold of both sides
+    (:func:`_exact_counts`), onto which fuzzy metrics, aliases and reverse
+    matching cross-join tp/tp_recall from a match join.
     """
     if topk is not None:
         # reference cut is HEAD-k (predrels[:topK], eval_utils.py:783-785),
@@ -341,66 +394,65 @@ def ie_eval(
         ).drop("_rn")
     pred = pred.select("conv_id", "arg0", "arg1", "label")
     gold = gold.select("conv_id", "arg0", "arg1", "label")
-    if aliases is not None:
-        # K2 coref/alias expansion (eval_utils.py:265-287
-        # ``read_coref_matches`` + the alias loops in relation_matching):
-        # try every alias variant of each PRED argument; tp/n_pred still
-        # count the ORIGINAL pred keys. The alias dim is tiny -> two
-        # broadcast joins, no extra shuffle; unknown surfaces fall back to
-        # themselves via the left join + coalesce.
-        a0 = F.broadcast(
-            aliases.select(
-                F.col("name").alias("arg0"), F.col("variant").alias("_v0")
+    row = _exact_counts(pred, gold)
+    if metric != "exact" or aliases is not None or consider_reverse:
+        if aliases is not None:
+            # K2 coref/alias expansion (eval_utils.py:265-287
+            # ``read_coref_matches`` + the alias loops in relation_matching):
+            # try every alias variant of each PRED argument; tp still counts
+            # the ORIGINAL pred keys. The alias dim is tiny -> two
+            # broadcast joins, no extra shuffle; unknown surfaces fall back to
+            # themselves via the left join + coalesce.
+            a0 = F.broadcast(
+                aliases.select(
+                    F.col("name").alias("arg0"), F.col("variant").alias("_v0")
+                )
             )
-        )
-        a1 = F.broadcast(
-            aliases.select(
-                F.col("name").alias("arg1"), F.col("variant").alias("_v1")
+            a1 = F.broadcast(
+                aliases.select(
+                    F.col("name").alias("arg1"), F.col("variant").alias("_v1")
+                )
             )
-        )
-        p_exp = (
-            pred.join(a0, "arg0", "left")
-            .join(a1, "arg1", "left")
-            .select(
-                "conv_id",
-                "arg0",
-                "arg1",
-                "label",
-                F.coalesce(F.col("_v0"), F.col("arg0")).alias("_m0"),
-                F.coalesce(F.col("_v1"), F.col("arg1")).alias("_m1"),
+            p_exp = (
+                pred.join(a0, "arg0", "left")
+                .join(a1, "arg1", "left")
+                .select(
+                    "conv_id",
+                    "arg0",
+                    "arg1",
+                    "label",
+                    F.coalesce(F.col("_v0"), F.col("arg0")).alias("_m0"),
+                    F.coalesce(F.col("_v1"), F.col("arg1")).alias("_m1"),
+                )
             )
+        else:
+            p_exp = pred.select(
+                "conv_id", "arg0", "arg1", "label",
+                F.col("arg0").alias("_m0"), F.col("arg1").alias("_m1"),
+            )
+        p = p_exp.alias("p")
+        g = gold.alias("g")
+        m = _METRICS[metric]
+        fwd = m(F.col("p._m0"), F.col("g.arg0")) & m(F.col("p._m1"), F.col("g.arg1"))
+        if consider_reverse:
+            rev = m(F.col("p._m0"), F.col("g.arg1")) & m(F.col("p._m1"), F.col("g.arg0"))
+            if reverse_labels is not None:
+                rev = rev & F.col("p.label").isin(*reverse_labels)
+            arg_match = fwd | rev
+        else:
+            arg_match = fwd
+        cond = [
+            F.col("p.conv_id") == F.col("g.conv_id"),
+            arg_match,
+            F.col("p.label") == F.col("g.label"),
+        ]
+        # one aggregate over the (possibly expensive, fuzzy-predicate) match
+        # join for both distinct counts
+        tp = p.join(g, on=cond).agg(
+            F.count_distinct("p.conv_id", "p.arg0", "p.arg1").alias("tp"),
+            F.count_distinct("g.conv_id", "g.arg0", "g.arg1").alias("tp_recall"),
         )
-    else:
-        p_exp = pred.select(
-            "conv_id", "arg0", "arg1", "label",
-            F.col("arg0").alias("_m0"), F.col("arg1").alias("_m1"),
-        )
-    p = p_exp.alias("p")
-    g = gold.alias("g")
-    m = _METRICS[metric]
-    fwd = m(F.col("p._m0"), F.col("g.arg0")) & m(F.col("p._m1"), F.col("g.arg1"))
-    if consider_reverse:
-        rev = m(F.col("p._m0"), F.col("g.arg1")) & m(F.col("p._m1"), F.col("g.arg0"))
-        if reverse_labels is not None:
-            rev = rev & F.col("p.label").isin(*reverse_labels)
-        arg_match = fwd | rev
-    else:
-        arg_match = fwd
-    cond = [
-        F.col("p.conv_id") == F.col("g.conv_id"),
-        arg_match,
-        F.col("p.label") == F.col("g.label"),
-    ]
-    matches = p.join(g, on=cond)
-
-    # one aggregate over the (possibly expensive, fuzzy-predicate) match
-    # join for both distinct counts
-    tp = matches.agg(
-        F.count_distinct("p.conv_id", "p.arg0", "p.arg1").alias("tp"),
-        F.count_distinct("g.conv_id", "g.arg0", "g.arg1").alias("tp_recall"),
-    )
-    n_pred = _count(pred.select("conv_id", "arg0", "arg1").distinct(), "n_pred")
-    row = n_pred.crossJoin(_count(gold.distinct(), "n_gold")).crossJoin(tp)
+        row = row.select("n_pred", "n_gold").crossJoin(tp)
     return row.select(
         "*",
         *prf_columns(
@@ -410,28 +462,22 @@ def ie_eval(
 
 
 def _spans(df: DataFrame) -> DataFrame:
-    """The distinct (conv_id, span) argument set of a triple frame —
-    arg0 and arg1 pooled, pairing ignored (K4)."""
-    return (
-        df.select("conv_id", F.col("arg0").alias("span"))
-        .unionByName(df.select("conv_id", F.col("arg1").alias("span")))
-        .distinct()
-    )
+    """The (conv_id, span) argument rows of a triple frame — arg0 and arg1
+    pooled, pairing ignored (K4); duplicates kept."""
+    return df.select("conv_id", F.explode(F.array("arg0", "arg1")).alias("span"))
 
 
 def ie_span_eval(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """K4 (eval_utils.py:620-682): argument-span-level P/R/F1 ignoring
-    pairing — explode arg0/arg1 to (conv, text) sets on both sides. One
-    lazy output row."""
-    ps, gs = _spans(pred), _spans(gold)
-    row = (
-        _count(ps, "n_pred_spans")
-        .crossJoin(_count(gs, "n_gold_spans"))
-        .crossJoin(_count(ps.join(gs, ["conv_id", "span"]), "tp"))
-    )
+    pairing — the distinct (conv_id, span) sets of both sides, one
+    :func:`_key_counts` fold. One lazy output row."""
+    row = _key_counts(_spans(pred), _spans(gold), ["conv_id", "span"])
     tp = F.col("tp")
     return row.select(
-        "*", *prf_columns(tp, F.col("n_pred_spans"), tp, F.col("n_gold_spans"))
+        F.col("n_pred").alias("n_pred_spans"),
+        F.col("n_gold").alias("n_gold_spans"),
+        "tp",
+        *prf_columns(tp, F.col("n_pred"), tp, F.col("n_gold")),
     )
 
 
@@ -472,21 +518,11 @@ def eval_grid(
     gold = gold.select("conv_id", "arg0", "arg1", "label").localCheckpoint(
         eager=False
     )
-    p_keys = pred.select("conv_id", "arg0", "arg1").distinct().localCheckpoint(
-        eager=False
-    )
-    n_pred = p_keys.count()
-    n_gold = gold.distinct().count()
+    n_pred, n_gold = _exact_counts(pred, gold).select("n_pred", "n_gold").first()
 
     p = pred.select("conv_id", "arg0", "arg1", "label").distinct().alias("p")
     g = gold.alias("g")
     rows: list[tuple] = []
-
-    def prf(tp, np_, tpr, ng_):
-        prec = tp / max(np_, 1)
-        rec = tpr / max(ng_, 1)
-        f1 = 2.0 * prec * rec / (prec + rec) if prec + rec > 0 else 0.0
-        return prec, rec, f1
 
     pk = F.struct("p.conv_id", "p.arg0", "p.arg1")
     gk = F.struct("g.conv_id", "g.arg0", "g.arg1")
@@ -509,15 +545,15 @@ def eval_grid(
             (False, c["tp_nc"], c["tpr_nc"]),
             (True, c["tp_c"], c["tpr_c"]),
         ]:
-            prec, rec, f1 = prf(tp, n_pred, tpr, n_gold)
+            prec, rec, f1 = _prf(tp, n_pred, tpr, n_gold)
             rows.append(
                 ("rel", metric, collapse, None, n_pred, n_gold, tp, tpr,
                  prec, rec, f1)
             )
 
     # span level (K4 under each metric): arg multiset -> distinct spans
-    ps = _spans(pred).localCheckpoint(eager=False)
-    gs = _spans(gold).localCheckpoint(eager=False)
+    ps = _spans(pred).distinct().localCheckpoint(eager=False)
+    gs = _spans(gold).distinct().localCheckpoint(eager=False)
     n_ps, n_gs = ps.count(), gs.count()
     for metric in metrics:
         m = _METRICS[metric]
@@ -532,7 +568,7 @@ def eval_grid(
             F.count_distinct(F.struct("p.conv_id", "p.span")).alias("tp"),
             F.count_distinct(F.struct("g.conv_id", "g.span")).alias("tpr"),
         ).collect()[0]
-        prec, rec, f1 = prf(c["tp"], n_ps, c["tpr"], n_gs)
+        prec, rec, f1 = _prf(c["tp"], n_ps, c["tpr"], n_gs)
         rows.append(
             ("span", metric, None, None, n_ps, n_gs, c["tp"], c["tpr"],
              prec, rec, f1)
@@ -589,17 +625,30 @@ def eval_grid(
     )
 
 
-def _key_prf(pred: DataFrame, gold: DataFrame, key: list[str]) -> DataFrame:
-    """Micro P/R/F1 over the distinct ``key`` tuples of both sides: TP by
-    one equi-join, FP/FN by the set sizes (f1.py:6-17). One lazy row
-    (tp, fp, fn, precision, recall, f1)."""
-    p = pred.select(*key).distinct()
-    g = gold.select(*key).distinct()
-    row = (
-        _count(p.join(g, key), "tp")
-        .crossJoin(_count(p, "n_pred"))
-        .crossJoin(_count(g, "n_gold"))
+def _key_counts(
+    pred: DataFrame, gold: DataFrame, key: list[str], *by: Column
+) -> DataFrame:
+    """(n_pred, n_gold, tp) over the distinct ``key`` tuples of both sides,
+    as one fold: each key gets ``bit_or`` of its sides (pred 1, gold 2);
+    tp counts the keys on both sides with no NULL column, as an equi-join
+    never matches NULL. One row, or one per ``by`` group of the keys."""
+    side = F.col("_side")
+    sides = _tagged(pred, gold, key).groupBy(*key).agg(F.bit_or(side).alias("_side"))
+    matched = side == 3
+    for c in key:
+        matched = matched & F.col(c).isNotNull()
+    return sides.groupBy(*by).agg(
+        F.count_if(side != 2).alias("n_pred"),
+        F.count_if(side != 1).alias("n_gold"),
+        F.count_if(matched).alias("tp"),
     )
+
+
+def _key_prf(pred: DataFrame, gold: DataFrame, key: list[str]) -> DataFrame:
+    """Micro P/R/F1 over the distinct ``key`` tuples of both sides: TP,
+    FP and FN from the :func:`_key_counts` fold (f1.py:6-17). One lazy
+    row (tp, fp, fn, precision, recall, f1)."""
+    row = _key_counts(pred, gold, key)
     tp, n_p, n_g = F.col("tp"), F.col("n_pred"), F.col("n_gold")
     return row.select(
         "tp",
@@ -611,8 +660,8 @@ def _key_prf(pred: DataFrame, gold: DataFrame, key: list[str]) -> DataFrame:
 
 def micro_prf(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """G1 (dygie/training/ner_metrics.py:22-64 + f1.py:6-17): micro P/R/F1
-    with exact (arg0, arg1, label) matching, computed distributed — per-conv
-    TP via join, global sums, safe division. One output row."""
+    with exact (arg0, arg1, label) matching, computed distributed — one
+    :func:`_key_counts` fold, safe division. One output row."""
     return _key_prf(pred, gold, ["conv_id", "arg0", "arg1", "label"])
 
 
@@ -626,7 +675,8 @@ def micro_prf_by_namespace(
     The transcript corpus is single-dataset, so the namespace is a
     deterministic conversation shard (``conv_id % n``) — the stand-in for
     the reference's per-dataset label namespaces; swap the shard column
-    for a real ``dataset`` column when one exists.
+    for a real ``dataset`` column when one exists. The counts are one
+    :func:`_key_counts` fold, grouped by the shard.
 
     All counts are integer aggregates; the mean row is folded in FIXED
     namespace order (left-associated sum over ns = 0..n-1), so the double
@@ -640,43 +690,15 @@ def micro_prf_by_namespace(
     """
     ns = (F.col("conv_id").cast("bigint") % n_namespaces).alias("namespace")
     key = ["conv_id", "arg0", "arg1", "label"]
-    p = (
-        pred.select(ns, *key).filter(F.col("namespace").isNotNull())
-        .distinct().localCheckpoint(eager=False)
-    )
-    g = (
-        gold.select(ns, *key).filter(F.col("namespace").isNotNull())
-        .distinct().localCheckpoint(eager=False)
-    )
-    tp = (
-        p.join(g, ["namespace", *key])
-        .groupBy("namespace")
-        .agg(F.count(F.lit(1)).alias("tp"))
-    )
-    np_ = p.groupBy("namespace").agg(F.count(F.lit(1)).alias("n_pred"))
-    ng_ = g.groupBy("namespace").agg(F.count(F.lit(1)).alias("n_gold"))
     observed = {
-        r["namespace"]: r
-        for r in np_.join(ng_, "namespace", "full_outer")
-        .join(tp, "namespace", "left")
-        .fillna(0, ["n_pred", "n_gold", "tp"])
-        .collect()
+        r["namespace"]: (r["tp"], r["n_pred"], r["n_gold"])
+        for r in _key_counts(pred, gold, key, ns).collect()
     }
-
-    def prf(tp_, n_p, n_g):
-        prec = tp_ / max(n_p, 1)
-        rec = tp_ / max(n_g, 1)
-        f1 = 2.0 * prec * rec / (prec + rec) if prec + rec > 0 else 0.0
-        return prec, rec, f1
-
     out = []
     acc_p = acc_r = acc_f = 0.0
     for ns_ix in range(n_namespaces):
-        r = observed.get(ns_ix)
-        tp_, n_p, n_g = (
-            (r["tp"], r["n_pred"], r["n_gold"]) if r is not None else (0, 0, 0)
-        )
-        prec, rec, f1 = prf(tp_, n_p, n_g)
+        tp_, n_p, n_g = observed.get(ns_ix, (0, 0, 0))
+        prec, rec, f1 = _prf(tp_, n_p, tp_, n_g)
         out.append((str(ns_ix), n_p, n_g, tp_, prec, rec, f1))
         acc_p, acc_r, acc_f = acc_p + prec, acc_r + rec, acc_f + f1
     k = n_namespaces

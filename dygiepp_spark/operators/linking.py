@@ -54,16 +54,16 @@ def mention_contexts(
     -> entity_id supervision a neural linker trains on, and the frame a
     human audits for dictionary collisions.
 
-    Window semantics: ``k`` RAW split positions either side of the
-    mention (empty tokens dropped after slicing, then the same '/.'
-    '/?' normalization the tokenizer applies) — identical arithmetic in
-    both engines, no UDF.
+    Window semantics: ``k`` tokens of ``extraction.turn_tokens`` (the list
+    the mention positions index) either side of the mention, with the
+    same '/.' '/?' normalization the tokenizer applies — identical
+    arithmetic in both engines, no UDF.
 
     Scale: one broadcast dict join (inside link_mentions) + one
     conv/turn-keyed join back to the turn text; all context math is
     JVM array expressions on the already-loaded row.
     """
-    from dygiepp_spark.operators.extraction import detect_mentions
+    from dygiepp_spark.operators.extraction import detect_mentions, turn_tokens
 
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -71,12 +71,12 @@ def mention_contexts(
         "conv_id", "turn_idx", "start", "surface", "entity_id"
     )
     j = linked.join(
-        turns.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"]
+        turns.select("conv_id", "turn_idx", turn_tokens(F.col("text")).alias("toks")),
+        ["conv_id", "turn_idx"],
     )
     ctx = (
-        "array_join(transform(filter(slice(split(text, ' '), {a}, {n}), "
-        "t -> t != ''), t -> CASE WHEN t IN ('/.', '/?') THEN substring(t, 2) "
-        "ELSE t END), ' ')"
+        "array_join(transform(slice(toks, {a}, {n}), "
+        "t -> CASE WHEN t IN ('/.', '/?') THEN substring(t, 2) ELSE t END), ' ')"
     )
     left = ctx.format(a=f"greatest(1, start + 1 - {k})", n=f"least({k}, start)")
     right = ctx.format(a="start + 2", n=str(k))

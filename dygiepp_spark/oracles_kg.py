@@ -511,14 +511,15 @@ FROM counts"""
 
 
 def _gold_ctx_cte(max_dist: int = 3, window: int = 1) -> str:
-    """Twin of kg_eval.gold_triples_ctx: gold args widened by ±window raw
-    tokens, clipped at sentence edges, first-occurrence dedup."""
+    """Twin of kg_eval.gold_triples_ctx: gold args widened by ±window
+    non-empty tokens, clipped at sentence edges, first-occurrence dedup."""
+    toks = "list_filter(string_split(t.text, ' '), x -> x <> '')"
 
     def ctx(s: str, e: str) -> str:
         return (
-            "array_to_string(array_slice(string_split(t.text, ' '), "
+            f"array_to_string(array_slice({toks}, "
             f"greatest({s} - {window} + 1, 1), "
-            f"least(len(string_split(t.text, ' ')), {e} + {window} + 1)), ' ')"
+            f"least(len({toks}), {e} + {window} + 1)), ' ')"
         )
 
     return f"""gold_ctx AS (
@@ -2289,12 +2290,13 @@ FROM stats"""
 
 
 def mention_contexts_oracle(k: int = 3) -> str:
-    """Twin of linking.mention_contexts: raw-position list slices,
-    empties dropped, tokenizer normalization, space-joined."""
-    norm = ("list_transform(list_filter({sl}, t -> t <> ''), "
+    """Twin of linking.mention_contexts: slices of the non-empty token
+    list, tokenizer normalization, space-joined."""
+    norm = ("list_transform({sl}, "
             "t -> CASE WHEN t IN ('/.', '/?') THEN substr(t, 2) ELSE t END)")
-    left = norm.format(sl=f"(string_split(t.text, ' '))[greatest(1, l.start + 1 - {k}):l.start]")
-    right = norm.format(sl=f"(string_split(t.text, ' '))[l.start + 2:l.start + 1 + {k}]")
+    toks = "list_filter(string_split(t.text, ' '), x -> x <> '')"
+    left = norm.format(sl=f"({toks})[greatest(1, l.start + 1 - {k}):l.start]")
+    right = norm.format(sl=f"({toks})[l.start + 2:l.start + 1 + {k}]")
     # array_to_string([]) is NULL in DuckDB but array_join([]) is '' in
     # Spark — coalesce the empty-window case to the Spark value
     return f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()}

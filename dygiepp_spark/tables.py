@@ -195,33 +195,8 @@ turns AS (
 """
 
 
-# ---------------------------------------------------------------------------
-# token explode (shared first stage of the relational pipeline)
-# ---------------------------------------------------------------------------
-
-def tokens_from_turns(turns: DataFrame) -> DataFrame:
-    """Long-format token frame (conv_id, turn_idx, tok_ix, token).
-
-    Narrow transformation — no shuffle. Token normalization per the
-    reference's ``_normalize_word`` (dygie.py:205-210: ``/.`` -> ``.``,
-    ``/?`` -> ``?``) applied JVM-side.
-    """
-    return (
-        turns.select(
-            "conv_id",
-            "turn_idx",
-            F.posexplode(F.split(F.col("text"), " ")).alias("tok_ix", "token"),
-        )
-        .filter(F.col("token") != "")
-        .withColumn(
-            "token",
-            F.when(F.col("token").isin("/.", "/?"), F.expr("substring(token, 2)"))
-            .otherwise(F.col("token")),
-        )
-    )
-
-
-#: DuckDB twin of tokens_from_turns (consumes the turns CTE)
+#: DuckDB twin of ``extraction._token_frame``'s token explode (consumes
+#: the turns CTE): positions index the non-empty tokens
 TOKENS_SQL = """
 tokens AS (
     SELECT conv_id,
@@ -230,11 +205,10 @@ tokens AS (
            CASE WHEN tok IN ('/.', '/?') THEN substr(tok, 2) ELSE tok END AS token
     FROM (
         SELECT conv_id, turn_idx,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) - 1 AS pos
+               unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok,
+               generate_subscripts(list_filter(string_split(text, ' '), x -> x <> ''), 1) - 1 AS pos
         FROM turns
     )
-    WHERE tok <> ''
 )
 """
 

@@ -143,6 +143,40 @@ def test_kernel_triples_surfaces_on_irregular_spacing(spark):
         assert r["arg0"] in TT.ENTITY_VOCAB and r["arg1"] in TT.ENTITY_VOCAB, r
 
 
+def test_kernel_matches_relational_on_irregular_spacing(spark):
+    """Every extractor numbers positions over the non-empty tokens, so the
+    kernel and the relational path agree on repeated, leading and
+    trailing spaces. On the second text ``table`` is token 5 but raw split
+    position 9, beyond the relation distance cap."""
+    texts = [
+        "spark  table x y",
+        "spark x  x  x  x  table x x x x x x x x",
+        "  spark table x y  ",
+    ]
+    turns = spark.createDataFrame(
+        [("c0", i, "user", t, None) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    )
+    extracted = K.extract(turns, RuleScorer()).cache()
+    kern_mentions = {
+        (r["turn_idx"], r["s1"], r["e1"])
+        for r in extracted.filter(F.col("row_type") == "mention").collect()
+    }
+    rel_mentions = {
+        (r["turn_idx"], r["start"], r["end"])
+        for r in EX.detect_mentions(turns).collect()
+    }
+    assert kern_mentions == rel_mentions
+    assert (0, 1, 1) in rel_mentions
+    triple = lambda r: (r["sent_text"], r["arg0"], r["arg1"], r["label"])  # noqa: E731
+    kern_triples = {triple(r) for r in K.kernel_triples(extracted, turns).collect()}
+    rel_triples = {triple(r) for r in EX.emit_triples(turns).collect()}
+    assert kern_triples == rel_triples
+    assert {(t[0], t[1], t[2]) for t in rel_triples} == {
+        (text, "spark", "table") for text in texts
+    }
+
+
 # ------------------------------------------------------- fixture replay gate
 
 def _replay_triples(spark, fixture_path, use_predicted=False):

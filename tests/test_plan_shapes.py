@@ -432,3 +432,43 @@ def test_report_operator_is_lazy(spark, report_inputs, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert out.columns
+
+
+@pytest.fixture(scope="module")
+def stored_eval_inputs(spark, report_inputs, tmp_path_factory):
+    """The set-matching reports' inputs written to parquet, so a plan
+    shows only the exchanges and joins of the operator itself."""
+    binary = EX.events_binary_decode
+    frames = {
+        "pred": report_inputs["pred"],
+        "gold": report_inputs["gold"],
+        "pred_ev": binary(report_inputs["pred_ev"]),
+        "gold_ev": binary(report_inputs["gold_ev"]),
+    }
+    root = tmp_path_factory.mktemp("eval_inputs")
+    for name, df in frames.items():
+        df.write.parquet(str(root / name))
+    return {name: spark.read.parquet(str(root / name)) for name in frames}
+
+
+@pytest.mark.parametrize(
+    "name", ["ie_eval", "ie_span_eval", "micro_prf", "ie_eval_event"]
+)
+def test_set_eval_is_one_aggregation(spark, stored_eval_inputs, name):
+    """Equality P/R/F1 is one fold of both sides: an exchange on the match
+    key and the one-row final — no join of any kind, no cross join of
+    separately counted branches."""
+    i = stored_eval_inputs
+    build = {
+        "ie_eval": lambda: KE.ie_eval(i["pred"], i["gold"], "exact"),
+        "ie_span_eval": lambda: KE.ie_span_eval(i["pred"], i["gold"]),
+        "micro_prf": lambda: KE.micro_prf(i["pred"], i["gold"]),
+        "ie_eval_event": lambda: KE.ie_eval_event(i["pred_ev"], i["gold_ev"]),
+    }[name]
+    plan = plan_of(build())
+    for join in (
+        "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+        "BroadcastNestedLoopJoin", "CartesianProduct",
+    ):
+        assert join not in plan, plan
+    assert count_shuffles(plan) <= 2, plan

@@ -11,7 +11,8 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+import pyspark.sql.functions as F
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from dygiepp_spark import tables as TT
@@ -125,6 +126,84 @@ def test_gold_triples_matches_python_model(sess, corpus):
         for r in KE.gold_triples(turns).collect()
     }
     assert got == python_model_gold(corpus)
+
+
+def python_model_set_eval(pred: list[tuple], gold: list[tuple]) -> dict:
+    """The reference's set counting (``good_preds`` / ``found_from_gold``,
+    eval_utils.py:753-863, folded by f1.py:6-17) in plain Python, over
+    (conv_id, arg0, arg1, label) rows with SQL NULL semantics: a key with
+    a None never matches. ``exact`` compares lower(strip) args; the counts
+    are over the original keys."""
+
+    def prf(tp, n_pred, tp_recall, n_gold):
+        p = tp / n_pred if n_pred else 0.0
+        r = tp_recall / n_gold if n_gold else 0.0
+        return p, r, (2.0 * p * r / (p + r) if p + r > 0 else 0.0)
+
+    def norm(s):
+        return s.strip().lower()
+
+    P, G = set(pred), set(gold)
+    match = [
+        (p, g) for p in P for g in G
+        if None not in p + g and p[0] == g[0] and p[3] == g[3]
+        and norm(p[1]) == norm(g[1]) and norm(p[2]) == norm(g[2])
+    ]
+    n_pred, n_gold = len({p[:3] for p in P}), len(G)
+    tp, tp_recall = len({p[:3] for p, _ in match}), len({g[:3] for _, g in match})
+    out = {"ie_eval": (n_pred, n_gold, tp, tp_recall, *prf(tp, n_pred, tp_recall, n_gold))}
+
+    def key_prf(ps, gs):
+        tp = len({k for k in ps & gs if None not in k})
+        return (tp, len(ps) - tp, len(gs) - tp, *prf(tp, len(ps), tp, len(gs)))
+
+    out["micro_prf"] = out["ie_eval_event"] = key_prf(P, G)
+    ps = {(r[0], a) for r in P for a in r[1:3]}
+    gs = {(r[0], a) for r in G for a in r[1:3]}
+    tp, _, _, *rates = key_prf(ps, gs)
+    out["ie_span_eval"] = (len(ps), len(gs), tp, *rates)
+    return out
+
+
+eval_row = st.tuples(
+    st.sampled_from(["1", "2", None]),
+    st.sampled_from(["a", " a", "A ", "b", "B", None]),
+    st.sampled_from(["b", "b ", " B", "c", None]),
+    st.sampled_from(["L", "M", None]),
+)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    pred=st.lists(eval_row, max_size=8),
+    gold=st.lists(eval_row, max_size=8),
+)
+# two pred pairs match one gold pair: tp 2, tp_recall 1
+@example(pred=[("1", "a", "b", "L"), ("1", " A", "b", "L")], gold=[("1", "a", "B", "L")])
+def test_set_eval_matches_python_model(sess, pred, gold):
+    """ie_eval(exact), micro_prf, ie_eval_event and ie_span_eval against the
+    pure-Python set model: empty sides, NULL key columns, duplicate rows
+    and padded or mixed-case args."""
+    schema = "conv_id string, arg0 string, arg1 string, label string"
+    p = sess.createDataFrame(pred, schema).withColumn("conf", F.lit(0.5))
+    g = sess.createDataFrame(gold, schema)
+
+    def event(df):
+        return df.withColumnRenamed("label", "event_type")
+
+    got = {
+        "ie_eval": KE.ie_eval(p, g, "exact"),
+        "micro_prf": KE.micro_prf(p, g),
+        "ie_eval_event": KE.ie_eval_event(event(p), event(g)),
+        "ie_span_eval": KE.ie_span_eval(p, g),
+    }
+    want = python_model_set_eval(pred, gold)
+    for name, df in got.items():
+        assert tuple(df.collect()[0]) == want[name], name
 
 
 # --------------------------------------------------------------------------

@@ -737,7 +737,7 @@ def test_mention_contexts_windows_and_normalization(spark):
     from dygiepp_spark.operators.linking import mention_contexts
 
     turns = spark.createDataFrame(
-        # double space -> empty raw token inside the left window;
+        # double space -> an empty raw token, which the token rule drops;
         # '/.' normalizes inside the right window
         [("c1", 1, "assistant", "alpha  spark /. beta gamma", None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
@@ -749,9 +749,10 @@ def test_mention_contexts_windows_and_normalization(spark):
     rows = mention_contexts(turns, dic, k=3).collect()
     assert len(rows) == 1
     r = rows[0]
-    # raw positions: alpha(0) ''(1) spark(2) /.(3) beta(4) gamma(5)
-    assert r["start"] == 2 and r["entity_id"] == "E1"
-    assert r["left_ctx"] == "alpha"          # empty raw token dropped
+    # positions over the non-empty tokens: alpha(0) spark(1) /.(2)
+    # beta(3) gamma(4)
+    assert r["start"] == 1 and r["entity_id"] == "E1"
+    assert r["left_ctx"] == "alpha"
     assert r["right_ctx"] == ". beta gamma"  # '/.' normalized
 
 
