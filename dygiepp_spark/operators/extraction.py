@@ -20,13 +20,14 @@ Reference semantics re-expressed:
   (doc/data.md:59-72); binary decode ``decode.py:10-43`` (ARG0 x ARG1
   cross product per trigger).
 
-Scale notes: mention detection is a narrow filter over the token explode.
-Triples and gold triples take their pairs from one row-local generator
-(``_pair_rows``); only ``relation_pairs`` (linked KG edges) and the event
-decode self-join mentions, *within* (conv_id, turn_idx) with a band
-predicate (distance cap), so the shuffle key is (conv_id, turn_idx) — high
-cardinality and uniform (turns are bounded at TURN_TOKENS tokens), no skew.
-AQE handles residual imbalance.
+Scale notes: every mention and pair fact comes from one per-turn array
+expression, :func:`entity_positions`. Mentions explode it; triples, gold
+triples and KG edges pair it row-locally (``_pair_rows``: beamed for
+triples and gold, unbeamed for edges), so none of them joins mention rows
+to each other. Only the event decode self-joins tokens, *within*
+(conv_id, turn_idx) with a band predicate (distance cap), so its shuffle
+key is (conv_id, turn_idx) — high cardinality and uniform (turns are
+bounded at TURN_TOKENS tokens), no skew. AQE handles residual imbalance.
 
 Plan-shape invariants (tests/test_plan_shapes.py):
 
@@ -35,6 +36,9 @@ Plan-shape invariants (tests/test_plan_shapes.py):
   shuffles nothing. ``emit_triples``' one shuffle is its triple-dedup
   aggregation; ``kg_eval.gold_triples``/``gold_triples_ctx``'s one shuffle
   is their first-occurrence aggregation. None of them has a window.
+* ``graph.build_edges`` is the unbeamed pairs plus two broadcast
+  dictionary lookups: no shuffle and no other join, even with broadcasts
+  off.
 * ``extract_events``' token explode carries ``n_tokens``, so its beam is a
   ranking window with no join back to the turns.
 """
@@ -77,6 +81,23 @@ def _token_frame(turns: DataFrame) -> DataFrame:
     )
 
 
+def entity_positions(text: Column) -> Column:
+    """The entity-vocab tokens of :func:`turn_tokens`, in text order, as
+    ``(pos, tok)`` structs — the one generator of every mention and pair
+    fact: :func:`detect_mentions` explodes it, :func:`_pair_rows` pairs
+    it, ``graph.build_edges`` links those pairs. The ``'/.'``/``'/?'``
+    rewrite of :func:`_token_frame` is left out: it rewrites only those
+    two tokens, neither of which can become an entity word, and it cost
+    ~20% of emit_triples' wall (interleaved A/B at sf0.1, BENCH/PLANS.md
+    round 3)."""
+    return F.filter(
+        F.transform(
+            turn_tokens(text), lambda t, i: F.struct(i.alias("pos"), t.alias("tok"))
+        ),
+        lambda s: s["tok"].isin(*ENTITY_VOCAB),
+    )
+
+
 def detect_mentions(turns: DataFrame) -> DataFrame:
     """Rule-based single-token entity mentions.
 
@@ -84,13 +105,16 @@ def detect_mentions(turns: DataFrame) -> DataFrame:
     inclusive offsets like the reference's per-sentence ner lists
     (doc/data.md:29-37).
     """
-    toks = _token_frame(turns)
-    return toks.filter(F.col("token").isin(*ENTITY_VOCAB)).select(
+    return turns.select(
         "conv_id",
         "turn_idx",
-        F.col("tok_ix").alias("start"),
-        F.col("tok_ix").alias("end"),
-        F.col("token").alias("surface"),
+        F.explode(entity_positions(F.col("text"))).alias("m"),
+    ).select(
+        "conv_id",
+        "turn_idx",
+        F.col("m.pos").alias("start"),
+        F.col("m.pos").alias("end"),
+        F.col("m.tok").alias("surface"),
     )
 
 
@@ -115,85 +139,36 @@ def _rule_label(arg0: Column, arg1: Column) -> Column:
     )
 
 
-def relation_pairs(mentions: DataFrame, max_dist: int = RELATION_MAX_DIST) -> DataFrame:
-    """M5-analog pair generation: ordered mention pairs within a turn.
-
-    Band self-join: equi-keys (conv_id, turn_idx) + ``0 < j - i <= max_dist``.
-    Label and confidence are the deterministic rule:
-    label = RELATION_LABELS[(len(arg0) + 2*len(arg1)) % 3],
-    conf  = 1 / (1 + distance).
-    """
-    a = mentions.alias("a")
-    b = mentions.alias("b")
-    ids = []
-    if "entity_id" in mentions.columns:
-        ids = [
-            F.col("a.entity_id").alias("subj_id"),
-            F.col("b.entity_id").alias("obj_id"),
-        ]
-    pairs = a.join(
-        b,
-        on=[
-            F.col("a.conv_id") == F.col("b.conv_id"),
-            F.col("a.turn_idx") == F.col("b.turn_idx"),
-            F.col("b.start") > F.col("a.start"),
-            F.col("b.start") - F.col("a.start") <= max_dist,
-        ],
-    ).select(
-        F.col("a.conv_id").alias("conv_id"),
-        F.col("a.turn_idx").alias("turn_idx"),
-        F.col("a.start").alias("s1"),
-        F.col("a.end").alias("e1"),
-        F.col("b.start").alias("s2"),
-        F.col("b.end").alias("e2"),
-        F.col("a.surface").alias("arg0"),
-        F.col("b.surface").alias("arg1"),
-        (F.col("b.start") - F.col("a.start")).alias("dist"),
-        *ids,
-    )
-    return pairs.select(
-        "*",
-        _rule_label(F.col("arg0"), F.col("arg1")).alias("label"),
-        (F.lit(1.0) / (F.lit(1.0) + F.col("dist"))).alias("conf"),
-    )
-
-
-def _pair_rows(turns: DataFrame, max_dist: int) -> DataFrame:
+def _pair_rows(turns: DataFrame, max_dist: int, beam: bool = True) -> DataFrame:
     """Every relation pair of every turn, one row each: (conv_id, turn_idx,
     sent_text, s1, s2, arg0, arg1, label, conf) — the pair rule that
-    :func:`emit_triples` and the gold builders of ``kg_eval`` share.
+    :func:`emit_triples`, the gold builders of ``kg_eval`` and
+    ``graph.build_edges`` share.
 
-    Mentions are the entity-vocab tokens; they pass the reference's
-    relation beam (the first k = ceil(0.5 * sentence_len) in textual
-    order, template.libsonnet:99), and a pair is an ordered mention pair
-    with ``0 < s2 - s1 <= max_dist``; label as :func:`relation_pairs`,
-    conf = 1 / (1 + distance).
+    Mentions are :func:`entity_positions`; with ``beam`` they pass the
+    reference's relation beam (the first k = ceil(0.5 * sentence_len) in
+    textual order, template.libsonnet:99), and KG edges take them all. A
+    pair is an ordered mention pair with ``0 < s2 - s1 <= max_dist``;
+    label = RELATION_LABELS[(len(arg0) + 2*len(arg1)) % 3], conf =
+    1 / (1 + distance).
 
     Every step is an array expression over the turn row, so the generator
     shuffles nothing. A positional beam as a ranking window shuffles every
     mention row instead (measured: 0.39 scaling efficiency at 4x cores
-    against this form, BENCH/PLANS.md round 3).
+    against this form, BENCH/PLANS.md round 3), and so does a band
+    self-join of mention rows on (conv_id, turn_idx).
     """
-    # Positions index turn_tokens, as _token_frame's and the kernel's do,
-    # so all three agree on any text, repeated spaces included. The
-    # '/.'/'/?' word normalization is left out: it rewrites only those two
-    # tokens, neither of which can become an ENTITY_VOCAB word, and it cost
-    # ~20% of emit_triples' wall (interleaved A/B at sf0.1, BENCH/PLANS.md
-    # round 3).
-    words = turn_tokens(F.col("text"))
-    n = F.size(words)
-    ments = F.filter(
-        F.transform(words, lambda t, i: F.struct(i.alias("pos"), t.alias("tok"))),
-        lambda s: s["tok"].isin(*ENTITY_VOCAB),
-    )
-    k = F.greatest(F.ceil(F.lit(0.5) * n), F.lit(1)).cast("int")
-    beamed = F.slice(ments, 1, k)
+    ments = entity_positions(F.col("text"))
+    if beam:
+        n = F.size(turn_tokens(F.col("text")))
+        k = F.greatest(F.ceil(F.lit(0.5) * n), F.lit(1)).cast("int")
+        ments = F.slice(ments, 1, k)
     pairs_arr = F.flatten(
         F.transform(
-            beamed,
+            ments,
             lambda a: F.transform(
                 F.filter(
-                    beamed,
+                    ments,
                     lambda b: (b["pos"] > a["pos"])
                     & (b["pos"] - a["pos"] <= max_dist),
                 ),

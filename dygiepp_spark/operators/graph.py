@@ -15,30 +15,35 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from dygiepp_spark.operators.extraction import detect_mentions, relation_pairs
+from dygiepp_spark.operators.extraction import _pair_rows, detect_mentions
 from dygiepp_spark.operators.linking import link_mentions
+from dygiepp_spark.tables import RELATION_MAX_DIST
+
+
+def _link_arg(pairs: DataFrame, arg: str, entity_dict: DataFrame, out: str) -> DataFrame:
+    """``pairs`` with ``arg`` replaced by ``out``, the id
+    :func:`link_mentions` gives ``arg`` as a mention surface."""
+    return (
+        link_mentions(pairs.withColumnRenamed(arg, "surface"), entity_dict)
+        .withColumnRenamed("entity_id", out)
+        .drop("surface", "canonical_text", "type")
+    )
 
 
 def build_edges(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Triples with both endpoints resolved to canonical entity ids."""
-    return link_edges(detect_mentions(turns), entity_dict)
+    """Relation pairs with both endpoints resolved to canonical entity ids:
+    (subj_id, pred, obj_id, conv_id, turn_idx, conf, provenance).
 
-
-def link_edges(mentions: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """:func:`build_edges` over an already-detected mention frame
-    (conv_id, turn_idx, start, end, surface) — the DAG passes its
-    materialized ``mentions`` stage instead of re-tokenizing turns.
-
-    Link-BEFORE-pair: the entity dictionary is broadcast-joined onto the
-    mention frame first (narrow, no shuffle on the big side), so the pair
-    self-join carries subj_id/obj_id through and no post-join lookup is
-    needed — two fewer shuffles than the pair-then-link formulation, and
-    a future per-mention neural linker slots into the same position.
+    The pairs are the unbeamed form of the triples' generator
+    (``extraction._pair_rows``), built row-locally from each turn's
+    entity positions; each argument is then linked by a broadcast lookup
+    against the dictionary. So the plan has no shuffle and no join other
+    than the two lookups, and a batch of turns (the streaming ``kg_agg``
+    sink) runs the same plan.
     """
-    linked = link_mentions(mentions, entity_dict).select(
-        "conv_id", "turn_idx", "start", "end", "surface", "entity_id"
-    )
-    pairs = relation_pairs(linked)
+    pairs = _pair_rows(turns, RELATION_MAX_DIST, beam=False)
+    pairs = _link_arg(pairs, "arg0", entity_dict, "subj_id")
+    pairs = _link_arg(pairs, "arg1", entity_dict, "obj_id")
     return pairs.select(
         "subj_id",
         F.col("label").alias("pred"),

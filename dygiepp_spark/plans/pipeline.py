@@ -325,9 +325,9 @@ def build_kg_pipeline(
     def _canonical(ctx):
         return CO.canonicalize_clusters(ctx["coref_clusters"])
 
-    @p.stage("kg_edges", needs=("mentions",))
+    @p.stage("kg_edges", needs=("turns",))
     def _edges(ctx):
-        return GR.link_edges(ctx["mentions"], TT.entity_dict(spark))
+        return GR.build_edges(ctx["turns"], TT.entity_dict(spark))
 
     @p.stage("kg_edges_agg", needs=("kg_edges",))
     def _edges_agg(ctx):

@@ -172,12 +172,10 @@ def windowed_mention_counts(
     ``watermark_sec`` behind the max seen event time are dropped by the
     state store — the documented at-most-late bound.
     """
-    from dygiepp_spark.tables import ENTITY_VOCAB
-
     marked = turns_stream.withWatermark("ts", f"{watermark_sec} seconds")
     toks = marked.select(
-        "ts", F.explode(F.split(F.col("text"), " ")).alias("token")
-    ).filter(F.col("token").isin(*ENTITY_VOCAB))
+        "ts", F.explode(EX.entity_positions(F.col("text"))).alias("m")
+    ).select("ts", F.col("m.tok").alias("token"))
     return (
         toks.groupBy(
             F.window("ts", f"{window_sec} seconds").alias("w"), "token"
@@ -588,8 +586,10 @@ def run_kg_agg_stream(
     entity_dict: DataFrame, max_files_per_trigger: int = 8,
 ) -> None:
     """Streaming KG materialization — the north-star loop in micro-batch
-    form: each batch runs mention detection -> broadcast entity linking ->
-    pair generation -> edge rollup, and lands PER-BATCH PARTIAL aggregates
+    form: each batch runs ``graph.build_edges`` (row-local pair
+    generation from each turn's entity positions, then two broadcast
+    dictionary lookups: no self-join, no shuffle) -> edge rollup, and
+    lands PER-BATCH PARTIAL aggregates
     (support / max_conf / n_convs per (subj, pred, obj)) in an idempotent
     batch_id-partitioned sink. This is the merge-on-read shape an Iceberg
     edge table takes under streaming upsert: writers append mergeable

@@ -109,14 +109,28 @@ def test_dictionaries_are_jvm_local_relations(spark):
         assert "LocalTableScan" in plan, plan
 
 
-def test_relation_pairs_conv_local_join(spark, stored_turns):
-    """The pair self-join's equi-keys must include the conv/turn grouping
-    (band predicate evaluated at the probe) — a cartesian or
-    broadcast-nested-loop here would be quadratic in the corpus."""
-    pairs = EX.relation_pairs(EX.detect_mentions(stored_turns))
-    plan = plan_of(pairs)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
+def test_kg_edges_plan_has_no_join_but_dictionary_lookups(spark, stored_turns):
+    """KG edges pair each turn's entity positions row-locally and link
+    both arguments by broadcast dictionary lookups. With automatic
+    broadcasts off (the regime at scale) the plan still has no shuffle
+    and no other join: no band self-join of mention rows, and nothing
+    cartesian or nested-loop, which would be quadratic in the corpus."""
+    from dygiepp_spark.operators import graph as GR
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = plan_of(GR.build_edges(stored_turns, TT.entity_dict(spark)))
+    finally:
+        spark.conf.set(key, before)
+    assert count_shuffles(plan) == 0, plan
+    assert "BroadcastHashJoin" in plan, plan
+    for join in (
+        "SortMergeJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
+        "CartesianProduct",
+    ):
+        assert join not in plan, plan
 
 
 # ---------------------------------------------------------------------------
@@ -389,7 +403,7 @@ def report_inputs(spark, stored_turns):
         "gold_cl": CO.coref_clusters_global(mentions).select(
             "conv_id", "mention_ix", "cluster_id"
         ),
-        "edges": GR.link_edges(mentions, entities),
+        "edges": GR.build_edges(stored_turns, entities),
     }
 
 

@@ -17,6 +17,7 @@ from hypothesis import strategies as st
 
 from dygiepp_spark import tables as TT
 from dygiepp_spark.operators import extraction as EX
+from dygiepp_spark.operators import graph as GR
 from dygiepp_spark.operators import kg_eval as KE
 
 VOCAB = TT.VOCAB
@@ -25,60 +26,105 @@ LABELS = TT.RELATION_LABELS
 MAX_DIST = TT.RELATION_MAX_DIST
 
 
-def python_model_triples(convs: dict[str, list[list[str]]]) -> dict:
+def _positions(text: str) -> list[tuple[int, str]]:
+    """(position, token) of the entity words, positions over the non-empty
+    tokens of the single-space split."""
+    toks = [t for t in text.split(" ") if t != ""]
+    return [(i, t) for i, t in enumerate(toks) if t in ENTS]
+
+
+def _n_tokens(text: str) -> int:
+    return len([t for t in text.split(" ") if t != ""])
+
+
+def _label(ta: str, tb: str) -> str:
+    return LABELS[(len(ta) + 2 * len(tb)) % len(LABELS)]
+
+
+def python_model_triples(convs: dict[str, list[str]]) -> dict:
     """Reference semantics in plain Python (predict.py:22-42 +
     template.libsonnet:99 beam)."""
     out: dict = {}
     for conv_id, turns in convs.items():
-        for tokens in turns:
-            toks = [t for t in tokens if t != ""]
-            n = len(toks)
-            if n == 0:
-                continue
-            text = " ".join(toks)
-            ments = [(i, t) for i, t in enumerate(toks) if t in ENTS]
-            k = max(1, math.ceil(0.5 * n))
-            beamed = ments[:k]
+        for text in turns:
+            beamed = _positions(text)[: max(1, math.ceil(0.5 * _n_tokens(text)))]
             for ai, (pa, ta) in enumerate(beamed):
                 for pb, tb in beamed[ai + 1 :]:
                     d = pb - pa
                     if 0 < d <= MAX_DIST:
-                        lab = LABELS[(len(ta) + 2 * len(tb)) % len(LABELS)]
                         # dict overwrite: last (s1, s2) pair wins
-                        out[(conv_id, text, ta, tb, lab)] = 1.0 / (1.0 + d)
+                        out[(conv_id, text, ta, tb, _label(ta, tb))] = 1.0 / (1.0 + d)
     return out
 
 
-def python_model_gold(convs: dict[str, list[list[str]]], max_dist: int = 3) -> dict:
+def python_model_gold(convs: dict[str, list[str]], max_dist: int = 3) -> dict:
     """Gold semantics in plain Python: the same beam and band as
     :func:`python_model_triples`, keeping (label, conf) of the first pair
     in (turn_idx, s1, s2) order per (conv_id, arg0, arg1) —
     ``goldrels.drop_duplicates(["id","arg0","arg1"])``, eval_utils.py:755-756."""
     out: dict = {}
     for conv_id, turns in convs.items():
-        for tokens in turns:
-            toks = [t for t in tokens if t != ""]
-            n = len(toks)
-            ments = [(i, t) for i, t in enumerate(toks) if t in ENTS]
-            beamed = ments[: max(1, math.ceil(0.5 * n))]
+        for text in turns:
+            beamed = _positions(text)[: max(1, math.ceil(0.5 * _n_tokens(text)))]
             for ai, (pa, ta) in enumerate(beamed):
                 for pb, tb in beamed[ai + 1 :]:
                     d = pb - pa
                     if 0 < d <= max_dist:
-                        lab = LABELS[(len(ta) + 2 * len(tb)) % len(LABELS)]
-                        out.setdefault((conv_id, ta, tb), (lab, 1.0 / (1.0 + d)))
+                        out.setdefault((conv_id, ta, tb), (_label(ta, tb), 1.0 / (1.0 + d)))
     return out
 
 
-tokens_strategy = st.lists(
-    st.sampled_from(VOCAB), min_size=1, max_size=25
-)
+def python_model_mentions(convs: dict[str, list[str]]) -> list[tuple]:
+    """(conv_id, turn_idx, start, end, surface) of every entity word."""
+    return sorted(
+        (conv_id, ix, pos, pos, tok)
+        for conv_id, turns in convs.items()
+        for ix, text in enumerate(turns)
+        for pos, tok in _positions(text)
+    )
+
+
+def python_model_edges(convs: dict[str, list[str]]) -> list[tuple]:
+    """KG edge occurrences in plain Python: every ordered pair of entity
+    words within ``MAX_DIST`` (no beam), both ends linked to the
+    dictionary id, one row per pair."""
+    ids = {w: f"E{ix:03d}" for ix, w in enumerate(TT.ENTITY_VOCAB)}
+    out = []
+    for conv_id, turns in convs.items():
+        for ix, text in enumerate(turns):
+            ments = _positions(text)
+            for ai, (pa, ta) in enumerate(ments):
+                for pb, tb in ments[ai + 1 :]:
+                    d = pb - pa
+                    if d <= MAX_DIST:
+                        out.append((
+                            ids[ta], _label(ta, tb), ids[tb], conv_id, ix,
+                            1.0 / (1.0 + d), f"extract:{conv_id}:{ix}:{pa}:{pb}",
+                        ))
+    return sorted(out)
+
+
+@st.composite
+def text_strategy(draw):
+    """A turn's text: vocab tokens joined by 1-3 spaces, with optional
+    leading and trailing spaces."""
+    toks = draw(st.lists(st.sampled_from(VOCAB), min_size=1, max_size=25))
+    gaps = draw(st.lists(st.integers(1, 3), min_size=len(toks), max_size=len(toks)))
+    lead, trail = draw(st.integers(0, 2)), draw(st.integers(0, 2))
+    body = "".join(t + " " * g for t, g in zip(toks, gaps[:-1] + [0]))
+    return " " * lead + body + " " * trail
+
+
 corpus_strategy = st.dictionaries(
     keys=st.sampled_from([f"c{i}" for i in range(6)]),
-    values=st.lists(tokens_strategy, min_size=1, max_size=5),
+    values=st.lists(text_strategy(), min_size=1, max_size=5),
     min_size=1,
     max_size=4,
 )
+
+#: two entity words that are within MAX_DIST of each other only when
+#: positions count the non-empty tokens
+SPACED = {"c0": ["  spark  hash   hash hash  hash hash  table row ", "window"]}
 
 
 @pytest.fixture(scope="module")
@@ -88,9 +134,9 @@ def sess(spark):
 
 def _turns_frame(sess, corpus):
     rows = [
-        (cid, ix, "user", " ".join(toks), None)
+        (cid, ix, "user", text, None)
         for cid, turns in corpus.items()
-        for ix, toks in enumerate(turns)
+        for ix, text in enumerate(turns)
     ]
     return sess.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
@@ -103,6 +149,7 @@ def _turns_frame(sess, corpus):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(corpus=corpus_strategy)
+@example(corpus=SPACED)
 def test_emit_triples_matches_python_model(sess, corpus):
     turns = _turns_frame(sess, corpus)
     got = {
@@ -119,6 +166,7 @@ def test_emit_triples_matches_python_model(sess, corpus):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(corpus=corpus_strategy)
+@example(corpus=SPACED)
 def test_gold_triples_matches_python_model(sess, corpus):
     turns = _turns_frame(sess, corpus)
     got = {
@@ -126,6 +174,32 @@ def test_gold_triples_matches_python_model(sess, corpus):
         for r in KE.gold_triples(turns).collect()
     }
     assert got == python_model_gold(corpus)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(corpus=corpus_strategy)
+@example(corpus=SPACED)
+def test_detect_mentions_matches_python_model(sess, corpus):
+    turns = _turns_frame(sess, corpus)
+    got = sorted(tuple(r) for r in EX.detect_mentions(turns).collect())
+    assert got == python_model_mentions(corpus)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(corpus=corpus_strategy)
+@example(corpus=SPACED)
+def test_build_edges_matches_python_model(sess, corpus):
+    turns = _turns_frame(sess, corpus)
+    edges = GR.build_edges(turns, TT.entity_dict(sess))
+    assert sorted(tuple(r) for r in edges.collect()) == python_model_edges(corpus)
 
 
 def python_model_set_eval(pred: list[tuple], gold: list[tuple]) -> dict:
