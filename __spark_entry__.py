@@ -1122,10 +1122,10 @@ def q_partitioned_sink(spark, sf_dir):
 
 
 def q_kcore(spark, sf_dir):
-    """2-core of the linked KG after 4 fixed peel rounds (bounded-round
-    parity like gold_transitive)."""
+    """2-core of the linked KG, peeled to fixpoint — the DAG's
+    ``kg_kcore`` call."""
     edges = GR.build_edges(_turns(spark, sf_dir), TT.entity_dict(spark))
-    return GR.kcore(edges, k=2, rounds=4)
+    return GR.kcore_fixpoint(edges, k=2)
 
 
 def q_containment(spark, sf_dir):
@@ -1284,10 +1284,10 @@ def q_dsir_weights(spark, sf_dir):
 
 
 def q_kg_components(spark, sf_dir):
-    """Connected components over the linked KG (bounded min-label rounds
-    — the oracle-checkable twin of the pointer-doubling production CC)."""
+    """Connected components over the linked KG (min-id label per node)
+    through the pointer-doubling CC of ``compaction.near_dup_groups``."""
     edges = GR.build_edges(_turns(spark, sf_dir), TT.entity_dict(spark))
-    return GR.kg_components(edges, rounds=6)
+    return GR.kg_components(edges)
 
 
 def q_tool_usage(spark, sf_dir):
@@ -1656,9 +1656,9 @@ def q_streaming_tool_usage(spark, sf_dir):
 
 def q_lpa_communities(spark, sf_dir):
     """Synchronous min-tie label-propagation communities over the linked
-    KG (bounded rounds — the deterministic, oracle-checkable LPA)."""
+    KG, propagated to fixpoint — the DAG's ``kg_communities`` call."""
     edges = GR.build_edges(_turns(spark, sf_dir), TT.entity_dict(spark))
-    return GR.lpa_communities(edges, rounds=4)
+    return GR.lpa_fixpoint(edges)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -2001,18 +2001,18 @@ def oracle_sql() -> dict[str, str]:
         "domain_stats": oracles_data.domain_stats_oracle(),
         "streaming_sessions": oracles.session_stats_oracle(gap_sec=30),
         "containment": oracles_data.containment_oracle(thresh=0.4),
-        "kcore": oracles_kg.kcore_oracle(k=2, rounds=4),
+        "kcore": oracles_kg.kcore_oracle(k=2),
         "partitioned_sink": oracles_kg.partitioned_sink_oracle(),
         "response_latency": oracles.response_latency_oracle(),
         "pagerank_weighted": oracles_kg.pagerank_weighted_oracle(iterations=3),
         "lm_score": oracles_data.lm_score_oracle(),
         "bpe_pairs": oracles_data.bpe_pairs_oracle(k=50),
         "source_mix": oracles_data.source_mix_oracle(),
-        "lpa_communities": oracles_kg.lpa_oracle(rounds=4),
+        "lpa_communities": oracles_kg.lpa_oracle(),
         "intra_dedup": oracles_data.intra_dedup_oracle(block=8),
         "pack_sequences": oracles_data.pack_sequences_oracle(budget=2048),
         "dsir_weights": oracles_data.dsir_weights_oracle(),
-        "kg_components": oracles_kg.kg_components_oracle(rounds=6),
+        "kg_components": oracles_kg.kg_components_oracle(),
         "streaming_kg_agg": oracles_kg.kg_edges_agg_oracle(),
         "pmi_pairs": oracles_data.pmi_pairs_oracle(k=50, min_count=5),
         "degree_hist": oracles_kg.degree_hist_oracle(),

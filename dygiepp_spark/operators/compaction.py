@@ -8,7 +8,8 @@ exemplar per cluster, dw-experiments/shared/coref_to_tsv.py:11-33; here
 the "mention pairs" are near-duplicate document pairs).
 
 ``near_dup_groups`` is min-label-id connected components over an
-UNDIRECTED pair list with arbitrary bigint ids — the one generic
+UNDIRECTED pair list with ids of any one orderable type (bigint chunk ids
+here, entity-id strings for ``graph.kg_components``) — the one generic
 connected-components operator in the package (coref clusters need none:
 their pointer chains are same-surface runs, found by one window). Each round does a neighbor-min hop plus a
 pointer-doubling hop, so label distance covered doubles per round:
@@ -17,7 +18,7 @@ shallow stars (one viral source, many copies), so this converges in 2-3
 rounds; the loop exits on a fixpoint count and localCheckpoints each
 round to truncate lineage (cluster deployment: DFS/Iceberg checkpoint).
 
-Scale notes: every join is keyed on a single bigint id with map-side
+Scale notes: every join is keyed on a single id with map-side
 combinable min() aggregates; nothing is quadratic. A popular duplicate
 (10^6-copy boilerplate page) is a high-degree STAR — the neighbor-min
 aggregate over its edges is one hot groupBy key, which AQE skew-split
@@ -37,19 +38,15 @@ def near_dup_groups(
 
     ``pairs``: (id_a, id_b) with id_a < id_b, distinct;
     ``nodes``: (id,) — the full corpus, so singletons get their own group.
-    Returns (id, group_id) where group_id = min reachable id.
+    Ids keep their type. Returns (id, group_id) where group_id = min
+    reachable id.
     """
-    edges = pairs.select(
-        F.col("id_a").cast("bigint").alias("src"),
-        F.col("id_b").cast("bigint").alias("dst"),
-    )
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)
 
-    labels = nodes.select(
-        F.col("id").cast("bigint").alias("id"), F.col("id").cast("bigint").alias("label")
-    )
+    labels = nodes.select("id", F.col("id").alias("label"))
     for _ in range(max_iter):
         # neighbor-min hop: label(dst) <- min(label(dst), min label(src))
         nb = (

@@ -15,6 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from dygiepp_spark.operators.compaction import near_dup_groups
 from dygiepp_spark.operators.extraction import _pair_rows, detect_mentions
 from dygiepp_spark.operators.linking import link_mentions
 from dygiepp_spark.tables import RELATION_MAX_DIST
@@ -301,45 +302,17 @@ def negative_samples(
     )
 
 
-def kcore(edges: DataFrame, k: int = 2, rounds: int = 4) -> DataFrame:
-    """k-core decomposition by iterative peeling: repeatedly drop nodes
-    with degree < k in the surviving subgraph; output the survivors
-    (node_id, deg) with their degree **as of the last peel round** — the
-    degree computed against the PREVIOUS round's alive set. When
-    ``rounds`` exceeds the graph's peel depth this equals the true
-    in-core degree (the alive set has stopped changing); on a graph whose
-    peel chain is deeper than ``rounds`` the survivors' degrees may still
-    count just-peeled neighbors. Use :func:`kcore_fixpoint` when the true
-    core (and true in-core degree) is required.
-
-    ``rounds`` is a fixed knob rather than a convergence loop so the
-    DuckDB twin can unroll the exact same computation (the bounded-round
-    parity precedent of gold_transitive); peeling converges in a handful
-    of rounds on real graphs because each pass removes whole shells — a
-    production run loops to fixpoint exactly like near_dup_groups
-    (count the dropped set per round, stop at 0): :func:`kcore_fixpoint`.
-
-    Scale: each round is one degree aggregation (map-side combinable)
-    plus two semi-joins of the edge list against the shrinking alive
-    set — the alive frame is (id) rows, broadcastable long after the
-    first peel. No node ever contributes more than its degree in rows.
-    """
-    if rounds < 1:
-        raise ValueError(f"kcore needs rounds >= 1, got {rounds}")
-    sym = _sym_edges(edges).localCheckpoint(eager=False)
-    alive = sym.select(F.col("lo").alias("node_id")).distinct()
-    for _ in range(rounds):
-        survivors = _peel(sym, alive, k)
-        alive = survivors.select("node_id")
-    # survivors with their last-round degree
-    return survivors
+#: runaway bound of :func:`kcore_fixpoint`; its DuckDB twin unrolls
+#: exactly this many peel rounds
+KCORE_MAX_ROUNDS = 200
 
 
 def _peel(sym: DataFrame, alive: DataFrame, k: int) -> DataFrame:
-    """One peel round: the degree of every ``alive`` node within the
-    alive subgraph, kept where it is >= k — (node_id, deg). Shared by
-    the bounded-round parity twin and the fixpoint production form so
-    the recurrence can never diverge between them."""
+    """One peel round of :func:`kcore_fixpoint`: the degree of every
+    ``alive`` node within the alive subgraph, kept where it is >= k —
+    (node_id, deg). Scale: one degree aggregation (map-side combinable)
+    plus two semi-joins of the edge list against the alive set, which is
+    (id) rows and broadcastable long after the first peel."""
     # each round references `alive` twice (both semi-joins); without
     # lineage truncation the logical plan DOUBLES per round — 2^rounds
     # copies of the base subtree (the same fix as near_dup_groups'
@@ -356,20 +329,21 @@ def _peel(sym: DataFrame, alive: DataFrame, k: int) -> DataFrame:
 
 
 def kcore_fixpoint(
-    edges: DataFrame, k: int = 2, max_rounds: int = 200
+    edges: DataFrame, k: int = 2, max_rounds: int = KCORE_MAX_ROUNDS
 ) -> DataFrame:
-    """True k-core: peel until no node drops (the production form the
-    ``--with-analytics`` DAG runs; :func:`kcore` is the bounded-round
-    parity twin). At fixpoint the returned degrees ARE the in-core
-    degrees — the alive set that produced them no longer changes.
+    """k-core decomposition by iterative peeling: drop nodes with degree
+    < k in the surviving subgraph until no node drops; output the
+    survivors (node_id, deg). At fixpoint the returned degrees ARE the
+    in-core degrees — the alive set that produced them no longer changes.
 
     Convergence is detected by counting the alive set each round (one
     tiny action on an (id)-only frame); each round is the same
-    lineage-truncated :func:`_peel` as :func:`kcore`, so the plan stays
-    flat no matter the peel depth. ``max_rounds`` is a
-    fail-loud runaway bound (a graph peels at most |V| rounds; real KGs
-    converge in tens): exceeding it raises instead of silently returning
-    a non-core.
+    lineage-truncated :func:`_peel`, so the plan stays flat no matter the
+    peel depth. ``max_rounds`` is a fail-loud runaway bound (a graph
+    peels at most |V| rounds; real KGs converge in tens): exceeding it
+    raises instead of silently returning a non-core. Because a converged
+    peel is stable, the DuckDB twin (``oracles_kg.kcore_oracle``) unrolls
+    ``KCORE_MAX_ROUNDS`` rounds and gets the same rows.
     """
     sym = _sym_edges(edges).localCheckpoint(eager=False)
     alive = sym.select(F.col("lo").alias("node_id")).distinct()
@@ -488,11 +462,15 @@ def _self_labels(sym: DataFrame) -> DataFrame:
 
 
 def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous LPA update: every node adopts its neighbors'
-    majority label, ties toward the smallest label (total order — the
-    determinism the DuckDB twin depends on). Shared by the bounded-round
-    parity twin and the fixpoint production form so the recurrence can
-    never diverge between them."""
+    """One synchronous round of :func:`lpa_fixpoint`: every node adopts
+    its neighbors' majority label, ties toward the smallest label (total
+    order — the determinism the DuckDB twin depends on).
+
+    Scale: ONE shuffle — edges join labels on src (label frame is
+    (node, label) rows), then a (dst, label)-keyed count agg with
+    map-side partial aggregation (a celebrity node's million identical
+    neighbor labels collapse before the shuffle), then a per-dst
+    row_number cut."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("node_id").orderBy(
@@ -514,83 +492,44 @@ def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
+def kg_components(edges: DataFrame) -> DataFrame:
+    """Connected components over the undirected KG: (node_id, label) with
+    label the smallest node id reachable. The undirected pairs go through
+    ``compaction.near_dup_groups``, the package's one connected-components
+    loop (neighbor-min plus pointer-doubling hops to fixpoint, O(log D)
+    rounds for diameter D)."""
+    sym = _sym_edges(edges)
+    pairs = sym.filter(F.col("lo") < F.col("hi")).select(
+        F.col("lo").alias("id_a"), F.col("hi").alias("id_b")
+    )
+    nodes = sym.select(F.col("lo").alias("id")).distinct()
+    return near_dup_groups(pairs, nodes).select(
+        F.col("id").alias("node_id"), F.col("group_id").alias("label")
+    )
+
+
+#: livelock guard of :func:`lpa_fixpoint`; its DuckDB twin unrolls
+#: exactly this many rounds
+LPA_MAX_ROUNDS = 50
+
+
+def lpa_fixpoint(edges: DataFrame, max_rounds: int = LPA_MAX_ROUNDS) -> DataFrame:
     """Community detection by synchronous label propagation over the
     undirected KG: every node starts labeled with its own id; each round
-    every node adopts the label carried by the most of its neighbors,
-    ties broken toward the SMALLEST label — a deterministic total order,
-    so the bounded-round result is bit-identical on any engine (the
-    GraphX/GraphFrames LPA is the same recurrence with random tie
-    breaks; determinism is what makes this one oracle-checkable).
+    (:func:`_lpa_round`) every node adopts the label carried by the most
+    of its neighbors, ties broken toward the SMALLEST label — a
+    deterministic total order, so the result is bit-identical on any
+    engine (the GraphX/GraphFrames LPA is the same recurrence with random
+    tie breaks). Output (node_id, label).
 
-    Output (node_id, label) after ``rounds`` synchronous updates; nodes
-    whose neighborhood is empty (none here — nodes come FROM edges) keep
-    their label via the left join. Like :func:`kcore`, ``rounds`` is a
-    fixed knob so the DuckDB twin can unroll the identical recurrence;
-    production runs loop until the label frame stops changing (same
-    subtract-count convergence probe as near_dup_groups).
-
-    Scale shape per round: ONE shuffle — edges join labels on src
-    (broadcastable once communities are the dim side; label frame is
-    (node, label) rows), then a (dst, label)-keyed count agg with
-    map-side partial aggregation (a celebrity node's million identical
-    neighbor labels collapse before the shuffle), then a per-dst
-    row_number cut. The label frame is localCheckpoint'd per round —
-    the linear-plan lesson the k-core property test taught; under AQE the
-    pin runs the previous round's shuffle stages when it is called.
-    """
-    sym = _sym_edges(edges).localCheckpoint(eager=False)
-    labels = _self_labels(sym)
-    for _ in range(rounds):
-        labels = _lpa_round(sym, labels.localCheckpoint(eager=False))
-    return labels
-
-
-def kg_components(edges: DataFrame, rounds: int = 6) -> DataFrame:
-    """Connected components over the undirected KG by bounded-round
-    min-label propagation: every node starts labeled with its own id and
-    repeatedly takes the MIN of its own and its neighbors' labels — after
-    ``rounds`` passes every node within ``rounds`` hops of its
-    component's minimum carries that minimum. The bounded knob exists for
-    the unrollable DuckDB twin (gold_transitive precedent); the
-    production path is the pointer-doubling CC in
-    operators.compaction.near_dup_groups, which converges in O(log D)
-    rounds instead of O(D) — this operator is the oracle-checkable
-    recurrence, near_dup_groups is what the 100 TB DAG runs.
-
-    Per round: ONE join (edges x labels on src) + a min agg keyed by
-    node — map-side combinable, so a celebrity node's neighbor labels
-    collapse before the shuffle. localCheckpoint per round (linear plan;
-    under AQE the pin runs the previous round's shuffles when called).
-    """
-    sym = _sym_edges(edges).localCheckpoint(eager=False)
-    labels = _self_labels(sym)
-    for _ in range(rounds):
-        labels = labels.localCheckpoint(eager=False)
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("node_id", "lo"), "lo")
-            .groupBy(F.col("hi").alias("node_id"))
-            .agg(F.min("label").alias("nbr"))
-        )
-        labels = (
-            labels.join(nbr_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(
-                    "label", F.coalesce("nbr", "label")
-                ).alias("label"),
-            )
-        )
-    return labels
-
-
-def lpa_fixpoint(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
-    """Production LPA: propagate until the label frame stops changing
-    (subtract-count convergence probe per round, the near_dup_groups
-    pattern), bounded by ``max_rounds`` as a livelock guard — synchronous
-    LPA can oscillate 2-cycles on bipartite structures, which the guard
-    absorbs by returning the current frame. :func:`lpa_communities` is
-    the bounded-round parity twin; this is what --with-analytics runs.
+    Propagation stops when the label frame stops changing (a
+    subtract-count probe per round), bounded by ``max_rounds`` as a
+    livelock guard — synchronous LPA can oscillate 2-cycles on bipartite
+    structures, which the guard absorbs by returning the current frame.
+    Stable labels stay stable, so the result equals exactly
+    ``max_rounds`` synchronous rounds; the DuckDB twin
+    (``oracles_kg.lpa_oracle``) unrolls ``LPA_MAX_ROUNDS`` of them. The
+    label frame is localCheckpoint'd per round to keep the plan linear.
     """
     sym = _sym_edges(edges).localCheckpoint(eager=False)
     labels = _self_labels(sym)

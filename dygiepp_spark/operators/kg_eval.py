@@ -54,10 +54,12 @@ def match_substring(a: Column, b: Column) -> Column:
 
 
 def jaccard_ratio(a: Column, b: Column) -> Column:
-    """Token-set jaccard ratio (lower+trim, split on single space,
-    distinct) — one IEEE double division."""
-    ta = F.array_distinct(F.split(F.lower(F.trim(a)), " "))
-    tb = F.array_distinct(F.split(F.lower(F.trim(b)), " "))
+    """Token-set jaccard ratio (lowered, the non-empty single-space
+    tokens of :func:`turn_tokens`, distinct) — one IEEE double division.
+    Inner spacing does not matter, and a side with no tokens scores 0.0
+    (the union is floored at 1)."""
+    ta = F.array_distinct(turn_tokens(F.lower(a)))
+    tb = F.array_distinct(turn_tokens(F.lower(b)))
     inter = F.size(F.array_intersect(ta, tb)).cast("double")
     union = F.size(F.array_union(ta, tb)).cast("double")
     return inter / F.greatest(union, F.lit(1.0))
@@ -1287,13 +1289,9 @@ def method_accept_rate_filtered(
     )
     # span_matching's comparator is STRICTLY greater (eval_utils.py:218)
     # — the accept path reproduces it, unlike K1's documented >= cells.
-    # All-stopword arguments filter to '' and '' vs '' would jaccard to
-    # 1.0 (split('') is ['']) — the reference's empty token lists can
-    # never match, so an empty side disqualifies the pair outright.
-    nonempty = (
-        (F.col("fa0") != "") & (F.col("fa1") != "")
-        & (F.col("ga0") != "") & (F.col("ga1") != "")
-    )
+    # An all-stopword argument filters to no tokens and jaccards to 0.0
+    # against anything, so it can never match (the reference's empty
+    # token lists); both branches read all four arguments.
     fwd = (jaccard_ratio(F.col("fa0"), F.col("ga0")) > thresh) & (
         jaccard_ratio(F.col("fa1"), F.col("ga1")) > thresh
     )
@@ -1303,7 +1301,6 @@ def method_accept_rate_filtered(
             jaccard_ratio(F.col("fa1"), F.col("ga0")) > thresh
         )
         cond = fwd | rev
-    cond = nonempty & cond
     matched = (
         u.join(g, "conv_id")
         .filter(cond)

@@ -421,6 +421,29 @@ edges AS (
 """
 
 
+# The symmetrized edge list over an ``edges`` CTE, twin of
+# graph._sym_edges: distinct undirected (lo, hi) pairs without self-loops
+# as ``und``, both directions as ``sym``. MATERIALIZED like every
+# per-round CTE of the unrolled twins: DuckDB 1.0 inlines each reference
+# to a plain CTE, so a round that reads the previous one twice doubles
+# the plan.
+_SYM_CTE = """
+und AS MATERIALIZED (
+    SELECT DISTINCT least(subj_id, obj_id) AS lo,
+                    greatest(subj_id, obj_id) AS hi
+    FROM edges WHERE subj_id <> obj_id
+),
+sym AS MATERIALIZED (SELECT lo, hi FROM und UNION ALL SELECT hi, lo FROM und)
+"""
+
+#: the linked-KG edge list and its symmetrized form: the head of every
+#: undirected graph twin
+_KG_SYM = (
+    f"{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , "
+    f"{_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},\n{_SYM_CTE.strip()}"
+)
+
+
 def kg_edges_oracle() -> str:
     return f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()}
 SELECT subj_id, pred, obj_id, conv_id, turn_idx, conf, provenance FROM edges"""
@@ -1436,12 +1459,6 @@ def accept_rate_filtered_oracle(
             f"AND ({_jac_sql('p.fa1', 'g.ga0')}) > {thresh}"
         )
         cond = f"(({fwd}) OR ({rev}))"
-    # all-stopword args filter to '' — an empty side can never match
-    # (the reference's empty token lists), mirroring the Spark guard
-    cond = (
-        "p.fa0 <> '' AND p.fa1 <> '' AND g.ga0 <> '' AND g.ga1 <> '' "
-        f"AND {cond}"
-    )
     return f"""{_EVAL_BASE} , {_TRIPLES_CTE.strip()} , {_GOLD_CTE.strip()},
 {_method_preds_ctes()},
 predf AS (
@@ -1598,9 +1615,10 @@ SELECT kind, metric, collapse, topk, best_score FROM ranked WHERE rn = 1"""
 
 def _jac_sql(a: str, b: str) -> str:
     """Token-set jaccard ratio as one IEEE double division — twin of
-    kg_eval.match_jaccard's ratio (split on single space, distinct)."""
-    ta = f"list_distinct(string_split(lower(trim({a})), ' '))"
-    tb = f"list_distinct(string_split(lower(trim({b})), ' '))"
+    kg_eval.jaccard_ratio (lowered, non-empty single-space tokens,
+    distinct)."""
+    ta = f"list_distinct(list_filter(string_split(lower({a}), ' '), x -> x <> ''))"
+    tb = f"list_distinct(list_filter(string_split(lower({b}), ' '), x -> x <> ''))"
     return (
         f"(CAST(len(list_intersect({ta}, {tb})) AS DOUBLE) / "
         f"greatest(CAST(len(list_distinct(list_concat({ta}, {tb}))) "
@@ -1836,12 +1854,7 @@ r0 AS (SELECT node_id, CAST(1000000 AS BIGINT) AS pr FROM nodes)"""
 def triangle_counts_oracle() -> str:
     """Twin of graph.triangle_counts: same degree-ordered orientation
     ((deg, id) total order, ties on id), wedge self-join, EXISTS-closed."""
-    return f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
+    return f"""{_KG_SYM},
 deg AS (
     SELECT v, count(*) AS deg FROM (
         SELECT lo AS v FROM und UNION ALL SELECT hi FROM und
@@ -1909,35 +1922,29 @@ WHERE NOT EXISTS (
 )"""
 
 
-def kcore_oracle(k: int = 2, rounds: int = 4) -> str:
-    """Twin of graph.kcore: the same fixed number of peel rounds unrolled."""
-    head = f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
-sym AS (SELECT lo, hi FROM und UNION ALL SELECT hi, lo FROM und),
-a0 AS (SELECT DISTINCT lo AS node_id FROM sym)"""
+def kcore_oracle(k: int = 2) -> str:
+    """Twin of graph.kcore_fixpoint: ``KCORE_MAX_ROUNDS`` peel rounds
+    unrolled. The Spark form raises unless it converges within that
+    bound, and a converged peel is stable, so the last round's survivors
+    are its rows."""
+    from dygiepp_spark.operators.graph import KCORE_MAX_ROUNDS
+
     levels = []
     prev = "a0"
-    for i in range(1, rounds + 1):
-        levels.append(f"""d{i} AS (
+    for i in range(1, KCORE_MAX_ROUNDS + 1):
+        levels.append(f"""d{i} AS MATERIALIZED (
     SELECT s.lo AS node_id, count(*) AS deg
     FROM sym s
     JOIN {prev} x ON s.lo = x.node_id
     JOIN {prev} y ON s.hi = y.node_id
     GROUP BY s.lo
 ),
-a{i} AS (SELECT node_id FROM d{i} WHERE deg >= {k})""")
+a{i} AS MATERIALIZED (SELECT node_id FROM d{i} WHERE deg >= {k})""")
         prev = f"a{i}"
-    return (
-        head
-        + ",\n"
-        + ",\n".join(levels)
-        + f"\nSELECT d.node_id, d.deg FROM d{rounds} d JOIN a{rounds} a"
-        f" ON d.node_id = a.node_id"
-    )
+    return f"""{_KG_SYM},
+a0 AS MATERIALIZED (SELECT DISTINCT lo AS node_id FROM sym),
+""" + ",\n".join(levels) + f"""
+SELECT node_id, deg FROM d{KCORE_MAX_ROUNDS} WHERE deg >= {k}"""
 
 
 def partitioned_sink_oracle(pred: str = "USED-FOR") -> str:
@@ -1986,23 +1993,19 @@ r0 AS (SELECT node_id, CAST(1000000 AS BIGINT) AS pr FROM nodes)"""
     return head + ",\n" + ",\n".join(levels) + f"\nSELECT node_id, pr FROM {prev}"
 
 
-def lpa_oracle(rounds: int = 4) -> str:
-    """Twin of graph.lpa_communities: synchronous min-tie label
-    propagation over the undirected linked-KG edge list, unrolled to
-    ``rounds`` levels exactly like pagerank_oracle. Deterministic: the
-    per-node winner is the (count DESC, label ASC) row_number minimum."""
-    head = f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
-sym AS (SELECT lo, hi FROM und UNION ALL SELECT hi AS lo, lo AS hi FROM und),
-l0 AS (SELECT DISTINCT lo AS node_id, lo AS label FROM sym)"""
+def lpa_oracle() -> str:
+    """Twin of graph.lpa_fixpoint: synchronous min-tie label propagation
+    over the undirected linked-KG edge list, unrolled to
+    ``LPA_MAX_ROUNDS`` levels — stable labels stay stable, so this equals
+    the Spark form whether it stopped early or hit the bound.
+    Deterministic: the per-node winner is the (count DESC, label ASC)
+    row_number minimum."""
+    from dygiepp_spark.operators.graph import LPA_MAX_ROUNDS
+
     levels = []
     prev = "l0"
-    for i in range(1, rounds + 1):
-        levels.append(f"""l{i} AS (
+    for i in range(1, LPA_MAX_ROUNDS + 1):
+        levels.append(f"""l{i} AS MATERIALIZED (
     SELECT p.node_id, COALESCE(nl.new_label, p.label) AS label
     FROM {prev} p LEFT JOIN (
         SELECT node_id, label AS new_label FROM (
@@ -2016,46 +2019,31 @@ l0 AS (SELECT DISTINCT lo AS node_id, lo AS label FROM sym)"""
     ) nl ON p.node_id = nl.node_id
 )""")
         prev = f"l{i}"
-    return head + ",\n" + ",\n".join(levels) + f"\nSELECT node_id, label FROM {prev}"
+    return f"""{_KG_SYM},
+l0 AS MATERIALIZED (SELECT DISTINCT lo AS node_id, lo AS label FROM sym),
+""" + ",\n".join(levels) + f"\nSELECT node_id, label FROM {prev}"
 
 
-def kg_components_oracle(rounds: int = 6) -> str:
-    """Twin of graph.kg_components: bounded-round min-label propagation
-    over the undirected linked-KG edges, unrolled like lpa_oracle."""
-    head = f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
+def kg_components_oracle() -> str:
+    """Twin of graph.kg_components: every node's smallest reachable id by
+    the recursive reachability CTE of oracles_data.dedup_groups_oracle,
+    an independent formulation of the pointer-doubling loop."""
+    return f"""WITH RECURSIVE kg AS MATERIALIZED (
+{_KG_SYM}
+SELECT lo, hi FROM sym
 ),
-sym AS (SELECT lo, hi FROM und UNION ALL SELECT hi AS lo, lo AS hi FROM und),
-c0 AS (SELECT DISTINCT lo AS node_id, lo AS label FROM sym)"""
-    levels = []
-    prev = "c0"
-    for i in range(1, rounds + 1):
-        levels.append(f"""c{i} AS (
-    SELECT p.node_id,
-           least(p.label, COALESCE(nm.nbr, p.label)) AS label
-    FROM {prev} p LEFT JOIN (
-        SELECT s.hi AS node_id, min(r.label) AS nbr
-        FROM sym s JOIN {prev} r ON s.lo = r.node_id
-        GROUP BY s.hi
-    ) nm ON p.node_id = nm.node_id
-)""")
-        prev = f"c{i}"
-    return head + ",\n" + ",\n".join(levels) + f"\nSELECT node_id, label FROM {prev}"
+walk AS (
+    SELECT DISTINCT lo AS node_id, lo AS r FROM kg
+    UNION
+    SELECT w.node_id, s.hi AS r FROM walk w JOIN kg s ON s.lo = w.r
+)
+SELECT node_id, min(r) AS label FROM walk GROUP BY node_id"""
 
 
 def degree_hist_oracle() -> str:
     """Twin of graph.degree_hist: symmetrized distinct undirected edges,
     degree agg, (deg, count) histogram with the floor-log2 bin."""
-    return f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
-sym AS (SELECT lo, hi FROM und UNION ALL SELECT hi AS lo, lo AS hi FROM und),
+    return f"""{_KG_SYM},
 deg AS (SELECT lo AS node_id, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1)
 SELECT deg, CAST(count(*) AS BIGINT) AS n_nodes,
        CAST(length(bin(deg)) - 1 AS BIGINT) AS log2_bin
@@ -2075,12 +2063,7 @@ def link_prediction_oracle(
            'S:' || CAST(l_suppkey AS VARCHAR) AS obj_id
     FROM lineitem
 ),
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
-sym AS (SELECT lo, hi FROM und UNION ALL SELECT hi AS lo, lo AS hi FROM und),
+{_SYM_CTE.strip()},
 deg AS (SELECT lo AS v, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1),
 ctr AS (SELECT v FROM deg WHERE deg <= {max_center_degree}),
 cn AS (
@@ -2110,13 +2093,7 @@ def random_walks_oracle(length: int = 4, walks_per_node: int = 2) -> str:
     """Twin of graph.random_walks over the linked KG: unrolled per-step
     CTEs, next hop = min_by(neighbor, md5(visit:t:walk:neighbor)) — the
     same keyed-hash argmin, bit-identical across engines."""
-    head = f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
-sym AS (SELECT lo, hi FROM und UNION ALL SELECT hi AS lo, lo AS hi FROM und),
+    head = f"""{_KG_SYM},
 w0 AS (
     SELECT n.lo AS node_id, CAST(t.w AS INT) AS walk_id, n.lo AS visit
     FROM (SELECT DISTINCT lo FROM sym) n,
@@ -2253,12 +2230,7 @@ JOIN singles sb ON p.e2 = sb.entity_id"""
 def assortativity_oracle() -> str:
     """Twin of graph.assortativity: symmetric edge-end degree pairs,
     exact BIGINT sufficient statistics, one final division."""
-    return f"""{_BASE} , {ENTITY_DICT_SQL} , {_LINKED_CTE.strip()} , {_PAIRS_RAW_CTE.strip()} , {_EDGES_SQL.strip()},
-und AS (
-    SELECT DISTINCT least(subj_id, obj_id) AS lo,
-                    greatest(subj_id, obj_id) AS hi
-    FROM edges WHERE subj_id <> obj_id
-),
+    return f"""{_KG_SYM},
 deg AS (
     SELECT v, CAST(count(*) AS BIGINT) AS deg FROM (
         SELECT lo AS v FROM und UNION ALL SELECT hi FROM und

@@ -356,14 +356,14 @@ def build_kg_pipeline(
 
     @p.stage("kg_kcore", enabled=with_analytics, needs=("kg_edges",))
     def _kcore(ctx):
-        # production runs the TRUE core (peel to fixpoint), not the
-        # bounded-round parity twin
+        # the TRUE core (peel to fixpoint); the `kcore` query runs the
+        # same call against its DuckDB twin
         return GR.kcore_fixpoint(ctx["kg_edges"], k=2)
 
     @p.stage("kg_communities", enabled=with_analytics, needs=("kg_edges",))
     def _communities(ctx):
-        # same fixpoint-vs-parity-twin split as k-core: production LPA
-        # propagates until labels stop changing
+        # LPA propagated until labels stop changing; the
+        # `lpa_communities` query runs the same call against its twin
         return GR.lpa_fixpoint(ctx["kg_edges"])
 
     @p.stage("kg_health", enabled=with_analytics, needs=("kg_edges",))

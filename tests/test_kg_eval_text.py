@@ -239,6 +239,37 @@ def test_match_rouge_thresholds(spark):
     assert miss["tp"] == 0
 
 
+def test_jaccard_ratio_ignores_inner_spacing(spark):
+    """Spark ratio and its DuckDB twin count the non-empty tokens only:
+    repeated inner spaces do not change the score, and two sides with no
+    tokens score 0.0 (empty union), not 1.0."""
+    import duckdb
+
+    from dygiepp_spark.oracles_kg import _jac_sql
+
+    cases = [
+        ("a  b", "a b", 1.0),
+        (" A b ", "a  c", 1 / 3),
+        ("", "", 0.0),
+        ("  ", "x", 0.0),
+    ]
+    df = spark.createDataFrame(
+        [(a, b) for a, b, _ in cases], "a string, b string"
+    )
+    got = [r[0] for r in df.select(
+        KE.jaccard_ratio(F.col("a"), F.col("b"))
+    ).collect()]
+    assert got == [want for _, _, want in cases]
+    con = duckdb.connect()
+    twin = [
+        con.execute(
+            f"SELECT {_jac_sql('a', 'b')} FROM (VALUES (?, ?)) t(a, b)", [a, b]
+        ).fetchone()[0]
+        for a, b, _ in cases
+    ]
+    assert twin == got
+
+
 def test_match_head_last_token_standin(spark):
     p = _triples(spark, [("c1", "the merge join", "hash TABLE", "R", 1.0)])
     g = _triples(spark, [("c1", "a blocked merge join", "table", "R", 1.0)])

@@ -102,45 +102,3 @@ def test_pagerank_matches_integer_reference(spark, edges, iters):
         rank = nxt
     got = {r["node_id"]: r["rank"] for r in pagerank(df, iterations=iters).collect()}
     assert got == {f"n{v}": rk for v, rk in rank.items()}, (e, got, rank)
-
-
-@given(
-    edges=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=6), st.integers(min_value=0, max_value=6)
-        ),
-        min_size=1,
-        max_size=16,
-    ),
-    k=st.integers(min_value=1, max_value=3),
-)
-@settings(**SETTINGS)
-def test_kcore_matches_bruteforce_peel(spark, edges, k):
-    df = spark.createDataFrame(
-        [(f"n{a}", "p", f"n{b}") for a, b in edges],
-        "subj_id string, pred string, obj_id string",
-    )
-    und = {tuple(sorted((a, b))) for a, b in edges if a != b}
-    alive = {v for e in und for v in e}
-    # brute-force peel to fixpoint (the operator's fixed rounds=6 exceeds
-    # any possible peel depth on <= 7 nodes)
-    while True:
-        deg = {v: 0 for v in alive}
-        for a, b in und:
-            if a in alive and b in alive:
-                deg[a] += 1
-                deg[b] += 1
-        drop = {v for v in alive if deg[v] < k}
-        if not drop:
-            break
-        alive -= drop
-    want = {
-        f"n{v}": sum(
-            1 for (a, b) in und if (a == v or b == v) and a in alive and b in alive
-        )
-        for v in alive
-    }
-    from dygiepp_spark.operators.graph import kcore
-
-    got = {r["node_id"]: r["deg"] for r in kcore(df, k=k, rounds=6).collect()}
-    assert got == want, (sorted(und), k, got, want)

@@ -337,19 +337,19 @@ def test_containment_catches_subset_jaccard_misses(spark):
 # ------------------------------------------------------------------ k-core
 
 def test_kcore_peels_tail(spark):
-    from dygiepp_spark.operators.graph import kcore
+    from dygiepp_spark.operators.graph import kcore_fixpoint
 
     # triangle a-b-c (2-core) with a pendant chain c-d-e that must peel off
     rows = [("a", "p", "b"), ("b", "p", "c"), ("a", "p", "c"),
             ("c", "p", "d"), ("d", "p", "e")]
     edges = spark.createDataFrame(rows, "subj_id string, pred string, obj_id string")
-    out = {r["node_id"]: r["deg"] for r in kcore(edges, k=2, rounds=4).collect()}
+    out = {r["node_id"]: r["deg"] for r in kcore_fixpoint(edges, k=2).collect()}
     assert out == {"a": 2, "b": 2, "c": 2}
 
 
 def test_kcore_empty_when_tree(spark):
-    from dygiepp_spark.operators.graph import kcore
+    from dygiepp_spark.operators.graph import kcore_fixpoint
 
     rows = [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "d")]
     edges = spark.createDataFrame(rows, "subj_id string, pred string, obj_id string")
-    assert kcore(edges, k=2, rounds=4).count() == 0
+    assert kcore_fixpoint(edges, k=2).count() == 0

@@ -20,31 +20,23 @@ def _path_edges(spark, n):
     )
 
 
-def test_kcore_rejects_zero_rounds(spark):
-    from dygiepp_spark.operators.graph import kcore
-
-    with pytest.raises(ValueError):
-        kcore(_path_edges(spark, 4), k=2, rounds=0)
-
-
 def test_kcore_fixpoint_matches_deep_rounds_on_deep_peel(spark):
-    from dygiepp_spark.operators.graph import kcore, kcore_fixpoint
+    from dygiepp_spark.operators.graph import kcore_fixpoint
 
     # triangle (the true 2-core) + a 10-node pendant chain: peeling eats
-    # one chain node per round from the free end, so rounds=4 is NOT
-    # enough — exactly the case the bounded-round twin over-reports.
+    # one chain node per round from the free end, so 3 rounds are NOT
+    # enough — the fixpoint must fail loudly under that bound and peel
+    # the whole chain under the default one.
     rows = [("a", "p", "b"), ("b", "p", "c"), ("a", "p", "c"),
             ("c", "p", "m0")]
     rows += [(f"m{i}", "p", f"m{i + 1}") for i in range(9)]
     edges = spark.createDataFrame(
         rows, "subj_id string, pred string, obj_id string"
     )
-    shallow = {r["node_id"] for r in kcore(edges, k=2, rounds=3).collect()}
-    assert shallow > {"a", "b", "c"}, "peel depth fixture too shallow"
+    with pytest.raises(RuntimeError, match="did not converge"):
+        kcore_fixpoint(edges, k=2, max_rounds=3)
     fx = {r["node_id"]: r["deg"] for r in kcore_fixpoint(edges, k=2).collect()}
-    deep = {r["node_id"]: r["deg"]
-            for r in kcore(edges, k=2, rounds=16).collect()}
-    assert fx == deep == {"a": 2, "b": 2, "c": 2}
+    assert fx == {"a": 2, "b": 2, "c": 2}
 
 
 def test_kcore_fixpoint_empty_core(spark):
@@ -355,7 +347,7 @@ def test_lpa_finds_two_communities(spark):
     """Two triangles joined by one bridge edge: LPA with min-label ties
     must converge to one label per triangle (the bridge can't outvote
     two in-triangle neighbors)."""
-    from dygiepp_spark.operators.graph import lpa_communities
+    from dygiepp_spark.operators.graph import lpa_fixpoint
 
     tri1 = [("a1", "a2"), ("a2", "a3"), ("a1", "a3")]
     tri2 = [("b1", "b2"), ("b2", "b3"), ("b1", "b3")]
@@ -364,7 +356,7 @@ def test_lpa_finds_two_communities(spark):
         [(s, "p", o) for s, o in tri1 + tri2 + bridge],
         "subj_id string, pred string, obj_id string",
     )
-    out = {r["node_id"]: r["label"] for r in lpa_communities(edges, rounds=6).collect()}
+    out = {r["node_id"]: r["label"] for r in lpa_fixpoint(edges).collect()}
     assert set(out[n] for n in ("a1", "a2", "a3")) == {"a1"}
     # the b-triangle converges to ONE label of its own — two in-triangle
     # votes always beat the single bridge vote
@@ -452,7 +444,7 @@ def test_kg_components_two_islands(spark):
         [(s, "p", o) for s, o in tri1 + tri2],
         "subj_id string, pred string, obj_id string",
     )
-    out = {r["node_id"]: r["label"] for r in kg_components(edges, rounds=4).collect()}
+    out = {r["node_id"]: r["label"] for r in kg_components(edges).collect()}
     assert all(out[n] == "a1" for n in ("a1", "a2", "a3"))
     assert all(out[n] == "b1" for n in ("b1", "b2", "b3"))
 
