@@ -134,24 +134,17 @@ BENCH_QUERIES = {
     "kg_edges_agg",
     # coref connected-components loop
     "coref_canonical",
-    # training-data-pipeline layer
-    "near_dups_minhash",
-    "token_counts",
+    # multimodal layer
     "image_meta",
     # corpus-curation layer (added r4 per VERDICT r3 #7 so its cost
     # regresses visibly round-over-round)
     "quality_filter",
-    "dedup_groups",
-    "tfidf_topk",
     # graph-analytics + temporal layer (added late r4)
     "pagerank",
     "triangles",
     "asof_events",
     # late-r5 curation/graph wave (new lines, not in any prior sum)
     "lm_score",
-    "intra_dedup",
-    "pack_sequences",
-    "dsir_weights",
     "lpa_communities",
     # closing-session wave (new lines, not in any prior sum)
     "random_walks",
@@ -159,7 +152,6 @@ BENCH_QUERIES = {
     "mention_contexts",
     "bloom_decontam",
     "link_prediction",
-    "source_overlap",
 }
 
 if __name__ == "__main__":

@@ -1,4 +1,5 @@
-"""Portable deterministic hashing shared by dedup/fingerprint operators.
+"""Portable deterministic hashing shared by the sampling, split and
+Bloom-filter operators and their DuckDB twins.
 
 Everything is built on md5 hex strings because they are bit-identical in
 Spark and DuckDB (and any other engine), unlike xxhash64/murmur which are
@@ -23,11 +24,6 @@ from pyspark.sql import Column
 def hash60(col: Column) -> Column:
     """60-bit integer hash of a string column (portable, non-negative)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def seeded(seed: int, col: Column) -> Column:
-    """Seed-prefixed input so k independent hash functions come cheap."""
-    return F.concat(F.lit(f"{seed}:"), col)
 
 
 # ---------------------------------------------------------------------------

@@ -4,10 +4,9 @@ training corpus and an evaluation/benchmark set.
 The standard pre-training hygiene pass (GPT-3 appendix C, Llama/Gopher
 reports use 8-13-gram exact collision): a corpus document is contaminated
 if it shares at least one length-``n`` token n-gram with any benchmark
-document. This is deliberately a DIFFERENT shape from near-dup detection
-(dedup.py): the benchmark side is tiny (thousands of eval documents vs
+document. The benchmark side is tiny (thousands of eval documents vs
 billions of corpus documents), so the scale plan is a **broadcast
-semi-join on the gram**, not banded LSH —
+semi-join on the gram**, not a corpus self-join —
 
 * corpus side: one pass, explode per-document DISTINCT n-grams
   (``array_distinct`` before the explode keeps within-doc duplicates off

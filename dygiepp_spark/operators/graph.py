@@ -15,7 +15,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from dygiepp_spark.operators.compaction import near_dup_groups
 from dygiepp_spark.operators.extraction import _pair_rows, detect_mentions
 from dygiepp_spark.operators.linking import link_mentions
 from dygiepp_spark.tables import RELATION_MAX_DIST
@@ -315,7 +314,7 @@ def _peel(sym: DataFrame, alive: DataFrame, k: int) -> DataFrame:
     (id) rows and broadcastable long after the first peel."""
     # each round references `alive` twice (both semi-joins); without
     # lineage truncation the logical plan DOUBLES per round — 2^rounds
-    # copies of the base subtree (the same fix as near_dup_groups'
+    # copies of the base subtree (the same fix as kg_components'
     # per-round checkpoint; surfaced by the hypothesis peel test). Under
     # AQE the pin runs the previous round's shuffle stages when it is called
     alive = alive.localCheckpoint(eager=False)
@@ -492,19 +491,61 @@ def _lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+#: runaway bound of :func:`kg_components`: pointer doubling covers a
+#: diameter of about 2^rounds, so a graph that needs more does not fit
+COMPONENTS_MAX_ROUNDS = 20
+
+
 def kg_components(edges: DataFrame) -> DataFrame:
     """Connected components over the undirected KG: (node_id, label) with
-    label the smallest node id reachable. The undirected pairs go through
-    ``compaction.near_dup_groups``, the package's one connected-components
-    loop (neighbor-min plus pointer-doubling hops to fixpoint, O(log D)
-    rounds for diameter D)."""
-    sym = _sym_edges(edges)
-    pairs = sym.filter(F.col("lo") < F.col("hi")).select(
-        F.col("lo").alias("id_a"), F.col("hi").alias("id_b")
-    )
-    nodes = sym.select(F.col("lo").alias("id")).distinct()
-    return near_dup_groups(pairs, nodes).select(
-        F.col("id").alias("node_id"), F.col("group_id").alias("label")
+    label the smallest node id reachable — the package's one
+    connected-components loop. Each round does a neighbor-min hop plus a
+    pointer-doubling hop, so the label distance covered doubles per
+    round: O(log D) rounds for diameter D. The loop exits on a fixpoint
+    count and localCheckpoints each round to truncate lineage; it raises
+    rather than return a split component if ``COMPONENTS_MAX_ROUNDS``
+    rounds do not reach the fixpoint.
+
+    Scale: every join is keyed on a single id with map-side combinable
+    min() aggregates. A hub is one hot neighbor-min groupBy key, which
+    AQE skew-split handles; the pointer-doubling hop is always 1:1.
+    """
+    sym = _sym_edges(edges).localCheckpoint(eager=False)
+    labels = _self_labels(sym)
+    for _ in range(COMPONENTS_MAX_ROUNDS):
+        # neighbor-min hop: label(x) <- min(label(x), min label(neighbor))
+        nb = (
+            sym.join(labels.withColumnRenamed("node_id", "lo"), "lo")
+            .groupBy(F.col("hi").alias("node_id"))
+            .agg(F.min("label").alias("_nb"))
+        )
+        stepped = labels.join(nb, "node_id", "left").select(
+            "node_id", F.least("label", F.coalesce("_nb", "label")).alias("label")
+        )
+        # pointer-doubling hop: label(x) <- min(label(x), label(label(x)))
+        parent = stepped.select(
+            F.col("node_id").alias("_pid"), F.col("label").alias("_plabel")
+        )
+        doubled = (
+            stepped.join(parent, stepped["label"] == parent["_pid"], "left")
+            .select(
+                "node_id",
+                F.least("label", F.coalesce("_plabel", "label")).alias("label"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            doubled.alias("n")
+            .join(labels.alias("o"), "node_id")
+            .filter(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = doubled
+        if changed == 0:
+            return labels
+    raise RuntimeError(
+        f"kg_components did not converge within {COMPONENTS_MAX_ROUNDS} "
+        f"rounds ({changed} labels still changing)"
     )
 
 
@@ -601,8 +642,7 @@ def link_prediction(
 
     Scale: the wedge self-join fans out quadratically in the CENTER
     node's degree, so hub centers (degree > ``max_center_degree``) are
-    excluded from wedge generation — the same capped-expansion discipline
-    as the LSH hot-bucket cap in dedup.py. A hub is the weakest CN
+    excluded from wedge generation (a capped expansion). A hub is the weakest CN
     evidence anyway (everyone shares the celebrity neighbor); production
     CN pipelines routinely drop or downweight them. Documented recall
     tradeoff: ``cn`` counts common neighbors whose OWN degree <= cap, and
@@ -838,8 +878,7 @@ def entity_pmi(
     in the same conversation far more often than chance get an edge,
     weighted by the quantized probability ratio
     ``pmi_q = (c_ab * scale) div (c_a * c_b)`` (log is monotone, global
-    constants dropped — the same rank-faithful integer-PMI contract as
-    functions.text.pmi_pairs).
+    constants dropped, so the integer keeps the PMI ranking).
 
     Counts are presence-based (distinct (conv, entity)), so a mention
     burst inside one conversation doesn't inflate the pair. Conversations
@@ -847,7 +886,7 @@ def entity_pmi(
     excluded from pair generation — the per-conv pair fan-out is
     quadratic in that count, and such conversations (index pages, logs)
     are association noise anyway; the cap is the same bounded-expansion
-    discipline as the LSH hot-bucket and wedge-center caps. ``c_a``
+    discipline as the wedge-center cap of :func:`link_prediction`. ``c_a``
     stays computed over ALL conversations (documented asymmetry: the
     denominator is the entity's true reach).
 

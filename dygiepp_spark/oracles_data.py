@@ -1,12 +1,14 @@
-"""DuckDB oracle twins for the training-data-pipeline queries
-(dedup / text analysis / multimodal).
+"""DuckDB oracle twins for the document-layer queries: exact dedup, the
+composite quality filter, the LM score, length quantiles and the vocabulary
+build, plus PII scrubbing, URL hygiene, decontamination, the as-of join and
+the multimodal operators.
 
 Portability contract (see dygiepp_spark.functions.hashing):
 
 * all hashing is md5-based (``hash60``: first 15 hex chars as BIGINT);
 * all ranking scores are exact integer arithmetic or single IEEE
   operations over exact integers;
-* jaccard/ratios are one double division of two exact integers;
+* ratios are one double division of two exact integers;
 * every window carries a total-order tiebreak.
 """
 
@@ -14,55 +16,11 @@ from __future__ import annotations
 
 from dygiepp_spark.functions.hashing import hash60_sql, hash_family_from_sql
 from dygiepp_spark.functions.text import LANG_STOPWORDS
-from dygiepp_spark.operators.dedup import (
-    N_BANDS,
-    N_HASHES,
-    ROWS_PER_BAND,
-    SIMHASH_BAND_BITS,
-    SIMHASH_BITS,
-)
 from dygiepp_spark.operators.multimodal import FRAME_STRIDE
 
 # --------------------------------------------------------------------------
-# chunks + shingles (twins of dedup.doc_chunks / dedup.shingles)
+# exact dedup (twin of operators.dedup.exact_dedup_groups)
 # --------------------------------------------------------------------------
-
-CHUNKS_SQL = """
-doc_toks AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           list_filter(string_split(text, ' '), t -> t <> '') AS toks
-    FROM documents
-),
-doc_toks_n AS (
-    SELECT doc_id, toks, len(toks) AS n FROM doc_toks WHERE len(toks) >= 3
-),
-chunks AS (
-    SELECT doc_id * 2 AS chunk_id,
-           array_to_string(list_slice(toks, 1, CAST(ceil(n * 2.0 / 3.0) AS INT)), ' ') AS text
-    FROM doc_toks_n
-    UNION ALL
-    SELECT doc_id * 2 + 1,
-           array_to_string(list_slice(toks, CAST(floor(n / 3.0) AS INT) + 1, n), ' ')
-    FROM doc_toks_n
-)
-"""
-
-SHINGLES_SQL = """
-chunk_toks AS (
-    SELECT chunk_id, list_filter(string_split(text, ' '), t -> t <> '') AS toks
-    FROM chunks
-),
-shingled AS (
-    SELECT chunk_id AS id,
-           unnest(list_distinct(list_transform(
-               range(1, len(toks)),
-               i -> toks[i] || ' ' || toks[i + 1]))) AS shingle
-    FROM chunk_toks
-    WHERE len(toks) >= 2
-)
-"""
-
-_DEDUP_BASE = f"WITH {CHUNKS_SQL.strip()} , {SHINGLES_SQL.strip()}"
 
 _NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
@@ -76,219 +34,11 @@ FROM documents
 GROUP BY 1"""
 
 
-def dedup_tokenset_oracle() -> str:
-    toks = f"list_filter(string_split({_NORM}, ' '), t -> t <> '')"
-    return f"""
-SELECT md5(array_to_string(list_sort(list_distinct({toks})), ' ')) AS set_hash,
-       min(CAST(doc_id AS BIGINT)) AS canonical_id,
-       count(*) AS n_dups
-FROM documents
-GROUP BY 1"""
-
-
-def _minhash_aggs() -> str:
-    parts = []
-    for i in range(N_HASHES):
-        parts.append(f"min({hash_family_from_sql(f'h{i % 2}', i)}) AS mh_{i}")
-    return ",\n           ".join(parts)
-
-
-def _minhash_pairs_ctes(thresh: float = 0.25, max_bucket: int = 1000) -> str:
-    """The shared minhash CTE chain (hashed -> sigs -> buckets -> cand
-    -> sets -> ver) — single source for near_dups_minhash_oracle and
-    minhash_error_hist_oracle so the twins can never desynchronize."""
-    bands = "\n    UNION ALL\n    ".join(
-        f"SELECT id, {b} AS band, '{b}:' || CAST(mh_{b * ROWS_PER_BAND} AS VARCHAR)"
-        f" || ':' || CAST(mh_{b * ROWS_PER_BAND + 1} AS VARCHAR) AS bucket FROM sigs"
-        for b in range(N_BANDS)
-    )
-    return f"""{_DEDUP_BASE},
-hashed AS (SELECT id, {hash60_sql('shingle')} AS h0,
-                  {hash60_sql("'b:' || shingle")} AS h1 FROM shingled),
-sigs AS (
-    SELECT id,
-           {_minhash_aggs()}
-    FROM hashed GROUP BY id
-),
-buckets AS (
-    {bands}
-),
-bcounts AS (SELECT band, bucket, count(*) AS n FROM buckets GROUP BY 1, 2),
-ok AS (
-    SELECT b.* FROM buckets b JOIN bcounts c USING (band, bucket)
-    WHERE c.n <= {max_bucket}
-),
-cand AS (
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b
-    FROM ok a JOIN ok b ON a.band = b.band AND a.bucket = b.bucket
-                        AND a.id < b.id
-),
-sets AS (
-    SELECT id, list_sort(list_distinct(list(shingle))) AS sh
-    FROM shingled GROUP BY id
-),
-ver AS (
-    SELECT id_a, id_b, jaccard FROM (
-        SELECT c.id_a, c.id_b,
-               CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)
-                 AS jaccard
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b
-    )
-    WHERE jaccard >= {thresh}
-)"""
-
-
-def near_dups_minhash_oracle(thresh: float = 0.25, max_bucket: int = 1000) -> str:
-    return f"""{_minhash_pairs_ctes(thresh, max_bucket)}
-SELECT id_a, id_b, jaccard FROM ver"""
-
-
-def near_dups_simhash_oracle(max_hamming: int = 6) -> str:
-    bit_sums = ",\n           ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(SIMHASH_BITS)
-    )
-    sig_terms = " + ".join(
-        f"(CASE WHEN s{b} >= 0 THEN CAST({1 << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for b in range(SIMHASH_BITS)
-    )
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    mask = (1 << SIMHASH_BAND_BITS) - 1
-    bands = "\n    UNION ALL\n    ".join(
-        f"SELECT id, simhash, {b} AS band, (simhash >> {b * SIMHASH_BAND_BITS}) & {mask} AS val FROM sigs"
-        for b in range(n_bands)
-    )
-    return f"""{_DEDUP_BASE},
-hashed AS (SELECT id, {hash60_sql('shingle')} AS h FROM shingled),
-bitsums AS (
-    SELECT id,
-           {bit_sums}
-    FROM hashed GROUP BY id
-),
-sigs AS (SELECT id, {sig_terms} AS simhash FROM bitsums),
-bk AS (
-    {bands}
-),
-pairs AS (
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-    FROM bk a JOIN bk b ON a.band = b.band AND a.val = b.val AND a.id < b.id
-)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}"""
-
-
-def ngram_jaccard_oracle(thresh: float = 0.25, block_width: int = 16) -> str:
-    return f"""{_DEDUP_BASE},
-sets AS (
-    SELECT id, list_sort(list_distinct(list(shingle))) AS sh,
-           count(*) AS n_sh
-    FROM shingled GROUP BY id
-),
-blocks AS (
-    SELECT *, CAST(floor(n_sh / {block_width}.0) AS BIGINT) AS block FROM sets
-)
-SELECT id_a, id_b, jaccard FROM (
-    SELECT a.id AS id_a, b.id AS id_b,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-             / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)
-             AS jaccard
-    FROM blocks a JOIN blocks b ON a.block = b.block AND a.id < b.id
-)
-WHERE jaccard >= {thresh}"""
-
-
 # --------------------------------------------------------------------------
-# text analysis
+# whitespace tokens (twin of functions.text.tokens_col)
 # --------------------------------------------------------------------------
 
 _DTOKS = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '')"
-
-
-def token_counts_oracle() -> str:
-    return f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(len({_DTOKS}) AS INT) AS n_tokens,
-       CAST(list_sum(list_transform({_DTOKS},
-            t -> CAST(ceil(length(t) / 4.0) AS BIGINT))) AS BIGINT) AS n_bpe_tokens
-FROM documents"""
-
-
-def langid_oracle() -> str:
-    langs = list(LANG_STOPWORDS)
-    ltoks = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-    hits = ",\n       ".join(
-        f"len(list_filter(ltoks, t -> t IN ({', '.join(repr(w) for w in ws)}))) AS h_{lg}"
-        for lg, ws in LANG_STOPWORDS.items()
-    )
-    best = "greatest(" + ", ".join(f"h_{lg}" for lg in langs) + ")"
-    case = " ".join(f"WHEN h_{lg} = m THEN '{lg}'" for lg in langs)
-    return f"""
-WITH lt AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, {ltoks} AS ltoks FROM documents),
-hits AS (
-    SELECT doc_id,
-       {hits}
-    FROM lt
-),
-withmax AS (SELECT *, {best} AS m FROM hits)
-SELECT doc_id,
-       CASE WHEN m > 0 THEN (CASE {case} END) ELSE 'und' END AS pred_lang
-FROM withmax"""
-
-
-def quality_oracle() -> str:
-    stop_all = sorted({w for ws in LANG_STOPWORDS.values() for w in ws})
-    stops = ", ".join(repr(w) for w in stop_all)
-    return f"""
-WITH feat AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           length(text) AS n_chars,
-           CAST(len({_DTOKS}) AS INT) AS n_tokens,
-           length(text) - length(regexp_replace(text, '[\\.,;:!\\?]', '', 'g')) AS n_punct,
-           len(list_filter({_DTOKS}, t -> lower(t) IN ({stops}))) AS n_stop,
-           CAST(list_sum(list_transform({_DTOKS}, t -> CAST(length(t) AS BIGINT))) AS BIGINT) AS sum_len
-    FROM documents
-),
-ratios AS (
-    SELECT doc_id, n_tokens,
-           CAST(n_punct AS DOUBLE) / CAST(greatest(n_chars, 1) AS DOUBLE) AS punct_ratio,
-           CAST(n_stop AS DOUBLE) / CAST(greatest(n_tokens, 1) AS DOUBLE) AS stopword_ratio,
-           CASE WHEN n_tokens > 0
-                THEN CAST(sum_len AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                ELSE CAST(0.0 AS DOUBLE) END AS mean_token_len
-    FROM feat
-)
-SELECT doc_id, n_tokens, punct_ratio, stopword_ratio, mean_token_len,
-       round(
-         least(CAST(n_tokens AS DOUBLE) / 20.0, 1.0) * 0.4
-         + (1.0 - least(punct_ratio * 5.0, 1.0)) * 0.3
-         + least(stopword_ratio * 10.0, 1.0) * 0.3,
-       6) AS quality
-FROM ratios"""
-
-
-def fingerprint_oracle(k: int = 4) -> str:
-    fps = ",\n       ".join(
-        f"min({hash_family_from_sql('h', i)}) AS fp_{i}" for i in range(k)
-    )
-    return f"""
-WITH norm AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           lower(regexp_replace(text, '\\s+', ' ', 'g')) AS nt
-    FROM documents
-),
-sh AS (
-    SELECT doc_id,
-           unnest(list_transform(range(1, greatest(length(nt) - 4, 1) + 1),
-                                 i -> substr(nt, CAST(i AS INT), 5))) AS shingle
-    FROM norm
-),
-hashed AS (SELECT doc_id, {hash60_sql('shingle')} AS h FROM sh)
-SELECT doc_id,
-       {fps}
-FROM hashed GROUP BY doc_id"""
 
 
 # --------------------------------------------------------------------------
@@ -364,8 +114,7 @@ FROM aug"""
 
 
 # --------------------------------------------------------------------------
-# repetition metrics + stratified sampling
-# (twins of functions.text.repetition_features / stratified_sample)
+# repetition metrics (twin of functions.text.repetition_features)
 # --------------------------------------------------------------------------
 
 def repetition_oracle() -> str:
@@ -410,24 +159,6 @@ SELECT b.doc_id, b.n_tokens, b.n_distinct_tokens,
 FROM base b
 LEFT JOIN top t USING (doc_id)
 LEFT JOIN topg g ON b.doc_id = g.doc_id"""
-
-
-def stratified_sample_oracle(
-    rates: dict[str, float] | None = None,
-    default_rate: float = 0.1,
-    scale: int = 10_000,
-) -> str:
-    rates = {"en": 0.5, "de": 0.25} if rates is None else rates
-    case = " ".join(
-        f"WHEN lang = '{v}' THEN {int(round(r * scale))}"
-        for v, r in sorted(rates.items())
-    )
-    bucket = hash60_sql("lang || ':' || CAST(CAST(doc_id AS BIGINT) AS VARCHAR)")
-    return f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id, lang
-FROM documents
-WHERE ({bucket} % {scale})
-      < (CASE {case} ELSE {int(round(default_rate * scale))} END)"""
 
 
 # --------------------------------------------------------------------------
@@ -475,77 +206,6 @@ SELECT c.doc_id,
 FROM corpus c
 LEFT JOIN perdoc p USING (doc_id)
 LEFT JOIN hits h USING (doc_id)"""
-
-
-# --------------------------------------------------------------------------
-# corpus compaction: near-dup pairs -> groups -> keepers
-# (twin of operators.compaction.near_dup_groups / compact_corpus; the
-# DuckDB side computes components with a RECURSIVE reachability CTE — an
-# independent formulation that cross-checks the iterative min-label
-# propagation)
-# --------------------------------------------------------------------------
-
-def dedup_groups_oracle(thresh: float = 0.25, max_bucket: int = 1000) -> str:
-    from dygiepp_spark.functions.hashing import hash60_sql as _h60
-
-    bands = "\n    UNION ALL\n    ".join(
-        f"SELECT id, {b} AS band, '{b}:' || CAST(mh_{b * ROWS_PER_BAND} AS VARCHAR)"
-        f" || ':' || CAST(mh_{b * ROWS_PER_BAND + 1} AS VARCHAR) AS bucket FROM sigs"
-        for b in range(N_BANDS)
-    )
-    return f"""WITH RECURSIVE {CHUNKS_SQL.strip()} , {SHINGLES_SQL.strip()},
-hashed AS (SELECT id, {_h60('shingle')} AS h0,
-                  {_h60("'b:' || shingle")} AS h1 FROM shingled),
-sigs AS (
-    SELECT id,
-           {_minhash_aggs()}
-    FROM hashed GROUP BY id
-),
-buckets AS (
-    {bands}
-),
-bcounts AS (SELECT band, bucket, count(*) AS n FROM buckets GROUP BY 1, 2),
-ok AS (
-    SELECT b.* FROM buckets b JOIN bcounts c USING (band, bucket)
-    WHERE c.n <= {max_bucket}
-),
-cand AS (
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b
-    FROM ok a JOIN ok b ON a.band = b.band AND a.bucket = b.bucket
-                        AND a.id < b.id
-),
-sets AS (
-    SELECT id, list_sort(list_distinct(list(shingle))) AS sh
-    FROM shingled GROUP BY id
-),
-pairs AS (
-    SELECT id_a, id_b FROM (
-        SELECT c.id_a, c.id_b,
-               CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / CAST(len(list_distinct(list_concat(sa.sh, sb.sh))) AS DOUBLE)
-                 AS jaccard
-        FROM cand c
-        JOIN sets sa ON sa.id = c.id_a
-        JOIN sets sb ON sb.id = c.id_b
-    )
-    WHERE jaccard >= {thresh}
-),
-edges AS (
-    SELECT id_a AS src, id_b AS dst FROM pairs
-    UNION ALL
-    SELECT id_b, id_a FROM pairs
-),
-nodes AS (SELECT chunk_id AS id FROM chunks),
-walk AS (
-    SELECT id, id AS r FROM nodes
-    UNION
-    SELECT w.id, e.dst AS r FROM walk w JOIN edges e ON e.src = w.r
-),
-groups AS (SELECT id, min(r) AS group_id FROM walk GROUP BY id),
-sizes AS (SELECT group_id, CAST(count(*) AS INT) AS group_size
-          FROM groups GROUP BY 1)
-SELECT g.id, g.group_id, s.group_size, g.id = g.group_id AS is_keeper
-FROM groups g JOIN sizes s USING (group_id)"""
 
 
 # --------------------------------------------------------------------------
@@ -739,51 +399,8 @@ FROM cx"""
 
 
 # --------------------------------------------------------------------------
-# global vocabulary top-k (twin of the vocab_topk query: token counts +
-# pruning.global_topk_with_ties rank()-semantics cut)
+# vocabulary build (twin of functions.text.vocab_build)
 # --------------------------------------------------------------------------
-
-def vocab_topk_oracle(k: int = 100) -> str:
-    return f"""
-WITH tok AS (
-    SELECT unnest({_DTOKS}) AS token FROM documents
-),
-tc AS (SELECT token, count(*) AS n FROM tok GROUP BY token),
-thr AS (SELECT min(n) AS t FROM (SELECT n FROM tc ORDER BY n DESC LIMIT {k}))
-SELECT token, n FROM tc WHERE n >= (SELECT t FROM thr)"""
-
-
-def tfidf_topk_oracle(k: int = 5, idf_scale: int = 1_000_000) -> str:
-    """Twin of functions.text.tfidf_topk: integer idf = (N * scale) // df
-    (BIGINT floor division on both engines — no float log), BIGINT score,
-    row_number cut with the same (score desc, term asc) total order."""
-    return f"""
-WITH tok AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           unnest({_DTOKS}) AS term
-    FROM documents
-),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
-dfreq AS (SELECT term, count(DISTINCT doc_id) AS df_term FROM tok GROUP BY term),
-n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-idf AS (
-    SELECT term,
-           CAST(((SELECT n_docs FROM n) * {idf_scale}) // df_term AS BIGINT)
-               AS idf_q
-    FROM dfreq
-),
-scored AS (
-    SELECT tf.doc_id, tf.term, tf.tf,
-           CAST(tf.tf * idf.idf_q AS BIGINT) AS score
-    FROM tf JOIN idf USING (term)
-),
-ranked AS (
-    SELECT *, row_number() OVER (
-        PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rn
-    FROM scored
-)
-SELECT doc_id, term, tf, score FROM ranked WHERE rn <= {k}"""
-
 
 def vocab_build_oracle(
     min_freq: int = 2,
@@ -819,38 +436,6 @@ UNION ALL
 SELECT CAST(rn - 1 + {n_sp} AS INT) AS token_id, token, n,
        false AS is_special
 FROM ranked WHERE rn <= {max_size}"""
-
-
-# --------------------------------------------------------------------------
-# substring-window dedup (twin of dedup.substring_dup_spans)
-# --------------------------------------------------------------------------
-
-def substring_dup_oracle(window: int = 16) -> str:
-    """Rolling W-token window hashes; first occurrence = lexicographic min
-    (doc, pos), transported through a doc*10^6+pos integer encoding (pos
-    is bounded by doc token count << 10^6)."""
-    return f"""WITH t AS (
-    SELECT CAST(doc_id AS BIGINT) AS id,
-           list_filter(string_split({_NORM}, ' '), x -> x <> '') AS toks
-    FROM documents
-),
-t2 AS (SELECT id, toks FROM t WHERE len(toks) >= {window}),
-w AS (
-    SELECT id, i AS pos,
-           md5(array_to_string(toks[i:i+{window - 1}], ' ')) AS win_hash
-    FROM t2, UNNEST(generate_series(1, len(toks) - {window} + 1)) AS g(i)
-),
-agg AS (
-    SELECT win_hash,
-           count(DISTINCT id) AS n_docs,
-           count(*) AS n_occurrences,
-           min(id * 1000000 + pos) AS enc
-    FROM w GROUP BY win_hash HAVING count(*) > 1
-)
-SELECT win_hash, n_docs, n_occurrences,
-       CAST(enc // 1000000 AS BIGINT) AS first_doc,
-       CAST(enc % 1000000 AS INT) AS first_pos
-FROM agg"""
 
 
 # --------------------------------------------------------------------------
@@ -974,56 +559,6 @@ SELECT domain,
 FROM per_doc GROUP BY domain"""
 
 
-def containment_oracle(thresh: float = 0.4, max_bucket: int = 1000) -> str:
-    """Twin of dedup.containment_pairs (asymmetric containment over the
-    same LSH candidate chain as near_dups_minhash)."""
-    bands = "\n    UNION ALL\n    ".join(
-        f"SELECT id, {b} AS band, '{b}:' || CAST(mh_{b * ROWS_PER_BAND} AS VARCHAR)"
-        f" || ':' || CAST(mh_{b * ROWS_PER_BAND + 1} AS VARCHAR) AS bucket FROM sigs"
-        for b in range(N_BANDS)
-    )
-    return f"""{_DEDUP_BASE},
-hashed AS (SELECT id, {hash60_sql('shingle')} AS h0,
-                  {hash60_sql("'b:' || shingle")} AS h1 FROM shingled),
-sigs AS (
-    SELECT id,
-           {_minhash_aggs()}
-    FROM hashed GROUP BY id
-),
-buckets AS (
-    {bands}
-),
-bcounts AS (SELECT band, bucket, count(*) AS n FROM buckets GROUP BY 1, 2),
-ok AS (
-    SELECT b.* FROM buckets b JOIN bcounts c USING (band, bucket)
-    WHERE c.n <= {max_bucket}
-),
-cand AS (
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b
-    FROM ok a JOIN ok b ON a.band = b.band AND a.bucket = b.bucket
-                        AND a.id < b.id
-),
-sets AS (
-    SELECT id, list_sort(list_distinct(list(shingle))) AS sh,
-           count(*) AS n_sh
-    FROM shingled GROUP BY id
-)
-SELECT id_a, id_b, cont_a_in_b, cont_b_in_a, jaccard FROM (
-    SELECT c.id_a, c.id_b,
-           CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-             / CAST(sa.n_sh AS DOUBLE) AS cont_a_in_b,
-           CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-             / CAST(sb.n_sh AS DOUBLE) AS cont_b_in_a,
-           CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-             / CAST(sa.n_sh + sb.n_sh - len(list_intersect(sa.sh, sb.sh))
-                    AS DOUBLE) AS jaccard
-    FROM cand c
-    JOIN sets sa ON sa.id = c.id_a
-    JOIN sets sb ON sb.id = c.id_b
-)
-WHERE cont_a_in_b >= {thresh} OR cont_b_in_a >= {thresh}"""
-
-
 def lm_score_oracle() -> str:
     """Twin of functions.text.lm_score: integer floor-log2 surprisal
     (length(bin(T div freq)) - 1 — valid because floor(log2(x)) ==
@@ -1076,291 +611,6 @@ SELECT doc_id, n_tok, lm_bits, bits_per_kt,
             WHEN bits_per_kt <= (SELECT t2 FROM thr) THEN 'middle'
             ELSE 'tail' END AS bucket
 FROM s2"""
-
-
-def bpe_pairs_oracle(k: int = 50) -> str:
-    """Twin of functions.text.bpe_pair_counts: word-type frequencies,
-    adjacent 2-char substrings weighted by word freq, (n DESC, pair ASC)
-    row_number cut."""
-    return f"""
-WITH wt AS (SELECT unnest({_DTOKS}) AS w FROM documents),
-wf AS (
-    SELECT w, CAST(count(*) AS BIGINT) AS f
-    FROM wt GROUP BY 1 HAVING length(w) >= 2
-),
-pairs AS (
-    SELECT substring(w, CAST(i AS INT), 2) AS pair, f
-    FROM wf, unnest(generate_series(1, length(w) - 1)) AS t(i)
-),
-pc AS (SELECT pair, CAST(sum(f) AS BIGINT) AS n FROM pairs GROUP BY 1),
-ranked AS (
-    SELECT pair, n,
-           row_number() OVER (ORDER BY n DESC, pair ASC) AS rn
-    FROM pc
-)
-SELECT pair, n, CAST(rn - 1 AS INT) AS rank FROM ranked WHERE rn <= {k}"""
-
-
-def source_mix_oracle() -> str:
-    """Twin of functions.text.source_mix: per-source token totals,
-    floor(sqrt) alpha=1/2 smoothing weight, ppm shares via BIGINT floor
-    division."""
-    return f"""
-WITH per AS (
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len({_DTOKS})) AS BIGINT) AS n_tok
-    FROM documents GROUP BY 1
-),
-pw AS (
-    SELECT *, CAST(floor(sqrt(n_tok)) AS BIGINT) AS weight FROM per
-),
-tot AS (
-    SELECT CAST(sum(n_tok) AS BIGINT) AS t,
-           CAST(sum(weight) AS BIGINT) AS w
-    FROM pw
-)
-SELECT source, n_docs, n_tok,
-       CAST(n_tok * 1000000 // (SELECT t FROM tot) AS BIGINT)
-           AS natural_ppm,
-       weight,
-       CAST(weight * 1000000 // (SELECT w FROM tot) AS BIGINT) AS mix_ppm
-FROM pw"""
-
-
-def intra_dedup_oracle(block: int = 8) -> str:
-    """Twin of dedup.intra_doc_dedup: consecutive block-token windows,
-    keep-first via (doc_id, blk)-partitioned row_number, ordered
-    string_agg reassembly."""
-    return f"""
-WITH t AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, {_DTOKS} AS arr
-    FROM documents WHERE len({_DTOKS}) >= 1
-),
-blocks AS (
-    SELECT doc_id, CAST(i AS INT) AS pos,
-           array_to_string(arr[(i*{block}+1):(i*{block}+{block})], ' ') AS blk
-    FROM t, unnest(range(0, CAST(ceil(len(arr) / {block}.0) AS INT))) AS u(i)
-),
-marked AS (
-    SELECT *, row_number() OVER (PARTITION BY doc_id, blk ORDER BY pos) AS rn
-    FROM blocks
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_blocks,
-       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       coalesce(string_agg(CASE WHEN rn = 1 THEN blk END, ' ' ORDER BY pos),
-                '') AS text_dedup
-FROM marked GROUP BY doc_id"""
-
-
-def pack_sequences_oracle(budget: int = 2048, n_buckets: int = 1024) -> str:
-    """Twin of functions.text.pack_sequences: order-preserving bucketing
-    from one max() fold, bucket-partitioned local cumsum, running prefix
-    over the bucket dim, BIGINT pack arithmetic."""
-    return f"""
-WITH lens AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(len({_DTOKS}) AS BIGINT) AS n_tok
-    FROM documents
-),
-mx AS (SELECT max(doc_id) AS mx FROM lens),
-b AS (
-    SELECT doc_id, n_tok,
-           doc_id // (((SELECT mx FROM mx) + {n_buckets}) // {n_buckets})
-               AS bucket
-    FROM lens
-),
-local AS (
-    SELECT *, CAST(sum(n_tok) OVER (
-        PARTITION BY bucket ORDER BY doc_id) AS BIGINT) AS local_cum
-    FROM b
-),
-totals AS (SELECT bucket, CAST(sum(n_tok) AS BIGINT) AS btot FROM b GROUP BY 1),
-prefix AS (
-    SELECT bucket,
-           CAST(sum(btot) OVER (ORDER BY bucket) - btot AS BIGINT) AS bprefix
-    FROM totals
-),
-j AS (
-    SELECT l.doc_id, l.n_tok,
-           CAST(bprefix + local_cum - l.n_tok AS BIGINT) AS g_offset
-    FROM local l JOIN prefix USING (bucket)
-)
-SELECT doc_id, n_tok, g_offset,
-       CAST(g_offset // {budget} AS BIGINT) AS pack_id,
-       CAST(g_offset % {budget} AS BIGINT) AS pack_offset
-FROM j"""
-
-
-def dsir_weights_oracle(n_buckets: int = 4096) -> str:
-    """Twin of functions.text.dsir_weights: hash60-bucketed token
-    features, add-1 smoothing over the observed-bucket domain, integer
-    floor-log2 surprisal difference (raw - target)."""
-    return f"""
-WITH raw_tok AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, lang = 'en' AS is_tgt,
-           unnest({_DTOKS}) AS term
-    FROM documents
-),
-tok AS (
-    SELECT doc_id, is_tgt,
-           (('0x' || substr(md5(term), 1, 15))::BIGINT) % {n_buckets}
-               AS bucket
-    FROM raw_tok
-),
-tf AS (
-    SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS tf
-    FROM tok GROUP BY 1, 2
-),
-pb AS (
-    SELECT bucket,
-           CAST(count(*) + 1 AS BIGINT) AS c_raw,
-           CAST(sum(CASE WHEN is_tgt THEN 1 ELSE 0 END) + 1 AS BIGINT)
-               AS c_tgt
-    FROM tok GROUP BY 1
-),
-tots AS (
-    SELECT CAST(sum(c_raw) AS BIGINT) AS tr,
-           CAST(sum(c_tgt) AS BIGINT) AS tt
-    FROM pb
-),
-bits AS (
-    SELECT bucket,
-           CAST(length(bin((SELECT tr FROM tots) // c_raw)) - 1 AS BIGINT)
-               AS bits_raw,
-           CAST(length(bin((SELECT tt FROM tots) // c_tgt)) - 1 AS BIGINT)
-               AS bits_tgt
-    FROM pb
-)
-SELECT doc_id,
-       CAST(sum(tf) AS BIGINT) AS n_tok,
-       CAST(sum(tf * (bits_raw - bits_tgt)) AS BIGINT) AS dsir_bits
-FROM tf JOIN bits USING (bucket) GROUP BY 1"""
-
-
-def pmi_pairs_oracle(k: int = 50, min_count: int = 5,
-                     scale: int = 1_000_000) -> str:
-    """Twin of functions.text.pmi_pairs: adjacent-bigram and unigram
-    counts, integer ratio (c_ab * scale) // (c_a * c_b), k-th-threshold
-    cut with (pmi_q DESC, a ASC, b ASC) total order."""
-    return f"""
-WITH t AS (SELECT {_DTOKS} AS arr FROM documents WHERE len({_DTOKS}) >= 2),
-bg AS (
-    SELECT arr[CAST(i AS INT)] AS a, arr[CAST(i AS INT) + 1] AS b
-    FROM t, unnest(generate_series(1, len(arr) - 1)) AS u(i)
-),
-bigrams AS (
-    SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
-    FROM bg GROUP BY 1, 2 HAVING count(*) >= {min_count}
-),
-uni AS (
-    SELECT w, CAST(count(*) AS BIGINT) AS c FROM (
-        SELECT unnest({_DTOKS}) AS w FROM documents
-    ) GROUP BY 1
-),
-scored AS (
-    SELECT g.a, g.b, g.c_ab, ua.c AS c_a, ub.c AS c_b,
-           CAST(g.c_ab * {scale} // (ua.c * ub.c) AS BIGINT) AS pmi_q
-    FROM bigrams g
-    JOIN uni ua ON g.a = ua.w
-    JOIN uni ub ON g.b = ub.w
-),
-ranked AS (
-    SELECT *, row_number() OVER (
-        ORDER BY pmi_q DESC, a ASC, b ASC) AS rn
-    FROM scored
-)
-SELECT a, b, c_ab, c_a, c_b, pmi_q FROM ranked WHERE rn <= {k}"""
-
-
-def shard_manifest_oracle(n_shards: int = 16) -> str:
-    """Twin of functions.text.shard_manifest: hash60(doc_id) % n_shards
-    placement, per-shard doc/char/token totals."""
-    from dygiepp_spark.functions.hashing import hash60_sql
-
-    h = hash60_sql("CAST(doc_id AS VARCHAR)")
-    return f"""
-SELECT {h} % {n_shards} AS shard,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(length(text)) AS BIGINT) AS n_chars,
-       CAST(sum(len(list_filter(string_split(text, ' '), t -> t <> '')))
-            AS BIGINT) AS n_tokens
-FROM documents
-GROUP BY 1"""
-
-
-def source_overlap_oracle() -> str:
-    """Twin of functions.text.source_overlap: fp_0 from the fingerprint
-    chain, deduped (source, fp) pair join, containment ratio."""
-    return f"""
-WITH norm AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-           lower(regexp_replace(text, '\\s+', ' ', 'g')) AS nt
-    FROM documents
-),
-sh AS (
-    SELECT doc_id, source,
-           unnest(list_transform(range(1, greatest(length(nt) - 4, 1) + 1),
-                                 i -> substr(nt, CAST(i AS INT), 5))) AS shingle
-    FROM norm
-),
-hashed AS (SELECT doc_id, source, {hash60_sql('shingle')} AS h FROM sh),
-fps AS (
-    SELECT doc_id, source, min({hash_family_from_sql('h', 0)}) AS fp_0
-    FROM hashed GROUP BY doc_id, source
-),
-sf AS (SELECT DISTINCT source, fp_0 FROM fps),
-per AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM sf GROUP BY 1),
-shared AS (
-    SELECT a.source AS source_a, b.source AS source_b,
-           CAST(count(*) AS BIGINT) AS n_shared
-    FROM sf a JOIN sf b ON a.fp_0 = b.fp_0 AND a.source < b.source
-    GROUP BY 1, 2
-)
-SELECT s.source_a, s.source_b, s.n_shared,
-       pa.n AS n_a, pb.n AS n_b,
-       CAST(s.n_shared AS DOUBLE) / CAST(least(pa.n, pb.n) AS DOUBLE)
-           AS containment
-FROM shared s
-JOIN per pa ON s.source_a = pa.source
-JOIN per pb ON s.source_b = pb.source"""
-
-
-def length_curriculum_oracle() -> str:
-    """Twin of text.length_curriculum: exact tertiles from the
-    integer-domain quantile chain, boundary docs to the lower stage."""
-    q1, q2 = 1 / 3, 2 / 3
-    return f"""WITH lens AS (
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(len(list_filter(regexp_split_to_array(text, '\\s+'),
-                                t -> t <> '')) AS INT) AS n_tok
-    FROM documents
-),
-counts AS (SELECT n_tok, count(*) AS cnt FROM lens GROUP BY n_tok),
-cum AS (
-    SELECT n_tok,
-           sum(cnt) OVER (ORDER BY n_tok ROWS UNBOUNDED PRECEDING) AS cum
-    FROM counts
-),
-total AS (SELECT sum(cnt) AS _n FROM counts),
-qv AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES ({q1!r}), ({q2!r})) AS t(q)),
-quant AS (
-    SELECT q, min(n_tok) AS n_tok
-    FROM cum, total, qv
-    WHERE cum >= floor(q * (_n - 1)) + 1
-    GROUP BY q
-),
-thr AS (
-    SELECT min(CASE WHEN q < 0.5 THEN n_tok END) AS t1,
-           min(CASE WHEN q > 0.5 THEN n_tok END) AS t2
-    FROM quant
-)
-SELECT l.doc_id, l.n_tok,
-       CAST(CASE WHEN l.n_tok <= thr.t1 THEN 0
-                 WHEN l.n_tok <= thr.t2 THEN 1
-                 ELSE 2 END AS INT) AS stage
-FROM lens l, thr"""
 
 
 def bloom_decontam_oracle(
@@ -1429,168 +679,6 @@ LEFT JOIN perdoc p USING (doc_id)
 LEFT JOIN maybe mb USING (doc_id)"""
 
 
-def ngram_coverage_oracle(k: int = 100) -> str:
-    """Twin of text.ngram_coverage: k-th-largest-count threshold with
-    tie inclusion, 1-row coverage fold."""
-    return f"""
-WITH uni AS (
-    SELECT w, CAST(count(*) AS BIGINT) AS c FROM (
-        SELECT unnest({_DTOKS}) AS w FROM documents
-    ) GROUP BY 1
-),
-thr AS (
-    SELECT c AS _thr FROM uni ORDER BY c DESC OFFSET {k - 1} LIMIT 1
-),
-thr2 AS (
-    -- fewer than k types: threshold falls back to the minimum count
-    SELECT COALESCE((SELECT _thr FROM thr), (SELECT min(c) FROM uni)) AS _thr
-)
-SELECT CAST(sum(CASE WHEN c >= _thr THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_top_types,
-       CAST(COALESCE(sum(CASE WHEN c >= _thr THEN c END), 0) AS BIGINT)
-           AS covered,
-       CAST(sum(c) AS BIGINT) AS total,
-       CAST(COALESCE(sum(CASE WHEN c >= _thr THEN c END), 0) AS DOUBLE)
-           / CAST(greatest(sum(c), 1) AS DOUBLE) AS coverage
-FROM uni, thr2"""
-
-
-def dedup_rate_by_source_oracle() -> str:
-    """Twin of compaction.dedup_rate_by_source: the full dedup_groups
-    recursive chain wrapped as a CTE, chunk -> doc -> source rollup."""
-    base = dedup_groups_oracle()
-    return f"""WITH comp AS (
-{base}
-),
-src AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source FROM documents),
-j AS (SELECT id // 2 AS doc_id, is_keeper FROM comp),
-per AS (
-    SELECT s.source,
-           CAST(count(*) AS BIGINT) AS n_chunks,
-           CAST(sum(CASE WHEN NOT j.is_keeper THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dropped
-    FROM j JOIN src s ON j.doc_id = s.doc_id
-    GROUP BY 1
-),
-allsrc AS (SELECT DISTINCT source FROM documents)
-SELECT a.source,
-       COALESCE(p.n_chunks, 0) AS n_chunks,
-       COALESCE(p.n_dropped, 0) AS n_dropped,
-       CAST(COALESCE(p.n_dropped, 0) AS DOUBLE)
-           / CAST(greatest(COALESCE(p.n_chunks, 0), 1) AS DOUBLE)
-           AS drop_rate
-FROM allsrc a LEFT JOIN per p ON a.source = p.source"""
-
-
-def minhash_error_hist_oracle(
-    thresh: float = 0.25, max_bucket: int = 1000
-) -> str:
-    """Twin of dedup.minhash_error_hist: the SHARED near-dup CTE chain
-    (_minhash_pairs_ctes — same pair set as production by construction)
-    plus a 32-component signature-agreement estimate per verified pair."""
-    match_sum = " + ".join(
-        f"CASE WHEN sa.mh_{i} = sb.mh_{i} THEN 1 ELSE 0 END"
-        for i in range(N_HASHES)
-    )
-    return f"""{_minhash_pairs_ctes(thresh, max_bucket)},
-est AS (
-    SELECT v.id_a, v.id_b, v.jaccard,
-           CAST({match_sum} AS DOUBLE) / {float(N_HASHES)} AS est
-    FROM ver v
-    JOIN sigs sa ON sa.id = v.id_a
-    JOIN sigs sb ON sb.id = v.id_b
-)
-SELECT least(CAST(floor(abs(est - jaccard) * 10) AS BIGINT),
-             CAST(9 AS BIGINT)) AS err_bin,
-       CAST(count(*) AS BIGINT) AS n_pairs
-FROM est GROUP BY 1"""
-
-
-def pack_efficiency_oracle(budget: int = 2048, n_buckets: int = 1024) -> str:
-    """Twin of functions.text.pack_efficiency: the pack_sequences chain
-    wrapped as a CTE, per-pack rollup, 1-row utilization fold."""
-    base = pack_sequences_oracle(budget=budget, n_buckets=n_buckets)
-    return f"""WITH packed AS (
-{base}
-),
-per AS (
-    SELECT pack_id, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tok) AS BIGINT) AS toks
-    FROM packed GROUP BY 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_packs,
-       CAST(sum(n_docs) AS BIGINT) AS n_docs,
-       CAST(sum(toks) AS BIGINT) AS total_tokens,
-       CAST(sum(n_docs) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           AS mean_docs_per_pack,
-       CAST(sum(toks) AS DOUBLE)
-           / CAST(count(*) * {budget} AS DOUBLE) AS mean_fill
-FROM per"""
-
-
-def source_language_mix_oracle() -> str:
-    """Twin of text.source_language_mix over the langid chain."""
-    langs = list(LANG_STOPWORDS)
-    ltoks = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-    hits = ",\n       ".join(
-        f"len(list_filter(ltoks, t -> t IN ({', '.join(repr(w) for w in ws)}))) AS h_{lg}"
-        for lg, ws in LANG_STOPWORDS.items()
-    )
-    best = "greatest(" + ", ".join(f"h_{lg}" for lg in langs) + ")"
-    case = " ".join(f"WHEN h_{lg} = m THEN '{lg}'" for lg in langs)
-    return f"""
-WITH lt AS (SELECT source, {ltoks} AS ltoks FROM documents),
-hits AS (
-    SELECT source,
-       {hits}
-    FROM lt
-),
-withmax AS (SELECT *, {best} AS m FROM hits),
-pred AS (
-    SELECT source,
-           CASE WHEN m > 0 THEN (CASE {case} END) ELSE 'und' END AS pred_lang
-    FROM withmax
-),
-per AS (
-    SELECT source, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
-    FROM pred GROUP BY 1, 2
-),
-tot AS (SELECT source, CAST(sum(n_docs) AS BIGINT) AS _t FROM per GROUP BY 1)
-SELECT p.source, p.pred_lang, p.n_docs,
-       CAST(p.n_docs AS DOUBLE) / CAST(t._t AS DOUBLE) AS share
-FROM per p JOIN tot t ON p.source = t.source"""
-
-
-def quality_decile_yield_oracle() -> str:
-    """Twin of text.quality_decile_yield: the quality and filter chains
-    nested as CTEs, decile join, keep-rate fold."""
-    return f"""WITH q AS (
-{quality_oracle()}
-),
-f AS (
-{quality_filter_oracle()}
-)
-SELECT least(CAST(floor(q.quality * 10) AS BIGINT), CAST(9 AS BIGINT))
-           AS q_bin,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN f.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(sum(CASE WHEN f.keep THEN 1 ELSE 0 END) AS DOUBLE)
-           / CAST(count(*) AS DOUBLE) AS keep_rate
-FROM q JOIN f ON q.doc_id = f.doc_id
-GROUP BY 1"""
-
-
-def simhash_hamming_hist_oracle(bits: int = SIMHASH_BITS) -> str:
-    """Twin of dedup.simhash_hamming_hist: the simhash pair chain with
-    the cut lifted to the full bit width, rolled to a histogram."""
-    base = near_dups_simhash_oracle(max_hamming=bits)
-    return f"""WITH p AS (
-{base}
-)
-SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs
-FROM p GROUP BY 1"""
-
-
 def decontam_rate_by_source_oracle(n: int = 3, mod: int = 97) -> str:
     """Twin of decontam.decontam_rate_by_source: the decontam chain
     nested as a CTE, source rollup."""
@@ -1609,31 +697,4 @@ SELECT s.source,
        CAST(sum(CASE WHEN r.contaminated THEN 1 ELSE 0 END) AS DOUBLE)
            / CAST(count(*) AS DOUBLE) AS contam_rate
 FROM rep r JOIN src s ON r.doc_id = s.doc_id
-GROUP BY 1"""
-
-
-def coverage_curve_oracle(ks: tuple[int, ...] = (1, 5, 10, 20)) -> str:
-    """Twin of text.coverage_curve: the per-k ngram_coverage oracle
-    nested per union arm (the oracle re-derives uni per arm — the
-    Spark side shares one pinned scan; outputs identical)."""
-    arms = "\nUNION ALL\n".join(
-        f"SELECT CAST({k} AS BIGINT) AS k, * FROM (\n{ngram_coverage_oracle(k)}\n)"
-        for k in ks
-    )
-    return arms
-
-
-def filter_rate_by_source_oracle() -> str:
-    """Twin of text.filter_rate_by_source: the filter chain nested as a
-    CTE, source rollup."""
-    return f"""WITH f AS (
-{quality_filter_oracle()}
-),
-src AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, source FROM documents)
-SELECT s.source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN f.keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(sum(CASE WHEN f.keep THEN 1 ELSE 0 END) AS DOUBLE)
-           / CAST(count(*) AS DOUBLE) AS keep_rate
-FROM f JOIN src s ON f.doc_id = s.doc_id
 GROUP BY 1"""

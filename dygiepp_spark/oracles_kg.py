@@ -2026,8 +2026,8 @@ l0 AS MATERIALIZED (SELECT DISTINCT lo AS node_id, lo AS label FROM sym),
 
 def kg_components_oracle() -> str:
     """Twin of graph.kg_components: every node's smallest reachable id by
-    the recursive reachability CTE of oracles_data.dedup_groups_oracle,
-    an independent formulation of the pointer-doubling loop."""
+    a recursive reachability CTE, an independent formulation of the
+    pointer-doubling loop."""
     return f"""WITH RECURSIVE kg AS MATERIALIZED (
 {_KG_SYM}
 SELECT lo, hi FROM sym

@@ -1,6 +1,6 @@
 """Unit tests for the corpus-curation layer added in round 3 part 2:
-dedup-group compaction, composite quality filter, URL hygiene, and the
-resize / audio-chunk multimodal kernels."""
+composite quality filter, URL hygiene, and the resize / audio-chunk
+multimodal kernels."""
 
 from __future__ import annotations
 
@@ -8,47 +8,7 @@ import pyspark.sql.functions as F
 
 from dygiepp_spark.functions import text as TX
 from dygiepp_spark.functions import web as WB
-from dygiepp_spark.operators import compaction as CP
 from dygiepp_spark.operators import multimodal as MM
-
-
-# --------------------------------------------------------------------------
-# compaction
-# --------------------------------------------------------------------------
-
-def test_near_dup_groups_chain_merges_transitively(spark):
-    # a-b and b-c pairs must land in ONE group even though (a, c) was
-    # never emitted as a pair; d is a singleton
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "id_a bigint, id_b bigint"
-    )
-    nodes = spark.createDataFrame([(1,), (2,), (3,), (4,)], "id bigint")
-    got = {
-        (r["id"], r["group_id"])
-        for r in CP.near_dup_groups(pairs, nodes).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 4)}
-
-
-def test_near_dup_groups_long_path_converges_log_rounds(spark):
-    # a 12-node path graph needs label distance 11; pointer doubling must
-    # close it within the default max_iter
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "id_a bigint, id_b bigint"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(13)], "id bigint")
-    out = CP.near_dup_groups(pairs, nodes).collect()
-    assert {r["group_id"] for r in out} == {0}
-
-
-def test_compact_corpus_keeper_is_min_id(spark):
-    groups = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (7, 7)], "id bigint, group_id bigint"
-    )
-    rows = {r["id"]: r for r in CP.compact_corpus(groups).collect()}
-    assert rows[1]["is_keeper"] and rows[7]["is_keeper"]
-    assert not rows[2]["is_keeper"] and not rows[3]["is_keeper"]
-    assert rows[2]["group_size"] == 3 and rows[7]["group_size"] == 1
 
 
 # --------------------------------------------------------------------------
@@ -140,106 +100,3 @@ def test_audio_chunks_window_math(spark):
     rows = sorted(MM.audio_chunks(docs).collect(), key=lambda r: r["chunk_ix"])
     assert [r["n_samples"] for r in rows] == [64, 64, 2]
     assert all(r["abs_energy"] == abs(ord("q") - 128) * r["n_samples"] for r in rows)
-
-
-# --------------------------------------------------------------------------
-# property test: distributed CC == sequential union-find on random graphs
-# --------------------------------------------------------------------------
-
-def _union_find_groups(n_nodes, pairs):
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # canonical label = min node id in the component
-    comp = {}
-    for x in range(n_nodes):
-        comp.setdefault(find(x), []).append(x)
-    out = {}
-    for members in comp.values():
-        g = min(members)
-        for m in members:
-            out[m] = g
-    return out
-
-
-def test_near_dup_groups_matches_union_find_on_random_graphs(spark):
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=5, deadline=None)
-    @given(
-        st.integers(min_value=2, max_value=24).flatmap(
-            lambda n: st.tuples(
-                st.just(n),
-                st.lists(
-                    st.tuples(
-                        st.integers(0, n - 1), st.integers(0, n - 1)
-                    ).filter(lambda p: p[0] != p[1]),
-                    max_size=30,
-                ),
-            )
-        )
-    )
-    def check(case):
-        n, raw = case
-        pairs = sorted({(min(a, b), max(a, b)) for a, b in raw})
-        want = _union_find_groups(n, pairs)
-        pdf = spark.createDataFrame(
-            pairs or [(0, 1)], "id_a bigint, id_b bigint"
-        )
-        if not pairs:
-            pdf = pdf.limit(0)
-        nodes = spark.createDataFrame([(i,) for i in range(n)], "id bigint")
-        from dygiepp_spark.operators import compaction as CP
-
-        got = {
-            r["id"]: r["group_id"]
-            for r in CP.near_dup_groups(pdf, nodes).collect()
-        }
-        assert got == want
-
-    check()
-
-
-def test_tfidf_topk_ranks_rare_terms_above_common(spark):
-    """A term appearing in every doc has minimal idf; a doc's unique term
-    outranks it even at lower tf. Tiebreak is (score desc, term asc)."""
-    from dygiepp_spark.functions.text import tfidf_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "common common common unique_a common"),
-            (2, "common zebra"),
-            (3, "common apple apple"),
-        ],
-        "doc_id long, text string",
-    )
-    out = tfidf_topk(docs, k=1)
-    top = {r["doc_id"]: (r["term"], r["tf"], r["score"]) for r in out.collect()}
-    # doc 1: common tf=4 * idf(3/3)=1_000_000 -> 4_000_000;
-    #        unique_a tf=1 * idf(3/1)=3_000_000 -> 3_000_000 — common wins
-    assert top[1] == ("common", 4, 4_000_000)
-    # doc 2: zebra 1*3_000_000 beats common 1*1_000_000
-    assert top[2] == ("zebra", 1, 3_000_000)
-    # doc 3: apple 2*3_000_000 beats common 1*1_000_000
-    assert top[3] == ("apple", 2, 6_000_000)
-
-
-def test_tfidf_topk_k_cut_and_tiebreak(spark):
-    from dygiepp_spark.functions.text import tfidf_topk
-
-    docs = spark.createDataFrame(
-        [(1, "b a c"), (2, "x")], "doc_id long, text string"
-    )
-    out = tfidf_topk(docs, k=2).filter(F.col("doc_id") == 1).collect()
-    # a, b, c all tf=1, idf=(2*1M)//1 -> same score; term-asc tiebreak
-    assert [r["term"] for r in sorted(out, key=lambda r: r["term"])] == ["a", "b"]

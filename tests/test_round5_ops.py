@@ -280,69 +280,6 @@ def test_domain_stats_repeat_citer_counts_tokens_once(spark):
 # ------------------------------------------------- late-round-5 operators
 
 
-def test_bpe_train_matches_pure_python_reference(spark):
-    """The distributed BPE trainer must learn the exact merge sequence of
-    a pure-Python subword-nmt-style reference (freq-desc, pair-asc ties,
-    left-to-right greedy application) on the same corpus."""
-    from dygiepp_spark.functions.text import bpe_train
-
-    corpus = [
-        "low low low low low",
-        "lower lower newest newest newest newest",
-        "newest newest widest widest widest",
-        "low lower newest widest",
-    ]
-
-    def py_bpe(texts, n_merges):
-        from collections import Counter
-
-        wf = Counter()
-        for t in texts:
-            for w in t.split():
-                wf[tuple(w)] += 1
-        merges = []
-        for _ in range(n_merges):
-            pairs = Counter()
-            for sym, f in wf.items():
-                for i in range(len(sym) - 1):
-                    pairs[(sym[i], sym[i + 1])] += f
-            if not pairs:
-                break
-            # max count, ties -> smallest "a b" string (the engine order)
-            best = min(pairs.items(), key=lambda kv: (-kv[1], f"{kv[0][0]} {kv[0][1]}"))[0]
-            merges.append(best)
-            new_wf = Counter()
-            for sym, f in wf.items():
-                out, i = [], 0
-                while i < len(sym):
-                    if (
-                        i < len(sym) - 1
-                        and (sym[i], sym[i + 1]) == best
-                    ):
-                        out.append(sym[i] + sym[i + 1])
-                        i += 2
-                    else:
-                        out.append(sym[i])
-                        i += 1
-                new_wf[tuple(out)] += f
-            wf = new_wf
-        return merges
-
-    df = spark.createDataFrame([(t,) for t in corpus], "text string")
-    got = bpe_train(df, n_merges=6)
-    want = py_bpe(corpus, 6)
-    assert got == want, f"{got} != {want}"
-
-
-def test_bpe_pair_counts_weights_by_word_freq(spark):
-    from dygiepp_spark.functions.text import bpe_pair_counts
-
-    # "ab ab ab cd" -> pair 'ab' n=3, 'cd' n=1; single-char words ignored
-    df = spark.createDataFrame([("ab ab ab cd x",)], "text string")
-    rows = {r["pair"]: (r["n"], r["rank"]) for r in bpe_pair_counts(df, k=5).collect()}
-    assert rows == {"ab": (3, 0), "cd": (1, 1)}
-
-
 def test_lpa_finds_two_communities(spark):
     """Two triangles joined by one bridge edge: LPA with min-label ties
     must converge to one label per triangle (the bridge can't outvote
@@ -383,58 +320,6 @@ def test_lm_score_buckets_order_by_surprisal(spark):
     )
 
 
-def test_source_mix_flattens_toward_small_sources(spark):
-    """alpha=1/2 smoothing must give the minority source a mix share
-    ABOVE its natural share and the majority source one below."""
-    from dygiepp_spark.functions.text import source_mix
-
-    rows = [(i, "w " * 100, "big") for i in range(9)] + [(99, "w " * 100, "small")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-    out = {r["source"]: r for r in source_mix(df).collect()}
-    assert out["small"]["mix_ppm"] > out["small"]["natural_ppm"]
-    assert out["big"]["mix_ppm"] < out["big"]["natural_ppm"]
-    assert out["big"]["n_tok"] == 900 and out["small"]["n_tok"] == 100
-
-
-def test_intra_doc_dedup_strips_repeated_blocks(spark):
-    from dygiepp_spark.operators.dedup import intra_doc_dedup
-
-    blk_a = "a1 a2 a3 a4 a5 a6 a7 a8"
-    blk_b = "b1 b2 b3 b4 b5 b6 b7 b8"
-    text = " ".join([blk_a, blk_b, blk_a, blk_a])  # a repeated 3x
-    df = spark.createDataFrame([(7, text)], "doc_id bigint, text string")
-    r = intra_doc_dedup(df, block=8).collect()[0]
-    assert (r["n_blocks"], r["n_kept"]) == (4, 2)
-    assert r["text_dedup"] == f"{blk_a} {blk_b}"
-
-
-def test_pack_sequences_offsets_are_end_to_end(spark):
-    from dygiepp_spark.functions.text import pack_sequences
-
-    rows = [(0, "w " * 10), (1, "w " * 5), (2, "w " * 7), (3, "w " * 3)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {r["doc_id"]: r for r in pack_sequences(df, budget=12).collect()}
-    assert [out[i]["g_offset"] for i in range(4)] == [0, 10, 15, 22]
-    assert [out[i]["pack_id"] for i in range(4)] == [0, 0, 1, 1]
-    assert [out[i]["pack_offset"] for i in range(4)] == [0, 10, 3, 10]
-
-
-def test_dsir_prefers_target_like_docs(spark):
-    """Docs sharing the target (en) vocabulary must score ABOVE docs in
-    the off-target vocabulary — the selection ordering DSIR promises."""
-    from dygiepp_spark.functions.text import dsir_weights
-
-    en = [(i, "alpha beta gamma delta " * 5, "en") for i in range(8)]
-    fr = [(100 + i, "rouge bleu vert jaune " * 5, "fr") for i in range(2)]
-    probe_en = [(200, "alpha beta gamma delta", "fr")]  # en-vocab, fr-labeled
-    df = spark.createDataFrame(
-        en + fr + probe_en, "doc_id bigint, text string, lang string"
-    )
-    out = {r["doc_id"]: r["dsir_bits"] for r in dsir_weights(df).collect()}
-    assert out[200] > out[100], "target-vocab doc must outrank off-target"
-    assert out[0] > out[100]
-
-
 def test_kg_components_two_islands(spark):
     from dygiepp_spark.operators.graph import kg_components
 
@@ -449,53 +334,14 @@ def test_kg_components_two_islands(spark):
     assert all(out[n] == "b1" for n in ("b1", "b2", "b3"))
 
 
-def test_bpe_apply_matches_python_applier(spark):
-    """bpe_train + bpe_apply must reproduce the pure-Python greedy
-    left-to-right merge application word by word."""
-    from dygiepp_spark.functions.text import bpe_apply, bpe_train
+def test_kg_components_long_path_converges_log_rounds(spark):
+    # a 13-node path needs label distance 12; pointer doubling must close
+    # it within COMPONENTS_MAX_ROUNDS
+    from dygiepp_spark.operators.graph import kg_components
 
-    corpus = [
-        "low low lower lowest newest newest",
-        "widest newest low wide wider",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id bigint, text string"
-    )
-    merges = bpe_train(df, n_merges=5)
-    assert merges
-
-    def apply_word(w):
-        sym = list(w)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(sym):
-                if i < len(sym) - 1 and (sym[i], sym[i + 1]) == (a, b):
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            sym = out
-        return sym
-
-    got = {r["doc_id"]: r for r in bpe_apply(df, merges).collect()}
-    for i, t in enumerate(corpus):
-        want = [p for w in t.split() for p in apply_word(w)]
-        assert got[i]["subwords"] == want
-        assert got[i]["n_subwords"] == len(want)
-        assert got[i]["n_tok"] == len(t.split())
-
-
-def test_pmi_ranks_collocations_over_chance_pairs(spark):
-    from dygiepp_spark.functions.text import pmi_pairs
-
-    # "new york" always adjacent; "the" ubiquitous, so ("the", x) pairs
-    # have high counts but low PMI
-    text = " ".join(["new york is the city the place the spot"] * 10)
-    df = spark.createDataFrame([(text,)], "text string")
-    out = pmi_pairs(df, k=3, min_count=2).collect()
-    assert (out[0]["a"], out[0]["b"]) == ("new", "york")
-    assert out[0]["pmi_q"] == max(r["pmi_q"] for r in out)
+    out = kg_components(_path_edges(spark, 13)).collect()
+    assert len(out) == 13
+    assert {r["label"] for r in out} == {"n00"}
 
 
 def test_degree_hist_star_graph(spark):
@@ -508,20 +354,6 @@ def test_degree_hist_star_graph(spark):
     )
     out = {r["deg"]: (r["n_nodes"], r["log2_bin"]) for r in degree_hist(edges).collect()}
     assert out == {5: (1, 2), 1: (5, 0)}
-
-
-def test_bpe_handles_regex_quote_terminator_symbols(spark):
-    """Symbols containing the literal '\\E' must not terminate the
-    \\Q...\\E quoting (Pattern.quote semantics) — previously a crash."""
-    from dygiepp_spark.functions.text import bpe_apply, bpe_train
-
-    df = spark.createDataFrame(
-        [(0, "\\Ea \\Eb \\Ec \\Ea \\Eb \\Ea")], "doc_id bigint, text string"
-    )
-    merges = bpe_train(df, n_merges=3)
-    assert ("\\", "E") in merges
-    out = bpe_apply(df, merges).collect()[0]
-    assert out["subwords"][0] == "\\Ea"
 
 
 def test_accept_rate_filtered_all_stopword_args_never_match(spark):
@@ -748,19 +580,6 @@ def test_mention_contexts_windows_and_normalization(spark):
     assert r["right_ctx"] == ". beta gamma"  # '/.' normalized
 
 
-def test_shard_manifest_is_exhaustive_and_deterministic(spark, sf_dir):
-    from dygiepp_spark.functions.text import shard_manifest
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    m = shard_manifest(docs, n_shards=8).collect()
-    assert sum(r["n_docs"] for r in m) == docs.count()
-    assert {r["shard"] for r in m} <= set(range(8))
-    # placement is a pure function of doc_id: a repartitioned rerun
-    # produces the identical manifest
-    again = shard_manifest(docs.repartition(13), n_shards=8).collect()
-    assert sorted(map(tuple, m)) == sorted(map(tuple, again))
-
-
 def test_predicate_reciprocity_same_pred_only(spark):
     from dygiepp_spark.operators.graph import predicate_reciprocity
 
@@ -784,30 +603,6 @@ def test_predicate_reciprocity_same_pred_only(spark):
     }
 
 
-def test_source_overlap_shared_fingerprints_and_containment(spark):
-    from dygiepp_spark.functions.text import source_overlap
-
-    docs = spark.createDataFrame(
-        [
-            # s1 doc 1 is copied verbatim into s2 (identical fingerprint);
-            # s1 doc 2 and s2 doc 4 are unrelated; s3 has one unique doc
-            (1, "the quick brown fox jumps over the lazy dog", "en", "s1", 0),
-            (2, "completely different text body number two here", "en", "s1", 0),
-            (3, "the quick brown fox jumps over the lazy dog", "en", "s2", 0),
-            # shingle-DISJOINT from every other doc (fp_0 is a min over
-            # shared 5-grams, so any common shingle can collide sources)
-            (4, "zzzzz yyyyy xxxxx wwwww vvvvv uuuuu", "en", "s2", 0),
-            (5, "11111 22222 33333 44444 55555 66666", "en", "s3", 0),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars int",
-    )
-    out = {(r["source_a"], r["source_b"]): (r["n_shared"], r["n_a"], r["n_b"],
-                                            r["containment"])
-           for r in source_overlap(docs).collect()}
-    assert out[("s1", "s2")] == (1, 2, 2, 0.5)
-    assert ("s1", "s3") not in out and ("s2", "s3") not in out
-
-
 def test_kg_novelty_ownership_and_ratios(spark):
     from dygiepp_spark.operators.graph import kg_novelty
 
@@ -827,19 +622,6 @@ def test_kg_novelty_ownership_and_ratios(spark):
         "c1": (2, 1, 1, 1.0),   # owns T1 (lexicographically first)
         "c2": (2, 2, 1, 0.5),   # touches T1+T2, owns only T2
     }
-
-
-def test_length_curriculum_tertile_partition(spark):
-    from dygiepp_spark.functions.text import length_curriculum
-
-    # lengths 1..9: tertiles at rank floor(q*(N-1))+1 -> t1=3, t2=6
-    docs = spark.createDataFrame(
-        [(i, " ".join(["w"] * i), "en", "s", 0) for i in range(1, 10)],
-        "doc_id long, text string, lang string, source string, n_chars int",
-    )
-    out = {r["doc_id"]: r["stage"]
-           for r in length_curriculum(docs).collect()}
-    assert out == {1: 0, 2: 0, 3: 0, 4: 1, 5: 1, 6: 1, 7: 2, 8: 2, 9: 2}
 
 
 def test_bloom_decontam_never_misses_exact_hits(spark, sf_dir):
@@ -876,22 +658,6 @@ def test_turn_length_drift_exact_means(spark):
     assert out == {0: (2, 2.0), 1: (1, 2.0)}
 
 
-def test_ngram_coverage_tie_inclusive_cut(spark):
-    from dygiepp_spark.functions.text import ngram_coverage
-
-    # counts: a=4, b=2, c=2, d=1 -> k=2 threshold is 2, ties included
-    docs = spark.createDataFrame(
-        [(1, "a a a a b b c c d", "en", "s", 0)],
-        "doc_id long, text string, lang string, source string, n_chars int",
-    )
-    r = ngram_coverage(docs, k=2).collect()[0]
-    assert (r["n_top_types"], r["covered"], r["total"]) == (3, 8, 9)
-    assert r["coverage"] == 8 / 9
-    # k beyond the vocabulary: everything covered
-    r2 = ngram_coverage(docs, k=50).collect()[0]
-    assert (r2["n_top_types"], r2["coverage"]) == (4, 1.0)
-
-
 def test_ntriples_roundtrip_preserves_edge_set(spark, tmp_path):
     from dygiepp_spark.sources.jsonl import (
         read_edges_ntriples, write_edges_ntriples,
@@ -909,26 +675,6 @@ def test_ntriples_roundtrip_preserves_edge_set(spark, tmp_path):
     assert len(lines) == 2  # occurrences deduped to the distinct set
     back = {tuple(r) for r in read_edges_ntriples(spark, path).collect()}
     assert back == {("S:a", "uses", "E1"), ("E2", "made_by", "S:b")}
-
-
-def test_dedup_rate_by_source_counts_align_with_compaction(spark, sf_dir):
-    from dygiepp_spark.operators import compaction as CP
-    from dygiepp_spark.operators.dedup import doc_chunks, near_dups_minhash
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = CP.dedup_rate_by_source(docs).collect()
-    assert out
-    # chunk totals must add up to 2 chunks per doc, drops to the
-    # non-keeper count of the underlying compaction
-    chunks = doc_chunks(docs)
-    pairs = near_dups_minhash(chunks).select("id_a", "id_b")
-    nodes = chunks.select(F.col("chunk_id").alias("id"))
-    comp = CP.compact_corpus(CP.near_dup_groups(pairs, nodes))
-    assert sum(r["n_chunks"] for r in out) == 2 * docs.count()
-    assert (sum(r["n_dropped"] for r in out)
-            == comp.filter(~F.col("is_keeper")).count())
-    for r in out:
-        assert 0.0 <= r["drop_rate"] <= 1.0
 
 
 def test_cluster_size_hist_counts(spark):
@@ -970,59 +716,6 @@ def test_gap_hist_bins_and_zero_gap(spark):
     }
 
 
-def test_minhash_error_hist_mass_matches_verified_pairs(spark, sf_dir):
-    from dygiepp_spark.operators.dedup import (
-        doc_chunks, minhash_error_hist, near_dups_minhash,
-    )
-
-    chunks = doc_chunks(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-    )
-    hist = minhash_error_hist(chunks).collect()
-    assert hist
-    # every verified pair lands in exactly one bin, bins are deciles
-    assert sum(r["n_pairs"] for r in hist) == near_dups_minhash(chunks).count()
-    assert all(0 <= r["err_bin"] <= 9 for r in hist)
-    # a sane 16x2 configuration concentrates mass at small error
-    low = sum(r["n_pairs"] for r in hist if r["err_bin"] <= 2)
-    assert low >= 0.5 * sum(r["n_pairs"] for r in hist)
-
-
-def test_pack_efficiency_accounts_every_doc_and_token(spark, sf_dir):
-    from dygiepp_spark.functions.text import (
-        pack_efficiency, pack_sequences, word_token_count,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    r = pack_efficiency(docs, budget=2048).collect()[0]
-    assert r["n_docs"] == docs.count()
-    total = word_token_count(docs).agg(F.sum("n_tokens")).collect()[0][0]
-    assert r["total_tokens"] == total
-    # packs are contiguous budget windows over the running offset, so
-    # every pack except possibly the last is start-attributed near full
-    assert r["n_packs"] == pack_sequences(docs, budget=2048).agg(
-        F.count_distinct("pack_id")).collect()[0][0]
-    # start-attribution means a doc longer than the budget inflates its
-    # start pack's fill — only positivity is an invariant
-    assert r["mean_fill"] > 0
-
-
-def test_source_language_mix_shares(spark):
-    from dygiepp_spark.functions.text import source_language_mix
-
-    docs = spark.createDataFrame(
-        [(1, "the of and is a", "en", "s1", 0),
-         (2, "el la de y es", "es", "s1", 0),
-         (3, "qq ww ee", "en", "s2", 0)],  # no stopword hits -> und
-        "doc_id long, text string, lang string, source string, n_chars int",
-    )
-    out = {(r["source"], r["pred_lang"]): (r["n_docs"], r["share"])
-           for r in source_language_mix(docs).collect()}
-    assert out[("s1", "en")] == (1, 0.5)
-    assert out[("s1", "es")] == (1, 0.5)
-    assert out[("s2", "und")] == (1, 1.0)
-
-
 def test_role_vocab_divergence_ppm_and_floor(spark):
     from dygiepp_spark.operators.transcript import role_vocab_divergence
 
@@ -1036,35 +729,6 @@ def test_role_vocab_divergence_ppm_and_floor(spark):
     # x: 3 user + 1 assistant = 4 total -> 1e6 div 4 = 250000
     # y: 0 + 5 -> 1000000; min_count=4 keeps both
     assert out == {"x": (3, 1, 250000), "y": (0, 5, 1000000)}
-
-
-def test_quality_decile_yield_conserves_and_bins(spark, sf_dir):
-    from dygiepp_spark.functions.text import (
-        composite_filter, quality_decile_yield,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-    )
-    out = quality_decile_yield(docs).collect()
-    assert sum(r["n_docs"] for r in out) == docs.count()
-    kept = composite_filter(docs).filter(F.col("keep")).count()
-    assert sum(r["n_kept"] for r in out) == kept
-    assert all(0 <= r["q_bin"] <= 9 for r in out)
-
-
-def test_simhash_hamming_hist_mass_and_threshold_cut(spark, sf_dir):
-    from dygiepp_spark.operators.dedup import (
-        doc_chunks, near_dups_simhash, simhash_hamming_hist,
-    )
-
-    chunks = doc_chunks(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    hist = {r["hamming"]: r["n_pairs"]
-            for r in simhash_hamming_hist(chunks).collect()}
-    assert hist
-    # the <= 6 cut of the histogram equals the production pair count
-    cut = sum(n for h, n in hist.items() if h <= 6)
-    assert cut == near_dups_simhash(chunks, max_hamming=6).count()
 
 
 def test_decontam_rate_by_source_ties_to_doc_verdicts(spark, sf_dir):
@@ -1136,36 +800,3 @@ def test_provenance_integrity_detects_each_corruption_class(spark):
     r = provenance_integrity(edges).collect()[0]
     assert (r["n_edges"], r["n_malformed"], r["n_mismatched"],
             r["n_span_violations"]) == (4, 1, 1, 1)
-
-
-def test_coverage_curve_monotone_and_matches_single_k(spark, sf_dir):
-    from dygiepp_spark.functions.text import coverage_curve, ngram_coverage
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    curve = {r["k"]: (r["n_top_types"], r["covered"], r["total"],
-                      r["coverage"])
-             for r in coverage_curve(docs, ks=(1, 5, 10)).collect()}
-    assert list(curve) and len(curve) == 3
-    # coverage is monotone non-decreasing in k; totals constant
-    assert curve[1][3] <= curve[5][3] <= curve[10][3]
-    assert curve[1][2] == curve[5][2] == curve[10][2]
-    # each row equals the standalone single-k operator
-    single = ngram_coverage(docs, k=5).collect()[0]
-    assert curve[5] == (single["n_top_types"], single["covered"],
-                        single["total"], single["coverage"])
-
-
-def test_filter_rate_by_source_conserves_verdicts(spark, sf_dir):
-    from dygiepp_spark.functions.text import (
-        composite_filter, filter_rate_by_source,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "text", "source"
-    )
-    out = filter_rate_by_source(docs).collect()
-    assert sum(r["n_docs"] for r in out) == docs.count()
-    kept = composite_filter(docs.select("doc_id", "text")).filter(
-        F.col("keep")
-    ).count()
-    assert sum(r["n_kept"] for r in out) == kept
