@@ -688,6 +688,28 @@ def q_repetition(spark, sf_dir):
     return TX.repetition_features(_doc_text(spark, sf_dir))
 
 
+def q_stratified_sample(spark, sf_dir):
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"), "lang"
+    )
+    return TX.stratified_sample(
+        docs, rates={"en": 0.5, "de": 0.25}, default_rate=0.1
+    )
+
+
+def q_token_counts(spark, sf_dir):
+    df = TX.bpe_ish_token_count(TX.word_token_count(_doc_text(spark, sf_dir)))
+    return df.select("doc_id", "n_tokens", "n_bpe_tokens")
+
+
+def q_langid(spark, sf_dir):
+    return TX.langid(_doc_text(spark, sf_dir)).select("doc_id", "pred_lang")
+
+
+def q_fingerprint(spark, sf_dir):
+    return TX.fingerprint(_doc_text(spark, sf_dir))
+
+
 # --------------------------------------------------------------------------
 # multimodal (binary payload plumbing via mapInPandas)
 # --------------------------------------------------------------------------
@@ -989,6 +1011,10 @@ def q_pagerank(spark, sf_dir):
     )
 
 
+def q_substring_dedup(spark, sf_dir):
+    return DD.substring_dup_spans(_docs(spark, sf_dir))
+
+
 def q_turn_taking(spark, sf_dir):
     from dygiepp_spark.operators import transcript as TR
 
@@ -1163,6 +1189,18 @@ def q_lm_score(spark, sf_dir):
     """CCNet-style unigram-LM quality scoring + head/middle/tail
     perplexity tertiles (integer floor-log2 surprisal — bit-portable)."""
     return TX.lm_score(_docs(spark, sf_dir))
+
+
+def q_intra_dedup(spark, sf_dir):
+    """Intra-document block dedup (RefinedWeb line-dedup adapted to
+    delimiter-less text): keep-first over 8-token blocks + cleaned text."""
+    return DD.intra_doc_dedup(_docs(spark, sf_dir), block=8)
+
+
+def q_pack_sequences(spark, sf_dir):
+    """Deterministic token-budget shard packing via the two-level scan
+    (bucket-partitioned cumsum + bounded bucket-dim prefix)."""
+    return TX.pack_sequences(_docs(spark, sf_dir), budget=2048)
 
 
 def q_kg_components(spark, sf_dir):
@@ -1473,6 +1511,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kcore": q_kcore,
         "negative_samples": q_negative_samples,
         "triangles": q_triangles,
+        "substring_dedup": q_substring_dedup,
         "turn_taking": q_turn_taking,
         "response_latency": q_response_latency,
         "length_quantiles": q_length_quantiles,
@@ -1488,6 +1527,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "human_eval_scores": q_human_eval_scores,
         "lm_score": q_lm_score,
         "lpa_communities": q_lpa_communities,
+        "intra_dedup": q_intra_dedup,
+        "pack_sequences": q_pack_sequences,
         "kg_components": q_kg_components,
         "streaming_kg_agg": q_streaming_kg_agg,
         "degree_hist": q_degree_hist,
@@ -1500,10 +1541,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_windowed": q_streaming_windowed,
         "streaming_mentions": q_streaming_mentions,
         "streaming_triples": q_streaming_triples,
+        "token_counts": q_token_counts,
+        "langid": q_langid,
         "image_meta": q_image_meta,
         "frame_samples": q_frame_samples,
         "pii_scrub": q_pii_scrub,
         "repetition": q_repetition,
+        "stratified_sample": q_stratified_sample,
         "decontam": q_decontam,
         "conv_stats": q_conv_stats,
         "sessions": q_sessions,
@@ -1511,13 +1555,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ie_errors": q_ie_errors,
         "event_f1_4way": q_event_f1_4way,
         "baseline_srl": q_baseline_srl,
+        # ---- beyond the 50-query correctness window ----
         "csv_ingest": q_csv_ingest,
         "json_ingest": q_json_ingest,
         "coref_mention_recall": q_coref_mention_recall,
         "doc_split": q_doc_split,
         "doc_assembly_salted": q_doc_assembly_salted,
         "triples_replay": q_triples_replay,
-        # ---- beyond the 50-query correctness window ----
         "quality_filter": q_quality_filter,
         "image_resize": q_image_resize,
         "audio_chunks": q_audio_chunks,
@@ -1533,6 +1577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ie_eval_topk": q_ie_eval_topk,
         "ie_eval_coref_expand": q_ie_eval_coref_expand,
         "ie_eval_event": q_ie_eval_event,
+        "fingerprint": q_fingerprint,
         "turns": q_turns,
         "doc_assembly": q_doc_assembly,
         "sentence_offsets": q_sentence_offsets,
@@ -1676,9 +1721,13 @@ def oracle_sql() -> dict[str, str]:
         "dedup_exact": oracles_data.dedup_exact_oracle(),
         "pii_scrub": oracles_data.pii_scrub_oracle(),
         "repetition": oracles_data.repetition_oracle(),
+        "stratified_sample": oracles_data.stratified_sample_oracle(),
         "decontam": oracles_data.decontam_oracle(),
         "conv_stats": oracles.conv_stats_oracle(),
         "sessions": oracles.session_stats_oracle(gap_sec=30),
+        "token_counts": oracles_data.token_counts_oracle(),
+        "langid": oracles_data.langid_oracle(),
+        "fingerprint": oracles_data.fingerprint_oracle(),
         "image_meta": oracles_data.image_meta_oracle(),
         "frame_samples": oracles_data.frame_samples_oracle(),
         "streaming_dedup": oracles_data.dedup_exact_oracle(),
@@ -1705,6 +1754,7 @@ def oracle_sql() -> dict[str, str]:
         "ie_eval_event_golden": oracles_kg.ie_eval_event_golden_oracle(),
         "asof_events": oracles_data.asof_events_oracle(),
         "pagerank": oracles_kg.pagerank_oracle(iterations=3),
+        "substring_dedup": oracles_data.substring_dup_oracle(window=16),
         "turn_taking": oracles.turn_taking_oracle(),
         "triangles": oracles_kg.triangle_counts_oracle(),
         "orc_roundtrip": oracles.triples_oracle(),
@@ -1719,6 +1769,8 @@ def oracle_sql() -> dict[str, str]:
         "pagerank_weighted": oracles_kg.pagerank_weighted_oracle(iterations=3),
         "lm_score": oracles_data.lm_score_oracle(),
         "lpa_communities": oracles_kg.lpa_oracle(),
+        "intra_dedup": oracles_data.intra_dedup_oracle(block=8),
+        "pack_sequences": oracles_data.pack_sequences_oracle(budget=2048),
         "kg_components": oracles_kg.kg_components_oracle(),
         "streaming_kg_agg": oracles_kg.kg_edges_agg_oracle(),
         "degree_hist": oracles_kg.degree_hist_oracle(),

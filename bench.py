@@ -134,7 +134,8 @@ BENCH_QUERIES = {
     "kg_edges_agg",
     # coref connected-components loop
     "coref_canonical",
-    # multimodal layer
+    # training-data-pipeline layer
+    "token_counts",
     "image_meta",
     # corpus-curation layer (added r4 per VERDICT r3 #7 so its cost
     # regresses visibly round-over-round)
@@ -145,6 +146,8 @@ BENCH_QUERIES = {
     "asof_events",
     # late-r5 curation/graph wave (new lines, not in any prior sum)
     "lm_score",
+    "intra_dedup",
+    "pack_sequences",
     "lpa_communities",
     # closing-session wave (new lines, not in any prior sum)
     "random_walks",

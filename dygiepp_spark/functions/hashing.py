@@ -1,5 +1,5 @@
-"""Portable deterministic hashing shared by the sampling, split and
-Bloom-filter operators and their DuckDB twins.
+"""Portable deterministic hashing shared by the fingerprint, sampling,
+split and Bloom-filter operators and their DuckDB twins.
 
 Everything is built on md5 hex strings because they are bit-identical in
 Spark and DuckDB (and any other engine), unlike xxhash64/murmur which are

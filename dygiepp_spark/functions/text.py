@@ -1,5 +1,7 @@
 """Text operators over whitespace tokens: the document quality filter,
-the unigram-LM score, exact length quantiles and the vocabulary build.
+the unigram-LM score, exact length quantiles and the vocabulary build,
+plus token counts, language ID, document fingerprints, deterministic
+stratified sampling and sequence packing.
 
 All JVM-side (built-in functions only — no Python in the hot path); each
 query built on them has a DuckDB SQL twin in dygiepp_spark.oracles_data
@@ -14,6 +16,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from dygiepp_spark.functions.hashing import hash60, hash_family_from
 
 #: tiny per-language stopword lists for the n-gram/stopword heuristic.
 #: Deterministic toy lists — the point is the *operator* (vectorized
@@ -49,6 +53,26 @@ def token_ngrams(toks: Column, n: int) -> Column:
     return grams
 
 
+def word_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Whitespace token count."""
+    return df.withColumn("n_tokens", F.size(tokens_col(F.col(text_col))))
+
+
+def bpe_ish_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """BPE-ish proxy token count: word-pieces estimated as
+    ceil(chars/4) per word, the standard subword budget heuristic.
+    JVM-side: aggregate over the token array."""
+    toks = tokens_col(F.col(text_col))
+    return df.withColumn(
+        "n_bpe_tokens",
+        F.aggregate(
+            toks,
+            F.lit(0).cast("bigint"),
+            lambda acc, t: acc + F.ceil(F.length(t) / F.lit(4.0)).cast("bigint"),
+        ),
+    )
+
+
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring features: length, token stats, punctuation and
     stopword ratios, uppercase ratio. Pure column arithmetic; ratios are
@@ -76,6 +100,59 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         mean_tok_len.alias("mean_token_len"),
     )
+
+
+def langid(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Language ID by stopword-hit counting: argmax over per-language
+    stopword hits; tie/zero -> 'und'. One pass over the token array per
+    language (5 small filters — all codegen'd)."""
+    toks = tokens_col(F.lower(F.col(text_col)))
+
+    def _hit(ws: list[str]):
+        return lambda t: t.isin(*ws)
+
+    hits = [
+        F.size(F.filter(toks, _hit(ws))).alias(f"_h_{lang}")
+        for lang, ws in LANG_STOPWORDS.items()
+    ]
+    with_hits = df.select("*", *hits)
+    langs = list(LANG_STOPWORDS)
+    best = F.greatest(*[F.col(f"_h_{lg}") for lg in langs])
+    pred = F.lit("und")
+    # first language (in fixed order) achieving the max, if max > 0
+    for lg in reversed(langs):
+        pred = F.when(F.col(f"_h_{lg}") == best, F.lit(lg)).otherwise(pred)
+    pred = F.when(best > 0, pred).otherwise(F.lit("und"))
+    return with_hits.withColumn("pred_lang", pred).drop(
+        *[f"_h_{lg}" for lg in langs]
+    )
+
+
+def fingerprint(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 4
+) -> DataFrame:
+    """Document fingerprint: min-hash of character 5-gram shingles of the
+    normalized text (winnowing-lite). Returns (id, fp_0..fp_{k-1}) where
+    fp_i = min over shingles of family_i(hash60(shingle)) — one md5 per
+    shingle, k cheap integer mixes (functions.hashing 2-universal family).
+
+    Implemented as shingle explode + ONE hash aggregation with map-side
+    combine — the shuffle carries only k*61 bits per document.
+    """
+    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    sh = df.select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.length(norm) - 4, F.lit(1))),
+                lambda i: norm.substr(i, F.lit(5)),
+            )
+        ).alias("shingle"),
+    ).withColumn("_h", hash60(F.col("shingle")))
+    aggs = [
+        F.min(hash_family_from(F.col("_h"), i)).alias(f"fp_{i}") for i in range(k)
+    ]
+    return sh.groupBy(id_col).agg(*aggs)
 
 
 def repetition_features(
@@ -199,6 +276,42 @@ def composite_filter(
         bits.cast("int").alias("reason_bits"),
         (bits == 0).alias("keep"),
     )
+
+
+def stratified_sample(
+    df: DataFrame,
+    rates: dict[str, float],
+    default_rate: float = 0.0,
+    strata_col: str = "lang",
+    key_col: str = "doc_id",
+    scale: int = 10_000,
+) -> DataFrame:
+    """Deterministic per-stratum Bernoulli sampling — the data-mixing
+    primitive of a pre-training pipeline ("keep 50% of en, 10% of the
+    rest"). A row survives iff
+
+        hash60(strata || ':' || key) % scale  <  round(rate * scale)
+
+    so the decision is a pure function of (stratum, key): reproducible
+    across runs/engines (md5-portable, see functions.hashing), stable
+    under repartitioning, and executed as ONE codegen'd filter — no
+    shuffle, no RNG state, no driver involvement. ``df.sample`` is NOT
+    used precisely because its seed is partition-dependent (a 100 TB
+    re-layout would silently change the sample).
+
+    ``rates`` maps stratum value -> keep rate in [0, 1]; unlisted strata
+    use ``default_rate``. Rates are quantized to 1/scale (exact integer
+    compare, no float threshold ambiguity).
+    """
+    thresh = F.lit(int(round(default_rate * scale)))
+    for v, r in sorted(rates.items()):
+        thresh = F.when(F.col(strata_col) == v, F.lit(int(round(r * scale)))).otherwise(
+            thresh
+        )
+    bucket = hash60(
+        F.concat(F.col(strata_col), F.lit(":"), F.col(key_col).cast("string"))
+    ) % F.lit(scale)
+    return df.filter(bucket < thresh)
 
 
 def vocab_build(
@@ -397,4 +510,68 @@ def lm_score(df: DataFrame, text_col: str = "text",
         .when(F.col("bits_per_kt") <= F.col("_t2"), F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("bucket"),
+    )
+
+
+def pack_sequences(df: DataFrame, budget: int = 2048,
+                   n_buckets: int = 1024,
+                   text_col: str = "text",
+                   id_col: str = "doc_id") -> DataFrame:
+    """Deterministic training-shard packing: lay documents end-to-end in
+    ``id_col`` order and assign each to the fixed token-budget pack its
+    START offset falls in (docs may straddle a boundary — the loader's
+    usual contract; pack_offset says where inside the pack the doc
+    begins). Output (doc_id, n_tok, g_offset, pack_id, pack_offset).
+
+    The global running offset is the classic two-level scan, shaped so
+    NO window ever sees corpus rows unpartitioned: docs hash to a FIXED
+    number of order-preserving buckets (``doc_id div width`` with width
+    from one max() scalar fold), the intra-bucket cumsum is a window
+    PARTITIONED by bucket, and the cross-bucket prefix is a running sum
+    over the bucket totals — a frame bounded by ``n_buckets`` (1024)
+    at ANY corpus size, the same bounded-domain discipline as
+    length_quantiles. One bucket-keyed shuffle over the corpus total.
+    """
+    from pyspark.sql import Window
+
+    lens = df.select(
+        F.col(id_col).cast("bigint").alias("doc_id"),
+        F.size(tokens_col(F.col(text_col))).cast("bigint").alias("n_tok"),
+    )
+    mx = lens.agg(F.max("doc_id").alias("_mx"))
+    b = lens.crossJoin(F.broadcast(mx)).select(
+        "doc_id",
+        "n_tok",
+        F.expr(f"doc_id div ((_mx + {n_buckets}) div {n_buckets})")
+        .cast("bigint")
+        .alias("bucket"),
+    )
+    w_local = (
+        Window.partitionBy("bucket")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = b.withColumn("local_cum", F.sum("n_tok").over(w_local))
+    totals = b.groupBy("bucket").agg(F.sum("n_tok").alias("btot"))
+    w_b = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    prefix = totals.withColumn(
+        "bprefix", F.sum("btot").over(w_b) - F.col("btot")
+    ).select("bucket", "bprefix")
+    return (
+        local.join(F.broadcast(prefix), "bucket")
+        .select(
+            "doc_id",
+            "n_tok",
+            (F.col("bprefix") + F.col("local_cum") - F.col("n_tok"))
+            .alias("g_offset"),
+        )
+        .select(
+            "doc_id",
+            "n_tok",
+            "g_offset",
+            F.expr(f"g_offset div {budget}").cast("bigint").alias("pack_id"),
+            (F.col("g_offset") % budget).cast("bigint").alias("pack_offset"),
+        )
     )

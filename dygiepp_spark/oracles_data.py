@@ -1,7 +1,9 @@
-"""DuckDB oracle twins for the document-layer queries: exact dedup, the
-composite quality filter, the LM score, length quantiles and the vocabulary
-build, plus PII scrubbing, URL hygiene, decontamination, the as-of join and
-the multimodal operators.
+"""DuckDB oracle twins for the document-layer queries: exact, substring
+and intra-document dedup, the composite quality filter, the LM score,
+length quantiles, the vocabulary build, token counts, language ID,
+fingerprints, stratified sampling and sequence packing, plus PII
+scrubbing, URL hygiene, decontamination, the as-of join and the
+multimodal operators.
 
 Portability contract (see dygiepp_spark.functions.hashing):
 
@@ -35,10 +37,64 @@ GROUP BY 1"""
 
 
 # --------------------------------------------------------------------------
-# whitespace tokens (twin of functions.text.tokens_col)
+# text analysis over whitespace tokens (``_DTOKS`` is the twin of
+# functions.text.tokens_col)
 # --------------------------------------------------------------------------
 
 _DTOKS = "list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '')"
+
+
+def token_counts_oracle() -> str:
+    return f"""
+SELECT CAST(doc_id AS BIGINT) AS doc_id,
+       CAST(len({_DTOKS}) AS INT) AS n_tokens,
+       CAST(list_sum(list_transform({_DTOKS},
+            t -> CAST(ceil(length(t) / 4.0) AS BIGINT))) AS BIGINT) AS n_bpe_tokens
+FROM documents"""
+
+
+def langid_oracle() -> str:
+    langs = list(LANG_STOPWORDS)
+    ltoks = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
+    hits = ",\n       ".join(
+        f"len(list_filter(ltoks, t -> t IN ({', '.join(repr(w) for w in ws)}))) AS h_{lg}"
+        for lg, ws in LANG_STOPWORDS.items()
+    )
+    best = "greatest(" + ", ".join(f"h_{lg}" for lg in langs) + ")"
+    case = " ".join(f"WHEN h_{lg} = m THEN '{lg}'" for lg in langs)
+    return f"""
+WITH lt AS (SELECT CAST(doc_id AS BIGINT) AS doc_id, {ltoks} AS ltoks FROM documents),
+hits AS (
+    SELECT doc_id,
+       {hits}
+    FROM lt
+),
+withmax AS (SELECT *, {best} AS m FROM hits)
+SELECT doc_id,
+       CASE WHEN m > 0 THEN (CASE {case} END) ELSE 'und' END AS pred_lang
+FROM withmax"""
+
+
+def fingerprint_oracle(k: int = 4) -> str:
+    fps = ",\n       ".join(
+        f"min({hash_family_from_sql('h', i)}) AS fp_{i}" for i in range(k)
+    )
+    return f"""
+WITH norm AS (
+    SELECT CAST(doc_id AS BIGINT) AS doc_id,
+           lower(regexp_replace(text, '\\s+', ' ', 'g')) AS nt
+    FROM documents
+),
+sh AS (
+    SELECT doc_id,
+           unnest(list_transform(range(1, greatest(length(nt) - 4, 1) + 1),
+                                 i -> substr(nt, CAST(i AS INT), 5))) AS shingle
+    FROM norm
+),
+hashed AS (SELECT doc_id, {hash60_sql('shingle')} AS h FROM sh)
+SELECT doc_id,
+       {fps}
+FROM hashed GROUP BY doc_id"""
 
 
 # --------------------------------------------------------------------------
@@ -159,6 +215,28 @@ SELECT b.doc_id, b.n_tokens, b.n_distinct_tokens,
 FROM base b
 LEFT JOIN top t USING (doc_id)
 LEFT JOIN topg g ON b.doc_id = g.doc_id"""
+
+
+# --------------------------------------------------------------------------
+# deterministic stratified sampling (twin of functions.text.stratified_sample)
+# --------------------------------------------------------------------------
+
+def stratified_sample_oracle(
+    rates: dict[str, float] | None = None,
+    default_rate: float = 0.1,
+    scale: int = 10_000,
+) -> str:
+    rates = {"en": 0.5, "de": 0.25} if rates is None else rates
+    case = " ".join(
+        f"WHEN lang = '{v}' THEN {int(round(r * scale))}"
+        for v, r in sorted(rates.items())
+    )
+    bucket = hash60_sql("lang || ':' || CAST(CAST(doc_id AS BIGINT) AS VARCHAR)")
+    return f"""
+SELECT CAST(doc_id AS BIGINT) AS doc_id, lang
+FROM documents
+WHERE ({bucket} % {scale})
+      < (CASE {case} ELSE {int(round(default_rate * scale))} END)"""
 
 
 # --------------------------------------------------------------------------
@@ -439,6 +517,38 @@ FROM ranked WHERE rn <= {max_size}"""
 
 
 # --------------------------------------------------------------------------
+# substring-window dedup (twin of dedup.substring_dup_spans)
+# --------------------------------------------------------------------------
+
+def substring_dup_oracle(window: int = 16) -> str:
+    """Rolling W-token window hashes; first occurrence = lexicographic min
+    (doc, pos), transported through a doc*10^6+pos integer encoding (pos
+    is bounded by doc token count << 10^6)."""
+    return f"""WITH t AS (
+    SELECT CAST(doc_id AS BIGINT) AS id,
+           list_filter(string_split({_NORM}, ' '), x -> x <> '') AS toks
+    FROM documents
+),
+t2 AS (SELECT id, toks FROM t WHERE len(toks) >= {window}),
+w AS (
+    SELECT id, i AS pos,
+           md5(array_to_string(toks[i:i+{window - 1}], ' ')) AS win_hash
+    FROM t2, UNNEST(generate_series(1, len(toks) - {window} + 1)) AS g(i)
+),
+agg AS (
+    SELECT win_hash,
+           count(DISTINCT id) AS n_docs,
+           count(*) AS n_occurrences,
+           min(id * 1000000 + pos) AS enc
+    FROM w GROUP BY win_hash HAVING count(*) > 1
+)
+SELECT win_hash, n_docs, n_occurrences,
+       CAST(enc // 1000000 AS BIGINT) AS first_doc,
+       CAST(enc % 1000000 AS INT) AS first_pos
+FROM agg"""
+
+
+# --------------------------------------------------------------------------
 # as-of join: turns vs most recent event (twin of temporal.asof_join)
 # --------------------------------------------------------------------------
 
@@ -611,6 +721,75 @@ SELECT doc_id, n_tok, lm_bits, bits_per_kt,
             WHEN bits_per_kt <= (SELECT t2 FROM thr) THEN 'middle'
             ELSE 'tail' END AS bucket
 FROM s2"""
+
+
+# --------------------------------------------------------------------------
+# intra-document dedup and sequence packing
+# --------------------------------------------------------------------------
+
+def intra_dedup_oracle(block: int = 8) -> str:
+    """Twin of dedup.intra_doc_dedup: consecutive block-token windows,
+    keep-first via (doc_id, blk)-partitioned row_number, ordered
+    string_agg reassembly."""
+    return f"""
+WITH t AS (
+    SELECT CAST(doc_id AS BIGINT) AS doc_id, {_DTOKS} AS arr
+    FROM documents WHERE len({_DTOKS}) >= 1
+),
+blocks AS (
+    SELECT doc_id, CAST(i AS INT) AS pos,
+           array_to_string(arr[(i*{block}+1):(i*{block}+{block})], ' ') AS blk
+    FROM t, unnest(range(0, CAST(ceil(len(arr) / {block}.0) AS INT))) AS u(i)
+),
+marked AS (
+    SELECT *, row_number() OVER (PARTITION BY doc_id, blk ORDER BY pos) AS rn
+    FROM blocks
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_blocks,
+       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+       coalesce(string_agg(CASE WHEN rn = 1 THEN blk END, ' ' ORDER BY pos),
+                '') AS text_dedup
+FROM marked GROUP BY doc_id"""
+
+
+def pack_sequences_oracle(budget: int = 2048, n_buckets: int = 1024) -> str:
+    """Twin of functions.text.pack_sequences: order-preserving bucketing
+    from one max() fold, bucket-partitioned local cumsum, running prefix
+    over the bucket dim, BIGINT pack arithmetic."""
+    return f"""
+WITH lens AS (
+    SELECT CAST(doc_id AS BIGINT) AS doc_id,
+           CAST(len({_DTOKS}) AS BIGINT) AS n_tok
+    FROM documents
+),
+mx AS (SELECT max(doc_id) AS mx FROM lens),
+b AS (
+    SELECT doc_id, n_tok,
+           doc_id // (((SELECT mx FROM mx) + {n_buckets}) // {n_buckets})
+               AS bucket
+    FROM lens
+),
+local AS (
+    SELECT *, CAST(sum(n_tok) OVER (
+        PARTITION BY bucket ORDER BY doc_id) AS BIGINT) AS local_cum
+    FROM b
+),
+totals AS (SELECT bucket, CAST(sum(n_tok) AS BIGINT) AS btot FROM b GROUP BY 1),
+prefix AS (
+    SELECT bucket,
+           CAST(sum(btot) OVER (ORDER BY bucket) - btot AS BIGINT) AS bprefix
+    FROM totals
+),
+j AS (
+    SELECT l.doc_id, l.n_tok,
+           CAST(bprefix + local_cum - l.n_tok AS BIGINT) AS g_offset
+    FROM local l JOIN prefix USING (bucket)
+)
+SELECT doc_id, n_tok, g_offset,
+       CAST(g_offset // {budget} AS BIGINT) AS pack_id,
+       CAST(g_offset % {budget} AS BIGINT) AS pack_offset
+FROM j"""
 
 
 def bloom_decontam_oracle(

@@ -1,6 +1,6 @@
 """Unit tests for the corpus-curation layer added in round 3 part 2:
-composite quality filter, URL hygiene, and the resize / audio-chunk
-multimodal kernels."""
+connected components, composite quality filter, URL hygiene, and the
+resize / audio-chunk multimodal kernels."""
 
 from __future__ import annotations
 
@@ -9,6 +9,36 @@ import pyspark.sql.functions as F
 from dygiepp_spark.functions import text as TX
 from dygiepp_spark.functions import web as WB
 from dygiepp_spark.operators import multimodal as MM
+from dygiepp_spark.operators.graph import kg_components
+
+
+# --------------------------------------------------------------------------
+# connected components (graph.kg_components, which groups near-duplicates
+# as well as KG entities)
+# --------------------------------------------------------------------------
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(
+        [(a, "p", b) for a, b in pairs],
+        "subj_id string, pred string, obj_id string",
+    )
+
+
+def test_near_dup_groups_chain_merges_transitively(spark):
+    # a-b and b-c edges must land in ONE group even though (a, c) was
+    # never an edge; d-e is a second group
+    edges = _edges(spark, [("a", "b"), ("b", "c"), ("d", "e")])
+    got = {(r["node_id"], r["label"]) for r in kg_components(edges).collect()}
+    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d")}
+
+
+def test_near_dup_groups_long_path_converges_log_rounds(spark):
+    # a 13-node path graph needs label distance 12; pointer doubling must
+    # close it within COMPONENTS_MAX_ROUNDS
+    edges = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)])
+    out = kg_components(edges).collect()
+    assert len(out) == 13
+    assert {r["label"] for r in out} == {"n00"}
 
 
 # --------------------------------------------------------------------------
@@ -100,3 +130,70 @@ def test_audio_chunks_window_math(spark):
     rows = sorted(MM.audio_chunks(docs).collect(), key=lambda r: r["chunk_ix"])
     assert [r["n_samples"] for r in rows] == [64, 64, 2]
     assert all(r["abs_energy"] == abs(ord("q") - 128) * r["n_samples"] for r in rows)
+
+
+# --------------------------------------------------------------------------
+# property test: distributed CC == sequential union-find on random graphs
+# --------------------------------------------------------------------------
+
+def _union_find_groups(n_nodes, pairs):
+    parent = list(range(n_nodes))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # canonical label = min node id in the component
+    comp = {}
+    for x in range(n_nodes):
+        comp.setdefault(find(x), []).append(x)
+    out = {}
+    for members in comp.values():
+        g = min(members)
+        for m in members:
+            out[m] = g
+    return out
+
+
+def test_near_dup_groups_matches_union_find_on_random_graphs(spark):
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=5, deadline=None)
+    @given(
+        st.integers(min_value=2, max_value=24).flatmap(
+            lambda n: st.tuples(
+                st.just(n),
+                st.lists(
+                    st.tuples(
+                        st.integers(0, n - 1), st.integers(0, n - 1)
+                    ).filter(lambda p: p[0] != p[1]),
+                    max_size=30,
+                ),
+            )
+        )
+    )
+    def check(case):
+        n, raw = case
+        pairs = sorted({(min(a, b), max(a, b)) for a, b in raw})
+        uf = _union_find_groups(n, pairs)
+        # kg_components sees only nodes that carry an edge; zero-padded
+        # ids make the string min-label the numeric min id
+        linked = {x for p in pairs for x in p}
+        want = {f"n{x:02d}": f"n{uf[x]:02d}" for x in linked}
+        edges = _edges(
+            spark, [(f"n{a:02d}", f"n{b:02d}") for a, b in pairs] or [("n00", "n01")]
+        )
+        if not pairs:
+            edges = edges.limit(0)
+        got = {r["node_id"]: r["label"] for r in kg_components(edges).collect()}
+        assert got == want
+
+    check()
+

@@ -1,6 +1,6 @@
-"""Unit tests for the eval layer (K1-K7, G1), multimodal plumbing, and the
-streaming wrapper — semantic checks independent of the DuckDB oracle
-parity gate.
+"""Unit tests for the eval layer (K1-K7, G1), text analysis, multimodal
+plumbing, and the streaming wrapper — semantic checks independent of the
+DuckDB oracle parity gate.
 """
 
 from __future__ import annotations
@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from dygiepp_spark import tables as TT
+from dygiepp_spark.functions import text as TX
 from dygiepp_spark.operators import extraction as EX
 from dygiepp_spark.operators import kg_eval as KE
 from dygiepp_spark.operators import multimodal as MM
@@ -97,6 +98,40 @@ def test_micro_prf_counts(spark):
     out = KE.micro_prf(p, g).collect()[0]
     assert (out["tp"], out["fp"], out["fn"]) == (1, 1, 1)
     assert out["precision"] == 0.5 and out["recall"] == 0.5
+
+
+# ------------------------------------------------------------------
+# text analysis
+# ------------------------------------------------------------------
+
+def test_token_counts(spark):
+    df = spark.createDataFrame([(1, "alpha beta gamma")], "doc_id bigint, text string")
+    out = TX.bpe_ish_token_count(TX.word_token_count(df)).collect()[0]
+    assert out["n_tokens"] == 3
+    # ceil(5/4)+ceil(4/4)+ceil(5/4) = 2+1+2
+    assert out["n_bpe_tokens"] == 5
+
+
+def test_langid_picks_english(spark):
+    df = spark.createDataFrame(
+        [(1, "the cat is on the mat"), (2, "zzz qqq www")],
+        "doc_id bigint, text string",
+    )
+    out = {r["doc_id"]: r["pred_lang"] for r in TX.langid(df).collect()}
+    assert out[1] == "en"
+    assert out[2] == "und"
+
+
+def test_fingerprint_stable_and_discriminative(spark):
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"),
+         (3, "completely different content here")],
+        "doc_id bigint, text string",
+    )
+    rows = {r["doc_id"]: (r["fp_0"], r["fp_1"], r["fp_2"], r["fp_3"])
+            for r in TX.fingerprint(df).collect()}
+    assert rows[1] == rows[2]
+    assert rows[1] != rows[3]
 
 
 # ------------------------------------------------------------------
@@ -357,7 +392,7 @@ def test_ie_eval_alias_unknown_surface_falls_back_to_itself(spark):
 
 
 # ---------------------------------------------------------------------------
-# repetition metrics (functions/text.py round-3 adds)
+# repetition metrics + stratified sampling (functions/text.py round-3 adds)
 # ---------------------------------------------------------------------------
 
 def test_repetition_features_hand_case(spark):
@@ -380,6 +415,37 @@ def test_repetition_features_hand_case(spark):
     r4 = out[4]  # fully repetitive
     assert r4.dup_token_frac == 0.75
     assert (r4.top_2gram, r4.top_2gram_frac) == ("c c", 1.0)
+
+
+def test_stratified_sample_deterministic_and_rate_shaped(spark):
+    from dygiepp_spark.functions.text import stratified_sample
+
+    rows = [(i, "en" if i % 2 == 0 else "de") for i in range(2000)]
+    df = spark.createDataFrame(rows, "doc_id bigint, lang string")
+    kept = stratified_sample(df, rates={"en": 0.5}, default_rate=0.0)
+    ids1 = sorted(r.doc_id for r in kept.collect())
+    ids2 = sorted(r.doc_id for r in kept.collect())
+    assert ids1 == ids2  # pure function of (stratum, key)
+    assert all(i % 2 == 0 for i in ids1)  # default_rate=0 drops all de
+    assert 400 <= len(ids1) <= 600  # ~50% of the 1000 en rows
+    # repartitioning must not change the decision (no partition-seeded RNG)
+    ids3 = sorted(
+        r.doc_id
+        for r in stratified_sample(
+            df.repartition(17), rates={"en": 0.5}, default_rate=0.0
+        ).collect()
+    )
+    assert ids3 == ids1
+
+
+def test_stratified_sample_rate_one_and_zero(spark):
+    from dygiepp_spark.functions.text import stratified_sample
+
+    df = spark.createDataFrame(
+        [(i, "en") for i in range(100)], "doc_id bigint, lang string"
+    )
+    assert stratified_sample(df, rates={"en": 1.0}).count() == 100
+    assert stratified_sample(df, rates={"en": 0.0}).count() == 0
 
 
 def test_sessionize_splits_on_gap(spark):

@@ -134,7 +134,7 @@ def test_kg_edges_plan_has_no_join_but_dictionary_lookups(spark, stored_turns):
 
 
 # ---------------------------------------------------------------------------
-# round-3 additions: PII scrub, repetition, decontam, sessionize
+# round-3 additions: PII scrub, sampling, repetition, decontam, sessionize
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -152,6 +152,17 @@ def test_pii_scrub_zero_shuffle(spark, stored_docs):
     plan = plan_of(scrub_pii(stored_docs.select("doc_id", "text")))
     assert count_shuffles(plan) == 0, plan
     assert "Python" not in plan  # regex stays JVM-side
+
+
+def test_stratified_sample_is_pushed_filter(spark, stored_docs):
+    """The sampler must stay a scan-stage filter — no shuffle, no
+    project-then-filter barrier that would re-read the corpus."""
+    from dygiepp_spark.functions.text import stratified_sample
+
+    plan = plan_of(
+        stratified_sample(stored_docs, rates={"en": 0.5}, default_rate=0.1)
+    )
+    assert count_shuffles(plan) == 0, plan
 
 
 def test_repetition_two_keyed_aggs(spark, stored_docs):
@@ -276,6 +287,19 @@ def test_pagerank_iteration_shuffle_budget(spark, stored_turns):
     plan = plan_of(pagerank(edges, iterations=1))
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+def test_substring_dedup_single_agg_shuffle(spark, stored_docs):
+    """Window hashing is row-local (transform + explode) — the only
+    exchange is the hash-keyed aggregation (its two-phase distinct-count
+    split still keys on win_hash)."""
+    from dygiepp_spark.operators.dedup import substring_dup_spans
+
+    plan = plan_of(substring_dup_spans(stored_docs))
+    # count_distinct(doc_id) expands to a two-level agg; both levels key
+    # on win_hash so at most 2 exchanges may appear, never a join
+    assert count_shuffles(plan) <= 2, plan
+    assert "Join" not in plan, plan
 
 
 def test_triangle_counts_no_nested_loop(spark, stored_turns):

@@ -121,6 +121,55 @@ def test_kcore_fixpoint_matches_sequential_peel(spark, raw, k):
 
 
 @given(
+    lens=st.lists(st.integers(min_value=0, max_value=40),
+                  min_size=1, max_size=24),
+    budget=st.integers(min_value=1, max_value=64),
+)
+@settings(**SETTINGS)
+def test_pack_sequences_matches_running_sum_model(spark, lens, budget):
+    """pack offsets must equal the plain sequential cumsum regardless of
+    how the two-level scan bucketed the ids (incl. sparse ids)."""
+    from dygiepp_spark.functions.text import pack_sequences
+
+    rows = [(i * 3, "w " * n) for i, n in enumerate(lens)]  # sparse doc_ids
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {r["doc_id"]: (r["g_offset"], r["pack_id"], r["pack_offset"])
+           for r in pack_sequences(df, budget=budget, n_buckets=7).collect()}
+    off = 0
+    for i, n in enumerate(lens):
+        assert got[i * 3] == (off, off // budget, off % budget)
+        off += n
+
+
+@given(
+    docs=st.lists(
+        st.lists(st.sampled_from("abcd"), min_size=1, max_size=30),
+        min_size=1, max_size=8,
+    ),
+    block=st.integers(min_value=1, max_value=5),
+)
+@settings(**SETTINGS)
+def test_intra_dedup_matches_keep_first_model(spark, docs, block):
+    from dygiepp_spark.operators.dedup import intra_doc_dedup
+
+    rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {r["doc_id"]: r for r in intra_doc_dedup(df, block=block).collect()}
+    for i, toks in enumerate(docs):
+        blocks = [" ".join(toks[j:j + block])
+                  for j in range(0, len(toks), block)]
+        seen, kept = set(), []
+        for b in blocks:
+            if b not in seen:
+                seen.add(b)
+                kept.append(b)
+        r = got[i]
+        assert r["n_blocks"] == len(blocks)
+        assert r["n_kept"] == len(kept)
+        assert r["text_dedup"] == " ".join(kept)
+
+
+@given(
     raw=st.lists(
         st.tuples(st.integers(0, 7), st.integers(0, 7)),
         min_size=1, max_size=20,

